@@ -85,11 +85,15 @@ def _cos6(a: pd.Series, b: pd.Series) -> pd.Series:
     pair), so the vectorized Arrow kernel stays. The pair-heavy call
     sites instead route through _cell_pair_scores below, which never
     materializes pairs across the boundary at all."""
-    av, bv = _to_mat(a), _to_mat(b)
+    return pd.Series(_cos6_rows(_to_mat(a), _to_mat(b)))
+
+
+def _cos6_rows(av: np.ndarray, bv: np.ndarray) -> np.ndarray:
+    """_cos6's arithmetic on two (n, DIM) f64 matrices, row against row."""
     dots = np.einsum("ij,ij->i", av, bv)
     na = np.sqrt(np.einsum("ij,ij->i", av, av))
     nb = np.sqrt(np.einsum("ij,ij->i", bv, bv))
-    return pd.Series(np.round(dots / (na * nb), 6))
+    return np.round(dots / (na * nb), 6)
 
 
 _PAIR_SCHEMA = "vec_id long, cid long, nbr long, cs double"
@@ -1732,15 +1736,61 @@ def _kmt_oracle() -> str:
 
 # App-scoped training cache: (stats_rows, trained centroids) — shared
 # by q_e_kmeans_train (stats) and q_e_ivf_trained (centroids) so the
-# 3-round loop runs once per (app, sf).
+# 3-round loop runs once per (app, sf, slice). It holds only collected
+# driver-side lists: each round persists nothing.
 _KMT_CACHE: dict[tuple[str, str, str], tuple[list, list]] = register_cache({})
+
+_KMT_ASG_SCHEMA = "cid long, embedding array<float>"
+
+
+def _kmt_cos6(v: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """(n, K) 6-dp cosines of n vectors against K centroids: each
+    centroid is tiled into a contiguous (n, DIM) block and scored by
+    _cos6_rows, so every score has the per-pair _cos6 UDF's bits."""
+    return np.column_stack([_cos6_rows(v, np.tile(ck, (len(v), 1))) for ck in c])
+
+
+def _kmt_assign(cent: list[tuple[int, list[float]]]):
+    """mapInPandas kernel for one Lloyd's assignment: scores every
+    (vec_id, embedding) row against the round's K×D centroid panel
+    (closed over from the driver, columns in cid order) and emits
+    (cid, embedding) for the argmax. np.argmax keeps the FIRST
+    maximum, so ties go to the smaller cid, and it ranks NaN above
+    every number — both as the oracle's `ORDER BY cs DESC, cid ASC`
+    ranks them. One pass, no pair rows, no shuffle, no join back."""
+    cent = sorted(cent)
+    cids = np.array([cid for cid, _ in cent], dtype=np.int64)
+    c = np.array([arr for _, arr in cent], dtype=np.float64)
+
+    def assign(batches):
+        for pdf in batches:
+            if len(pdf) == 0 or len(cids) == 0:
+                yield pd.DataFrame(
+                    {
+                        "cid": pd.Series(dtype="int64"),
+                        "embedding": pd.Series(dtype="object"),
+                    }
+                )
+                continue
+            cs = _kmt_cos6(_to_mat(pdf["embedding"]), c)
+            yield pd.DataFrame(
+                {"cid": cids[np.argmax(cs, axis=1)], "embedding": pdf["embedding"]}
+            )
+
+    return assign
 
 
 def _kmt_train(spark: SparkSession, sf_dir: str, where: str | None = None):
     """3-round Lloyd's over the embeddings table (optionally filtered
     to a population slice, e.g. the round-10 append lifecycle's base
     slice); returns (stats_rows, trained centroids), app-cached per
-    (app, sf, slice)."""
+    (app, sf, slice).
+
+    Each round is one assignment pass (the _kmt_assign Arrow kernel),
+    one (cid, d) mean aggregate whose count(*) is the cell size, and
+    one stats aggregate over the broadcast old panel that also
+    collects the new centroid per cell — so a single collect() per
+    round returns both the stats rows and the next centroids."""
     key = (spark.sparkContext.applicationId, sf_dir, where or "")
     cached = _KMT_CACHE.get(key)
     if cached is not None:
@@ -1757,70 +1807,39 @@ def _kmt_train(spark: SparkSession, sf_dir: str, where: str | None = None):
     ]
     stats_rows: list[tuple] = []
     for rnd in range(1, KMT_ROUNDS + 1):
-        cdf = spark.createDataFrame(cent, "cid long, cemb array<double>")
-        scored = e.join(F.broadcast(cdf)).select(
-            "vec_id", "cid", _cos6("embedding", "cemb").alias("cs")
-        )
-        w = Window.partitionBy("vec_id").orderBy(
-            F.col("cs").desc(), F.col("cid").asc()
-        )
-        # asg is consumed by BOTH the per-dim means and the sizes agg
-        # inside one rf materialization — persist it per round or the
-        # broadcast-cosine scoring pass runs twice (Catalyst has no
-        # cross-branch reuse); dropped with rf in the finally below
-        asg = (
-            scored.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") == 1)
-            .select("vec_id", "cid")
-            .persist()
-        )
-        dims = (
-            asg.join(e, "vec_id")
+        newc = (
+            e.mapInPandas(_kmt_assign(cent), _KMT_ASG_SCHEMA)
             .select(
                 "cid", F.posexplode(F.col("embedding").cast("array<double>"))
             )
-            .select("cid", (F.col("pos") + 1).alias("d"), F.col("col").alias("val"))
-        )
-        newc = dims.groupBy("cid", "d").agg(
-            F.expr(davg("val", scale=9)).alias("nv")
+            .groupBy("cid", (F.col("pos") + 1).alias("d"))
+            .agg(
+                F.expr(davg("col", scale=9)).alias("nv"),
+                F.count(F.lit(1)).alias("n_assigned"),
+            )
         )
         old = spark.createDataFrame(
             [(cid, d + 1, v) for cid, arr in cent for d, v in enumerate(arr)],
             "cid long, d int, ov double",
         )
-        sizes = asg.groupBy("cid").agg(F.count(F.lit(1)).alias("n_assigned"))
-        rf = (
+        rows = (
             newc.join(F.broadcast(old), ["cid", "d"])
-            .join(F.broadcast(sizes), "cid")
-            .persist()
+            .groupBy("cid", "n_assigned")
+            .agg(
+                F.round(
+                    F.sqrt(F.expr(dsum("(nv - ov) * (nv - ov)", scale=12))), 6
+                ).alias("shift6"),
+                F.round(F.expr(dsum("nv", scale=9)), 6).alias("centroid_csum"),
+                F.sort_array(F.collect_list(F.struct("d", "nv"))).alias("cv"),
+            )
+            .collect()
         )
-        try:
-            stats = (
-                rf.groupBy("cid", "n_assigned")
-                .agg(
-                    F.round(
-                        F.sqrt(F.expr(dsum("(nv - ov) * (nv - ov)", scale=12))),
-                        6,
-                    ).alias("shift6"),
-                    F.round(F.expr(dsum("nv", scale=9)), 6).alias(
-                        "centroid_csum"
-                    ),
-                )
-                .collect()
-            )
-            stats_rows.extend(
-                (rnd, r.cid, r.n_assigned, r.shift6, r.centroid_csum)
-                for r in stats
-            )
-            nxt: dict[int, dict[int, float]] = {}
-            for r in rf.select("cid", "d", "nv").collect():
-                nxt.setdefault(r.cid, {})[r.d] = r.nv
-        finally:
-            rf.unpersist()
-            asg.unpersist()
+        stats_rows.extend(
+            (rnd, r.cid, r.n_assigned, r.shift6, r.centroid_csum) for r in rows
+        )
         cent = [
-            (cid, [dv[d] for d in sorted(dv)])
-            for cid, dv in sorted(nxt.items())
+            (r.cid, [x.nv for x in r.cv])
+            for r in sorted(rows, key=lambda r: r.cid)
         ]
     cached = (sorted(stats_rows), cent)
     _KMT_CACHE[key] = cached
@@ -1846,11 +1865,14 @@ def q_e_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles, so assignment ties break identically forever. The K×D
     centroid panel collected between rounds is the bounded-codebook
     idiom of kmeans_iter/ivf_pq (K·D = 512 doubles, corpus-size-
-    independent); per round the corpus is touched exactly twice
-    (broadcast-cosine assignment scan, posexplode mean agg), and the
-    512-row (cid, d) round frame is persisted for its two consumers
-    (stats agg + next-round collect) then dropped. Empty cells shrink
-    K identically in both engines (no re-seeding — documented Lloyd
+    independent). Per round the corpus is read ONCE: the _kmt_assign
+    Arrow kernel scores each vector against the panel it closes over,
+    with _cos6's bits, and emits (cid, embedding) straight into the
+    posexplode mean agg, whose count(*) is the cell size; the 512-row
+    (cid, d) result meets the broadcast old panel in the stats agg,
+    which also collects each cell's new centroid — so one collect()
+    per round, 4 jobs, and nothing persisted. Empty cells shrink K
+    identically in both engines (no re-seeding — documented Lloyd
     behavior)."""
     from pyspark.sql import types as T
 

@@ -2381,6 +2381,53 @@ def q_e_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _confusion_role_counts(pred: DataFrame) -> DataFrame:
+    """Per-language (lang, n_docs, tp, fp) from a (lang, pred_lang)
+    prediction frame: reduce it once to the confusion matrix, then
+    re-aggregate the cells per language. Each confusion cell
+    contributes to TWO languages' metrics: its true language's
+    (n_docs, tp) and its predicted language's fp. Exploding the roles
+    keeps the plan linear (no second rollup, no join); a language that
+    is only ever PREDICTED (never true) has n_docs = 0 and is
+    excluded, exactly like the former left join of the per-true onto
+    the per-predicted rollup, and a language never falsely predicted
+    gets fp 0, not NULL."""
+    conf = pred.groupBy("lang", "pred_lang").agg(
+        F.count(F.lit(1)).cast("long").alias("c")
+    )
+    roles = conf.select(
+        F.explode(
+            F.array(
+                F.struct(
+                    F.col("lang").alias("k"),
+                    F.col("c").alias("n"),
+                    F.when(F.col("lang") == F.col("pred_lang"), F.col("c"))
+                    .otherwise(F.lit(0))
+                    .alias("tp"),
+                    F.lit(0).cast("long").alias("fp"),
+                ),
+                F.struct(
+                    F.col("pred_lang").alias("k"),
+                    F.lit(0).cast("long").alias("n"),
+                    F.lit(0).cast("long").alias("tp"),
+                    F.when(F.col("lang") != F.col("pred_lang"), F.col("c"))
+                    .otherwise(F.lit(0))
+                    .alias("fp"),
+                ),
+            )
+        ).alias("r")
+    ).select("r.*")
+    return (
+        roles.groupBy(F.col("k").alias("lang"))
+        .agg(
+            F.sum("n").cast("long").alias("n_docs"),
+            F.sum("tp").cast("long").alias("tp"),
+            F.sum("fp").cast("long").alias("fp"),
+        )
+        .where(F.col("n_docs") > 0)
+    )
+
+
 @query(
     "q_e_langid_f1",
     oracle=f"""
@@ -2447,44 +2494,8 @@ def q_e_langid_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     pred = scored.select("lang", F.expr(_lang_pred_sql()).alias("pred_lang"))
-    conf = pred.groupBy("lang", "pred_lang").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    # Each confusion cell contributes to TWO languages' metrics: its
-    # true language's (n_docs, tp) and its predicted language's fp.
-    # Exploding the roles keeps the plan linear (no second rollup, no
-    # join); a language that is only ever PREDICTED (never true) has
-    # n_docs = 0 and is excluded, exactly like the old left join.
-    roles = conf.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("lang").alias("k"),
-                    F.col("c").alias("n"),
-                    F.when(F.col("lang") == F.col("pred_lang"), F.col("c"))
-                    .otherwise(F.lit(0))
-                    .alias("tp"),
-                    F.lit(0).cast("long").alias("fp"),
-                ),
-                F.struct(
-                    F.col("pred_lang").alias("k"),
-                    F.lit(0).cast("long").alias("n"),
-                    F.lit(0).cast("long").alias("tp"),
-                    F.when(F.col("lang") != F.col("pred_lang"), F.col("c"))
-                    .otherwise(F.lit(0))
-                    .alias("fp"),
-                ),
-            )
-        ).alias("r")
-    ).select("r.*")
     prf = (
-        roles.groupBy(F.col("k").alias("lang"))
-        .agg(
-            F.sum("n").cast("long").alias("n_docs"),
-            F.sum("tp").cast("long").alias("tp"),
-            F.sum("fp").cast("long").alias("fp"),
-        )
-        .where(F.col("n_docs") > 0)
+        _confusion_role_counts(pred)
         .select(
             "lang",
             "n_docs",

@@ -252,20 +252,28 @@ def _sorted_percentiles(
     spillable); only the ≤ 2·|ps| order-statistic rows per group
     survive to the final k-row rollup.
 
-    BIT-IDENTICAL to `percentile(col, array(ps))` by construction: for
-    n non-null values, Spark's Percentile.getPercentile computes
-    pos = p·(n−1), lower = floor(pos), higher = ceil(pos) and returns
-    (higher − pos)·v_lower + (pos − lower)·v_higher (v_lower when the
-    indexes coincide) over the sorted values — the exact expression
-    below, with the same double arithmetic (pinned on adversarial
-    random data incl. duplicate values and 1-row groups by
-    tests/test_operators.py::test_sorted_percentiles_matches_percentile).
+    Follows `percentile(col, array(ps))` step for step: for n non-null
+    values, Spark's Percentile.getPercentile computes pos = p·(n−1),
+    lower = floor(pos), higher = ceil(pos) and returns v_lower when the
+    indexes coincide OR the two bracketing values are equal, else
+    (higher − pos)·v_lower + (pos − lower)·v_higher over the sorted
+    values — the expression below, with the same double arithmetic.
+    The equal-value short-circuit matters: interpolating between two
+    equal values can land an ulp off (0.7·0.1 + 0.3·0.1 ≠ 0.1).
+    Agreement is pinned on adversarial random data incl. duplicate
+    values and 1-row groups by
+    tests/test_operators.py::test_sorted_percentiles_matches_percentile,
+    not proven for every input.
 
-    Returns one row per group: gcols + n (non-null count) + q0..qk in
-    ps order. At 100 TB the grouped form is exactly how an exact
-    percentile must run anyway (total order per group); the global
-    form (gcols=[]) funnels to one partition and stays an audit-side
-    shape."""
+    Returns one row per group: gcols + n + q0..qk in ps order. NULL
+    values are dropped before anything else, so n is the NON-NULL
+    count (COUNT(col), not COUNT(*)) and a group whose values are all
+    NULL has no output row at all — unlike a percentile() rollup,
+    which keeps it with NULL quantiles. Callers over nullable columns
+    must re-attach such groups themselves. At 100 TB the grouped form
+    is exactly how an exact percentile must run anyway (total order
+    per group); the global form (gcols=[]) funnels to one partition
+    and stays an audit-side shape."""
     order_w = (
         Window.partitionBy(*gcols) if gcols else Window.partitionBy(F.lit(1))
     ).orderBy(col)
@@ -306,7 +314,7 @@ def _sorted_percentiles(
             )
         )
         outs.append(
-            F.when(hi == lo, vlo)
+            F.when((hi == lo) | (vlo == vhi), vlo)
             .otherwise(
                 (hi.cast("double") - pos) * vlo + (pos - lo.cast("double")) * vhi
             )
@@ -346,10 +354,11 @@ def q_b_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spelling history: five scalar percentile() calls measured 4.9 s
     (each buffers and sorts its own copy of the group), the
     single-buffer array form 1.7 s, and the round-12 sort-based order-
-    statistic form (_sorted_percentiles — bit-identical by the pinned
-    interpolation formula) ~0.7 s: the `percentile` aggregate's
-    per-group value map is serialized between partial and final agg
-    and sorted single-threaded, which the window sort avoids."""
+    statistic form (_sorted_percentiles — percentile()'s own
+    interpolation steps, pinned by test) ~0.7 s: the `percentile`
+    aggregate's per-group value map is serialized between partial and
+    final agg and sorted single-threaded, which the window sort
+    avoids."""
     li = load_table(spark, sf_dir, "lineitem")
     qs = {"p25": 0.25, "p50": 0.50, "p75": 0.75, "p95": 0.95, "p99": 0.99}
     wide = _sorted_percentiles(
@@ -1373,11 +1382,12 @@ def q_b_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Audit: rank counts ride one combinable pass with the 1-row
     # merged-quantile table broadcast onto the scan; the exact
     # percentiles run as the sort-based order-statistic pipeline
-    # (_sorted_percentiles — bit-identical to the former
-    # percentile(...) aggregate, whose per-group value buffer cost
-    # ~2 s of this op's ~2.6 s execution; round 12). Three bounded
-    # passes total (KLL partials, rank counts, percentile sort) —
-    # the third pass costs ~0.2 s where the removed buffer cost ~2 s.
+    # (_sorted_percentiles — the former percentile(...) aggregate's
+    # interpolation steps, pinned by test; that aggregate's per-group
+    # value buffer cost ~2 s of this op's ~2.6 s execution; round
+    # 12). Three bounded passes total (KLL partials, rank counts,
+    # percentile sort) — the third pass costs ~0.2 s where the
+    # removed buffer cost ~2 s.
     ranks = (
         li.crossJoin(F.broadcast(merged))
         .agg(

@@ -4585,6 +4585,96 @@ def test_cell_pair_scores_matches_join_plus_cos6(spark):
     assert want_u.exceptAll(got_u).count() == 0
 
 
+def _emb_batch(vecs) -> "pd.DataFrame":
+    """A (vec_id, embedding) pandas batch shaped as mapInPandas hands
+    it over: one float32 ndarray per row."""
+    import numpy as np
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            "vec_id": pd.Series(range(1, len(vecs) + 1), dtype="int64"),
+            "embedding": pd.Series(
+                [np.asarray(v, dtype=np.float32) for v in vecs], dtype="object"
+            ),
+        }
+    )
+
+
+def test_kmt_assign_six_dp_tie_goes_to_smaller_cid():
+    """Two centroids whose raw cosines differ but round to the same
+    6 dp tie; the kernel must assign the smaller cid, as the former
+    `cs DESC, cid ASC` window did — even when the larger cid has the
+    higher raw cosine and is listed first."""
+    import numpy as np
+
+    from glaciersgee_spark.operators.similarity import DIM, _kmt_assign, _kmt_cos6
+
+    v = np.zeros(DIM)
+    v[0] = 1.0
+    far, near = v.copy(), v.copy()
+    far[1], near[1] = 2e-4, 1e-4  # cos ≈ 1 - 2e-8 and 1 - 5e-9
+    cs = _kmt_cos6(np.array([v]), np.array([far, near]))
+    raw = [float(v @ c / (np.linalg.norm(v) * np.linalg.norm(c))) for c in (far, near)]
+    assert raw[0] < raw[1] and cs[0, 0] == cs[0, 1] == 1.0
+
+    out = list(_kmt_assign([(7, list(near)), (3, list(far))])(iter([_emb_batch([v])])))
+    assert len(out) == 1 and out[0]["cid"].tolist() == [3]
+
+
+def test_kmt_assign_empty_batch_keeps_schema():
+    """An empty Arrow batch yields one empty frame with the declared
+    (cid long, embedding) columns — not a missing or untyped frame."""
+    import numpy as np
+
+    from glaciersgee_spark.operators.similarity import (
+        _KMT_ASG_SCHEMA,
+        _kmt_assign,
+    )
+
+    cent = [(1, [1.0] * 64), (2, [0.5] * 64)]
+    out = list(_kmt_assign(cent)(iter([_emb_batch([])])))
+    assert len(out) == 1 and out[0].empty
+    names = [f.split()[0] for f in _KMT_ASG_SCHEMA.split(", ")]
+    assert list(out[0].columns) == names == ["cid", "embedding"]
+    assert out[0]["cid"].dtype == np.int64
+
+
+def test_kmt_cos6_matches_cos6_bits():
+    """On random float32-sourced vectors and float64 centroids, every
+    per-pair cosine the assignment kernel scores has exactly the bits
+    the per-pair _cos6 UDF returns for the same pair — and the
+    kernel's argmax is the (cs DESC, cid ASC) winner over those bits."""
+    import numpy as np
+    import pandas as pd
+
+    from glaciersgee_spark.operators.similarity import (
+        DIM,
+        _cos6,
+        _kmt_assign,
+        _kmt_cos6,
+        _to_mat,
+    )
+
+    rng = np.random.default_rng(20)
+    vecs = rng.standard_normal((53, DIM)).astype(np.float32)
+    cents = rng.standard_normal((6, DIM))
+    batch = _emb_batch(vecs)
+    got = _kmt_cos6(_to_mat(batch["embedding"]), cents)
+    for k, c in enumerate(cents):
+        want = _cos6.func(batch["embedding"], pd.Series([c] * len(vecs))).to_numpy()
+        assert np.array_equal(got[:, k].view(np.int64), want.view(np.int64)), k
+
+    cids = [11, 4, 9, 2, 30, 5]
+    cent = [(cid, list(c)) for cid, c in zip(cids, cents)]
+    (out,) = list(_kmt_assign(cent)(iter([batch])))
+    best = [
+        min(zip(cids, got[i]), key=lambda t: (-t[1], t[0]))[0]
+        for i in range(len(vecs))
+    ]
+    assert out["cid"].tolist() == best
+
+
 def test_order_ship_arrow_bucket_kernel_edges():
     """The bucketed cogroup kernel preserves the per-key semantics:
     an order with no line items in the bucket emits nothing (inner
@@ -4798,8 +4888,9 @@ def test_sorted_percentiles_matches_percentile(spark):
     replaced in q_b_quantiles / q_b_kll_quantiles — same interpolation
     (pos = p·(n−1); (hi−pos)·v_lo + (pos−lo)·v_hi), probed on
     adversarial groups: 1-row, 2-row, duplicate-heavy, negative and
-    mixed-magnitude doubles, NULL values, and exact-index fractions
-    (0.0 / 0.5 / 1.0 / thirds) alongside interpolating ones."""
+    mixed-magnitude doubles, NULL values, equal bracketing values, and
+    exact-index fractions (0.0 / 0.5 / 1.0 / thirds) alongside
+    interpolating ones."""
     import random
 
     import pyspark.sql.functions as FF
@@ -4820,8 +4911,13 @@ def test_sorted_percentiles_matches_percentile(spark):
         ]
         rows += [(g, v) for v in vals]
         rows.append((g, None))  # percentile ignores NULLs
+    # equal bracketing values: at p = 0.15 over three 0.1s (pos 0.3)
+    # the interpolation sum is an ulp off, so only percentile()'s
+    # equal-value short-circuit returns 0.1 itself
+    assert 0.7 * 0.1 + 0.3 * 0.1 != 0.1
+    rows += [(7, 0.1)] * 3
     df = spark.createDataFrame(rows, "g int, v double")
-    ps = [0.0, 0.01, 0.25, 1.0 / 3.0, 0.5, 2.0 / 3.0, 0.95, 0.9999, 1.0]
+    ps = [0.0, 0.01, 0.15, 0.25, 1.0 / 3.0, 0.5, 2.0 / 3.0, 0.95, 0.9999, 1.0]
     lits = ", ".join(repr(p) for p in ps)
     ref = {
         r["g"]: list(r["qv"])
@@ -4854,8 +4950,9 @@ def test_langid_f1_role_explode_edge_cases(spark):
     never exercises: a language NEVER predicted (fp row absent → the
     old join read NULL fp, coalesced to 0), a language ONLY predicted
     (absent from the old bytrue side → excluded), and a language with
-    ZERO correct predictions (tp 0, not NULL)."""
-    import pyspark.sql.functions as FF
+    ZERO correct predictions (tp 0, not NULL). It calls the same
+    _confusion_role_counts helper q_e_langid_f1 runs."""
+    from glaciersgee_spark.operators.text import _confusion_role_counts
 
     rows = [
         ("en", "en"), ("en", "en"), ("en", "de"),   # normal
@@ -4864,41 +4961,9 @@ def test_langid_f1_role_explode_edge_cases(spark):
         ("xx", "zz"),                               # zz only predicted
     ]
     pred = spark.createDataFrame(rows, "lang string, pred_lang string")
-    conf = pred.groupBy("lang", "pred_lang").agg(
-        FF.count(FF.lit(1)).cast("long").alias("c")
-    )
-    roles = conf.select(
-        FF.explode(
-            FF.array(
-                FF.struct(
-                    FF.col("lang").alias("k"),
-                    FF.col("c").alias("n"),
-                    FF.when(FF.col("lang") == FF.col("pred_lang"), FF.col("c"))
-                    .otherwise(FF.lit(0))
-                    .alias("tp"),
-                    FF.lit(0).cast("long").alias("fp"),
-                ),
-                FF.struct(
-                    FF.col("pred_lang").alias("k"),
-                    FF.lit(0).cast("long").alias("n"),
-                    FF.lit(0).cast("long").alias("tp"),
-                    FF.when(FF.col("lang") != FF.col("pred_lang"), FF.col("c"))
-                    .otherwise(FF.lit(0))
-                    .alias("fp"),
-                ),
-            )
-        ).alias("r")
-    ).select("r.*")
     got = {
         r["lang"]: (r["n_docs"], r["tp"], r["fp"])
-        for r in roles.groupBy(FF.col("k").alias("lang"))
-        .agg(
-            FF.sum("n").cast("long").alias("n_docs"),
-            FF.sum("tp").cast("long").alias("tp"),
-            FF.sum("fp").cast("long").alias("fp"),
-        )
-        .where(FF.col("n_docs") > 0)
-        .collect()
+        for r in _confusion_role_counts(pred).collect()
     }
     # expected, computed first-principles from `rows`
     assert got == {

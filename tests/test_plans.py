@@ -525,6 +525,34 @@ def test_bm25_has_no_eager_scan_at_build(spark):
     assert "BroadcastNestedLoopJoin" in PI.executed(df)
 
 
+def test_kmt_train_job_budget_and_no_persist(spark):
+    """_kmt_train is a declared iterative algorithm, so it may launch
+    jobs at build time — but a bounded number: one seed collect plus
+    at most 4 jobs per Lloyd's round (assignment-pass shuffle, panel
+    broadcast, stats shuffle, the one collect). Training must also
+    leave no persisted frame behind: the round state lives in
+    collected driver lists."""
+    from glaciersgee_spark.caches import clear_caches
+    from glaciersgee_spark.operators.similarity import KMT_ROUNDS, _kmt_train
+
+    sc = spark.sparkContext
+    load_table(spark, SF_SMOKE, "embeddings")  # one-time footer read
+    clear_caches()
+    spark.catalog.clearCache()
+    persisted = set(sc._jsc.getPersistentRDDs().keys())
+    tracker = sc.statusTracker()
+    group = "test_kmt_train_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        stats, cent = _kmt_train(spark, SF_SMOKE)
+    finally:
+        sc._jsc.clearJobGroup()
+    n_jobs = len(tracker.getJobIdsForGroup(group))
+    assert stats and cent
+    assert n_jobs <= 1 + 4 * KMT_ROUNDS, n_jobs
+    assert set(sc._jsc.getPersistentRDDs().keys()) <= persisted
+
+
 def test_hll_rolling_shuffles_sketches_not_users(spark):
     """q_b_hll_rolling's approximate path must aggregate sketches:
     hll_sketch_agg partials on the scan side, hll_union_agg after the

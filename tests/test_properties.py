@@ -689,8 +689,11 @@ def test_kmeans_train_round1_equals_iter_and_converges(spark):
     """q_e_kmeans_train's first round IS q_e_kmeans_iter (same seeds,
     same assignment/update spelling), and the per-cell shift trace is
     finite and corpus-conserving: every round's memberships sum to the
-    corpus size (Lloyd's never drops a vector)."""
+    corpus size (Lloyd's never drops a vector) — and so must every
+    round of the base-slice training stage_ivf_base_index runs."""
     from glaciersgee_spark.operators.similarity import (
+        _APPEND_BASE,
+        _kmt_train,
         q_e_kmeans_iter,
         q_e_kmeans_train,
     )
@@ -715,6 +718,20 @@ def test_kmeans_train_round1_equals_iter_and_converges(spark):
         assert r.shift6 >= 0.0
     assert set(per_round) == {1, 2, 3}
     assert all(v == n_vecs for v in per_round.values())
+
+    base_stats, _cent = _kmt_train(spark, SF_SMOKE, where=_APPEND_BASE)
+    n_base = (
+        load_table(spark, SF_SMOKE, "embeddings")
+        .where(F.expr(_APPEND_BASE))
+        .count()
+    )
+    base_round: dict[int, int] = {}
+    for rnd, _cid, n_assigned, shift6, _csum in base_stats:
+        base_round[rnd] = base_round.get(rnd, 0) + n_assigned
+        assert shift6 >= 0.0
+    assert set(base_round) == {1, 2, 3}
+    assert 0 < n_base < n_vecs
+    assert all(v == n_base for v in base_round.values())
 
 
 def test_quality_auc_bounds_and_mass(spark):
