@@ -1,18 +1,25 @@
-"""Central registry for the app-scoped persisted-frame caches.
+"""App-scoped caches: the one place engine state is keyed by application.
 
 Catalyst has no cross-branch (or cross-query) common-subtree reuse, so
-operators that share an expensive derived frame — the shingle banding,
-the trained k-means centroids, the token-count base, the panel score
-matrix — keep ONE persisted copy per (applicationId, sf_dir) in a
-module-level dict (the round-4 shingle-base convention). Those dicts
-are bounded in practice by the handful of sf tiers a session touches,
-but a long-lived multi-tenant session accumulates persisted frames
-monotonically (VERDICT r7 nit 2). This module makes the posture
-explicit: every cache dict registers itself here, and
-:func:`clear_caches` unpersists every cached DataFrame (walking tuples
-and lists for frames embedded in composite values) and empties the
-dicts — the hook a long-lived serving session calls between tenants,
-and tests call to prove nothing leaks.
+operators that share an expensive derived result — the shingle base,
+the SRP banding, the trained k-means centroids, the BPE merge trace —
+keep ONE copy per (applicationId, sf_dir, tag) here. Two kinds of
+entry, one mechanism:
+
+* :func:`scoped_persist` — a persisted DataFrame. Every call re-checks
+  its storage level and re-persists a frame whose storage an external
+  ``spark.catalog.clearCache()`` dropped (the bench honesty protocol
+  clears storage between runs without telling the registry), and a
+  schema guard refuses to serve a tag for a different plan.
+* :func:`scoped_value` — a collected driver-side value (centroid lists,
+  a merge trace, a count). ``compute()`` runs only on a miss.
+
+:func:`clear_caches` unpersists every frame and drops every entry — the
+hook a long-lived serving session calls between tenants, and tests call
+to prove nothing leaks. tests/test_contract_lint.py enforces that every
+``.persist()`` in the package goes through here (or is unpersisted by
+the function that made it) and that no other module reads
+``applicationId``.
 
 Deliberately NOT an LRU: eviction mid-battery would silently re-run
 the shared shuffles the caches exist to avoid; an explicit
@@ -21,80 +28,47 @@ end-of-tenant clear is the predictable contract.
 
 from __future__ import annotations
 
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 
-_REGISTRY: list[dict] = []
+_SCOPED: dict[tuple[str, str, str], DataFrame] = {}
+_VALUES: dict[tuple[str, str, str], Any] = {}
 
 
-def register_cache(d: dict) -> dict:
-    """Register an app-scoped cache dict; returns it for inline use."""
-    _REGISTRY.append(d)
-    return d
-
-
-def _unpersist_embedded(value: Any) -> int:
-    """Unpersist every DataFrame reachable inside value (tuple/list
-    composites hold e.g. (DataFrame, count) or (stats_rows, centroids));
-    returns how many frames were unpersisted."""
-    n = 0
-    if isinstance(value, DataFrame):
-        try:
-            value.unpersist()
-            n += 1
-        except Exception:
-            pass  # session already stopped — nothing to release
-    elif isinstance(value, (tuple, list)):
-        for v in value:
-            n += _unpersist_embedded(v)
-    return n
+def _key(spark, sf_dir: str, tag: str) -> tuple[str, str, str]:
+    return (spark.sparkContext.applicationId, sf_dir, tag)
 
 
 def clear_caches() -> dict[str, int]:
-    """Unpersist and drop every registered app-scoped cache entry.
+    """Unpersist every cached frame and drop every cached entry.
 
-    Returns {"entries": dropped dict entries, "frames": unpersisted
+    Returns {"entries": dropped frames + values, "frames": unpersisted
     DataFrames} so callers (and tests) can assert the release really
     happened. Safe to call with no active session; idempotent.
     """
-    entries = frames = 0
-    for d in _REGISTRY:
-        for v in d.values():
-            frames += _unpersist_embedded(v)
-        entries += len(d)
-        d.clear()
+    frames = 0
+    for df in _SCOPED.values():
+        try:
+            df.unpersist()
+            frames += 1
+        except Exception:
+            pass  # session already stopped — nothing to release
+    entries = len(_SCOPED) + len(_VALUES)
+    _SCOPED.clear()
+    _VALUES.clear()
     return {"entries": entries, "frames": frames}
 
 
-# The round-10 persist-hygiene route (VERDICT r9 advisory 2): query
-# functions that persist a frame consumed by MULTIPLE branches of ONE
-# returned plan (Catalyst has no cross-branch subtree reuse) must NOT
-# call .persist() bare — a long-lived session would stack a fresh
-# never-released copy per call. They route through scoped_persist,
-# which keys one copy per (applicationId, sf_dir, tag) in a registered
-# dict, re-persists after an external spark.catalog.clearCache() (the
-# bench honesty protocol drops storage without telling the dict), and
-# is released wholesale by clear_caches(). tests/test_contract_lint.py
-# enforces the route mechanically.
-def repersist(df: DataFrame) -> DataFrame:
-    """Restore a registry-served frame's persist after an external
-    ``spark.catalog.clearCache()`` dropped its storage (round 11).
-
-    scoped_persist always had this probe; the older per-module cache
-    dicts did not — they kept serving the SAME DataFrame object whose
-    storage level had been silently reset, so under the bench honesty
-    protocol (clearCache between timed runs) every multi-branch
-    consumer recomputed the shared subtree once PER PLAN BRANCH
-    instead of once per run. ``persist()`` on an unpersisted frame
-    re-registers it with the CacheManager; on a still-persisted frame
-    the probe is a no-op."""
-    if not df.storageLevel.useMemory and not df.storageLevel.useDisk:
-        df.persist()
-    return df
-
-
-_SCOPED: dict[tuple[str, str, str], DataFrame] = register_cache({})
+def scoped_value(
+    spark, sf_dir: str, tag: str, compute: Callable[[], Any]
+) -> Any:
+    """One driver-side value per (app, sf_dir, tag): compute() runs on
+    the first call only; clear_caches() drops it."""
+    key = _key(spark, sf_dir, tag)
+    if key not in _VALUES:
+        _VALUES[key] = compute()
+    return _VALUES[key]
 
 
 def scoped_persist(df: DataFrame, spark, sf_dir: str, tag: str) -> DataFrame:
@@ -103,20 +77,21 @@ def scoped_persist(df: DataFrame, spark, sf_dir: str, tag: str) -> DataFrame:
     Behaviorally identical to a per-call .persist() for the first call
     and after every clearCache (the storageLevel probe re-persists a
     dropped frame), but repeated calls reuse ONE frame and
-    clear_caches() releases it — the register_cache contract.
+    clear_caches() releases it.
 
     CONTRACT: one plan per tag. Every call site sharing a tag must pass
     the same logical frame — after the first call for a key, the df
     argument is intentionally ignored and the cached frame served
     (that IS the dedup the cache exists for). A call site that reused
     a tag for a different plan would silently get the wrong frame, so
-    the cheap guard below (round-11, ADVICE r10) compares the new df's
-    schema against the cached frame's and raises on mismatch: schema
-    equality won't catch every divergent plan, but it catches the
-    realistic tag-collision accident at zero JVM round-trips beyond
-    the schema fetch the DataFrame already holds.
+    the cheap guard below compares the new df's schema against the
+    cached frame's and raises on mismatch: schema equality won't catch
+    every divergent plan (a tag must therefore carry every parameter
+    of the plan), but it catches the realistic tag-collision accident
+    at zero JVM round-trips beyond the schema fetch the DataFrame
+    already holds.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
+    key = _key(spark, sf_dir, tag)
     cached = _SCOPED.get(key)
     if cached is None:
         cached = df

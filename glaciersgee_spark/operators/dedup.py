@@ -23,7 +23,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.types import ArrayType, LongType
 
-from glaciersgee_spark.caches import register_cache, repersist, scoped_persist
+from glaciersgee_spark.caches import scoped_persist, scoped_value
 from glaciersgee_spark.operators.lsh import cobucket_pairs, posting_copairs
 from glaciersgee_spark.registry import davg, query
 from glaciersgee_spark.tables import fan_out, load_table
@@ -233,52 +233,31 @@ def _duck_md5_ctes(
 
 _DUCK_MD5_CTES = _duck_md5_ctes(BAND_SIZE)
 
-# One persisted pair set per (app, sf_dir, band_size): q_e_dedup_apply
-# and q_e_curation_funnel both consume q_e_dedup_near_md5's verified
-# pairs — persisting here means the shingle→md5→minhash→band→verify
-# chain runs ONCE per corpus instead of once per downstream query (the
-# funnel was the 2nd-most expensive query purely from recomputing it).
-# The hashed-shingle base is band-size-independent, so both banding
-# configurations (4×2 over 8 perms and 8×2 over 16) share ONE persisted copy.
-_MD5_PAIRS_CACHE: dict[tuple, DataFrame] = register_cache({})
-_MD5_BASE_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-# Shared persisted shingle base for the exact inverted-index ops
-# (q_e_jaccard_verify, q_e_containment, q_e_jaccard_sweep's truth set).
-# Keyed per (app, sf_dir) so a long-lived session (bench battery,
-# two-SF parity) reuses ONE cached copy instead of stacking a fresh
-# never-unpersisted persist() per call — the round-3 winnow leak class.
-_SHINGLE_BASE_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-_JV_TRUTH_CACHE: dict[tuple[str, str], tuple[DataFrame, int]] = register_cache({})
-
-
 def _shingle_base(
     spark: SparkSession, sf_dir: str, re_persist: bool = True
 ) -> DataFrame:
+    # The shared shingle base of the exact inverted-index ops
+    # (q_e_jaccard_verify, q_e_containment, q_e_jaccard_sweep's truth
+    # set): one scoped_persist frame per (app, sf_dir).
     # re_persist=False serves a FRESH unpersisted plan (identical
     # lineage, identical rows) without warming the shared cache: the
-    # round-11 repersist A/Bs showed q_e_minhash_union — whose two
+    # round-11 re-persist A/Bs showed q_e_minhash_union — whose two
     # branches aggregate the explode by DIFFERENT keys, so the shared
     # subtree ends before any reusable exchange — consistently LOSES
     # ~0.4 s to the cache materialization (1.31–1.55 → 1.76 s across
     # both family A/Bs), while every posting/banding consumer wins.
     if not re_persist:
         return _with_shingles(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SHINGLE_BASE_CACHE.get(key)
-    if cached is None:
-        cached = _with_shingles(spark, sf_dir).persist()
-        _SHINGLE_BASE_CACHE[key] = cached
-    return repersist(cached)
+    sh = _with_shingles(spark, sf_dir)
+    return scoped_persist(sh, spark, sf_dir, "shingle_base")
 
 
 def _md5_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _MD5_BASE_CACHE.get(key)
-    if cached is None:
-        sh = _with_shingles(spark, sf_dir)
-        cached = sh.select("doc_id", F.expr(_SPARK_SHHASH).alias("hh")).persist()
-        _MD5_BASE_CACHE[key] = cached
-    return repersist(cached)
+    """(doc_id, hh): the hashed-shingle base, band-size-independent, so
+    every banding configuration shares ONE scoped_persist frame."""
+    sh = _with_shingles(spark, sf_dir)
+    hh = sh.select("doc_id", F.expr(_SPARK_SHHASH).alias("hh"))
+    return scoped_persist(hh, spark, sf_dir, "md5_base")
 
 
 def _banded(base, band_size: int, n_minhash: int, perms) -> DataFrame:
@@ -317,19 +296,12 @@ def _md5_pairs(
     n_minhash: int = N_MINHASH,
     perms: list[tuple[int, int]] | None = None,
 ) -> DataFrame:
+    """(id_a, id_b, jaccard): the verified minhash pair set, one
+    scoped_persist frame per banding configuration — q_e_dedup_apply
+    and q_e_curation_funnel both consume q_e_dedup_near_md5's pairs, so
+    the shingle→md5→minhash→band→verify chain runs ONCE per corpus
+    instead of once per downstream query."""
     perms = _MH_PERMS if perms is None else perms
-    # The perm family is part of the identity: same (band_size, n_minhash)
-    # with different coefficients must never alias to a cached pair set.
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        band_size,
-        n_minhash,
-        tuple(perms),
-    )
-    cached = _MD5_PAIRS_CACHE.get(key)
-    if cached is not None:
-        return repersist(cached)
     base = _md5_base(spark, sf_dir)
     banded = _banded(base, band_size, n_minhash, perms)
     cand = cobucket_pairs(banded, ["band", "bkey"], ["doc_id"]).select(
@@ -346,10 +318,13 @@ def _md5_pairs(
         .join(hb, "id_b")
         .select("id_a", "id_b", jac.alias("jaccard"))
         .where(F.col("jaccard") >= 0.5)
-        .persist()
     )
-    _MD5_PAIRS_CACHE[key] = pairs
-    return pairs
+    # The perm family is part of the identity: same (band_size,
+    # n_minhash) with different coefficients must never alias to a
+    # cached pair set, and the schema guard cannot tell them apart.
+    return scoped_persist(
+        pairs, spark, sf_dir, f"md5_pairs:{band_size}:{n_minhash}:{tuple(perms)}"
+    )
 
 
 @query(
@@ -1340,18 +1315,16 @@ def q_e_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is the q_e_jaccard_verify inverted-index pipeline — block-
     bounded, never all-pairs. Cost is 3 bandings, not 3 pipelines.
     """
-    tkey = (spark.sparkContext.applicationId, sf_dir)
-    cached = _JV_TRUTH_CACHE.get(tkey)
-    if cached is None:
-        truth = (
-            q_e_jaccard_verify(spark, sf_dir)
-            .where(F.col("jaccard") >= 0.5)
-            .select("id_a", "id_b", F.lit(1).alias("is_true"))
-            .persist()
-        )
-        n_true = truth.count()  # bounded scalar (block-local true pairs)
-        _JV_TRUTH_CACHE[tkey] = cached = (truth, n_true)
-    truth, n_true = cached
+    truth = scoped_persist(
+        q_e_jaccard_verify(spark, sf_dir)
+        .where(F.col("jaccard") >= 0.5)
+        .select("id_a", "id_b", F.lit(1).alias("is_true")),
+        spark,
+        sf_dir,
+        "jv_truth",
+    )
+    # bounded scalar (block-local true pairs)
+    n_true = scoped_value(spark, sf_dir, "jv_truth_n", truth.count)
     per_cfg = []
     for tag, bs, n in _SWEEP:
         cand = _sweep_cands(spark, sf_dir, bs, n)

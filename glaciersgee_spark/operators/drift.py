@@ -14,7 +14,7 @@ import math
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from glaciersgee_spark.caches import register_cache
+from glaciersgee_spark.caches import scoped_persist
 from glaciersgee_spark.registry import davg, dsum, query
 from glaciersgee_spark.tables import fan_out, load_table
 
@@ -1081,30 +1081,20 @@ def q_e_gini_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LN2_6 = 0.693147  # round(ln 2, 6) — shared literal in both engines
 
-# One persisted (source, token, cs) partial table per (app, sf): four
-# consumers (st itself, ct, ns, nn) would otherwise each re-run the
-# corpus explode + count — Catalyst has no cross-branch common-subtree
-# reuse, so without the persist the physical plan scans the corpus 4×
-# (caught by tests/test_plans.py's re-aggregation pin). Same shared-
-# cache convention as dedup._SHINGLE_BASE_CACHE.
-_ST_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-
 def _source_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _ST_CACHE.get(key)
-    if cached is None:
-        d = load_table(spark, sf_dir, "documents")
-        toks = d.select(
-            "source", F.explode(F.split("text", " ")).alias("token")
-        )
-        cached = (
-            toks.groupBy("source", "token")
-            .agg(F.count(F.lit(1)).alias("cs"))
-            .persist()
-        )
-        _ST_CACHE[key] = cached
-    return cached
+    """(source, token, cs) partial table, a scoped_persist frame: four
+    consumers (st itself, ct, ns, nn) would otherwise each re-run the
+    corpus explode + count — Catalyst has no cross-branch common-subtree
+    reuse, so without the persist the physical plan scans the corpus 4×
+    (caught by tests/test_plans.py's re-aggregation pin)."""
+    d = load_table(spark, sf_dir, "documents")
+    toks = d.select("source", F.explode(F.split("text", " ")).alias("token"))
+    return scoped_persist(
+        toks.groupBy("source", "token").agg(F.count(F.lit(1)).alias("cs")),
+        spark,
+        sf_dir,
+        "source_token_counts",
+    )
 
 
 @query(
@@ -1211,10 +1201,24 @@ def q_e_js_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _HILL_K = 100  # order statistics used by the Hill estimator (top k+1)
 
-# App-scoped persisted caches for the round-6 drift ops, keyed per
-# (app, sf_dir) — see dedup._SHINGLE_BASE_CACHE for the convention.
-_HILL_TOP_CACHE: dict[tuple[str, str], "DataFrame"] = register_cache({})
-_KS_SRC_CACHE: dict[tuple[str, str], "DataFrame"] = register_cache({})
+
+def _ks_source_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(source, x, cs): per-source document counts by length, the ONE
+    corpus scan behind q_e_length_ks and q_e_wasserstein. A
+    scoped_persist frame because EVERY downstream piece (support,
+    corpus CDF, totals, the grid join, n_t) derives from it — without
+    the persist each branch would re-scan the corpus (no cross-branch
+    subtree reuse; plan-pinned) — and shared, so running both drift
+    audits costs one scan."""
+    d = load_table(spark, sf_dir, "documents")
+    return scoped_persist(
+        d.groupBy("source", F.col("n_chars").alias("x")).agg(
+            F.count(F.lit(1)).alias("cs")
+        ),
+        spark,
+        sf_dir,
+        "ks_source_lengths",
+    )
 
 
 @query(
@@ -1279,19 +1283,14 @@ def q_e_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # without the persist each branch re-runs the two-phase corpus
     # rank (Catalyst has no cross-branch subtree reuse; plan-pinned).
     # ≤ 64·(k+1) rows per lang after the prune: trivially cacheable.
-    # App-scoped cache (the _SHINGLE_BASE_CACHE convention) so a
-    # long-lived session reuses ONE copy instead of stacking a fresh
-    # never-unpersisted persist per call — the round-3 winnow leak
-    # class.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    top = _HILL_TOP_CACHE.get(key)
-    if top is None:
-        top = (
-            pre.withColumn("rn", F.row_number().over(w2))
-            .where(F.col("rn") <= _HILL_K + 1)
-            .persist()
-        )
-        _HILL_TOP_CACHE[key] = top
+    top = scoped_persist(
+        pre.withColumn("rn", F.row_number().over(w2)).where(
+            F.col("rn") <= _HILL_K + 1
+        ),
+        spark,
+        sf_dir,
+        "hill_top",
+    )
     ref = top.groupBy("lang").agg(
         F.max("rn").alias("ref_rn"),
         F.max(F.struct("rn", "n_chars")).getField("n_chars").alias("x_ref"),
@@ -1376,22 +1375,9 @@ def q_e_length_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     source×support grid is |sources|·|support| rows, and every window
     runs over ≤ |support| rows partitioned by source — never over
     corpus rows. The support frame rides a broadcast join."""
-    d = load_table(spark, sf_dir, "documents")
     # ONE corpus scan: the (source, length) counts collapse the corpus
-    # to a slim aggregated frame, persisted because EVERY downstream
-    # piece (support, corpus CDF, totals, the grid join, n_t) derives
-    # from it — without the persist each branch would re-scan the
-    # corpus (no cross-branch subtree reuse; plan-pinned). App-scoped
-    # cache per (app, sf_dir): one copy per session, no per-call leak.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    src = _KS_SRC_CACHE.get(key)
-    if src is None:
-        src = (
-            d.groupBy("source", F.col("n_chars").alias("x"))
-            .agg(F.count(F.lit(1)).alias("cs"))
-            .persist()
-        )
-        _KS_SRC_CACHE[key] = src
+    # to a slim aggregated frame.
+    src = _ks_source_lengths(spark, sf_dir)
     support = src.groupBy("x").agg(F.sum("cs").alias("ct"))
     wt = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
     corpus = support.withColumn("cum_t", F.sum("ct").over(wt)).select("x", "cum_t")
@@ -1592,7 +1578,7 @@ def q_e_jsd_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from one source contributes p·ln2 from the other side only).
 
     Scale: the corpus collapses ONCE to the shared persisted
-    (source, token) count frame (drift._ST_CACHE — the same frame
+    (source, token) count frame (_source_token_counts — the same frame
     js_drift/ct consumers ride); the densified grid and the pair join
     are |sources|²·|vocab| rows of arithmetic, corpus-independent
     given a bounded vocab (an unbounded vocab would first hash-bucket
@@ -1715,22 +1701,13 @@ def q_e_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer sum); ONE closing floor-quantized division per source
     converts to characters. Scale: identical shape to q_e_length_ks —
     the corpus collapses to its (source, length) counts first (rides
-    the shared _KS_SRC_CACHE persisted frame, so running both drift
+    the shared _ks_source_lengths frame, so running both drift
     audits costs ONE corpus scan), the un-partitioned support windows
     run over the corpus-size-independent length support (the
     bounded-domain exemption), and the grid is |sources|·|support|
     rows behind a broadcast. The cum_s·N products stay in BIGINT to
     ~3e9 docs; swap to DECIMAL(38,0) beyond that."""
-    d = load_table(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    src = _KS_SRC_CACHE.get(key)
-    if src is None:
-        src = (
-            d.groupBy("source", F.col("n_chars").alias("x"))
-            .agg(F.count(F.lit(1)).alias("cs"))
-            .persist()
-        )
-        _KS_SRC_CACHE[key] = src
+    src = _ks_source_lengths(spark, sf_dir)
     support = src.groupBy("x").agg(F.sum("cs").alias("ct"))
     wt = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
     corpus = support.select(

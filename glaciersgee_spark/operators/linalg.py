@@ -25,7 +25,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from glaciersgee_spark.caches import register_cache, repersist, scoped_persist
+from glaciersgee_spark.caches import scoped_persist
 from glaciersgee_spark.registry import query
 from glaciersgee_spark.tables import fan_out, load_table
 
@@ -186,21 +186,12 @@ def q_e_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_e_spectral_mass (round 7)
 # ---------------------------------------------------------------------------
 
-# App-scoped integer-Gram cache: within one q_e_spectral_mass call the
-# 2,080-cell frame feeds THREE branches (v1, trace, Rayleigh) and
-# Catalyst has no cross-branch subtree reuse — without the persist the
-# corpus kernel would run three times per call (the dedup._SHINGLE_
-# BASE_CACHE convention).
-_GRAM_CACHE: dict = register_cache({})
-
-
 def _gram_int_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _GRAM_CACHE.get(key)
-    if cached is None:
-        cached = _gram_int(spark, sf_dir).persist()
-        _GRAM_CACHE[key] = cached
-    return repersist(cached)
+    """_gram_int as a scoped_persist frame: within one q_e_spectral_mass
+    call the 2,080-cell frame feeds THREE branches (v1, trace,
+    Rayleigh) and Catalyst has no cross-branch subtree reuse — without
+    the persist the corpus kernel would run three times per call."""
+    return scoped_persist(_gram_int(spark, sf_dir), spark, sf_dir, "gram_int")
 
 
 @query(

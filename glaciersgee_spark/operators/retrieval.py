@@ -18,43 +18,39 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from glaciersgee_spark.operators.similarity import _cos6, _D_NRM, _d_cos6, _D_VEC
 from glaciersgee_spark.operators.text import BM25_CTES, q_e_bm25
-from glaciersgee_spark.caches import register_cache
+from glaciersgee_spark.caches import scoped_persist
 from glaciersgee_spark.registry import dsum, query
 from glaciersgee_spark.tables import fan_out, load_table
 
 RRF_K = 60
 
-# App-scoped cache of the two scored lists (BM25 per-doc scores and
-# dense-cosine-vs-query-0 scores): q_e_rrf_fusion consumes EACH list
-# twice (the chunked rank's within-pass and totals-pass) and
-# q_e_rank_biased_overlap scores the same two lists again — Catalyst
-# has no cross-branch subtree reuse, so without the persist the token
-# pipeline / cosine scan re-run once per consumer (the
-# dedup._SHINGLE_BASE_CACHE convention).
-_SCORED_CACHE: dict = register_cache({})
-
-
 def _scored_lists(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SCORED_CACHE.get(key)
-    if cached is None:
-        bm = q_e_bm25(spark, sf_dir).where(F.col("doc_id") != 0).persist()
-        e = load_table(spark, sf_dir, "embeddings")
-        qv = e.where(F.col("vec_id") == 0).select(
-            F.col("embedding").alias("qemb")
-        )
-        cs = (
-            e.where(F.col("vec_id") != 0)
-            .join(F.broadcast(qv))
-            .select(
-                F.col("vec_id").alias("doc_id"),
-                _cos6("embedding", "qemb").alias("score"),
-            )
-            .persist()
-        )
-        cached = (bm, cs)
-        _SCORED_CACHE[key] = cached
-    return cached
+    """(BM25 per-doc scores, dense-cosine-vs-query-0 scores), each a
+    scoped_persist frame: q_e_rrf_fusion consumes EACH list twice (the
+    chunked rank's within-pass and totals-pass) and
+    q_e_rank_biased_overlap scores the same two lists again — Catalyst
+    has no cross-branch subtree reuse, so without the persist the token
+    pipeline / cosine scan re-run once per consumer."""
+    bm = scoped_persist(
+        q_e_bm25(spark, sf_dir).where(F.col("doc_id") != 0),
+        spark,
+        sf_dir,
+        "scored_bm25",
+    )
+    e = load_table(spark, sf_dir, "embeddings")
+    qv = e.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qemb"))
+    cs = scoped_persist(
+        e.where(F.col("vec_id") != 0)
+        .join(F.broadcast(qv))
+        .select(
+            F.col("vec_id").alias("doc_id"),
+            _cos6("embedding", "qemb").alias("score"),
+        ),
+        spark,
+        sf_dir,
+        "scored_cos",
+    )
+    return bm, cs
 
 
 
@@ -295,13 +291,6 @@ def q_e_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SPK_DF_LO, SPK_DF_HI, SPK_K = 2, 20, 3
 
-# App-scoped postings cache: the tf-idf weight frame feeds THREE
-# consumers (per-doc norms + both pair-join legs) and Catalyst has no
-# cross-branch subtree reuse — without the persist the corpus token
-# explode + df join would run three times per call (the
-# dedup._SHINGLE_BASE_CACHE convention).
-_SPK_W_CACHE: dict = register_cache({})
-
 
 @query(
     "q_e_sparse_knn",
@@ -389,22 +378,24 @@ def q_e_sparse_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("df"))
         .where(F.col("df").between(SPK_DF_LO, SPK_DF_HI))
     )
-    key = (spark.sparkContext.applicationId, sf_dir)
-    w = _SPK_W_CACHE.get(key)
-    if w is None:
-        w = (
-            tf.join(df, "g")
-            .crossJoin(F.broadcast(nd))
-            .select(
-                "doc_id",
-                "g",
-                F.round(
-                    F.col("tf") * F.round(F.log(F.col("nd") / F.col("df")), 6), 6
-                ).alias("w"),
-            )
-            .persist()
-        )
-        _SPK_W_CACHE[key] = w
+    # The tf-idf weight frame feeds THREE consumers (per-doc norms +
+    # both pair-join legs) and Catalyst has no cross-branch subtree
+    # reuse — without the persist the corpus token explode + df join
+    # would run three times per call.
+    w = scoped_persist(
+        tf.join(df, "g")
+        .crossJoin(F.broadcast(nd))
+        .select(
+            "doc_id",
+            "g",
+            F.round(
+                F.col("tf") * F.round(F.log(F.col("nd") / F.col("df")), 6), 6
+            ).alias("w"),
+        ),
+        spark,
+        sf_dir,
+        "sparse_knn_w",
+    )
     nrm = w.groupBy("doc_id").agg(
         F.sqrt(F.expr(dsum("w * w", scale=12))).alias("nrm")
     )

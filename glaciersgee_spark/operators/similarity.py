@@ -32,7 +32,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 
-from glaciersgee_spark.caches import register_cache, repersist, scoped_persist
+from glaciersgee_spark.caches import scoped_persist, scoped_value
 from glaciersgee_spark.operators.lsh import cobucket_pairs
 from glaciersgee_spark.registry import davg, dsum, query
 from glaciersgee_spark.tables import fan_out, load_table
@@ -232,26 +232,20 @@ def q_e_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# One persisted copy of the banding per (app, sf_dir): five declared
-# queries consume it (sim_join, sim_topk_lsh, ann_recall, recall_curve,
-# …) and a long-lived battery session would otherwise stack a fresh
-# never-unpersisted persist() per call (the round-4 shingle-base fix,
-# applied to the SRP side).
-_BANDED_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-
 def _banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, band, bucket) — each vector lands in N_BANDS buckets."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _BANDED_CACHE.get(key)
-    if cached is None:
-        e = fan_out(load_table(spark, sf_dir, "embeddings"), "vec_id")
-        d = e.select("vec_id", _srp_buckets("embedding").alias("buckets"))
-        cached = d.select(
-            "vec_id", F.posexplode("buckets").alias("band", "bucket")
-        ).persist()
-        _BANDED_CACHE[key] = cached
-    return repersist(cached)
+    """(vec_id, band, bucket) — each vector lands in N_BANDS buckets.
+
+    One persisted copy per (app, sf_dir) (scoped_persist): five
+    declared queries consume it (sim_join, sim_topk_lsh, ann_recall,
+    recall_curve, …)."""
+    e = fan_out(load_table(spark, sf_dir, "embeddings"), "vec_id")
+    d = e.select("vec_id", _srp_buckets("embedding").alias("buckets"))
+    return scoped_persist(
+        d.select("vec_id", F.posexplode("buckets").alias("band", "bucket")),
+        spark,
+        sf_dir,
+        "srp_banded",
+    )
 
 
 @query(
@@ -1734,12 +1728,6 @@ def _kmt_oracle() -> str:
     """
 
 
-# App-scoped training cache: (stats_rows, trained centroids) — shared
-# by q_e_kmeans_train (stats) and q_e_ivf_trained (centroids) so the
-# 3-round loop runs once per (app, sf, slice). It holds only collected
-# driver-side lists: each round persists nothing.
-_KMT_CACHE: dict[tuple[str, str, str], tuple[list, list]] = register_cache({})
-
 _KMT_ASG_SCHEMA = "cid long, embedding array<float>"
 
 
@@ -1783,18 +1771,24 @@ def _kmt_assign(cent: list[tuple[int, list[float]]]):
 def _kmt_train(spark: SparkSession, sf_dir: str, where: str | None = None):
     """3-round Lloyd's over the embeddings table (optionally filtered
     to a population slice, e.g. the round-10 append lifecycle's base
-    slice); returns (stats_rows, trained centroids), app-cached per
-    (app, sf, slice).
+    slice); returns (stats_rows, trained centroids), a scoped_value per
+    (app, sf, slice) — shared by q_e_kmeans_train (stats) and
+    q_e_ivf_trained (centroids) so the loop runs once. It holds only
+    collected driver-side lists: each round persists nothing."""
+    return scoped_value(
+        spark,
+        sf_dir,
+        f"kmt_train:{where or ''}",
+        lambda: _kmt_lloyd(spark, sf_dir, where),
+    )
 
-    Each round is one assignment pass (the _kmt_assign Arrow kernel),
+
+def _kmt_lloyd(spark: SparkSession, sf_dir: str, where: str | None):
+    """Each round is one assignment pass (the _kmt_assign Arrow kernel),
     one (cid, d) mean aggregate whose count(*) is the cell size, and
     one stats aggregate over the broadcast old panel that also
     collects the new centroid per cell — so a single collect() per
     round returns both the stats rows and the next centroids."""
-    key = (spark.sparkContext.applicationId, sf_dir, where or "")
-    cached = _KMT_CACHE.get(key)
-    if cached is not None:
-        return cached
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     if where is not None:
         e = e.where(F.expr(where))
@@ -1841,9 +1835,7 @@ def _kmt_train(spark: SparkSession, sf_dir: str, where: str | None = None):
             (r.cid, [x.nv for x in r.cv])
             for r in sorted(rows, key=lambda r: r.cid)
         ]
-    cached = (sorted(stats_rows), cent)
-    _KMT_CACHE[key] = cached
-    return cached
+    return sorted(stats_rows), cent
 
 
 @query("q_e_kmeans_train", oracle=_kmt_oracle())
@@ -3449,48 +3441,38 @@ def q_e_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_e_davies_bouldin (round 7)
 # ---------------------------------------------------------------------------
 
-# App-scoped (assignment, cell-mean) cache — see the in-op comment.
-# Shared by q_e_davies_bouldin and q_e_silhouette: both consume the
-# identical (asg, mean) pair, so the k-means scoring and the cell-mean
-# pass run once per app regardless of which op fires first.
-_DB_CACHE: dict = register_cache({})
-
-
 def _db_asg_mean(spark: SparkSession, sf_dir: str):
-    """(assignment, per-dim cell means), persisted app-scoped.
+    """(assignment, per-dim cell means), each a scoped_persist frame.
 
-    asg feeds the mean pass AND every member-distance probe; mean
-    feeds the probes and the separation legs — persist both (the
-    app-scoped convention) or the k-means assignment scoring replays
+    Shared by q_e_davies_bouldin and q_e_silhouette, so the k-means
+    scoring and the cell-mean pass run once per app regardless of
+    which op fires first. asg feeds the mean pass AND every
+    member-distance probe; mean feeds the probes and the separation
+    legs — persist both or the k-means assignment scoring replays
     once per consumer."""
     e = load_table(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _DB_CACHE.get(key)
-    if cached is None:
-        asg, _cent = _km_assign(spark, sf_dir)
-        asg = asg.persist()
-        dims0 = (
-            asg.join(e.select("vec_id", "embedding"), "vec_id")
-            .select(
-                "cid",
-                "vec_id",
-                F.posexplode(F.col("embedding").cast("array<double>")),
-            )
-            .select(
-                "cid",
-                "vec_id",
-                (F.col("pos") + 1).alias("d"),
-                F.col("col").alias("val"),
-            )
+    asg = scoped_persist(_km_assign(spark, sf_dir)[0], spark, sf_dir, "db_asg")
+    dims0 = (
+        asg.join(e.select("vec_id", "embedding"), "vec_id")
+        .select(
+            "cid",
+            "vec_id",
+            F.posexplode(F.col("embedding").cast("array<double>")),
         )
-        mean = (
-            dims0.groupBy("cid", "d")
-            .agg(F.expr(davg("val", scale=9)).alias("nv"))
-            .persist()
+        .select(
+            "cid",
+            "vec_id",
+            (F.col("pos") + 1).alias("d"),
+            F.col("col").alias("val"),
         )
-        cached = (asg, mean)
-        _DB_CACHE[key] = cached
-    return cached
+    )
+    mean = scoped_persist(
+        dims0.groupBy("cid", "d").agg(F.expr(davg("val", scale=9)).alias("nv")),
+        spark,
+        sf_dir,
+        "db_mean",
+    )
+    return asg, mean
 
 
 @query(
@@ -4110,7 +4092,7 @@ def q_e_cluster_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(38,0) beyond ~3e9 rows, the q_e_quality_auc note), one
     closing division under the floor(x·1e6 + 0.5)/1e6 convention.
     Scale: two broadcast-panel assignment scans (both shared: seed
-    via _km_assign's spelling, trained via the _KMT_CACHE centroids),
+    via _km_assign's spelling, trained via _kmt_train's centroids),
     one K×K-row contingency groupBy — combinable, no pairs, no
     windows over corpus-sized frames."""
     e = load_table(spark, sf_dir, "embeddings")
@@ -4322,12 +4304,12 @@ def _ivp_oracle() -> str:
 @query("q_e_ivf_persist", oracle=_ivp_oracle())
 def q_e_ivf_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted ANN index lifecycle END TO END (round 8, VERDICT r7
-    item 4 — the production shape the in-process `_KMT_CACHE` ops
+    item 4 — the production shape the in-process `_kmt_train` ops
     stop short of): the BUILD job writes the trained IVF artifacts —
     centroid codebook + cell-assignment posting lists — to table
     storage (stage_ivf_index, corpus-fingerprinted, atomic publish),
     and THIS op is the SERVING job: it reads the artifacts back from
-    disk with fresh parquet scans (no `_KMT_CACHE`, no training
+    disk with fresh parquet scans (no `_kmt_train`, no training
     lineage — the serve plan's inputs are the two artifact scans plus
     the embeddings table for query/re-rank vectors, pinned in
     tests/test_plans.py), probes the top-2-of-8 cells per panel query
@@ -4481,7 +4463,7 @@ def q_e_ivfpq_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     job (stage_ivf_index) persists ALL FOUR index artifacts — coarse
     centroids, cell postings, the PQ sub-codebook, and the 8-byte
     code per vector — and THIS op is the serving job: it reads the
-    artifacts back with fresh parquet scans (no `_KMT_CACHE`, no
+    artifacts back with fresh parquet scans (no `_kmt_train`, no
     training lineage, pinned in tests/test_plans.py), probes the
     top-2-of-8 cells per panel query against the read-back coarse
     codebook, joins probed cells to the read-back postings for
@@ -4791,7 +4773,7 @@ def stage_ivfpq_append(spark: SparkSession, sf_dir: str) -> str:
     delta slice to the base generation by encoding it against the
     FROZEN artifacts — the read-back coarse centroids (assignment) and
     the read-back PQ sub-codebook (8-byte codes) — with ZERO training:
-    no `_kmt_train`, no `_KMT_CACHE`, no Lloyd's round anywhere in
+    no `_kmt_train`, no cached centroids, no Lloyd's round anywhere in
     this path (pinned in tests/test_plans.py). The merged generation
     (copied centroids/codebook + unioned postings/codes) publishes
     atomically under its own fingerprinted path, so serving jobs
@@ -5685,7 +5667,7 @@ def q_e_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest round, while ranking cells nearly identically.
 
     Scale: ONE shared k-means assignment + cell-mean pass (the
-    app-scoped _DB_CACHE, shared with q_e_davies_bouldin — whichever
+    _db_asg_mean frames, shared with q_e_davies_bouldin — whichever
     fires first pays it); the distance probe joins the n·64 dim frame
     to the broadcast 512-row mean table (K-fan-out on bounded K, the
     q_e_knn_classify shape); everything after the per-point fold is

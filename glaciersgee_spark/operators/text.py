@@ -12,7 +12,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from glaciersgee_spark.caches import register_cache, scoped_persist
+from glaciersgee_spark.caches import scoped_persist, scoped_value
 from glaciersgee_spark.registry import davg, dsum, query
 from glaciersgee_spark.tables import fan_out, load_table
 
@@ -702,25 +702,15 @@ def q_e_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-# One persisted unigram-LM score frame per (app, sf_dir): the token
-# explode + vocab count + per-doc exact-decimal mean is the shared base
-# of q_e_ngram_lm AND q_e_ppl_buckets (same _md5_base discipline as the
-# minhash family) — memoizing it means one corpus pays the LM pipeline
-# once per session, not once per consumer.
-_LM_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-
 def lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_tokens, avg_logp): mean 6-dp-rounded ln token
     probability per doc under the corpus unigram distribution. The
     token stream is fanned out once (two consumers reuse the single
     repartition; no-op on many-file scans); the corpus token total is
     a 1-row broadcast aggregate (repo convention — no driver-side
-    count at plan-build)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _LM_CACHE.get(key)
-    if cached is not None:
-        return cached
+    count at plan-build). A scoped_persist frame: it is the shared
+    base of q_e_ngram_lm AND q_e_ppl_buckets, so one corpus pays the
+    LM pipeline once per session, not once per consumer."""
     d = load_table(spark, sf_dir, "documents")
     toks = fan_out(d, "doc_id").select(
         "doc_id", F.explode(F.split("text", " ")).alias("token")
@@ -736,10 +726,8 @@ def lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_tokens"),
             F.expr(davg(logp)).alias("avg_logp"),
         )
-        .persist()
     )
-    _LM_CACHE[key] = lm
-    return lm
+    return scoped_persist(lm, spark, sf_dir, "lm_scores")
 
 
 @query(
@@ -987,21 +975,18 @@ def _bpe_oracle() -> str:
     """
 
 
-# App-scoped training cache: the 5-round merge trace — shared by
-# q_e_bpe_train (the trace itself) and q_e_bpe_fertility (which
-# APPLIES the learned merges), so the loop runs once per (app, sf).
-_BPE_CACHE: dict = register_cache({})
-
-
 def _bpe_train(spark: SparkSession, sf_dir: str) -> list[tuple]:
     """Run the bounded 5-merge training loop (see q_e_bpe_train's
     docstring for the discipline) and return the merge trace rows
-    (rnd, left, right, merged, n_occ, n_types); cached per
-    (applicationId, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _BPE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    (rnd, left, right, merged, n_occ, n_types). A scoped_value shared
+    by q_e_bpe_train (the trace itself) and q_e_bpe_fertility (which
+    APPLIES the learned merges), so the loop runs once per (app, sf)."""
+    return scoped_value(
+        spark, sf_dir, "bpe_trace", lambda: _bpe_merges(spark, sf_dir)
+    )
+
+
+def _bpe_merges(spark: SparkSession, sf_dir: str) -> list[tuple]:
     d = load_table(spark, sf_dir, "documents")
     wt = (
         d.select(F.explode(F.split("text", " ")).alias("w"))
@@ -1064,7 +1049,6 @@ def _bpe_train(spark: SparkSession, sf_dir: str) -> list[tuple]:
         # cur chains narrow transforms ON TOP of the persisted base and
         # the trace is plain rows, so releasing the base leaks nothing
         base.unpersist()
-    _BPE_CACHE[key] = trace
     return trace
 
 
@@ -1095,7 +1079,7 @@ def q_e_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract); the oracle re-derives the identical chain with unrolled
     CTEs. A round with no remaining pairs stops the loop (the oracle's
     LEFT JOIN ON TRUE mirrors by passing word forms through). The
-    trace is trained once per (app, sf) in the shared _BPE_CACHE and
+    trace is trained once per (app, sf) (a scoped_value) and
     reused by q_e_bpe_fertility, which APPLIES these merges."""
     from pyspark.sql import types as T
 
@@ -1148,7 +1132,7 @@ def _bpe_fert_oracle() -> str:
 def q_e_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """APPLY the trained BPE merges and audit the tokenizer they
     produce (round 8 — the apply side of q_e_bpe_train, sharing its
-    _BPE_CACHE trace exactly as q_e_ivf_trained shares _KMT_CACHE):
+    scoped_value trace exactly as q_e_ivf_trained shares _kmt_train's):
     per language, tokens-per-word under the 5-merge vocabulary
     (FERTILITY — the number a multilingual tokenizer team watches,
     since a language with high fertility pays proportionally more of
@@ -1582,11 +1566,6 @@ def q_e_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _DSIR_B = 1024  # hashed feature space (the q_e_feature_hashing idiom)
-
-# App-scoped cache for the per-doc DSIR weight frame, keyed per
-# (app, sf_dir) — the _SHINGLE_BASE_CACHE convention: one persisted
-# copy per session, never a per-call persist leak.
-_DSIR_PER_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
 _DSIR_TARGET = "src0"  # the high-quality target domain
 
 
@@ -1651,11 +1630,6 @@ def q_e_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup. Add-one smoothing keeps every bucket finite. Determinism:
     BIGINT count products, one correctly-rounded double division into
     a 6-dp ln, exact-decimal per-doc mean, integer bin clamp."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _DSIR_PER_CACHE.get(key)
-    if cached is not None:
-        per = cached
-        return _dsir_bin(per)
     d = load_table(spark, sf_dir, "documents")
     # fan_out: the md5-per-token explode is the heavy scan-side stage
     # and the local corpus scan is one partition — spread it so both
@@ -1678,16 +1652,22 @@ def q_e_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is the corpus-sized stage, so it must run exactly twice in the
     # whole plan — once here, once for the per-doc probe join below.
     # The totals n_t/n_r fold out of the same 1024-row frame (driver
-    # sums of a bounded collect — no extra corpus scans).
-    counts = [
-        (r.b, r.c_r, r.c_t)
-        for r in tok.groupBy("b")
-        .agg(
-            F.count(F.lit(1)).alias("c_r"),
-            F.count(F.when(F.col("source") == _DSIR_TARGET, 1)).alias("c_t"),
-        )
-        .collect()
-    ]
+    # sums of a bounded collect — no extra corpus scans). The collect
+    # is a scoped_value, so it runs once per (app, sf).
+    counts = scoped_value(
+        spark,
+        sf_dir,
+        "dsir_counts",
+        lambda: [
+            (r.b, r.c_r, r.c_t)
+            for r in tok.groupBy("b")
+            .agg(
+                F.count(F.lit(1)).alias("c_r"),
+                F.count(F.when(F.col("source") == _DSIR_TARGET, 1)).alias("c_t"),
+            )
+            .collect()
+        ],
+    )
     n_r = sum(c_r for _, c_r, _ in counts)
     n_t = sum(c_t for _, _, c_t in counts)
     from pyspark.sql import types as T
@@ -1717,20 +1697,17 @@ def q_e_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per is consumed by BOTH the corpus-mean pass and the final
     # binning — Catalyst has no cross-branch subtree reuse, so without
     # the persist the token join would run twice (plan-pinned in
-    # test_plans). One slim row per doc; app-scoped cache so a long
+    # test_plans). One slim row per doc; scoped_persist so a long
     # session holds ONE copy (no per-call persist leak).
-    per = (
+    per = scoped_persist(
         tok.join(F.broadcast(lr), "b")
         .groupBy("doc_id", "source")
-        .agg(F.expr(f"round({davg('lr6')}, 6)").alias("w6"))
-        .persist()
+        .agg(F.expr(f"round({davg('lr6')}, 6)").alias("w6")),
+        spark,
+        sf_dir,
+        "dsir_per",
     )
-    _DSIR_PER_CACHE[key] = per
-    return _dsir_bin(per)
-
-
-def _dsir_bin(per: DataFrame) -> DataFrame:
-    """Corpus-mean-centered centi-nat binning of the per-doc weights."""
+    # Corpus-mean-centered centi-nat binning of the per-doc weights.
     mu = per.agg(F.expr(f"round({davg('w6')}, 6)").alias("mu6"))
     return (
         per.join(F.broadcast(mu))
@@ -2720,12 +2697,6 @@ def q_e_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # follows only "San".
 _KN_D = "0.75"
 
-# (source, prev, cur) bigram counts feed five branches (types -> c1 /
-# cont / tot, plus the lp join); Catalyst has no cross-branch subtree
-# reuse, so the frame persists app-scoped (the _ST_CACHE convention,
-# released via clear_caches).
-_KN_BG_CACHE: dict[tuple[str, str], "DataFrame"] = register_cache({})
-
 
 @query(
     "q_e_kn_bigram",
@@ -2797,17 +2768,18 @@ def q_e_kn_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         "slice(split(text, ' '), 2, size(split(text, ' ')) - 1), "
         "(x, y) -> struct(x AS prev, y AS cur)))"
     )
-    key = (spark.sparkContext.applicationId, sf_dir)
-    bg = _KN_BG_CACHE.get(key)
-    if bg is None:
-        bg = (
-            d.select("source", F.expr(_pairs).alias("s"))
-            .select("source", "s.prev", "s.cur")
-            .groupBy("source", "prev", "cur")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .persist()
-        )
-        _KN_BG_CACHE[key] = bg
+    # (source, prev, cur) bigram counts feed five branches (types -> c1
+    # / cont / tot, plus the lp join); Catalyst has no cross-branch
+    # subtree reuse, so the frame is a scoped_persist frame.
+    bg = scoped_persist(
+        d.select("source", F.expr(_pairs).alias("s"))
+        .select("source", "s.prev", "s.cur")
+        .groupBy("source", "prev", "cur")
+        .agg(F.count(F.lit(1)).cast("long").alias("n")),
+        spark,
+        sf_dir,
+        "kn_bigrams",
+    )
     types = bg.groupBy("prev", "cur").agg(
         F.sum("n").cast("long").alias("c12")
     )

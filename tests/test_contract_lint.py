@@ -67,16 +67,15 @@ def test_persist_sites_are_registry_routed():
     """Lint 3 (round 10, VERDICT r9 advisory 2): every .persist() in the
     package must be OWNED by the cache registry — a bare per-call
     persist inside a query function stacks a fresh never-released copy
-    per call in a long-lived session (the anti-pattern the round-4
-    shingle-base fix and caches.register_cache exist for).
+    per call in a long-lived session.
 
     Mechanical rule, AST-checked per enclosing function: a function
-    that calls .persist() must ALSO either (a) store into a registered
-    ``*_CACHE[...]`` dict (the app-scoped helper convention), (b) call
-    .unpersist() itself (the bounded-loop convention, e.g. the k-means
-    trainer's per-round drop), or (c) BE caches.scoped_persist. Query
-    functions route multi-branch frames through
-    caches.scoped_persist(df, spark, sf_dir, tag) instead.
+    that calls .persist() must either (a) call .unpersist() itself (the
+    bounded-loop convention, e.g. the BPE trainer's base frame) or
+    (b) BE caches.scoped_persist. Every other frame routes through
+    caches.scoped_persist(df, spark, sf_dir, tag). And caches.py is the
+    only module that keys state by application: ``applicationId``
+    appears nowhere else in the package.
     """
     import ast
     import pathlib
@@ -85,8 +84,12 @@ def test_persist_sites_are_registry_routed():
 
     pkg = pathlib.Path(glaciersgee_spark.__file__).parent
     bad: list[str] = []
+    app_keyed: list[str] = []
     for py in sorted(pkg.rglob("*.py")):
-        tree = ast.parse(py.read_text(), filename=str(py))
+        text = py.read_text()
+        if "applicationId" in text and py.name != "caches.py":
+            app_keyed.append(str(py.relative_to(pkg)))
+        tree = ast.parse(text, filename=str(py))
         for node in ast.walk(tree):
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 continue
@@ -98,27 +101,15 @@ def test_persist_sites_are_registry_routed():
             }
             if "persist" not in src_calls:
                 continue
-            # caches.py's own helpers: scoped_persist registers what it
-            # persists; repersist (round 11) re-persists a frame the
-            # registry ALREADY owns after an external clearCache
-            # dropped its storage — both are the registry, not a leak.
-            if node.name in ("scoped_persist", "repersist") and py.name == "caches.py":
+            if node.name == "scoped_persist" and py.name == "caches.py":
                 continue
-            if "unpersist" in src_calls:
-                continue
-            stores_cache = any(
-                isinstance(n, ast.Assign)
-                and any(
-                    isinstance(t, ast.Subscript)
-                    and isinstance(t.value, ast.Name)
-                    and t.value.id.endswith("_CACHE")
-                    for t in n.targets
-                )
-                for n in ast.walk(node)
-            )
-            if not stores_cache:
+            if "unpersist" not in src_calls:
                 bad.append(f"{py.relative_to(pkg)}:{node.lineno} {node.name}")
     assert not bad, (
         "bare per-call .persist() outside the cache registry — route "
-        f"through caches.scoped_persist or a *_CACHE dict: {bad}"
+        f"through caches.scoped_persist: {bad}"
+    )
+    assert not app_keyed, (
+        "state keyed by applicationId outside caches.py — use "
+        f"caches.scoped_persist / caches.scoped_value: {app_keyed}"
     )

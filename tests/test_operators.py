@@ -234,17 +234,27 @@ def test_corpus_banding_never_overflows_default_cap(spark):
         _SWEEP,
         _banded,
         _md5_base,
+        _md5_pairs,
         _sweep_banded,
     )
     from glaciersgee_spark.operators.lsh import bucket_overflow
 
     base = _md5_base(spark, SF_SMOKE)
     # The base-M packed bandings the pair queries run (near_md5 default
-    # + high-recall variant, est_err, bbit):
-    for bs, n, perms in ((2, 8, _MH_PERMS), (2, 16, _MH_PERMS_HR)):
+    # + high-recall variant, est_err, bbit), plus a second perm family
+    # with the default's (band_size, n_minhash):
+    configs = ((2, 8, _MH_PERMS), (2, 16, _MH_PERMS_HR), (2, 8, _MH_PERMS_HR[:8]))
+    pair_sets = []
+    for bs, n, perms in configs:
         banded = _banded(base, bs, n, perms)
         n_over = bucket_overflow(banded, ["band", "bkey"]).count()
         assert n_over == 0, f"_banded {bs}x{n}: {n_over} buckets over the cap"
+        pair_sets.append(_md5_pairs(spark, SF_SMOKE, bs, n, perms))
+    # The pair-set cache keys on the whole perm family: same (band_size,
+    # n_minhash) with other coefficients gets its own persisted frame.
+    assert len({id(p) for p in pair_sets}) == len(configs)
+    assert all(p.storageLevel.useMemory for p in pair_sets)
+    assert _md5_pairs(spark, SF_SMOKE, 2, 8, list(_MH_PERMS_HR[:8])) is pair_sets[2]
     # The 31-mix folded bandings of every q_e_jaccard_sweep config:
     for tag, bs, n in _SWEEP:
         banded = _sweep_banded(spark, SF_SMOKE, bs, n)
@@ -2430,16 +2440,16 @@ def test_clear_caches_releases_every_registered_frame(spark):
     VERDICT r7 nit 2)."""
     from glaciersgee_spark import clear_caches
     from glaciersgee_spark.operators.drift import q_e_tail_index
-    from glaciersgee_spark.operators.similarity import _BANDED_CACHE, _banded
+    from glaciersgee_spark.operators.similarity import _banded
 
     clear_caches()  # start from a clean slate regardless of test order
     before = {r.lang for r in q_e_tail_index(spark, SF_SMOKE).collect()}
-    _banded(spark, SF_SMOKE)  # populate a DataFrame-valued cache too
-    assert len(_BANDED_CACHE) > 0
+    banded = _banded(spark, SF_SMOKE)  # populate one more cached frame
+    assert banded.storageLevel.useMemory
     released = clear_caches()
-    assert released["entries"] > 0
-    assert released["frames"] > 0
-    assert len(_BANDED_CACHE) == 0
+    assert released["entries"] >= 2
+    assert released["frames"] >= 2
+    assert not banded.storageLevel.useMemory
     # second clear is a no-op; ops rebuild from scratch and agree
     assert clear_caches()["entries"] == 0
     after = {r.lang for r in q_e_tail_index(spark, SF_SMOKE).collect()}
@@ -2450,43 +2460,82 @@ def test_cache_served_frames_repersist_after_clearcache(spark):
     """A registry-served frame must come back PERSISTED after an
     external spark.catalog.clearCache() (round 11): the bench honesty
     protocol clears storage between timed runs without touching the
-    cache dicts, and before the repersist probe every multi-branch
-    consumer silently recomputed the shared subtree once per plan
-    branch. Mirrors the scoped_persist storageLevel probe."""
+    registry, and a frame served without its persist makes every
+    multi-branch consumer silently recompute the shared subtree once
+    per plan branch. Helpers that return the cached frame are probed
+    through its storage level; queries whose cached frame lives inside
+    the plan must read the same cached relations as their cold plan."""
     from glaciersgee_spark import clear_caches
+    from glaciersgee_spark.operators import dedup, drift, retrieval, text
     from glaciersgee_spark.operators.linalg import _gram_int_cached
-    from glaciersgee_spark.operators.similarity import _banded
+    from glaciersgee_spark.operators.similarity import _banded, _db_asg_mean
 
+    def persisted(df):
+        return df.storageLevel.useMemory or df.storageLevel.useDisk
+
+    def cached_leaves(q):
+        leaves = q(spark, SF_SMOKE)._jdf.queryExecution().optimizedPlan().collectLeaves()
+        return sorted(
+            leaves.apply(i).schema().simpleString()
+            for i in range(leaves.size())
+            if leaves.apply(i).nodeName() == "InMemoryRelation"
+        )
+
+    frames = {
+        "gram_int": lambda: _gram_int_cached(spark, SF_SMOKE),
+        "srp_banded": lambda: _banded(spark, SF_SMOKE),
+        "scored_bm25": lambda: retrieval._scored_lists(spark, SF_SMOKE)[0],
+        "scored_cos": lambda: retrieval._scored_lists(spark, SF_SMOKE)[1],
+        "db_asg": lambda: _db_asg_mean(spark, SF_SMOKE)[0],
+        "db_mean": lambda: _db_asg_mean(spark, SF_SMOKE)[1],
+        "source_token_counts": lambda: drift._source_token_counts(spark, SF_SMOKE),
+        "lm_scores": lambda: text.lm_scores(spark, SF_SMOKE),
+    }
+    queries = {
+        "sparse_knn_w": retrieval.q_e_sparse_knn,
+        "hill_top": drift.q_e_tail_index,
+        "ks_source_lengths": drift.q_e_length_ks,
+        "dsir_per": text.q_e_dsir_weights,
+        "kn_bigrams": text.q_e_kn_bigram,
+        "jv_truth": dedup.q_e_lsh_tuning,
+    }
+    stale = []
     clear_caches()
-    for fetch in (lambda: _gram_int_cached(spark, SF_SMOKE),
-                  lambda: _banded(spark, SF_SMOKE)):
+    for name, fetch in frames.items():
         df = fetch()
-        assert df.storageLevel.useMemory or df.storageLevel.useDisk
         spark.catalog.clearCache()
-        assert not (df.storageLevel.useMemory or df.storageLevel.useDisk)
-        again = fetch()  # the dict-served frame, re-persisted by the probe
-        assert again.storageLevel.useMemory or again.storageLevel.useDisk
+        assert not persisted(df), name
+        if not persisted(fetch()):
+            stale.append(name)
+    for name, q in queries.items():
+        cold = cached_leaves(q)
+        assert cold, name
+        spark.catalog.clearCache()
+        if cached_leaves(q) != cold:
+            stale.append(name)
     clear_caches()
+    assert not stale, f"served without their persist after clearCache: {stale}"
 
 
 def test_bpe_fertility_applies_cached_merges(spark):
     """q_e_bpe_fertility must share q_e_bpe_train's cached merge trace
-    (train once per app/sf — the _KMT_CACHE discipline) and its
+    (train once per app/sf — a scoped_value, like _kmt_train's) and its
     numbers must be internally consistent: 1 <= fertility (symbols
     per word), and symbols never exceed characters (a merge only
     shrinks), so compress6 lies in (0, 1]."""
     from glaciersgee_spark import clear_caches
-    from glaciersgee_spark.operators.text import (
-        _BPE_CACHE,
-        q_e_bpe_fertility,
-        q_e_bpe_train,
-    )
+    from glaciersgee_spark.operators.text import q_e_bpe_fertility, q_e_bpe_train
 
     clear_caches()
     q_e_bpe_train(spark, SF_SMOKE).collect()
-    assert len(_BPE_CACHE) == 1
-    rows = q_e_bpe_fertility(spark, SF_SMOKE).collect()
-    assert len(_BPE_CACHE) == 1  # fertility reused the trained trace
+    tracker = spark.sparkContext.statusTracker()
+    before = tracker.getJobIdsForGroup(None)
+    fert = q_e_bpe_fertility(spark, SF_SMOKE)
+    # fertility reused the trained trace: its build launched no job
+    assert len(tracker.getJobIdsForGroup(None)) == len(before)
+    rows = fert.collect()
+    released = clear_caches()
+    assert released["entries"] - released["frames"] == 1  # one cached trace
     assert {r.lang for r in rows} == {"de", "en", "es", "fr", "zh"}
     for r in rows:
         assert r.n_words > 0
@@ -4863,17 +4912,14 @@ def test_shingle_base_bypass_serves_identical_rows(spark):
     copy by plan equality — free to ride — so the no-build claim is
     probed on a cold cache."""
     from glaciersgee_spark.caches import clear_caches
-    from glaciersgee_spark.operators.dedup import (
-        _SHINGLE_BASE_CACHE,
-        _shingle_base,
-    )
+    from glaciersgee_spark.operators.dedup import _shingle_base
 
     clear_caches()
     spark.catalog.clearCache()
     fresh = _shingle_base(spark, SF_SMOKE, re_persist=False)
-    # cold cache: the bypass neither builds the dict entry nor
+    # cold cache: the bypass neither builds a cache entry nor
     # persist-marks anything
-    assert not _SHINGLE_BASE_CACHE
+    assert clear_caches()["entries"] == 0
     assert not fresh.storageLevel.useMemory
     assert not fresh.storageLevel.useDisk
     cached = _shingle_base(spark, SF_SMOKE)

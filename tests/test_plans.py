@@ -517,6 +517,7 @@ def test_bm25_has_no_eager_scan_at_build(spark):
     avgdl (plan shows the broadcast, build triggers no action)."""
     from glaciersgee_spark.operators.text import q_e_bm25
 
+    load_table(spark, SF_SMOKE, "documents")  # one-time footer read
     tracker = spark.sparkContext.statusTracker()
     before = tracker.getJobIdsForGroup(None)
     df = q_e_bm25(spark, SF_SMOKE)
@@ -956,7 +957,7 @@ def test_ivf_persist_serves_from_artifacts_not_training_lineage(spark):
     """q_e_ivf_persist's SERVE plan must read the persisted index —
     two parquet scans under the ggee_ivf_index staging root (codebook
     + postings) — and carry NO training lineage: no LocalTableScan of
-    driver-collected centroids (the _KMT_CACHE shape the build path
+    driver-collected centroids (the _kmt_train shape the build path
     uses) and no InMemoryTableScan. Build once, serve from disk.
 
     Cache hygiene: Spark's CacheManager substitutes ANY persisted
@@ -1204,14 +1205,15 @@ def test_wasserstein_shares_ks_cache_and_broadcasts(spark):
     """q_e_wasserstein must ride the SAME persisted (source, length)
     frame as q_e_length_ks (one corpus scan for both drift audits) and
     keep the support/totals joins broadcast."""
+    from glaciersgee_spark.caches import clear_caches
     from glaciersgee_spark.operators import drift as D
 
+    clear_caches()
     D.q_e_length_ks(spark, SF_SMOKE).collect()
-    key = (spark.sparkContext.applicationId, SF_SMOKE)
-    assert key in D._KS_SRC_CACHE
     df = D.q_e_wasserstein(spark, SF_SMOKE)
     plan = PI.formatted(df)
     assert "InMemoryTableScan" in plan, "must reuse the persisted KS base"
+    assert clear_caches()["frames"] == 1, "both audits share ONE cached frame"
     assert "BroadcastExchange" in plan
     assert not PI.has_python_boundary(plan)
 
@@ -1489,8 +1491,9 @@ def test_ivfpq_append_ingests_without_training_and_serves_from_merged(
 
     1. The DELTA-INGEST path owns zero training state: with the base
        generation already staged, publishing the merged generation
-       must not create any `_KMT_CACHE` entry — assignment comes from
-       the read-back frozen centroids, codes from the read-back
+       must not train: it leaves no driver-value cache entry (the
+       `_kmt_train` scoped_value) — assignment comes from the
+       read-back frozen centroids, codes from the read-back
        sub-codebook, full stop.
     2. The SERVE plan reads ONLY the merged generation's four
        artifacts (the `_m1` dir) + the embeddings table, carries no
@@ -1502,7 +1505,6 @@ def test_ivfpq_append_ingests_without_training_and_serves_from_merged(
 
     import glaciersgee_spark
     from glaciersgee_spark.operators.similarity import (
-        _KMT_CACHE,
         q_e_ivfpq_append,
         stage_ivf_base_index,
         stage_ivfpq_append,
@@ -1514,10 +1516,10 @@ def test_ivfpq_append_ingests_without_training_and_serves_from_merged(
     shutil.rmtree(merged, ignore_errors=True)
     glaciersgee_spark.clear_caches()
     spark.catalog.clearCache()
-    assert not _KMT_CACHE
     merged = stage_ivfpq_append(spark, SF_SMOKE)
     assert os.path.exists(os.path.join(merged, "_READY"))
-    assert not _KMT_CACHE, "delta ingest must not train"
+    released = glaciersgee_spark.clear_caches()
+    assert released["entries"] == released["frames"], "delta ingest must not train"
 
     df = q_e_ivfpq_append(spark, SF_SMOKE)
     plan = PI.formatted(df)
