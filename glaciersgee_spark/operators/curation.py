@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from glaciersgee_spark.caches import scoped_persist
 from glaciersgee_spark.registry import davg, dsum, query
-from glaciersgee_spark.tables import fan_out, load_table
+from glaciersgee_spark.tables import chunked_prefix, fan_out, load_table
 
 # ---------------------------------------------------------------------------
 # q_e_ppl_buckets
@@ -695,35 +695,21 @@ def q_e_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     straddle several thresholds report multiplicity in n_picks — the
     with-replacement PPS semantics.
 
-    Scale: the cumulative sum is NOT a single-partition window — it is
-    the q_b_sort two-phase prefix pattern (relational.py:853): chunk
-    by doc_id div 4096 (monotone with the order, so boundaries never
-    split it), partition-parallel within-chunk running sums, then a
-    prefix over the |chunks|-row totals only, broadcast back. C_i*N
-    stays in BIGINT up to W ≈ 4.6e16 (100 TB of text ≈ 1e14 chars —
-    within range; past that the multiply moves to DECIMAL(38,0) with
-    this plan shape unchanged).
+    Scale: the cumulative sum is `tables.chunked_prefix` (the
+    q_b_sort spelling, relational.py:965), chunked by doc_id DIV 4096:
+    ascending with the doc_id order, which has no ties, and the
+    totals are |doc_ids|/4096 rows. C_i*N stays in BIGINT up to
+    W ≈ 4.6e16 (100 TB of text ≈ 1e14 chars — within range; past that
+    the multiply moves to DECIMAL(38,0) with this plan shape
+    unchanged).
     """
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("n_chars").alias("w")
     )
     chunked = d.withColumn("ch", F.expr("doc_id div 4096"))
-    w_in = (
-        Window.partitionBy("ch")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    within = chunked.withColumn("cw", F.sum("w").over(w_in))
-    totals = chunked.groupBy("ch").agg(F.sum("w").alias("ctot"))
-    w_c = Window.orderBy("ch").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "off", F.coalesce(F.sum("ctot").over(w_c), F.lit(0))
-    ).select("ch", "off")
     wt = d.agg(F.sum("w").alias("wt"))
-    cum = (
-        within.join(F.broadcast(offsets), "ch")
-        .withColumn("c", F.col("off") + F.col("cw"))
-        .crossJoin(F.broadcast(wt))
+    cum = chunked_prefix(chunked, [], ["ch"], ["doc_id"], {"c": "w"}).crossJoin(
+        F.broadcast(wt)
     )
     hi = F.expr(f"(c * {_WS_N}) div wt")
     lo = F.expr(f"((c - w) * {_WS_N}) div wt")
@@ -1186,13 +1172,12 @@ def q_e_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: both ranks are row_number over (integer score,
     doc_id) — no tie ambiguity in either engine; Σd² is exact BIGINT;
     the single closing division is IEEE on identical integers. Scale:
-    BOTH ranks are SHIPPED in the q_b_sort two-phase chunked form —
-    a window partition is not AQE-splittable, so the naive per-lang
-    window is bounded by the dominant language's full sort; chunking
-    by (lang, score-bucket) keeps phase 1 partition-parallel under any
-    language skew, the offsets pass runs over bucket totals only, and
-    the two rank frames co-partition-join on doc_id. Same ranks, same
-    hashes as the naive spelling (pinned by the brute-force test).
+    both per-lang ranks are `tables.chunked_prefix` (a window partition
+    is not AQE-splittable, so a naive per-lang window is the dominant
+    language's full sort), chunked by a score bucket (score DIV 512 /
+    DIV 128): ascending with the (score, doc_id) order, equal scores
+    share a bucket, and the ≤ |langs|·|buckets| totals are bounded by
+    the score domain. The two rank frames join on doc_id.
     """
     d = load_table(spark, sf_dir, "documents")
     f = d.select(
@@ -1202,33 +1187,21 @@ def q_e_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.split("text", " ")).cast("long").alias("sb"),
     )
 
-    def chunked_rank(score: str, width: int, out: str):
-        # q_b_sort two-phase rank per lang: chunk by a score bucket
-        # (monotone with the (score, doc_id) order, ties share a
-        # bucket); offsets run over the ≤|langs|·|buckets| totals only
-        base = f.select(
-            "doc_id", "lang", score, F.expr(f"{score} div {width}").alias("bch")
-        )
-        w_in = Window.partitionBy("lang", "bch").orderBy(score, "doc_id")
-        within = base.withColumn("wr", F.row_number().over(w_in))
-        totals = base.groupBy("lang", "bch").agg(
-            F.count(F.lit(1)).alias("ctot")
-        )
-        w_c = (
-            Window.partitionBy("lang")
-            .orderBy("bch")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        offsets = totals.withColumn(
-            "offset", F.coalesce(F.sum("ctot").over(w_c), F.lit(0))
-        ).select("lang", "bch", "offset")
-        return within.join(F.broadcast(offsets), ["lang", "bch"]).select(
-            "doc_id", "lang", (F.col("offset") + F.col("wr")).alias(out)
-        )
-
-    ra = chunked_rank("sa", 512, "ra")
-    rb = chunked_rank("sb", 128, "rb").select("doc_id", "rb")
-    r = ra.join(rb, "doc_id").select("lang", "ra", "rb")
+    ra = chunked_prefix(
+        f.withColumn("bch", F.expr("sa div 512")),
+        ["lang"],
+        ["bch"],
+        ["sa", "doc_id"],
+        {"ra": None},
+    )
+    rb = chunked_prefix(
+        f.withColumn("bch", F.expr("sb div 128")),
+        ["lang"],
+        ["bch"],
+        ["sb", "doc_id"],
+        {"rb": None},
+    )
+    r = ra.join(rb.select("doc_id", "rb"), "doc_id").select("lang", "ra", "rb")
     d2 = (F.col("ra") - F.col("rb")) * (F.col("ra") - F.col("rb"))
     agg = r.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -2715,11 +2688,12 @@ def q_e_conformal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ((9(n+1)+9) DIV 10 — float 0.9·(n+1) can land either side of an
     exact multiple); the k-th order statistic is selected exactly.
     Scale: the Spark spelling collapses the calibration half to
-    per-score counts, then runs the two-phase chunked prefix sum
-    (chunks = unit score buckets; per-chunk frames bounded by the
-    6-dp score domain, the q_e_quality_auc exemption) and picks the
-    threshold as a combinable MIN — never a global sort; the oracle
-    uses the naive ORDER BY/OFFSET selection, fine at DuckDB scale.
+    per-score counts, runs `tables.chunked_prefix` over them (chunks =
+    floor(score6), ascending with the score order over distinct
+    scores; frames and totals bounded by the 6-dp score domain, the
+    q_e_quality_auc exemption) and picks the threshold as a
+    combinable MIN — never a global sort; the oracle uses the naive
+    ORDER BY/OFFSET selection, fine at DuckDB scale.
     Coverage is one broadcast-scalar pass over the test half."""
     sc = load_table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -2739,20 +2713,7 @@ def q_e_conformal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
         .withColumn("chk", F.floor("score6"))
     )
-    w_in = (
-        Window.partitionBy("chk")
-        .orderBy("score6")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    within = per.withColumn("wc", F.sum("c").over(w_in))
-    totals = per.groupBy("chk").agg(F.sum("c").alias("ctot"))
-    w_c = Window.orderBy("chk").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "off", F.coalesce(F.sum("ctot").over(w_c), F.lit(0))
-    ).select("chk", "off")
-    cum = within.join(F.broadcast(offsets), "chk").select(
-        "score6", (F.col("off") + F.col("wc")).alias("cum")
-    )
+    cum = chunked_prefix(per, [], ["chk"], ["score6"], {"cum": "c"})
     thr = (
         cum.crossJoin(F.broadcast(nc.select("k")))
         .where(F.col("cum") >= F.col("k"))
@@ -2834,12 +2795,13 @@ def q_e_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q_e_zscore_norm standardizes; this BOUNDS).
 
     Scale spelling: both thresholds come from ONE per-value count
-    frame (n_chars is integer-domain) through the two-phase chunked
-    prefix sum (chunks = n_chars DIV 256 buckets, the conformal-gate
-    discipline) and a combinable MIN — never a global sort; the
-    thresholds broadcast back as a 1-row crossJoin; the per-source
-    rollup is one map-side-combinable groupBy. The oracle uses the
-    naive ORDER BY/OFFSET selection, fine at DuckDB scale."""
+    frame (n_chars is integer-domain) through `tables.chunked_prefix`
+    (chunks = n_chars DIV 256, ascending with the distinct-value order;
+    totals bounded by the n_chars domain) and a combinable MIN —
+    never a global sort; the thresholds broadcast back as a 1-row
+    crossJoin; the per-source rollup is one map-side-combinable
+    groupBy. The oracle uses the naive ORDER BY/OFFSET selection, fine
+    at DuckDB scale."""
     d = load_table(spark, sf_dir, "documents")
     n = d.agg(
         F.count(F.lit(1)).alias("nn"),
@@ -2851,20 +2813,7 @@ def q_e_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
         .withColumn("chk", F.expr("n_chars DIV 256"))
     )
-    w_in = (
-        Window.partitionBy("chk")
-        .orderBy("n_chars")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    within = per.withColumn("wc", F.sum("c").over(w_in))
-    totals = per.groupBy("chk").agg(F.sum("c").alias("ctot"))
-    w_c = Window.orderBy("chk").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "off", F.coalesce(F.sum("ctot").over(w_c), F.lit(0))
-    ).select("chk", "off")
-    cum = within.join(F.broadcast(offsets), "chk").select(
-        "n_chars", (F.col("off") + F.col("wc")).alias("cum")
-    )
+    cum = chunked_prefix(per, [], ["chk"], ["n_chars"], {"cum": "c"})
     ks = cum.crossJoin(F.broadcast(n))
     thr = ks.agg(
         F.min(F.when(F.col("cum") >= F.col("k_lo"), F.col("n_chars"))).alias(
@@ -4183,13 +4132,13 @@ def q_e_pack_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     engineer reads straddle_ppm to price document-boundary masking
     and tail_fill_ppm to price per-source padding waste.
 
-    Scale shape: the per-source exclusive prefix sum is the TWO-PHASE
-    distributed spelling (the q_b_compaction_plan discipline — never
-    a single-partition window over a 5 TB source): per-chunk running
-    sums partitioned by (source, chunk) run fully parallel, the
-    global pass covers per-chunk TOTALS only (bounded rows), and the
-    offsets broadcast back. Window membership is then pure integer
-    arithmetic on the scan — no floats anywhere in the op."""
+    Scale shape: the per-source prefix sum is `tables.chunked_prefix`
+    (never one window over a 5 TB source), chunked by doc_id DIV 500:
+    ascending with the doc_id order, which has no ties; the totals are
+    |sources|·|doc_ids|/500 rows. The exclusive prefix is the
+    inclusive one less the doc's own BIGINT count, which is exact.
+    Window membership is then pure integer arithmetic on the scan —
+    no floats anywhere in the op."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
@@ -4197,28 +4146,9 @@ def q_e_pack_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(size(split(text, ' ')) AS BIGINT)").alias("n_toks"),
         F.expr(f"doc_id div {_PACK_CHUNK}").alias("chunk"),
     )
-    w_in = (
-        Window.partitionBy("source", "chunk")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    within = toks.withColumn(
-        "within_before", F.coalesce(F.sum("n_toks").over(w_in), F.lit(0))
-    )
-    totals = toks.groupBy("source", "chunk").agg(
-        F.sum("n_toks").alias("ctot")
-    )
-    w_c = (
-        Window.partitionBy("source")
-        .orderBy("chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.withColumn(
-        "offset", F.coalesce(F.sum("ctot").over(w_c), F.lit(0))
-    ).select("source", "chunk", "offset")
     marked = (
-        within.join(F.broadcast(offsets), ["source", "chunk"])
-        .withColumn("before", F.col("offset") + F.col("within_before"))
+        chunked_prefix(toks, ["source"], ["chunk"], ["doc_id"], {"cum": "n_toks"})
+        .withColumn("before", F.col("cum") - F.col("n_toks"))
         .select(
             "source",
             "n_toks",
@@ -5062,47 +4992,23 @@ def q_e_score_knee(spark: SparkSession, sf_dir: str) -> DataFrame:
     the integer gap_num = cum_mass·n − cum_cnt·total in 128-bit
     (DECIMAL(38,0) ⟷ HUGEINT), so the argmax and the ppm are exact —
     ties break to the larger score (earlier knee). Scale: the
-    per-(lang, score) rollup is combinable; cumulative sums run as
-    the two-phase chunked prefix sum (chunks = score DIV 256, the
-    conformal-gate discipline) so no window rides a corpus-sized
-    unchunked frame; the argmax window rides the distinct-score
-    frame, bounded by the score domain, not the corpus."""
+    per-(lang, score) rollup is combinable; the cumulative sums are
+    `tables.chunked_prefix` over it (chunks = -(score DIV 256),
+    ascending with the score DESC order over distinct scores; totals
+    bounded by the score domain); the argmax window rides the
+    distinct-score frame, bounded by the score domain, not the
+    corpus."""
     d = load_table(spark, sf_dir, "documents")
     per = d.groupBy("lang", "n_chars").agg(
         F.count(F.lit(1)).cast("long").alias("c"),
         F.sum("n_chars").cast("long").alias("m"),
-    ).withColumn("chk", F.expr("n_chars DIV 256"))
-    w_in = (
-        Window.partitionBy("lang", "chk")
-        .orderBy(F.col("n_chars").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    within = per.select(
-        "lang",
-        "n_chars",
-        "chk",
-        F.sum("c").over(w_in).alias("wc"),
-        F.sum("m").over(w_in).alias("wm"),
-    )
-    totals = per.groupBy("lang", "chk").agg(
-        F.sum("c").alias("ctot"), F.sum("m").alias("mtot")
-    )
-    w_c = (
-        Window.partitionBy("lang")
-        .orderBy(F.col("chk").desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
-        "lang",
-        "chk",
-        F.coalesce(F.sum("ctot").over(w_c), F.lit(0)).alias("coff"),
-        F.coalesce(F.sum("mtot").over(w_c), F.lit(0)).alias("moff"),
-    )
-    cum = within.join(offsets, ["lang", "chk"]).select(
-        "lang",
-        "n_chars",
-        (F.col("coff") + F.col("wc")).cast("long").alias("cum_cnt"),
-        (F.col("moff") + F.col("wm")).cast("long").alias("cum_mass"),
+    ).withColumn("chk", F.expr("-(n_chars DIV 256)"))
+    cum = chunked_prefix(
+        per,
+        ["lang"],
+        ["chk"],
+        [F.col("n_chars").desc()],
+        {"cum_cnt": "c", "cum_mass": "m"},
     )
     tot = per.groupBy("lang").agg(
         F.sum("c").cast("long").alias("n"),

@@ -26,7 +26,7 @@ from pyspark.sql.types import ArrayType, LongType
 from glaciersgee_spark.caches import scoped_persist, scoped_value
 from glaciersgee_spark.operators.lsh import cobucket_pairs, posting_copairs
 from glaciersgee_spark.registry import davg, query
-from glaciersgee_spark.tables import fan_out, load_table
+from glaciersgee_spark.tables import chunked_prefix, fan_out, load_table
 
 N_MINHASH = 8
 BAND_SIZE = 2  # 4 bands of 2 signatures
@@ -2975,11 +2975,11 @@ def q_e_dedup_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates the neighborhood generates and how many verify — the
     measured precision/window-size trade every SNM deployment tunes.
 
-    Scale spelling: the global sort-order rank is the TWO-PHASE
-    CHUNKED RANK (q_e_rrf_fusion discipline — within-chunk row_number
-    partitioned by the 2-char key prefix, a cumulative pass over the
-    ≤1,297 chunk totals only, offsets broadcast back), never one
-    corpus-sized window task; the neighborhood join is a single
+    Scale spelling: the global sort-order rank is
+    `tables.chunked_prefix` chunked by the 2-char key prefix (a prefix
+    of the (bkey, doc_id) order, so ascending with it and never
+    splitting a tie; ≤ 1,297 chunk totals), never one corpus-sized
+    window task; the neighborhood join is a single
     equi-join on rank+d after a 3-way explode — candidate count is
     structurally w·n, the whole point of blocking vs O(n²); shingle
     verify runs only on those w·n pairs. The oracle spells the naive
@@ -2995,20 +2995,8 @@ def q_e_dedup_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     base = d.withColumn("chk", F.substring("bkey", 1, 2))
-    w_in = Window.partitionBy("chk").orderBy("bkey", "doc_id")
-    within = base.withColumn("wr", F.row_number().over(w_in))
-    totals = base.groupBy("chk").agg(F.count(F.lit(1)).alias("ctot"))
-    w_c = Window.orderBy("chk").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "off", F.coalesce(F.sum("ctot").over(w_c), F.lit(0))
-    ).select("chk", "off")
-    r = (
-        within.join(F.broadcast(offsets), "chk")
-        .select(
-            "doc_id",
-            "sh",
-            (F.col("off") + F.col("wr")).cast("long").alias("rk"),
-        )
+    r = chunked_prefix(base, [], ["chk"], ["bkey", "doc_id"], {"rk": None}).select(
+        "doc_id", "sh", "rk"
     )
     # two consumers (a-side and b-side of the neighborhood join)
     r = scoped_persist(r, spark, sf_dir, "dedup_blocking_ranks")

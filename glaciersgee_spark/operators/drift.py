@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from glaciersgee_spark.caches import scoped_persist
 from glaciersgee_spark.registry import davg, dsum, query
-from glaciersgee_spark.tables import fan_out, load_table
+from glaciersgee_spark.tables import chunked_prefix, fan_out, load_table
 
 # Minimum combined token count to score drift on (rarer tokens are
 # sampling noise, not shift).
@@ -1017,46 +1017,21 @@ def q_e_gini_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: rank is row_number over (integer mass, doc_id) —
     tie-free; both Σi·x and Σx are exact BIGINT sums; one closing IEEE
-    division. Scale: the rank is SHIPPED in the q_b_sort two-phase
-    chunked form per language — a window partition is not
-    AQE-splittable, so the naive per-lang window's bound is the
-    dominant language's full sort; chunking by the (lang, mass-bucket)
-    key keeps phase 1 partition-parallel under any language skew while
-    the offsets pass runs over the bucket totals only. Same ranks,
-    same hashes as the naive spelling (pinned by test).
+    division. Scale: the per-lang rank is `tables.chunked_prefix` (a
+    window partition is not AQE-splittable, so a naive per-lang window
+    is the dominant language's full sort), chunked by the mass bucket
+    n_chars DIV 512: ascending with the (x, doc_id) order, equal x
+    share a bucket, and the ≤ |langs|·|buckets| totals are bounded by
+    the n_chars domain, not the corpus.
     """
     d = load_table(spark, sf_dir, "documents")
-    # Two-phase chunked rank (the q_b_sort pattern, applied per lang):
-    # chunk key = mass bucket, monotone with the (x, doc_id) order and
-    # never splitting ties (equal x ⇒ equal bucket). Phase 1 ranks
-    # within (lang, bucket) — partition-parallel even when one
-    # language dominates the corpus; phase 2 computes chunk offsets
-    # with a running count over the per-(lang, bucket) TOTALS only
-    # (≤ |langs|·|buckets| rows, bounded by the n_chars domain, not
-    # the corpus); the broadcast join adds them back. Identical ranks
-    # to the naive per-lang window — the oracle is unchanged.
     base = d.select(
         "lang",
         F.col("n_chars").cast("long").alias("x"),
         "doc_id",
         F.expr("n_chars div 512").alias("bch"),
     )
-    w_in = Window.partitionBy("lang", "bch").orderBy("x", "doc_id")
-    within = base.withColumn("wr", F.row_number().over(w_in))
-    totals = base.groupBy("lang", "bch").agg(F.count(F.lit(1)).alias("ctot"))
-    w_c = (
-        Window.partitionBy("lang")
-        .orderBy("bch")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.withColumn(
-        "offset", F.coalesce(F.sum("ctot").over(w_c), F.lit(0))
-    ).select("lang", "bch", "offset")
-    r = within.join(F.broadcast(offsets), ["lang", "bch"]).select(
-        "lang",
-        "x",
-        (F.col("offset") + F.col("wr")).cast("long").alias("i"),
-    )
+    r = chunked_prefix(base, ["lang"], ["bch"], ["x", "doc_id"], {"i": None})
     agg = r.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("x").cast("long").alias("total_chars"),

@@ -20,7 +20,7 @@ from pyspark.sql import types as T
 from glaciersgee_spark.operators.skew import salted_join, salted_sum_count
 from glaciersgee_spark.registry import davg, dsum, query
 from glaciersgee_spark.sources import readers, sinks
-from glaciersgee_spark.tables import fan_out, load_table
+from glaciersgee_spark.tables import chunked_prefix, fan_out, load_table
 
 
 def _ts(lit: str):
@@ -964,17 +964,14 @@ def q_b_having(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_b_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-key sort with explicit null placement, materialized as a
-    global rank WITHOUT a single-partition window (round 4).
-
-    Two-phase distributed rank (the q_b_compaction_plan prefix-sum
-    pattern): rows are chunked by (null-key, price decile-bucket) — a
-    key that is monotone with the sort order, so chunk boundaries never
-    split a tie (equal prices share a bucket) — then (1) row_number
-    within each chunk, partition-parallel; (2) a global running count
-    over the per-chunk TOTALS only (≤ |statuses|·|price buckets| rows,
-    bounded by the price domain, not the corpus); (3) broadcast the
-    chunk offsets back and add. Identical to the naive global
-    row_number, verified against the oracle's naive spelling.
+    global rank WITHOUT a single-partition window (round 4): the rank
+    is `tables.chunked_prefix` over the chunk pair (ck, bch). ck is nk
+    with NULL mapped to chr(1), which sorts before the single-letter
+    statuses (NULLS FIRST) and collides with none; bch is the negated
+    price bucket, ascending with the price DESC order, and equal prices
+    share a bucket, so no chunk splits a tie. A NULL price gets the
+    largest bucket (last, as DESC NULLS LAST). The totals are
+    ≤ |statuses|·|price buckets| rows, bounded by the price domain.
     """
     o = (
         load_table(spark, sf_dir, "orders")
@@ -985,33 +982,21 @@ def q_b_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_totalprice",
         )
     )
-    chunked = o.withColumn(
-        "bch", F.expr("CAST(floor(o_totalprice / 10000.0) AS BIGINT)")
-    ).withColumn(
-        # equality key for the offset join (nk is nullable; \x01 is a
-        # sentinel no single-char status can collide with)
-        "ck",
-        F.concat_ws("|", F.coalesce(F.col("nk"), F.lit("\x01")), F.col("bch")),
+    chunked = o.select(
+        "*",
+        F.coalesce(F.col("nk"), F.lit("\x01")).alias("ck"),
+        F.coalesce(
+            F.expr("-CAST(floor(o_totalprice / 10000.0) AS BIGINT)"),
+            F.lit(2**63 - 1),
+        ).alias("bch"),
     )
-    w_in = Window.partitionBy("ck").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
-    )
-    within = chunked.withColumn("wr", F.row_number().over(w_in))
-    totals = chunked.groupBy("ck", "nk", "bch").agg(
-        F.count(F.lit(1)).alias("ctot")
-    )
-    w_c = Window.orderBy(
-        F.col("nk").asc_nulls_first(), F.col("bch").desc()
-    ).rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "offset", F.coalesce(F.sum("ctot").over(w_c), F.lit(0))
-    ).select("ck", "offset")
-    return within.join(F.broadcast(offsets), "ck").select(
-        "o_orderkey",
-        "nk",
-        "o_totalprice",
-        (F.col("offset") + F.col("wr")).alias("sort_rank"),
-    )
+    return chunked_prefix(
+        chunked,
+        [],
+        ["ck", "bch"],
+        [F.col("o_totalprice").desc(), F.col("o_orderkey").asc()],
+        {"sort_rank": None},
+    ).select("o_orderkey", "nk", "o_totalprice", "sort_rank")
 
 
 @query(

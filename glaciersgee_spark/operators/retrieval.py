@@ -20,7 +20,7 @@ from glaciersgee_spark.operators.similarity import _cos6, _D_NRM, _d_cos6, _D_VE
 from glaciersgee_spark.operators.text import BM25_CTES, q_e_bm25
 from glaciersgee_spark.caches import scoped_persist
 from glaciersgee_spark.registry import dsum, query
-from glaciersgee_spark.tables import fan_out, load_table
+from glaciersgee_spark.tables import chunked_prefix, fan_out, load_table
 
 RRF_K = 60
 
@@ -55,28 +55,14 @@ def _scored_lists(spark: SparkSession, sf_dir: str):
 
 
 def _ranked(lst: DataFrame, out: str) -> DataFrame:
-    """Full-list rank over (score DESC, doc_id ASC) in the q_b_sort /
-    q_e_gini_mass two-phase chunked form: the per-row row_number window
-    partitions by a score bucket (monotone with the DESC order, never
-    splitting ties — equal score ⇒ equal bucket), the offsets pass runs
-    a running count over the per-bucket TOTALS only (bounded by the
-    6-dp score domain, not the corpus), and the offsets come back via
-    broadcast join. Identical ranks to the naive global window (round 7
-    — the previous spelling sorted the whole per-doc list in ONE task;
-    at 100 TB "≤ corpus rows" IS the corpus)."""
+    """Full-list rank over (score DESC, doc_id ASC) as
+    `tables.chunked_prefix`, chunked by the negated score bucket
+    -floor(score·1000): ascending with the DESC order, equal scores
+    share a bucket, and the totals are bounded by the 6-dp score
+    domain, not the corpus."""
     base = lst.withColumn("bch", -F.floor(F.col("score") * 1000.0))
-    w_in = Window.partitionBy("bch").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    within = base.withColumn("wr", F.row_number().over(w_in))
-    totals = base.groupBy("bch").agg(F.count(F.lit(1)).alias("ctot"))
-    w_c = Window.orderBy("bch").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "offset", F.coalesce(F.sum("ctot").over(w_c), F.lit(0))
-    ).select("bch", "offset")
-    return within.join(F.broadcast(offsets), "bch").select(
-        "doc_id", (F.col("offset") + F.col("wr")).cast("long").alias(out)
-    )
+    order = [F.col("score").desc(), F.col("doc_id").asc()]
+    return chunked_prefix(base, [], ["bch"], order, {out: None}).select("doc_id", out)
 
 
 

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from glaciersgee_spark.caches import scoped_persist
 from glaciersgee_spark.registry import davg, dsum, query
-from glaciersgee_spark.tables import load_table
+from glaciersgee_spark.tables import chunked_prefix, load_table
 
 # Profiled numeric columns (epoch-day for the date so every row of the
 # long-form output carries plain doubles).
@@ -732,15 +732,12 @@ def q_b_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (= write order, preserving scan locality) into target-sized output
     bins by cumulative size.
 
-    The naive spelling is one global running sum — a single-partition
-    window over EVERY file, the classic driver-bottleneck at a 100 TB
-    table's millions of files. This is the two-phase distributed
-    prefix sum instead: (1) per-chunk running sums, partitioned by
-    chunk key — fully parallel; (2) a global running sum over the
-    per-chunk TOTALS only (n/chunk rows — bounded, the only
-    single-partition pass); (3) broadcast the chunk offsets back.
-    Identical result to the naive window, verified against the
-    oracle's naive spelling.
+    The running size is `tables.chunked_prefix` (never one window over
+    every file): chunks are file_id DIV 50, ascending with the id order
+    (file_id is unique, so there are no ties), and there are 500/50
+    totals at any scale, since file_id is o_orderkey mod 500. Files
+    are packed by their exclusive prefix, the inclusive one less their
+    own BIGINT size, which is exact.
     """
     o = load_table(spark, sf_dir, "orders")
     cents = F.expr("CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)")
@@ -753,23 +750,10 @@ def q_b_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"CAST(s div {_COMPACT_BINS} AS BIGINT)").alias("target")
     )
     chunked = files.withColumn("chunk", F.expr(f"file_id div {_COMPACT_CHUNK}"))
-    w_in = (
-        Window.partitionBy("chunk")
-        .orderBy("file_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    within = chunked.withColumn(
-        "within_before", F.coalesce(F.sum("f_bytes").over(w_in), F.lit(0))
-    )
-    totals = chunked.groupBy("chunk").agg(F.sum("f_bytes").alias("ctot"))
-    w_c = Window.orderBy("chunk").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "offset", F.coalesce(F.sum("ctot").over(w_c), F.lit(0))
-    ).select("chunk", "offset")
+    cum = chunked_prefix(chunked, [], ["chunk"], ["file_id"], {"cum": "f_bytes"})
     binned = (
-        within.join(F.broadcast(offsets), "chunk")
-        .crossJoin(F.broadcast(tgt))
-        .withColumn("before", F.col("offset") + F.col("within_before"))
+        cum.crossJoin(F.broadcast(tgt))
+        .withColumn("before", F.col("cum") - F.col("f_bytes"))
         .withColumn("bin_id", F.expr("before div target"))
     )
     return (

@@ -17,9 +17,10 @@ columnar parquet scans that keep projection/predicate pushdown intact
 from __future__ import annotations
 
 import weakref
+from typing import Mapping, Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from glaciersgee_spark.session import ensure_confs
 
@@ -140,3 +141,70 @@ def fan_out(df: DataFrame, *keys: str) -> DataFrame:
         out = df.repartition(n)
     per[keys] = out
     return out
+
+
+def chunked_prefix(
+    df: DataFrame,
+    by: Sequence[str],
+    chunk: Sequence[str],
+    order: Sequence[str | Column],
+    values: Mapping[str, str | None],
+) -> DataFrame:
+    """Running sums and row ranks per ``by`` group, without a window
+    over the whole group.
+
+    Returns ``df`` plus one column per ``out: value`` entry: the
+    running sum of ``value`` over ``order`` (frame ROWS UNBOUNDED
+    PRECEDING .. CURRENT ROW), or for ``None`` the 1-based row rank.
+    The naive spelling is one window per ``by`` group, a single task
+    that at 100 TB sees the whole corpus. This is the two-phase form:
+
+    1. within-chunk sums or ``row_number`` over a window partitioned
+       by ``by + chunk`` (partition-parallel);
+    2. a running sum of the per-chunk totals, ordered by ``chunk``
+       and excluding the current chunk, gives each chunk's offset;
+    3. the offsets come back through one broadcast join on
+       ``by + chunk`` and are added to the within-chunk values.
+
+    The caller's contract: ``chunk`` ascends with ``order`` and never
+    splits a run of equal ``order`` keys (negate a bucket to follow a
+    descending order), it is never NULL (the equi-join drops such
+    rows), and it has few enough distinct values per ``by`` group that
+    the totals fit a broadcast. Values must be integral: the chunks
+    re-associate the sum, which is exact only for integers.
+    """
+    keys = [*by, *chunk]
+    w_in = (
+        Window.partitionBy(*keys)
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    w_off = (
+        Window.partitionBy(*by)
+        .orderBy(*chunk)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    within = df.select(
+        "*",
+        *[
+            (F.row_number() if v is None else F.sum(v)).over(w_in).alias(f"_w_{out}")
+            for out, v in values.items()
+        ],
+    )
+    totals = df.groupBy(*keys).agg(
+        *[
+            (F.count(F.lit(1)) if v is None else F.sum(v)).alias(f"_t_{out}")
+            for out, v in values.items()
+        ]
+    )
+    offsets = totals.select(
+        *keys,
+        *[
+            F.coalesce(F.sum(f"_t_{out}").over(w_off), F.lit(0)).alias(f"_o_{out}")
+            for out in values
+        ],
+    )
+    return within.join(F.broadcast(offsets), keys).select(
+        *df.columns,
+        *[(F.col(f"_o_{out}") + F.col(f"_w_{out}")).alias(out) for out in values],
+    )

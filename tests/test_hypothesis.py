@@ -224,48 +224,60 @@ def test_claim_cell_join_equals_distinct_theta_join(spark, rects):
     assert set(grid_rows) == naive
 
 
-@given(sizes=st.lists(
-    st.integers(min_value=1, max_value=1000), min_size=1, max_size=60
-))
+@st.composite
+def _prefix_cases(draw):
+    """(rows, grouped, values, desc) for tables.chunked_prefix: file
+    sizes under 1-3 group labels, used as the `by` column or not; a
+    running sum, a row rank or both; ascending chunks or the negated
+    buckets of a descending order."""
+    sizes = draw(
+        st.lists(st.integers(min_value=1, max_value=1000), min_size=1, max_size=60)
+    )
+    labels = "abc"[: draw(st.integers(min_value=1, max_value=3))]
+    groups = draw(
+        st.lists(st.sampled_from(labels), min_size=len(sizes), max_size=len(sizes))
+    )
+    modes = draw(
+        st.lists(st.sampled_from(["f_bytes", None]), min_size=1, max_size=2, unique=True)
+    )
+    rows = [(i, g, s) for i, (g, s) in enumerate(zip(groups, sizes))]
+    values = {f"v{i}": v for i, v in enumerate(modes)}
+    return rows, draw(st.booleans()), values, draw(st.booleans())
+
+
+@given(case=_prefix_cases())
 @_SET
-def test_two_phase_prefix_sum_equals_naive(spark, sizes):
-    """q_b_compaction_plan's chunked prefix sum must equal the naive
-    single-partition running sum for ANY file-size sequence."""
+def test_two_phase_prefix_sum_equals_naive(spark, case):
+    """tables.chunked_prefix must equal the naive single-partition
+    window for ANY size sequence — per group or global, for running
+    sums and row ranks, over ascending or negated (descending) chunk
+    buckets."""
     from pyspark.sql import Window
 
-    CHUNK = 7
-    rows = [(i, s) for i, s in enumerate(sizes)]
-    files = spark.createDataFrame(rows, "file_id long, f_bytes long")
+    from glaciersgee_spark.tables import chunked_prefix
 
-    w_naive = Window.orderBy("file_id").rowsBetween(Window.unboundedPreceding, -1)
-    naive = {
-        (r.file_id, r.before)
-        for r in files.withColumn(
-            "before", F.coalesce(F.sum("f_bytes").over(w_naive), F.lit(0))
-        ).collect()
-    }
+    rows, grouped, values, desc = case
+    by = ["g"] if grouped else []
+    df = spark.createDataFrame(rows, "file_id long, g string, f_bytes long")
+    order = [F.col("file_id").desc() if desc else F.col("file_id").asc()]
+    bucket = F.expr("file_id div 7")
+    chunked = df.withColumn("chunk", -bucket if desc else bucket)
+    got = chunked_prefix(chunked, by, ["chunk"], order, values)
 
-    chunked = files.withColumn("chunk", F.expr(f"file_id div {CHUNK}"))
-    w_in = (
-        Window.partitionBy("chunk")
-        .orderBy("file_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    w = (
+        Window.partitionBy(*by)
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    within = chunked.withColumn(
-        "wb", F.coalesce(F.sum("f_bytes").over(w_in), F.lit(0))
+    want = df.select(
+        "file_id",
+        *[
+            (F.row_number() if v is None else F.sum(v)).over(w).alias(out)
+            for out, v in values.items()
+        ],
     )
-    totals = chunked.groupBy("chunk").agg(F.sum("f_bytes").alias("ctot"))
-    w_c = Window.orderBy("chunk").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "off", F.coalesce(F.sum("ctot").over(w_c), F.lit(0))
-    ).select("chunk", "off")
-    got = {
-        (r.file_id, r.before)
-        for r in within.join(F.broadcast(offsets), "chunk")
-        .withColumn("before", F.col("off") + F.col("wb"))
-        .collect()
-    }
-    assert got == naive
+    cols = ["file_id", *values]
+    assert sorted(got.select(cols).collect()) == sorted(want.select(cols).collect())
 
 
 @st.composite

@@ -511,6 +511,90 @@ def test_sort_rank_window_is_chunk_partitioned(spark):
     assert "BroadcastHashJoin" in x
 
 
+def test_chunked_prefix_plan_and_consumers_build_without_jobs(spark):
+    """tables.chunked_prefix's plan: the per-row window is partitioned
+    by by + chunk, the only other window sits above the totals
+    aggregate, the offsets come back through a broadcast hash join, and
+    no row crosses into Python. Building any of its consumers launches
+    no Spark job."""
+    import re
+
+    from glaciersgee_spark.caches import clear_caches
+    from glaciersgee_spark.operators.curation import (
+        q_e_conformal_gate,
+        q_e_pack_audit,
+        q_e_rank_corr,
+        q_e_score_knee,
+        q_e_weighted_sample,
+        q_e_winsorize,
+    )
+    from glaciersgee_spark.operators.dedup import q_e_dedup_blocking
+    from glaciersgee_spark.operators.drift import q_e_gini_mass
+    from glaciersgee_spark.operators.relational import q_b_sort
+    from glaciersgee_spark.operators.retrieval import q_e_rrf_fusion
+    from glaciersgee_spark.operators.warehouse import q_b_compaction_plan
+    from glaciersgee_spark.tables import chunked_prefix
+
+    df = spark.range(200).select(
+        "id",
+        (F.col("id") % 3).cast("string").alias("g"),
+        (F.col("id") * 7 % 11).alias("v"),
+        F.expr("id div 16").alias("chunk"),
+    )
+    # auto-broadcast off: only the helper's own hint may broadcast
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan = PI.formatted(
+            chunked_prefix(df, ["g"], ["chunk"], ["id"], {"cum": "v", "rk": None})
+        )
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    tree = plan.split("\n\n")[0].splitlines()
+    windows = [i for i, line in enumerate(tree) if re.search(r"Window \(\d+\)", line)]
+    assert len(windows) == 2, plan
+    # first operator below each window that is not its Sort/Exchange
+    below = [
+        next(
+            re.sub(r"[\s:+\-|]*", "", line, count=1).split()[0]
+            for line in tree[i + 1 :]
+            if not re.search(r"(Sort|Exchange) \(\d+\)", line)
+        )
+        for i in windows
+    ]
+    assert sorted(below) == ["HashAggregate", "Project"], (below, plan)
+    assert re.search(r"row_number\(\) windowspecdefinition\(g#\d+, chunk#\d+", plan)
+    assert re.search(r"sum\(v#\d+L\) windowspecdefinition\(g#\d+, chunk#\d+", plan)
+    assert "BroadcastHashJoin" in plan and "BroadcastExchange" in plan, plan
+    assert not PI.has_python_boundary(plan)
+
+    consumers = [
+        q_b_sort,
+        q_b_compaction_plan,
+        q_e_weighted_sample,
+        q_e_rank_corr,
+        q_e_conformal_gate,
+        q_e_winsorize,
+        q_e_pack_audit,
+        q_e_score_knee,
+        q_e_gini_mass,
+        q_e_dedup_blocking,
+        q_e_rrf_fusion,
+    ]
+    for table in ("orders", "documents", "embeddings"):
+        load_table(spark, SF_SMOKE, table)  # one-time footer reads
+    clear_caches()
+    spark.catalog.clearCache()
+    tracker = spark.sparkContext.statusTracker()
+    eager = []
+    for q in consumers:
+        before = len(tracker.getJobIdsForGroup(None))
+        q(spark, SF_SMOKE)
+        if len(tracker.getJobIdsForGroup(None)) != before:
+            eager.append(q.__name__)
+    assert not eager, f"plan build launched a job: {eager}"
+
+
 def test_bm25_has_no_eager_scan_at_build(spark):
     """Round-4 rewrite: building the bm25 plan must not run a count()
     job; the corpus size rides the same 1-row broadcast scalar as
