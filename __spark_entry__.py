@@ -4,289 +4,58 @@ Thin adapter over glaciersgee_spark: ``entry`` runs the flagship
 pricing-summary query; ``queries``/``oracle_sql`` re-export the
 registry populated by the operator modules (SURVEY.md §2 inventory).
 
-Dict ordering: the driver's CORRECTNESS pass covers only the first ~50
-entries of queries() in iteration order, so each round the queries with
-the least driver-side evidence are rotated to the front. Round-11
-rotation (CORRECTNESS_r10: 50/50 green — exactly the _R10_FRONT the r9
-verdict asked for, order-verified by the r10 judge): the front is
-VERDICT r10 item 1 verbatim — the last 5 _STALE_R2 + the first 45
-round-9 additions (_R9_NEW[:45]) in registry order. Round 12 then takes
-the remaining 7 _R9_NEW + the 15 _R10_NEW (22 rows), after which every
-op's latest driver evidence postdates round 2. Round-11 additions
-(_R11_NEW) queue behind _R10_NEW with the standard one-round evidence
-lag. Local parity (tests/run_parity.py) covers the full inventory at
-sf0.01 AND sf0.1 every round regardless of the driver cap (the registry
-itself is the count of record).
+Dict ordering: the driver's CORRECTNESS pass checks only the first ~50
+entries of queries() in iteration order, so the order decides which
+queries gain driver-side evidence each round. One rule sets it, read
+from the driver's own ``CORRECTNESS_r{N}.json`` files next to this
+module: each query scores the number of the latest round in which its
+row passed (rows, schema and hash all match, no error), or 0 when it
+has no row or its latest row failed, and the registry is sorted by
+(score, registry index). The least recently verified-green queries
+therefore come first, and each landed round moves the queries it
+verified to the back without any edit here. Local parity
+(tests/run_parity.py) covers the full inventory every round regardless
+of the driver cap (the registry itself is the count of record).
 """
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
+from pathlib import Path
 from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
 import glaciersgee_spark
 
-# Verified by the driver in rounds 1-4 (CORRECTNESS_r0{1,2,3,4}.json:
-# rows+schema+hash all true on every checked row) — lowest re-check
-# priority.
-_DRIVER_VERIFIED = {
-    "q_a_bbox_contains", "q_a_bbox_overlap", "q_a_best_per_group",
-    "q_a_composite_agg", "q_a_date_features", "q_a_distinct_scenes",
-    "q_a_export_manifest", "q_a_filter_bounds", "q_a_filter_date",
-    "q_a_filter_meta", "q_a_gap_detect", "q_a_ingest_log", "q_a_join_aoi",
-    "q_a_polygon_contains", "q_a_props_extract", "q_a_qa_bitmask",
-    "q_a_quadkey_pyramid", "q_a_revisit_stats", "q_a_rollup_multires",
-    "q_a_scene_count_hist", "q_a_scene_streak", "q_a_sort_first",
-    "q_a_tile_neighbors", "q_a_trend_slope", "q_b_agg_approx",
-    "q_b_agg_argmax", "q_b_agg_bitwise", "q_b_agg_collect",
-    "q_b_agg_distinct", "q_b_agg_hash", "q_b_agg_salted", "q_b_approx_topk",
-    "q_b_bitmap_distinct", "q_b_compaction_plan", "q_b_cte_pipeline",
-    "q_b_cube", "q_b_dq_checks", "q_b_explode", "q_b_filter_complex",
-    "q_b_funnel", "q_b_grouping_sets", "q_b_having", "q_b_histogram",
-    "q_b_hll_rolling", "q_b_incr_agg", "q_b_intersect_except",
-    "q_b_join_anti", "q_b_join_asof", "q_b_join_asof_nearest",
-    "q_b_join_broadcast", "q_b_join_bucketed", "q_b_join_cross",
-    "q_b_join_dpp", "q_b_join_full", "q_b_join_inner", "q_b_join_lateral",
-    "q_b_join_left", "q_b_join_nullsafe", "q_b_join_range",
-    "q_b_join_right", "q_b_join_salted", "q_b_join_semi", "q_b_join_theta",
-    "q_b_kll_quantiles", "q_b_limit_topk", "q_b_pivot", "q_b_project",
-    "q_b_quantiles_approx", "q_b_recursive_cte", "q_b_rolling_distinct",
-    "q_b_sample", "q_b_scan_csv", "q_b_scan_json", "q_b_scan_orc",
-    "q_b_scan_parquet", "q_b_scan_text", "q_b_scan_xml",
-    "q_b_sink_partitioned", "q_b_skew_audit", "q_b_snapshot_diff",
-    "q_b_sort", "q_b_subquery", "q_b_time_travel", "q_b_topk_pergroup",
-    "q_b_union", "q_b_unpivot", "q_b_upsert_merge", "q_b_window_analytic",
-    "q_b_window_frame", "q_b_window_rank", "q_b_window_rankdist",
-    "q_b_window_trailing", "q_b_zorder_cluster", "q_c_array", "q_c_bitwise",
-    "q_c_cast", "q_c_cond", "q_c_date", "q_c_hash", "q_c_interval",
-    "q_c_json", "q_c_map", "q_c_math", "q_c_null", "q_c_regex",
-    "q_c_string", "q_c_struct", "q_c_url", "q_c_variant",
-    "q_d_checkpoint_resume", "q_d_foreachbatch_sink", "q_d_window_topk",
-    "q_e_ann_cost", "q_e_ann_recall", "q_e_band_explain", "q_e_bigram_lm",
-    "q_e_bm25", "q_e_burstiness", "q_e_cc_stars", "q_e_char_entropy",
-    "q_e_cluster_balance", "q_e_cluster_purity", "q_e_containment",
-    "q_e_cross_dedup", "q_e_curation_funnel", "q_e_dedup_apply",
-    "q_e_dedup_cluster", "q_e_dedup_embed", "q_e_dedup_exact",
-    "q_e_dedup_near", "q_e_dedup_near_md5", "q_e_dedup_simhash",
-    "q_e_dedup_soft", "q_e_diversity_sample", "q_e_dup_sizes",
-    "q_e_embed_centroid", "q_e_embed_drift", "q_e_embed_outliers",
-    "q_e_embed_quantize", "q_e_fingerprint", "q_e_fuzzy_vocab",
-    "q_e_gopher_rules", "q_e_graph_triangles", "q_e_hard_negatives",
-    "q_e_hubness", "q_e_incremental_dedup", "q_e_ivf_pq", "q_e_ivf_recall",
-    "q_e_jaccard_sweep", "q_e_jaccard_verify", "q_e_kmeans_iter",
-    "q_e_knn_graph", "q_e_knn_pergroup", "q_e_label_balance",
-    "q_e_len_buckets", "q_e_lsh_tuning", "q_e_minhash_bbit",
-    "q_e_minhash_est_err", "q_e_minhash_recall", "q_e_mix_weights",
-    "q_e_mm_pairs", "q_e_mm_shard_manifest", "q_e_ngram_lm", "q_e_nmi",
-    "q_e_pack_efficiency", "q_e_pmi", "q_e_ppl_buckets", "q_e_pq_recall",
-    "q_e_psi_drift", "q_e_recall_curve", "q_e_semdedup", "q_e_sim_join",
-    "q_e_sim_topk", "q_e_sim_topk_filtered", "q_e_sim_topk_ivf",
-    "q_e_sim_topk_lsh", "q_e_sim_topk_pq", "q_e_simhash_recall",
-    "q_e_source_overlap", "q_e_summary_card", "q_e_text_stats",
-    "q_e_text_tokens", "q_e_tfidf", "q_e_token_bpe", "q_e_token_budget",
-    "q_e_url_dedup", "q_e_zipf_slope",
-}
-
-# Went green in round 5 (CORRECTNESS_r05.json: 50/50 rows+schema+hash
-# all true — the 39 round-5 additions, the full Group F surface, and
-# the first 3 streaming batch-equivalents) — folded into the verified
-# tail.
-_DRIVER_VERIFIED |= {
-    "q_b_join_bloom", "q_b_countmin_freq", "q_e_feature_hashing",
-    "q_e_retrieval_ndcg", "q_b_join_cardest", "q_b_scan_binary",
-    "q_b_scan_pysource", "q_e_graph_pagerank", "q_e_ivf_probe_curve",
-    "q_e_semdedup_sweep", "q_e_weighted_sample", "q_e_dpo_pairs",
-    "q_e_minhash_union", "q_e_quality_calibration", "q_b_skyline",
-    "q_b_join_interval", "q_e_knn_classify", "q_e_mmr_diversify",
-    "q_a_geohash", "q_f_pandas_window", "q_b_merge_schema",
-    "q_e_bloom_dedup", "q_e_shard_assign", "q_e_zscore_norm",
-    "q_a_nearest_aoi", "q_e_rank_corr", "q_e_gini_mass",
-    "q_d_stream_union", "q_a_coverage_gap", "q_e_js_drift",
-    "q_e_split_leakage", "q_e_dedup_survivors", "q_e_length_gate",
-    "q_e_dup_timeline", "q_e_bottomk_sample", "q_c_try",
-    "q_b_paginate_keyset", "q_d_stream_pysource", "q_d_stream_pysink",
-    "q_f_udf_scalar", "q_f_pandas_scalar", "q_f_pandas_grouped_agg",
-    "q_f_udtf", "q_f_pandas_group_map", "q_f_cogroup_map",
-    "q_f_maparrow", "q_f_pandas_iter",
-    "q_d_tumbling", "q_d_sliding", "q_d_session",
-}
-
-# Went green in rounds 6 and 7 (CORRECTNESS_r0{6,7}.json: 50/50 each,
-# rows+schema+hash all true) — the r6 never-checked 50 plus the whole
-# r7 front (3 r5 rewrites, 18 r6 additions, 23 r7 additions, the
-# rrf_fusion post-rewrite row, 5 r1-r2 similarity rechecks). With
-# these folded in, cumulative driver coverage is 328/328.
-_DRIVER_VERIFIED |= {
-    "q_d_watermark_late", "q_d_stateful_dedup", "q_d_stream_static_join",
-    "q_d_stateful_custom", "q_d_stream_stream_join",
-    "q_d_lateness_audit", "q_d_window_users",
-    "q_b_mad", "q_b_quantiles", "q_b_profile", "q_b_scd2",
-    "q_b_pit_join", "q_b_fk_audit", "q_b_growth_curve", "q_b_observe",
-    "q_b_scan_corrupt", "q_b_scan_range",
-    "q_a_anomaly_days", "q_a_cloud_window", "q_a_gapfill_interp",
-    "q_a_monthly_coverage", "q_a_scene_freshness", "q_a_stereo_pairs",
-    "q_e_span_dedup", "q_e_winnow", "q_e_window_dedup",
-    "q_e_multimodal", "q_e_mm_decode", "q_e_mm_framesample",
-    "q_e_seq_pack", "q_e_doc_chunk", "q_e_bpe_pairs", "q_e_lang_id",
-    "q_e_lang_topterms", "q_e_quality_filter", "q_e_quality_classifier",
-    "q_e_pii_scrub", "q_e_decontaminate", "q_e_train_split",
-    "q_e_stratified_sample", "q_e_rrf_fusion", "q_e_repetition",
-    "q_e_boilerplate", "q_e_corpus_drift", "q_e_ngram_novelty",
-    "q_e_tok_entropy", "q_e_vocab_coverage", "q_e_vocab_growth",
-    "q_e_embed_gram", "q_e_power_iter",
-    "q_e_graph_triangles", "q_d_window_topk", "q_e_cc_stars",
-    "q_d_stream_ivjoin", "q_b_runlength", "q_e_template_skeleton",
-    "q_e_dup_inflation", "q_e_tail_index", "q_e_length_ks",
-    "q_d_stream_dedup", "q_e_filter_agreement", "q_e_dsir_weights",
-    "q_d_stream_session", "q_e_span_mass", "q_e_hapax_rate",
-    "q_e_cond_entropy", "q_e_ngram_simpson", "q_e_span_position",
-    "q_e_k_anonymity", "q_e_shard_mixing", "q_e_anisotropy",
-    "q_d_stream_custom_state", "q_d_stream_update", "q_d_stream_complete",
-    "q_e_kmeans_train", "q_e_quality_auc", "q_e_l_diversity",
-    "q_e_davies_bouldin", "q_e_heaps_law", "q_e_code_switch",
-    "q_e_sparse_knn", "q_c_collation", "q_e_wilson_ci", "q_e_chi2_terms",
-    "q_e_pq_distortion", "q_e_spectral_mass", "q_e_rank_biased_overlap",
-    "q_d_stream_listener", "q_f_udtf_analyze", "q_b_sql_variables",
-    "q_b_metadata_cols", "q_e_int8_recall", "q_e_ivf_trained",
-    "q_e_jsd_matrix",
-    "q_e_sim_topk", "q_e_sim_join", "q_e_knn_pergroup",
-    "q_e_sim_topk_lsh", "q_e_sim_topk_ivf",
-}
-
-# Went green in round 8 (CORRECTNESS_r08.json: 50/50 rows+schema+hash
-# all true — the whole r8 front: the 3 r1-r2 rechecks plus 47 of the
-# 48-op r1-evidence cohort). All 50 names were already in the r1-r4
-# fold above, so this re-fold is a freshness note, not a set change;
-# the one cohort member the cap excluded (q_a_trend_slope) heads the
-# round-9 front below.
-
-# New in round 8 — first-time driver rows land across rounds 9-10
-# (the same one-round evidence lag every prior wave took); covered by
-# local parity at both SFs since round 8 and re-verified by the r8
-# judge (73/73, VERDICT.md).
-_R8_NEW: tuple[str, ...] = (
-    "q_d_stream_outer_join", "q_e_ivf_persist", "q_e_bpe_train",
-    "q_b_scan_pysource_filters", "q_e_bpe_fertility", "q_b_sql_pipe",
-    "q_f_group_arrow", "q_e_cluster_ari", "q_d_stream_full_outer",
-    "q_b_kmv_intersect", "q_f_arrow_udf", "q_e_whiten_diag",
-    "q_e_dedup_blocking", "q_e_jl_distortion", "q_e_t_closeness",
-    "q_e_bt_strength", "q_e_dp_counts", "q_e_conformal_gate",
-    "q_d_stream_chained_agg", "q_c_binary", "q_a_solar_time",
-    "q_e_winsorize", "q_b_join_hinted", "q_e_matryoshka_recall",
-    "q_e_pr_auc", "q_e_self_bleu", "q_e_aes_sample", "q_e_dp_quantile",
-    "q_f_sql_udf", "q_e_wasserstein", "q_e_good_turing",
-    "q_e_brier_decomp", "q_e_threshold_sweep", "q_e_neyman_alloc",
-    "q_b_assoc_rules", "q_e_poisson_boot", "q_f_udtf_partition",
-    "q_d_stream_rate", "q_e_cusum_drift", "q_e_langid_f1",
-    "q_e_filter_kappa", "q_e_burrows_delta", "q_e_mann_kendall",
-    "q_e_theil_sen", "q_e_autocorr", "q_e_seasonality", "q_b_benford",
-    "q_e_linear_fusion", "q_e_exposure_share", "q_e_feature_mi",
-    "q_a_utm_zone", "q_b_dist_moments", "q_c_printf", "q_b_survival_km",
-    "q_a_band_math", "q_a_zonal_stats", "q_f_udtf_arrow", "q_b_sql_params",
-    "q_e_ewma_chart", "q_c_uuid", "q_e_holt_trend",
-    "q_e_perplexity", "q_e_domain_cap", "q_e_blocklist_score",
-    "q_e_pack_audit", "q_b_cache_table", "q_e_holt_winters",
-    "q_e_logreg_train", "q_b_ab_test",
-    "q_e_kn_bigram", "q_b_retention_cohort",
-    "q_b_time_weighted_avg", "q_b_purge_audit",
-)
-
-# The 31 remaining r2-evidence ops — the round-10 refresh queue,
-# oldest evidence after the _R8_NEW tail once round 9's rows land.
-_STALE_R2: tuple[str, ...] = (
-    "q_b_agg_approx", "q_b_agg_collect", "q_e_ann_recall",
-    "q_e_cluster_balance", "q_e_cross_dedup", "q_e_curation_funnel",
-    "q_e_dedup_apply", "q_e_dedup_cluster", "q_e_dedup_embed",
-    "q_e_dedup_near", "q_e_dedup_near_md5", "q_e_dedup_simhash",
-    "q_e_dedup_soft", "q_e_diversity_sample", "q_e_embed_centroid",
-    "q_e_embed_outliers", "q_e_embed_quantize", "q_e_fingerprint",
-    "q_e_hard_negatives", "q_e_incremental_dedup", "q_e_ivf_recall",
-    "q_e_knn_graph", "q_e_label_balance", "q_e_lsh_tuning",
-    "q_e_minhash_est_err", "q_e_minhash_recall", "q_e_nmi",
-    "q_e_pq_recall", "q_e_simhash_recall", "q_e_source_overlap",
-    "q_e_text_tokens",
-)
-
-# New in round 9 — appended as they land; queue behind the round-10
-# refresh with the standard one-round evidence lag.
-_R9_NEW: tuple[str, ...] = (
-    "q_e_ivfpq_persist", "q_b_join_skew_aqe", "q_d_schema_evolve",
-    "q_e_ivfpq_recall", "q_d_state_inspect", "q_b_sql_script",
-    "q_b_attribution", "q_e_pq_residual", "q_e_div_frontier", "q_a_glacier_trend", "q_b_sink_pywriter", "q_b_sql_identifier",
-    "q_e_silhouette", "q_a_harmonic_fit", "q_e_readability", "q_b_checksum_table", "q_e_mmd_poly", "q_a_medoid_composite", "q_e_calinski", "q_b_groupby_all", "q_c_reduce", "q_b_transpose",
-    "q_b_listagg", "q_b_mode_agg", "q_b_sessionize", "q_b_cdc_apply",
-    "q_e_retrieval_err", "q_c_levenshtein", "q_e_dedup_edit",
-    "q_d_multi_watermark", "q_e_coreset", "q_b_incr_view",
-    "q_d_stream_observe", "q_e_curriculum", "q_b_join_cbo",
-    "q_a_otsu_threshold", "q_a_morph_open", "q_e_mcnemar",
-    "q_b_money_alloc", "q_b_vacuum_plan",
-    "q_f_cogroup_arrow", "q_e_mm_audio_chunks", "q_e_cartography",
-    "q_e_weak_label", "q_e_dedup_blockhash", "q_e_graph_hits",
-    "q_b_ohlc_bars", "q_b_data_mask", "q_a_terrain_slope",
-    "q_a_despike_median3", "q_a_area_weighted", "q_a_cloud_markov",
-)
-
-# Round-9 front (VERDICT r8 item 1, verbatim — landed: CORRECTNESS_r09
-# 50/50 green, confirmed by the r9 judge): the r1 straggler + the first
-# 49 _R8_NEW names. Folded into the verified tail.
-_R9_FRONT: tuple[str, ...] = ("q_a_trend_slope",) + _R8_NEW[:49]
-_DRIVER_VERIFIED |= set(_R9_FRONT)
-
-# Round-10 front (VERDICT r9 item 1, verbatim) — landed:
-# CORRECTNESS_r10 50/50 green, order-confirmed by the r10 judge.
-# Folded into the verified tail.
-_R10_FRONT: tuple[str, ...] = _R8_NEW[49:] + _STALE_R2[:26]
-_DRIVER_VERIFIED |= set(_R10_FRONT)
-
-# New in round 10 — appended as they land; queue behind _R9_NEW with
-# the standard one-round evidence lag.
-_R10_NEW: tuple[str, ...] = (
-    "q_e_ivfpq_append", "q_e_ivfpq_drift", "q_a_harmonize_ols",
-    "q_b_match_recognize", "q_e_graph_beam_search", "q_e_score_knee",
-    "q_b_bitemporal_asof", "q_b_semi_additive", "q_a_climatology_zscore",
-    "q_e_group_kfold", "q_b_pop_calendar", "q_e_quota_spill",
-    "q_e_filter_cascade", "q_e_beam_persist", "q_e_beam_recall",
-)
-
-# New in round 11 — queue behind _R10_NEW with the standard lag.
-_R11_NEW: tuple[str, ...] = (
-    "q_e_beam_append", "q_e_beam_drift", "q_e_retrain_policy",
-    "q_e_dbscan_core", "q_e_label_prop", "q_a_hypsometry",
-    "q_b_interval_sweep", "q_e_sampling_temperature", "q_e_dawid_skene",
-    "q_b_star_join", "q_a_snowline_interp", "q_e_dedup_ordering",
-    "q_e_lsh_multiprobe", "q_e_bloom_fpp", "q_e_mattr",
-)
-
-# Round-11 front (VERDICT r10 item 1, verbatim): the last 5 _STALE_R2
-# + the first 45 _R9_NEW — exactly the driver's 50-row cap. The
-# remainder of the queue (7 _R9_NEW + _R10_NEW + _R11_NEW) follows in
-# order for round 12.
-_R11_QUEUE: tuple[str, ...] = _STALE_R2[26:] + _R9_NEW + _R10_NEW + _R11_NEW
-
 _V = TypeVar("_V")
 
+_HERE = Path(__file__).resolve().parent
 
-def _rotated(d: dict[str, _V]) -> dict[str, _V]:
-    names = list(d)
 
-    front = {
-        n: i
-        for i, n in enumerate(_R11_QUEUE)
-    }
+def _last_green(evidence: Path) -> dict[str, int]:
+    """Query name -> latest driver round whose row passed (0 if it failed)."""
+    rounds = sorted(
+        (int(m.group(1)), p)
+        for p in evidence.glob("CORRECTNESS_r*.json")
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name))
+    )
+    last: dict[str, int] = {}
+    for n, path in rounds:
+        for name, row in json.loads(path.read_text()).items():
+            green = all(
+                row.get(k) is True for k in ("rows_match", "schema_match", "hash_match")
+            ) and row.get("err") is None
+            last[name] = n if green else 0
+    return last
 
-    def prio(n: str) -> tuple[int, int]:
-        if n in front:
-            return (0, front[n])
-        if n not in _DRIVER_VERIFIED:
-            # safety net: anything never checked but missing from the
-            # explicit front list still beats the verified tail
-            return (1, 0)
-        return (2, 0)
 
-    idx = {n: i for i, n in enumerate(names)}
-    return {n: d[n] for n in sorted(names, key=lambda n: (*prio(n), idx[n]))}
+def _rotated(d: dict[str, _V], evidence: Path = _HERE) -> dict[str, _V]:
+    last = _last_green(evidence)
+    # sorted() is stable: equal scores keep registry order.
+    return {n: d[n] for n in sorted(d, key=lambda n: last.get(n, 0))}
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -299,10 +68,10 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
     glaciersgee_spark.load_all_queries()
-    return _rotated(dict(glaciersgee_spark.QUERIES))
+    return _rotated(glaciersgee_spark.QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL per queries() key (omitted ⇒ rows-only)."""
     glaciersgee_spark.load_all_queries()
-    return _rotated(dict(glaciersgee_spark.ORACLE))
+    return _rotated(glaciersgee_spark.ORACLE)

@@ -22,11 +22,15 @@ random multi-second stalls that hit a different query every run
 (measured: the same query swinging 1.4 s ↔ 20.7 s across identical-
 code runs while the rest of the suite was unchanged) — the minimum is
 the standard low-noise estimator for wall-clock work actually
-required. `spark.catalog.clearCache()` after every run keeps each
-timed run honest: any DataFrame a query persists internally is
-dropped, so every run re-computes everything. The cold (first-run)
-times are reported under "cold" so nothing is hidden; "value" is the
-sum over queries of the per-query minimum.
+required. `spark.catalog.clearCache()` plus
+`glaciersgee_spark.caches.clear_caches()` after every run keeps each
+timed run honest: clearCache() drops the DataFrames a query persists,
+and clear_caches() drops the app-scoped frames and driver values
+(`scoped_persist`/`scoped_value`, e.g. the k-means centroids), which
+clearCache() alone leaves in place, so every run re-computes
+everything. The cold (first-run) times are reported under "cold" so
+nothing is hidden; "value" is the sum over queries of the per-query
+minimum.
 
 Execution is measured with the noop sink so the number is engine time
 (scan→compute→sink), not driver-side row serialization. Scale factor
@@ -74,6 +78,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from __spark_entry__ import queries  # noqa: E402
+from glaciersgee_spark.caches import clear_caches  # noqa: E402
 from glaciersgee_spark.session import get_spark  # noqa: E402
 
 N_TIMED = 3
@@ -159,6 +164,7 @@ def main() -> None:
     qs["q_b_agg_hash"](spark, sf_dir).write.format("noop").mode("overwrite").save()
     qs["q_e_sim_topk"](spark, sf_dir).write.format("noop").mode("overwrite").save()
     spark.catalog.clearCache()
+    clear_caches()
 
     # Host-calibration trio: same min-of-3 protocol, run FIRST so the
     # readings describe the host that produced the battery that
@@ -171,12 +177,14 @@ def main() -> None:
         try:
             qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
             spark.catalog.clearCache()
+            clear_caches()
             timed = []
             for _ in range(N_TIMED):
                 t0 = time.monotonic()
                 qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
                 timed.append(time.monotonic() - t0)
                 spark.catalog.clearCache()
+                clear_caches()
             calibration[name] = round(min(timed), 3)
         except Exception as e:  # noqa: BLE001
             calibration[name] = -1.0
@@ -211,12 +219,14 @@ def main() -> None:
             cold[name] = round(time.monotonic() - t0, 3)
             qclass[name] = _query_class(df)
             spark.catalog.clearCache()
+            clear_caches()
             timed: list[float] = []
             for _ in range(N_TIMED):
                 t0 = time.monotonic()
                 qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
                 timed.append(time.monotonic() - t0)
                 spark.catalog.clearCache()
+                clear_caches()
             per[name] = round(min(timed), 3)
         except Exception as e:  # noqa: BLE001 — a broken query must not hide the rest
             cold.setdefault(name, -1.0)

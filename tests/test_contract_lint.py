@@ -1,7 +1,7 @@
 """Driver-contract lints over the ENTIRE declared inventory.
 
-Two whole-inventory invariants that individual parity rows can't
-enforce (each guards a bug class that actually shipped once):
+Whole-inventory invariants that individual parity rows can't enforce
+(each guards a bug class that actually shipped once):
 
 1. No query output column may be array/map/binary — the driver's
    pandas canonicalizer cannot hash them (the convention is
@@ -14,11 +14,20 @@ enforce (each guards a bug class that actually shipped once):
    queries in one cheap DuckDB-only pass (17 latent instances escaped
    the per-query gate in round 2 because only ~50 queries/round get
    driver-checked).
+3. The driver checks only the first ~50 entries of queries(), so the
+   order must put the queries without recent driver evidence first
+   (hand-kept rotation lists went stale and left 37 queries with no
+   driver row), and every name in the driver's CORRECTNESS files must
+   still be a registered query.
 """
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 import __spark_entry__ as entry
+import glaciersgee_spark
 from tests.conftest import SF_SMOKE
 from tests.parity import make_duck
 
@@ -113,3 +122,65 @@ def test_persist_sites_are_registry_routed():
         "state keyed by applicationId outside caches.py — use "
         f"caches.scoped_persist / caches.scoped_value: {app_keyed}"
     )
+
+
+_DRIVER_CAP = 50
+
+
+def _correctness_names() -> set[str]:
+    return {
+        name
+        for path in entry._HERE.glob("CORRECTNESS_r*.json")
+        for name in json.loads(path.read_text())
+    }
+
+
+def test_driver_order_fronts_queries_without_driver_rows():
+    qs, ora = entry.queries(), entry.oracle_sql()
+    assert set(qs) == set(glaciersgee_spark.QUERIES)
+    assert set(ora) == set(glaciersgee_spark.ORACLE)
+    unseen = set(glaciersgee_spark.QUERIES) - _correctness_names()
+    assert len(unseen) <= _DRIVER_CAP
+    missing = unseen - set(list(qs)[:_DRIVER_CAP])
+    assert not missing, f"never driver-checked but behind the cap: {sorted(missing)}"
+    assert [n for n in qs if n in ora] == list(ora)
+
+
+def _round(path: Path, rows: dict[str, bool]) -> None:
+    path.write_text(
+        json.dumps(
+            {
+                name: {
+                    "rows_match": True,
+                    "schema_match": True,
+                    "hash_match": ok,
+                    "spark_rows": 1,
+                    "oracle_rows": 1,
+                    "err": None if ok else "hash mismatch",
+                }
+                for name, ok in rows.items()
+            }
+        )
+    )
+
+
+def test_driver_order_rule_on_synthetic_rounds(tmp_path):
+    reg = {n: n for n in ("a", "b", "c", "d", "e")}
+    # No evidence: registry order.
+    assert list(entry._rotated(reg, tmp_path)) == list(reg)
+    # r9 verifies a, b, c; r10 re-checks b (fails) and c (passes).
+    _round(tmp_path / "CORRECTNESS_r9.json", {"a": True, "b": True, "c": True})
+    _round(tmp_path / "CORRECTNESS_r10.json", {"b": False, "c": True})
+    # Unseen d, e and latest-failed b score 0; a (r9) before c (r10).
+    assert list(entry._rotated(reg, tmp_path)) == ["b", "d", "e", "a", "c"]
+    # A later round moves the names it verified to the back.
+    _round(tmp_path / "CORRECTNESS_r11.json", {"b": True, "d": True})
+    assert list(entry._rotated(reg, tmp_path)) == ["e", "a", "c", "b", "d"]
+
+
+def test_correctness_names_are_registered_queries():
+    """The declared inventory does not shrink: a query the driver has
+    checked may not be renamed or dropped, or its evidence is lost."""
+    glaciersgee_spark.load_all_queries()
+    unknown = _correctness_names() - set(glaciersgee_spark.QUERIES)
+    assert not unknown, f"driver evidence for unregistered queries: {sorted(unknown)}"
