@@ -17,18 +17,36 @@ Scale: stages add exactly one shuffle (the best-per-cell window) plus
 one broadcast anti join against the done-log; the manifest sink is
 partitioned by acquisition day so downstream consumers get partition
 pruning. Nothing touches the driver except the final summary counts.
+
+Each `run_*` executes its plan once. The summary counts are
+`pyspark.sql.Observation` metrics attached to the frame being
+written, so they ride the write's own jobs instead of re-running the
+scan, the window and the anti join as separate count actions. The one
+read-back kept is the scene pipeline's sink check: it counts the rows
+actually on disk (and the distinct cells among them), which is what
+proves the sink wrote the planned pending set. The curation report's
+four tables are independent plans, so they are built and written from
+a 4-thread pool that keeps the caller's job group and tags.
 """
 
 from __future__ import annotations
 
 import json
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+import pyspark
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 
 from glaciersgee_spark.sources import sinks
 from glaciersgee_spark.tables import load_table
+
+def _observed(df: DataFrame, **metrics: Column) -> tuple[DataFrame, Observation]:
+    """df with named aggregate metrics attached; the Observation's
+    `.get` returns them once the first action over the frame ends."""
+    obs = Observation()
+    return df.observe(obs, *(c.alias(k) for k, c in metrics.items())), obs
 
 
 @dataclass(frozen=True)
@@ -125,25 +143,39 @@ def run_pipeline(
 ) -> dict:
     """Execute the full lifecycle; write the pending-work manifest as
     day-partitioned parquet; return summary counts (the only rows that
-    ever reach the driver)."""
+    ever reach the driver).
+
+    `selected` (manifest rows) and `pending` (rows left after the
+    done-log anti join) are observed on the write. `cells` comes from
+    the one read-back of the sink, which also checks that the rows on
+    disk are exactly the planned pending count."""
     done = (
         spark.read.parquet(done_log_path).select("event_id")
         if done_log_path
         else None
     )
-    manifest = build_manifest(select_scenes(spark, sf_dir, cfg))
-    todo = pending_downloads(manifest, done)
+    manifest, selected = _observed(
+        build_manifest(select_scenes(spark, sf_dir, cfg)), n=F.count(F.lit(1))
+    )
+    todo, pending = _observed(pending_downloads(manifest, done), n=F.count(F.lit(1)))
     sinks.write_parquet_partitioned(todo, output_dir, "day")
+    n_pending = pending.get["n"]
+    cells = 0
     # Verify through the sink: a zero-row partitioned write leaves no
     # parquet footer, so only read back when something was written.
-    pending = todo.count()
-    written = spark.read.parquet(output_dir) if pending else None
-    if written is not None and written.count() != pending:
-        raise AssertionError("sink row count != planned pending count")
+    if n_pending:
+        back = (
+            spark.read.parquet(output_dir)
+            .agg(F.count(F.lit(1)).alias("rows"), F.countDistinct("user_id").alias("cells"))
+            .first()
+        )
+        if back.rows != n_pending:
+            raise AssertionError("sink row count != planned pending count")
+        cells = back.cells
     return {
-        "selected": manifest.count(),
-        "pending": pending,
-        "cells": written.select("user_id").distinct().count() if pending else 0,
+        "selected": selected.get["n"],
+        "pending": n_pending,
+        "cells": cells,
         "output_dir": output_dir,
     }
 
@@ -152,6 +184,9 @@ def run_pipeline(
 # Corpus-cleaning pipeline — the LLM-data end-to-end UX (BASELINE.json:6
 # mandate): quality filter → exact dedup (canonical keep) → deterministic
 # train/val/test split → split-partitioned parquet shards.
+
+
+SPLITS = ("train", "val", "test")
 
 
 @dataclass(frozen=True)
@@ -182,13 +217,13 @@ class CorpusCleanConfig:
         )
 
 
-def clean_corpus(spark: SparkSession, sf_dir: str, cfg: CorpusCleanConfig) -> DataFrame:
-    """One lazy plan: quality predicates on the scan, one window shuffle
-    for canonical dedup, then the md5 split bucket (a per-row expr).
+def clean_corpus(d: DataFrame, cfg: CorpusCleanConfig) -> DataFrame:
+    """One lazy plan over the `documents` frame `d`: quality predicates
+    on the scan, one window shuffle for canonical dedup, then the md5
+    split bucket (a per-row expr).
 
     The kept row per content key is min(doc_id) — deterministic at any
     partitioning, unlike dropDuplicates."""
-    d = load_table(spark, sf_dir, "documents")
     words = F.split("text", " ")
     n_tok = F.size(words)
     docs = d.withColumn("n_tokens", n_tok.cast("long")).where(
@@ -211,10 +246,11 @@ def clean_corpus(spark: SparkSession, sf_dir: str, cfg: CorpusCleanConfig) -> Da
         "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15), 16, 10) AS BIGINT)"
         " % 100"
     )
+    train, val, test = SPLITS
     split = (
-        F.when(bucket < cfg.train_pct, "train")
-        .when(bucket < cfg.train_pct + cfg.val_pct, "val")
-        .otherwise("test")
+        F.when(bucket < cfg.train_pct, train)
+        .when(bucket < cfg.train_pct + cfg.val_pct, val)
+        .otherwise(test)
     )
     return docs.withColumn("split", split)
 
@@ -223,16 +259,23 @@ def run_corpus_pipeline(
     spark: SparkSession, sf_dir: str, cfg: CorpusCleanConfig, output_dir: str
 ) -> dict:
     """Clean + split + write split-partitioned shards; return summary
-    counts (the only driver-side rows)."""
-    cleaned = clean_corpus(spark, sf_dir, cfg)
+    counts (the only driver-side rows).
+
+    Every count is observed on the one write: `input_docs` on the
+    `documents` scan inside the clean plan, and one conditional count
+    per split label on the written frame. Splits that kept no row are
+    left out of `by_split`, as a groupBy over the output would."""
+    docs, scanned = _observed(
+        load_table(spark, sf_dir, "documents"), n=F.count(F.lit(1))
+    )
+    cleaned, splits = _observed(
+        clean_corpus(docs, cfg),
+        **{s: F.count(F.when(F.col("split") == s, 1)) for s in SPLITS},
+    )
     sinks.write_parquet_partitioned(cleaned, output_dir, "split")
-    input_n = load_table(spark, sf_dir, "documents").count()
-    by_split = {
-        r.split: r.n
-        for r in cleaned.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
+    by_split = {s: n for s, n in splits.get.items() if n}
     return {
-        "input_docs": input_n,
+        "input_docs": scanned.get["n"],
         "kept_docs": sum(by_split.values()),
         "by_split": by_split,
         "output_dir": output_dir,
@@ -245,7 +288,12 @@ def run_report(spark: SparkSession, sf_dir: str, output_dir: str) -> dict:
     cluster size histogram, sequence-length budget, and the staged
     curation funnel — each written as parquet under `output_dir` with
     a headline summary on stdout. Every table is a declared, oracle-
-    checked query; this just materializes them side by side."""
+    checked query; this just materializes them side by side.
+
+    The four parts are independent plans, so each is built and written
+    by its own thread of a 4-thread pool, and each part's row count is
+    an observation on its own write. `inheritable_thread_target` hands
+    every thread the caller's job group and tags."""
     from glaciersgee_spark.operators.dedup import (
         q_e_curation_funnel,
         q_e_dup_sizes,
@@ -256,14 +304,23 @@ def run_report(spark: SparkSession, sf_dir: str, output_dir: str) -> dict:
     )
 
     parts = {
-        "cards": q_e_summary_card(spark, sf_dir),
-        "dup_sizes": q_e_dup_sizes(spark, sf_dir),
-        "len_buckets": q_e_len_buckets(spark, sf_dir),
-        "funnel": q_e_curation_funnel(spark, sf_dir),
+        "cards": q_e_summary_card,
+        "dup_sizes": q_e_dup_sizes,
+        "len_buckets": q_e_len_buckets,
+        "funnel": q_e_curation_funnel,
     }
-    summary: dict = {"output_dir": output_dir}
-    for name, df in parts.items():
-        path = f"{output_dir}/{name}"
-        df.write.mode("overwrite").parquet(path)
-        summary[name] = spark.read.parquet(path).count()
-    return summary
+    # Every part scans `documents`: load it once here so the threads hit
+    # load_table's memo instead of each re-reading the parquet footer.
+    load_table(spark, sf_dir, "documents")
+
+    # No lock needed: only q_e_curation_funnel touches `caches`, and no
+    # two parts share a tag.
+    @pyspark.inheritable_thread_target(spark)
+    def write_part(name: str) -> int:
+        df, obs = _observed(parts[name](spark, sf_dir), n=F.count(F.lit(1)))
+        df.write.mode("overwrite").parquet(f"{output_dir}/{name}")
+        return obs.get["n"]
+
+    with ThreadPoolExecutor(max_workers=len(parts)) as pool:
+        counts = dict(zip(parts, pool.map(write_part, parts)))
+    return {"output_dir": output_dir, **counts}
