@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from glaciersgee_spark.caches import scoped_persist
 from glaciersgee_spark.registry import davg, dsum, query
-from glaciersgee_spark.tables import chunked_prefix, fan_out, load_table
+from glaciersgee_spark.tables import chunked_prefix, fan_out, load_table, local_frame
 
 # ---------------------------------------------------------------------------
 # q_e_ppl_buckets
@@ -2542,7 +2542,7 @@ def q_e_bt_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("rank", T.LongType()),
         ]
     )
-    return spark.createDataFrame(out_rows, out_schema).orderBy("rank")
+    return local_frame(spark, out_rows, out_schema).orderBy("rank")
 
 
 # ---------------------------------------------------------------------------
@@ -4384,7 +4384,7 @@ def q_e_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("logloss6", T.DoubleType()),
         ]
     )
-    return spark.createDataFrame(out, schema).orderBy("step", "feature")
+    return local_frame(spark, out, schema).orderBy("step", "feature")
 
 
 # ---------------------------------------------------------------------------

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from glaciersgee_spark.caches import scoped_persist
 from glaciersgee_spark.registry import davg, dsum, query
-from glaciersgee_spark.tables import chunked_prefix, fan_out, load_table
+from glaciersgee_spark.tables import chunked_prefix, fan_out, load_table, local_frame
 
 # Minimum combined token count to score drift on (rarer tokens are
 # sampling noise, not shift).
@@ -2551,7 +2551,7 @@ def q_e_ewma_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("alarm", T.BooleanType()),
         ]
     )
-    return spark.createDataFrame(rows, schema).orderBy("day")
+    return local_frame(spark, rows, schema).orderBy("day")
 
 
 # ---------------------------------------------------------------------------
@@ -2651,7 +2651,7 @@ def q_e_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("abs_err6", T.DoubleType()),
         ]
     )
-    return spark.createDataFrame(rows, schema).orderBy("day")
+    return local_frame(spark, rows, schema).orderBy("day")
 
 
 # ---------------------------------------------------------------------------
@@ -2769,4 +2769,4 @@ def q_e_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("abs_err6", T.DoubleType()),
         ]
     )
-    return spark.createDataFrame(rows, schema).orderBy("day")
+    return local_frame(spark, rows, schema).orderBy("day")

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from glaciersgee_spark.caches import scoped_persist
 from glaciersgee_spark.registry import davg, dsum, query
-from glaciersgee_spark.tables import load_table
+from glaciersgee_spark.tables import load_table, local_frame
 
 
 def _ts(lit: str):
@@ -1522,9 +1522,7 @@ def q_a_harmonic_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus; the basis join, the 1-row normal-equation fold, and
     Cramer are constant-size; the fit broadcast back onto 24 rows."""
     ev = load_table(spark, sf_dir, "events")
-    basis = spark.createDataFrame(
-        list(_HF_BASIS), "h INT, s BIGINT, c BIGINT"
-    )
+    basis = local_frame(spark, list(_HF_BASIS), "h INT, s BIGINT, c BIGINT")
     hr = ev.groupBy(F.hour("ts").cast("int").alias("h")).agg(
         F.count(F.lit(1)).cast("long").alias("y")
     )

@@ -20,7 +20,7 @@ from pyspark.sql import types as T
 from glaciersgee_spark.operators.skew import salted_join, salted_sum_count
 from glaciersgee_spark.registry import davg, dsum, query
 from glaciersgee_spark.sources import readers, sinks
-from glaciersgee_spark.tables import chunked_prefix, fan_out, load_table
+from glaciersgee_spark.tables import chunked_prefix, fan_out, load_table, local_frame
 
 
 def _ts(lit: str):
@@ -810,7 +810,7 @@ def q_b_join_skew_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 @query(
@@ -4019,7 +4019,7 @@ def q_b_join_cbo(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # ---------------------------------------------------------------------------

@@ -20,7 +20,7 @@ from glaciersgee_spark.operators.similarity import _cos6, _D_NRM, _d_cos6, _D_VE
 from glaciersgee_spark.operators.text import BM25_CTES, q_e_bm25
 from glaciersgee_spark.caches import scoped_persist
 from glaciersgee_spark.registry import dsum, query
-from glaciersgee_spark.tables import chunked_prefix, fan_out, load_table
+from glaciersgee_spark.tables import chunked_prefix, fan_out, load_table, local_frame
 
 RRF_K = 60
 
@@ -268,7 +268,7 @@ def q_e_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("mmr6", T.DoubleType()),
         ]
     )
-    return spark.createDataFrame(selected, schema).orderBy("rk")
+    return local_frame(spark, selected, schema).orderBy("rk")
 
 
 # ---------------------------------------------------------------------------
@@ -496,7 +496,7 @@ def q_e_rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.row_number().over(wb).alias("rb"))
     )
     common = bmt.join(cst, "doc_id").select("ra", "rb")
-    wdf = bmt.sparkSession.createDataFrame(_RBO_W, "d int, wt double")
+    wdf = local_frame(bmt.sparkSession, _RBO_W, "d int, wt double")
     xd = (
         F.broadcast(wdf)
         .join(

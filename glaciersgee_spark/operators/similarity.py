@@ -35,7 +35,7 @@ from pyspark.sql.types import ArrayType, DoubleType, LongType
 from glaciersgee_spark.caches import scoped_persist, scoped_value
 from glaciersgee_spark.operators.lsh import cobucket_pairs
 from glaciersgee_spark.registry import davg, dsum, query
-from glaciersgee_spark.tables import fan_out, load_table
+from glaciersgee_spark.tables import fan_out, load_table, local_frame
 
 # Deterministic ±1 hyperplanes from a fixed seed, baked as literals —
 # no rand() — so Spark and the SQL oracle build identical buckets
@@ -1788,7 +1788,9 @@ def _kmt_lloyd(spark: SparkSession, sf_dir: str, where: str | None):
     one (cid, d) mean aggregate whose count(*) is the cell size, and
     one stats aggregate over the broadcast old panel that also
     collects the new centroid per cell — so a single collect() per
-    round returns both the stats rows and the next centroids."""
+    round returns both the stats rows and the next centroids. The old
+    panel is a tables.local_frame (a JVM LocalRelation), so its
+    broadcast job is a JVM-side collect with no Python task."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     if where is not None:
         e = e.where(F.expr(where))
@@ -1812,7 +1814,8 @@ def _kmt_lloyd(spark: SparkSession, sf_dir: str, where: str | None):
                 F.count(F.lit(1)).alias("n_assigned"),
             )
         )
-        old = spark.createDataFrame(
+        old = local_frame(
+            spark,
             [(cid, d + 1, v) for cid, arr in cent for d, v in enumerate(arr)],
             "cid long, d int, ov double",
         )
@@ -1863,9 +1866,12 @@ def q_e_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     posexplode mean agg, whose count(*) is the cell size; the 512-row
     (cid, d) result meets the broadcast old panel in the stats agg,
     which also collects each cell's new centroid — so one collect()
-    per round, 4 jobs, and nothing persisted. Empty cells shrink K
-    identically in both engines (no re-seeding — documented Lloyd
-    behavior)."""
+    per round, 4 jobs (13 for the cold build with the seed collect),
+    and nothing persisted. The old panel and this result are
+    tables.local_frame relations: the panel broadcast is a JVM collect
+    of a local relation and the result a LocalTableScan, neither runs
+    a Python task. Empty cells shrink K identically in both engines
+    (no re-seeding — documented Lloyd behavior)."""
     from pyspark.sql import types as T
 
     stats_rows, _cent = _kmt_train(spark, sf_dir)
@@ -1878,7 +1884,7 @@ def q_e_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("centroid_csum", T.DoubleType()),
         ]
     )
-    return spark.createDataFrame(stats_rows, schema).orderBy("rnd", "cid")
+    return local_frame(spark, stats_rows, schema).orderBy("rnd", "cid")
 
 
 # ---------------------------------------------------------------------------
@@ -3395,7 +3401,8 @@ def q_e_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
     cols = ["label", "n", "q"] + [f"s{d}" for d in range(_AN_DIMS)]
-    per = spark.createDataFrame(
+    per = local_frame(
+        spark,
         [tuple(r[c] for c in cols) for r in per.collect()],
         T.StructType(
             [
@@ -3967,7 +3974,7 @@ def q_e_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame."""
     e = load_table(spark, sf_dir, "embeddings")
     _stats, cent = _kmt_train(spark, sf_dir)
-    cdf = spark.createDataFrame(cent, "cid long, cemb array<double>")
+    cdf = local_frame(spark, cent, "cid long, cemb array<double>")
     cell = (
         fan_out(e.select("vec_id", "embedding"), "vec_id")
         .join(F.broadcast(cdf))
@@ -4098,7 +4105,7 @@ def q_e_cluster_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     asg, _cent = _km_assign(spark, sf_dir)
     _stats, cent = _kmt_train(spark, sf_dir)
-    cdf = spark.createDataFrame(cent, "cid long, cemb array<double>")
+    cdf = local_frame(spark, cent, "cid long, cemb array<double>")
     cell = (
         fan_out(e.select("vec_id", "embedding"), "vec_id")
         .join(F.broadcast(cdf))
@@ -4193,7 +4200,7 @@ def stage_ivf_index(spark: SparkSession, sf_dir: str) -> str:
         return staged
     tmp = f"{staged}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
     _stats, cent = _kmt_train(spark, sf_dir)
-    cdf = spark.createDataFrame(cent, "cid long, cemb array<double>")
+    cdf = local_frame(spark, cent, "cid long, cemb array<double>")
     cdf.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/centroids")
     e = load_table(spark, sf_dir, "embeddings")
     _coarse_assign(e, cdf).write.mode("overwrite").parquet(f"{tmp}/postings")
@@ -4740,7 +4747,7 @@ def stage_ivf_base_index(spark: SparkSession, sf_dir: str) -> str:
         return staged
     tmp = f"{staged}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
     _stats, cent = _kmt_train(spark, sf_dir, where=_APPEND_BASE)
-    cdf = spark.createDataFrame(cent, "cid long, cemb array<double>")
+    cdf = local_frame(spark, cent, "cid long, cemb array<double>")
     cdf.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/centroids")
     e = load_table(spark, sf_dir, "embeddings")
     base = e.where(F.expr(_APPEND_BASE))
@@ -6171,9 +6178,7 @@ def q_e_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         centers.append((s, int(top.vec_id), int(top.mind)))
         sel_vecs.append(list(top.qv))
 
-    out = spark.createDataFrame(
-        centers, schema="step int, vec_id long, radius_q long"
-    )
+    out = local_frame(spark, centers, schema="step int, vec_id long, radius_q long")
     return out.orderBy("step")
 
 

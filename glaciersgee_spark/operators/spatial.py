@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from glaciersgee_spark.caches import scoped_persist
 from glaciersgee_spark.registry import query
-from glaciersgee_spark.tables import load_table
+from glaciersgee_spark.tables import load_table, local_frame
 
 # Grid cell edge. With coordinates in [0, 100), 10 gives a 10×10 grid —
 # AOIs of width ≤ 18 cover ≤ 3 cells per axis (≤ 9 keys per AOI).
@@ -1006,7 +1006,8 @@ def q_a_morph_open(spark: SparkSession, sf_dir: str) -> DataFrame:
         # checkpointed (the raster-op convention, see terrain_slope)
         .localCheckpoint()
     )
-    offs = spark.createDataFrame(
+    offs = local_frame(
+        spark,
         [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)],
         "dx int, dy int",
     )

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from glaciersgee_spark.caches import scoped_persist, scoped_value
 from glaciersgee_spark.registry import davg, dsum, query
-from glaciersgee_spark.tables import fan_out, load_table
+from glaciersgee_spark.tables import fan_out, load_table, local_frame
 
 # Corpus-frequent function words to drop for "top terms" (fixed literal
 # list — the corpus vocabulary is synthetic data-engine words).
@@ -1094,7 +1094,7 @@ def q_e_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("n_types", T.LongType()),
         ]
     )
-    return spark.createDataFrame(trace, schema).orderBy("rnd")
+    return local_frame(spark, trace, schema).orderBy("rnd")
 
 
 def _bpe_fert_oracle() -> str:
@@ -1675,7 +1675,8 @@ def q_e_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ln stays JVM-side (the round(ln, 6) idiom the whole repo's
     # cross-engine determinism rests on) — only the bounded counts
     # frame round-trips the driver.
-    lr = spark.createDataFrame(
+    lr = local_frame(
+        spark,
         counts,
         T.StructType(
             [

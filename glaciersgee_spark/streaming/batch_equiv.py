@@ -13,7 +13,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from glaciersgee_spark.registry import dsum, query
-from glaciersgee_spark.tables import load_table
+from glaciersgee_spark.tables import load_table, local_frame
 from glaciersgee_spark.tmpdirs import scratch_dir
 
 
@@ -1792,7 +1792,8 @@ def q_d_stream_listener(spark: SparkSession, sf_dir: str) -> DataFrame:
     with cond:
         rows_per_batch = [n for (i, n) in events if i == qid]
     data_batches = [r for r in rows_per_batch if r > 0]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(len(data_batches), sum(data_batches), sum(rows_per_batch))],
         "n_data_batches long, total_input_rows long, sum_progress_rows long",
     )
@@ -2165,6 +2166,6 @@ def q_d_stream_observe(spark: SparkSession, sf_dir: str) -> DataFrame:
     data = [
         (i, n, c) for i, (_b, n, c) in enumerate(rows)
     ]
-    return spark.createDataFrame(
-        data, "data_batch long, n_rows long, sum_uid long"
+    return local_frame(
+        spark, data, "data_batch long, n_rows long, sum_uid long"
     ).orderBy("data_batch")

@@ -17,10 +17,13 @@ columnar parquet scans that keep projection/predicate pushdown intact
 from __future__ import annotations
 
 import weakref
-from typing import Mapping, Sequence
+from typing import Iterable, Mapping, Sequence
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from glaciersgee_spark.session import ensure_confs
 
@@ -208,3 +211,27 @@ def chunked_prefix(
         *df.columns,
         *[(F.col(f"_o_{out}") + F.col(f"_w_{out}")).alias(out) for out in values],
     )
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | StructType
+) -> DataFrame:
+    """A frame over rows already on the driver, as a JVM local relation.
+
+    Takes the rows and the DDL-or-StructType schema that
+    ``spark.createDataFrame`` takes. Given a list, that call builds a
+    pickled Python RDD (``Scan ExistingRDD``): every execution runs
+    Python-worker tasks over ``defaultParallelism`` partitions, even
+    for a 24-row result. Given a ``pyarrow.Table`` it builds a
+    ``LocalRelation`` instead: the plan shows ``LocalTableScan``,
+    ``collect()`` launches no job, and a broadcast of it runs no
+    Python task. Rows hold the Python values ``collect()`` returns for
+    the declared types; an empty row list keeps the schema.
+    """
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)

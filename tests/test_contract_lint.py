@@ -124,6 +124,35 @@ def test_persist_sites_are_registry_routed():
     )
 
 
+def test_driver_rows_become_frames_only_through_local_frame():
+    """``createDataFrame(`` appears under glaciersgee_spark/ only
+    inside tables.local_frame. Given a list, createDataFrame is a
+    pickled Python RDD (Scan ExistingRDD) whose every execution runs
+    Python-worker tasks, even for a 24-row result; local_frame hands
+    the same rows to the JVM as one Arrow table (a LocalRelation).
+    Tests may still call createDataFrame directly."""
+    import ast
+
+    pkg = Path(glaciersgee_spark.__file__).parent
+    bad: list[str] = []
+    for py in sorted(pkg.rglob("*.py")):
+        text = py.read_text()
+        allowed: set[int] = set()
+        if py == pkg / "tables.py":
+            for node in ast.parse(text).body:
+                if isinstance(node, ast.FunctionDef) and node.name == "local_frame":
+                    allowed = set(range(node.lineno, node.end_lineno + 1))
+        bad += [
+            f"{py.relative_to(pkg)}:{i}"
+            for i, line in enumerate(text.splitlines(), 1)
+            if "createDataFrame(" in line and i not in allowed
+        ]
+    assert not bad, (
+        "driver-side rows must become frames through tables.local_frame, "
+        f"not createDataFrame: {bad}"
+    )
+
+
 _DRIVER_CAP = 50
 
 

@@ -595,6 +595,66 @@ def test_chunked_prefix_plan_and_consumers_build_without_jobs(spark):
     assert not eager, f"plan build launched a job: {eager}"
 
 
+def test_local_frame_matches_create_dataframe_as_local_relation(spark):
+    """tables.local_frame returns what spark.createDataFrame returns on
+    the same rows and schema, for every type the package's call sites
+    pass (and the collected rows of q_b_join_skew_aqe): equal rows,
+    NaN, -0.0 and infinities included, and an equal schema, also for
+    an empty row list. Unlike the list spelling it is a JVM local
+    relation: LocalTableScan, no ExistingRDD, and collect() launches
+    no Spark job."""
+    import datetime
+
+    from pyspark.sql import types as T
+
+    from glaciersgee_spark.operators.relational import _skew_aqe_frame
+    from glaciersgee_spark.tables import local_frame
+
+    nan, inf = float("nan"), float("inf")
+    day = datetime.date
+    skew = _skew_aqe_frame(spark, SF_SMOKE)
+    skew_rows = skew.collect()
+    assert skew_rows
+    cases = [
+        (
+            "a long, i int, x double, s string, b boolean, d date, v array<double>",
+            [
+                (1, 2, 0.5, "plain", True, day(2024, 1, 31), [1.0, -0.0]),
+                (-(2**63), -(2**31), nan, "Grüße, 氷河 ✓", False, day(1970, 1, 1), []),
+                (2**63 - 1, 2**31 - 1, -0.0, "", None, None, None),
+                (None, None, inf, None, True, day(9999, 1, 1), [nan, inf, -inf, None]),
+                (0, 0, -inf, "x", False, day(1, 1, 1), [2.5e-300]),
+                (7, 7, None, "y", None, day(2000, 2, 29), [0.1, 0.2]),
+            ],
+        ),
+        (
+            T.StructType(
+                [
+                    T.StructField("step", T.IntegerType(), False),
+                    T.StructField("feature", T.StringType()),
+                    T.StructField("w6", T.DoubleType()),
+                    T.StructField("day", T.DateType()),
+                ]
+            ),
+            [(1, "len", 0.25, day(2024, 3, 1)), (2, "ünï", nan, None)],
+        ),
+        (skew.schema, skew_rows),
+    ]
+    tracker = spark.sparkContext.statusTracker()
+    for schema, rows in cases:
+        for data in (rows, []):
+            old = spark.createDataFrame(data, schema)
+            new = local_frame(spark, data, schema)
+            assert new.schema == old.schema
+            before = len(tracker.getJobIdsForGroup(None))
+            got = new.collect()
+            assert len(tracker.getJobIdsForGroup(None)) == before, "collect ran a job"
+            # repr tells NaN and -0.0 apart, where == cannot
+            assert repr(got) == repr(old.collect())
+            plan = PI.formatted(new)
+            assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
 def test_bm25_has_no_eager_scan_at_build(spark):
     """Round-4 rewrite: building the bm25 plan must not run a count()
     job; the corpus size rides the same 1-row broadcast scalar as
@@ -614,7 +674,9 @@ def test_kmt_train_job_budget_and_no_persist(spark):
     """_kmt_train is a declared iterative algorithm, so it may launch
     jobs at build time — but a bounded number: one seed collect plus
     at most 4 jobs per Lloyd's round (assignment-pass shuffle, panel
-    broadcast, stats shuffle, the one collect). Training must also
+    broadcast, stats shuffle, the one collect), 13 in all. The panel
+    is a tables.local_frame, so its broadcast is a JVM collect of a
+    local relation with no Python task. Training must also
     leave no persisted frame behind: the round state lives in
     collected driver lists."""
     from glaciersgee_spark.caches import clear_caches
