@@ -19,6 +19,7 @@ from pyspark.sql import types as T
 
 from glaciersgee_spark.operators.skew import salted_join, salted_sum_count
 from glaciersgee_spark.registry import davg, dsum, query
+from glaciersgee_spark.session import conf_window
 from glaciersgee_spark.sources import readers, sinks
 from glaciersgee_spark.tables import chunked_prefix, fan_out, load_table, local_frame
 
@@ -797,20 +798,10 @@ def q_b_join_skew_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Semantics: the split is algebraically invisible (same rows, same
     exact-decimal sums) — the oracle is the PLAIN join, exactly as for
     the salted spelling. A/B vs q_b_join_salted in BASELINE.md."""
-    old = {k: spark.conf.get(k, None) for k in _SKEW_AQE_CONFS}
-    for k, v in _SKEW_AQE_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_window(spark, _SKEW_AQE_CONFS):
         df = _skew_aqe_frame(spark, sf_dir)
         rows = df.collect()  # ≤5 regions — bounded panel
-        schema = df.schema
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    return local_frame(spark, rows, schema)
+    return local_frame(spark, rows, df.schema)
 
 
 @query(
@@ -3387,9 +3378,7 @@ def q_b_sql_script(spark: SparkSession, sf_dir: str) -> DataFrame:
     precedent)."""
     o = load_table(spark, sf_dir, "orders")
     o.createOrReplaceTempView("ggee_script_orders")
-    old = spark.conf.get("spark.sql.scripting.enabled", None)
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
+    with conf_window(spark, {"spark.sql.scripting.enabled": "true"}):
         return spark.sql(
             """
             BEGIN
@@ -3421,11 +3410,6 @@ def q_b_sql_script(spark: SparkSession, sf_dir: str) -> DataFrame:
             END
             """
         )
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.scripting.enabled")
-        else:
-            spark.conf.set("spark.sql.scripting.enabled", old)
 
 
 # ---------------------------------------------------------------------------
@@ -3995,10 +3979,7 @@ def q_b_join_cbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     memoized per (session, sf) like the bucketed pair, so repeat runs
     measure the recurring query, not the one-time ANALYZE."""
     t_li, t_o, t_p = _cbo_tables(spark, sf_dir)
-    old = {k: spark.conf.get(k, None) for k in _CBO_CONFS}
-    for k, v in _CBO_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_window(spark, _CBO_CONFS):
         df = spark.sql(
             f"""
             SELECT p.p_brand,
@@ -4012,14 +3993,7 @@ def q_b_join_cbo(spark: SparkSession, sf_dir: str) -> DataFrame:
             """
         )
         rows = df.collect()  # ≤ |brands| — bounded panel
-        schema = df.schema
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    return local_frame(spark, rows, schema)
+    return local_frame(spark, rows, df.schema)
 
 
 # ---------------------------------------------------------------------------

@@ -12,6 +12,8 @@ called from the table loader so any query works on any session.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from typing import Iterator, Mapping
 
 from pyspark.sql import SparkSession
 
@@ -49,6 +51,28 @@ def ensure_confs(spark: SparkSession) -> SparkSession:
             # that need it will fail loudly; everything else proceeds.
             pass
     return spark
+
+
+@contextmanager
+def conf_window(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the body of a ``with`` block.
+
+    On exit, normal or by exception, each key gets its old value back,
+    or is unset if it had none — so a query that needs a conf posture
+    (state partitions, AQE thresholds, CBO) leaks nothing into the
+    next query on a shared or driver-built session.
+    """
+    old = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def get_spark(app_name: str = "glaciersgee-spark") -> SparkSession:

@@ -13,6 +13,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from glaciersgee_spark.registry import dsum, query
+from glaciersgee_spark.session import conf_window
+from glaciersgee_spark.streaming.stream import _SMALL_STATE, _parquet_append, drain
 from glaciersgee_spark.tables import load_table, local_frame
 from glaciersgee_spark.tmpdirs import scratch_dir
 
@@ -517,19 +519,14 @@ def q_d_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out)
         )
 
-    q = (
+    drain(
         counts.writeStream.outputMode("update")
         .option("checkpointLocation", ck)
         .foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        "q_d_foreachbatch_sink",
+        120,
     )
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError(
-            "q_d_foreachbatch_sink: availableNow drain exceeded 120 s — "
-            "refusing to read a partially-written sink"
-        )
 
     sunk = spark.read.parquet(out)
     latest = Window.partitionBy("ws", "event_type").orderBy(F.col("batch_id").desc())
@@ -630,22 +627,12 @@ def q_d_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
                     shutil.copyfile(os.path.join(hdir, f), dst)
 
     def _drain() -> None:
-        q = (
-            spark.readStream.schema(schema)
-            .parquet(src)
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        # a timeout raises, so a second drain never races the first
+        drain(
+            _parquet_append(spark.readStream.schema(schema).parquet(src), sink, ck),
+            "q_d_checkpoint_resume",
+            120,
         )
-        if not q.awaitTermination(120):
-            q.stop()
-            raise TimeoutError(
-                "q_d_checkpoint_resume: drain exceeded 120 s — a second "
-                "drain on this checkpoint would race the first"
-            )
 
     _arrive("half_a")
     _drain()
@@ -920,19 +907,14 @@ def q_d_stream_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out)
         )
 
-    q = (
+    drain(
         counts.writeStream.outputMode("update")
         .option("checkpointLocation", ck)
         .foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        "q_d_stream_union",
+        120,
     )
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError(
-            "q_d_stream_union: availableNow drain exceeded 120 s — "
-            "refusing to read a partially-written sink"
-        )
     sunk = spark.read.parquet(out)
     latest = Window.partitionBy("ws", "lane").orderBy(F.col("batch_id").desc())
     return (
@@ -991,18 +973,14 @@ def q_d_stream_pysource(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(decis).alias("cloud_decis"),
     )
     name = "ggee_pysource_stream_out"
-    q = (
+    drain(
         agg.writeStream.outputMode("complete")
         .format("memory")
         .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        "q_d_stream_pysource",
+        120,
     )
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError(
-            "q_d_stream_pysource: availableNow drain exceeded 120 s"
-        )
     return spark.table(name).orderBy("tile_x")
 
 
@@ -1046,16 +1024,14 @@ def q_d_stream_pysink(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_events_stream(spark, sf_dir).where(F.col("user_id") % 5 == 0)
     cents = F.expr("CAST(floor(value * 100.0 + 0.5) AS BIGINT)")
     rows = ev.select("event_id", "user_id", cents.alias("value_cents"))
-    q = (
+    drain(
         rows.writeStream.format("ggee_jsonl_sink")
         .option("path", out)
         .option("checkpointLocation", f"{out}/_ck")
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        "q_d_stream_pysink",
+        120,
     )
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError("q_d_stream_pysink: availableNow drain exceeded 120 s")
     sunk = read_committed_jsonl(spark, out)
     return (
         sunk.groupBy("user_id")
@@ -1747,8 +1723,6 @@ def q_d_stream_listener(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = stage_event_chunks(spark, sf_dir)
     listener = _Capture()
     spark.streams.addListener(listener)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
         from pyspark.sql import types as T
 
@@ -1766,19 +1740,18 @@ def q_d_stream_listener(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        q = (
-            counts.writeStream.format("noop")
-            .outputMode("complete")
-            .option(
-                "checkpointLocation", scratch_dir(prefix="ggee_lsn_ck_")
+        with conf_window(spark, _SMALL_STATE):
+            q = drain(
+                counts.writeStream.format("noop")
+                .outputMode("complete")
+                .option(
+                    "checkpointLocation", scratch_dir(prefix="ggee_lsn_ck_")
+                )
+                .trigger(availableNow=True),
+                "listener",
+                180,
             )
-            .trigger(availableNow=True)
-            .start()
-        )
         qid = str(q.id)
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError("listener drain exceeded 180 s")
         # listener events are delivered asynchronously on the driver
         # bus — wait for the termination event before reading captures
         with cond:
@@ -1787,7 +1760,6 @@ def q_d_stream_listener(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "listener termination event not delivered"
                 )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         spark.streams.removeListener(listener)
     with cond:
         rows_per_batch = [n for (i, n) in events if i == qid]
@@ -2116,8 +2088,6 @@ def q_d_stream_observe(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = stage_event_chunks(spark, sf_dir)
     listener = _Obs()
     spark.streams.addListener(listener)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
         from pyspark.sql import types as T
 
@@ -2141,26 +2111,24 @@ def q_d_stream_observe(spark: SparkSession, sf_dir: str) -> DataFrame:
         counts = src.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n")
         )
-        q = (
-            counts.writeStream.format("noop")
-            .outputMode("complete")
-            .option(
-                "checkpointLocation", scratch_dir(prefix="ggee_obs_ck_")
+        with conf_window(spark, _SMALL_STATE):
+            q = drain(
+                counts.writeStream.format("noop")
+                .outputMode("complete")
+                .option(
+                    "checkpointLocation", scratch_dir(prefix="ggee_obs_ck_")
+                )
+                .trigger(availableNow=True),
+                "observe",
+                180,
             )
-            .trigger(availableNow=True)
-            .start()
-        )
         qid = str(q.id)
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError("observe drain exceeded 180 s")
         with cond:
             if not cond.wait_for(lambda: qid in terminated, timeout=60):
                 raise TimeoutError(
                     "observe termination event not delivered"
                 )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         spark.streams.removeListener(listener)
     rows = sorted((b, n, c) for b, n, c in captured if n > 0)
     data = [

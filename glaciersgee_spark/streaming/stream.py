@@ -28,8 +28,9 @@ import tempfile
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from glaciersgee_spark.session import ensure_confs
+from glaciersgee_spark.session import conf_window, ensure_confs
 
 # Production state-store provider for the heavy stateful drains
 # (round 8, VERDICT r7 item 3): the default HDFS-backed store keeps
@@ -53,6 +54,53 @@ _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 _CHANGELOG_CONF = (
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 )
+
+# State-partition count is fixed at checkpoint creation from
+# spark.sql.shuffle.partitions; the chunked feeds are a few thousand
+# rows per trigger here, so 4 state partitions (not the session's 32)
+# keep the per-batch store-init cost proportionate — a production
+# deployment sizes this to its per-trigger volume ONCE, up front,
+# because it cannot be changed across restarts. Applied through
+# session.conf_window around each drain; the batteries run queries
+# sequentially so nothing races.
+_SMALL_STATE = {"spark.sql.shuffle.partitions": "4"}
+# The heavy stateful drains (the three interval joins and the custom
+# session store): RocksDB + changelog checkpointing on top.
+_ROCKSDB_POSTURE = {
+    **_SMALL_STATE,
+    _PROVIDER_CONF: ROCKSDB_PROVIDER,
+    _CHANGELOG_CONF: "true",
+}
+
+
+def drain(writer: DataStreamWriter, what: str, bound_s: int) -> StreamingQuery:
+    """Start ``writer`` and wait up to ``bound_s`` seconds for the query
+    to terminate — the one run-to-completion step of every drain.
+
+    A query still running at the bound is stopped and TimeoutError
+    raised, so no caller reads a partially-written sink; a query that
+    failed re-raises its StreamingQueryException here. Returns the
+    terminated StreamingQuery (tests assert on its state metrics)."""
+    q = writer.start()
+    if not q.awaitTermination(bound_s):
+        q.stop()
+        raise TimeoutError(
+            f"{what} drain exceeded {bound_s} s — refusing to read a "
+            "partially-written sink"
+        )
+    return q
+
+
+def _parquet_append(df: DataFrame, sink: str, ck: str) -> DataStreamWriter:
+    """availableNow append of ``df`` into a parquet sink at ``sink``,
+    checkpointed at ``ck`` — the writer most drains hand to drain()."""
+    return (
+        df.writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", ck)
+        .outputMode("append")
+        .trigger(availableNow=True)
+    )
 
 # Raw schema of events.parquet as the streaming file source sees it:
 # Spark ≥4.1 reads parquet TIMESTAMP(NANOS) as µs-truncated
@@ -284,16 +332,14 @@ def window_topk_batches(spark: SparkSession, sf_dir: str, table_name: str):
             .parquet(out)
         )
 
-    q = (
+    q = drain(
         counts.writeStream.outputMode("update")
         .option("checkpointLocation", scratch_dir(prefix="ggee_ck_topk_"))
         .foreachBatch(upsert_counts)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        "window_topk_batches",
+        120,
     )
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError("window_topk_batches: availableNow drain exceeded 120 s")
     latest = W.partitionBy("ws", "event_type").orderBy(F.col("batch_id").desc())
     rk = W.partitionBy("ws").orderBy(F.col("n").desc(), F.col("event_type").asc())
     (
@@ -469,44 +515,10 @@ def drain_interval_join(spark: SparkSession, sf_dir: str, sink: str, ck: str):
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTE"))
         & (F.col("c_ts") <= F.col("p_ts")),
     ).select("purchase_id", "p_user", "c_ts")
-    # State-partition count is fixed at checkpoint creation from
-    # spark.sql.shuffle.partitions; the legs are a few thousand rows
-    # per trigger here, so 4 state partitions (not the session's 32)
-    # keep the per-batch store-init cost proportionate — a production
-    # deployment sizes this to its per-trigger volume ONCE, up front,
-    # because it cannot be changed across restarts. Restored after the
-    # drain; the batteries run queries sequentially so nothing races.
     # Provider: RocksDB (module docstring at ROCKSDB_PROVIDER) — the
     # two-sided join state is the repo's largest stateful surface.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    old_prov = spark.conf.get(_PROVIDER_CONF)
-    old_cl = spark.conf.get(_CHANGELOG_CONF, None)  # unset ⇒ None (get() without default throws)
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set(_PROVIDER_CONF, ROCKSDB_PROVIDER)
-    spark.conf.set(_CHANGELOG_CONF, "true")
-    try:
-        q = (
-            pairs.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "interval-join drain exceeded 180 s — refusing to read a "
-                "partially-written sink"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        spark.conf.set(_PROVIDER_CONF, old_prov)
-        if old_cl is None:
-            spark.conf.unset(_CHANGELOG_CONF)
-        else:
-            spark.conf.set(_CHANGELOG_CONF, old_cl)
-    return q
+    with conf_window(spark, _ROCKSDB_POSTURE):
+        return drain(_parquet_append(pairs, sink, ck), "interval-join", 180)
 
 
 def drain_outer_interval_join(
@@ -566,35 +578,10 @@ def drain_outer_interval_join(
     ).select("purchase_id", "p_user", "p_ts", "c_ts")
     # same state posture as the inner drain: RocksDB + changelog
     # checkpointing (two-sided join state is the heavy class)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    old_prov = spark.conf.get(_PROVIDER_CONF)
-    old_cl = spark.conf.get(_CHANGELOG_CONF, None)  # unset ⇒ None (get() without default throws)
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set(_PROVIDER_CONF, ROCKSDB_PROVIDER)
-    spark.conf.set(_CHANGELOG_CONF, "true")
-    try:
-        q = (
-            pairs.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    with conf_window(spark, _ROCKSDB_POSTURE):
+        return drain(
+            _parquet_append(pairs, sink, ck), "outer-interval-join", 180
         )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "outer-interval-join drain exceeded 180 s — refusing to "
-                "read a partially-written sink"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        spark.conf.set(_PROVIDER_CONF, old_prov)
-        if old_cl is None:
-            spark.conf.unset(_CHANGELOG_CONF)
-        else:
-            spark.conf.set(_CHANGELOG_CONF, old_cl)
-    return q
 
 
 def drain_full_outer_interval_join(
@@ -644,35 +631,10 @@ def drain_full_outer_interval_join(
         & (F.col("c_ts") <= F.col("p_ts")),
         "fullOuter",
     ).select("purchase_id", "p_user", "p_ts", "c_user", "c_ts")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    old_prov = spark.conf.get(_PROVIDER_CONF)
-    old_cl = spark.conf.get(_CHANGELOG_CONF, None)
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set(_PROVIDER_CONF, ROCKSDB_PROVIDER)
-    spark.conf.set(_CHANGELOG_CONF, "true")
-    try:
-        q = (
-            pairs.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    with conf_window(spark, _ROCKSDB_POSTURE):
+        return drain(
+            _parquet_append(pairs, sink, ck), "full-outer-interval-join", 180
         )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "full-outer-interval-join drain exceeded 180 s — refusing "
-                "to read a partially-written sink"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        spark.conf.set(_PROVIDER_CONF, old_prov)
-        if old_cl is None:
-            spark.conf.unset(_CHANGELOG_CONF)
-        else:
-            spark.conf.set(_CHANGELOG_CONF, old_cl)
-    return q
 
 
 # ------------------------------------------------ true-stream dedup
@@ -764,26 +726,8 @@ def drain_stream_dedup(spark: SparkSession, sf_dir: str, sink: str, ck: str):
         .withWatermark("minute_b", "1 hour")
         .dropDuplicatesWithinWatermark()
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            keys.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "stream-dedup drain exceeded 180 s — refusing to read a "
-                "partially-written sink"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return q
+    with conf_window(spark, _SMALL_STATE):
+        return drain(_parquet_append(keys, sink, ck), "stream-dedup", 180)
 
 
 def drain_stream_session(spark: SparkSession, sf_dir: str, sink: str, ck: str):
@@ -814,26 +758,8 @@ def drain_stream_session(spark: SparkSession, sf_dir: str, sink: str, ck: str):
             "n_events",
         )
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "stream-session drain exceeded 180 s — refusing to read a "
-                "partially-written sink"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return q
+    with conf_window(spark, _SMALL_STATE):
+        return drain(_parquet_append(agg, sink, ck), "stream-session", 180)
 
 
 # ------------------------------------------- timer-driven custom state
@@ -961,41 +887,15 @@ def drain_custom_state(spark: SparkSession, sf_dir: str, sink: str, ck: str):
         .withWatermark("ts", "1 hour")
     )
     out = sessionize_with_timers(ev)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    old_prov = spark.conf.get(_PROVIDER_CONF)
-    old_cl = spark.conf.get(_CHANGELOG_CONF, None)  # unset ⇒ None (get() without default throws)
     # 16 state partitions, not the sibling drains' 4: this drain's cost
     # is per-KEY Python work (one fn invocation per user with data or
     # an expired timer), and the state partition count caps Python
     # worker parallelism — measured 2× faster at 16 on local[32].
     # Provider: RocksDB (module docstring at ROCKSDB_PROVIDER) — the
     # per-user session store is unbounded-keyed in production.
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    spark.conf.set(_PROVIDER_CONF, ROCKSDB_PROVIDER)
-    spark.conf.set(_CHANGELOG_CONF, "true")
-    try:
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "custom-state drain exceeded 180 s — refusing to read a "
-                "partially-written sink"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        spark.conf.set(_PROVIDER_CONF, old_prov)
-        if old_cl is None:
-            spark.conf.unset(_CHANGELOG_CONF)
-        else:
-            spark.conf.set(_CHANGELOG_CONF, old_cl)
-    return q
+    posture = {**_ROCKSDB_POSTURE, "spark.sql.shuffle.partitions": "16"}
+    with conf_window(spark, posture):
+        return drain(_parquet_append(out, sink, ck), "custom-state", 180)
 
 
 # --------------------------------------------- update-mode keyed sink
@@ -1088,25 +988,15 @@ def drain_update_sink(spark: SparkSession, sf_dir: str, sink: str, ck: str):
         # epoch micros keep the key JSON-serializable and exact
         .select(F.unix_micros("w.start").alias("ws_us"), "event_type", "n")
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
+    with conf_window(spark, _SMALL_STATE):
+        return drain(
             counts.writeStream.foreach(JsonlForeachWriter(sink))
             .option("checkpointLocation", ck)
             .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
+            "update-sink",
+            180,
         )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "update-sink drain exceeded 180 s — refusing to read a "
-                "partially-committed sink"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return q
 
 
 # ------------------------------------------- complete-mode e2e drain
@@ -1140,25 +1030,15 @@ def drain_complete_counts(spark: SparkSession, sf_dir: str, name: str):
             "n",
         )
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
+    with conf_window(spark, _SMALL_STATE):
+        return drain(
             counts.writeStream.format("memory")
             .queryName(name)
             .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
+            "complete-mode",
+            180,
         )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "complete-mode drain exceeded 180 s — refusing to read a "
-                "partially-rewritten table"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return q
 
 
 def chained_windows(ev: DataFrame) -> DataFrame:
@@ -1217,26 +1097,8 @@ def drain_chained_windows(spark: SparkSession, sf_dir: str, sink: str, ck: str):
         .withWatermark("ts", "1 hour")
     )
     out = chained_windows(ev)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "chained-windows drain exceeded 180 s — refusing to read "
-                "a partially-written sink"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return q
+    with conf_window(spark, _SMALL_STATE):
+        return drain(_parquet_append(out, sink, ck), "chained-windows", 180)
 
 
 def evolve_counts(ev: DataFrame, evolved: bool) -> DataFrame:
@@ -1320,26 +1182,8 @@ def drain_schema_evolve(
             )
         )
         out = evolve_counts(ev, evolved)
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            q = (
-                out.writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ck)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(180):
-                q.stop()
-                raise TimeoutError(
-                    "schema-evolve drain exceeded 180 s — refusing to "
-                    "read a partially-written sink"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        return q
+        with conf_window(spark, _SMALL_STATE):
+            return drain(_parquet_append(out, sink, ck), "schema-evolve", 180)
 
     _arrive((0, 1))
     _run(False)  # v1: (ws, event_type, n)
@@ -1361,26 +1205,8 @@ def drain_state_inspect(spark: SparkSession, sf_dir: str, sink: str, ck: str):
         .select("event_type", F.col("ts").cast("timestamp").alias("ts"))
     )
     out = evolve_counts(ev, False)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "state-inspect drain exceeded 180 s — refusing to read "
-                "a partially-committed state store"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return q
+    with conf_window(spark, _SMALL_STATE):
+        return drain(_parquet_append(out, sink, ck), "state-inspect", 180)
 
 
 # --------------------------------------------------------------- rate source
@@ -1567,26 +1393,5 @@ def drain_multi_watermark(
         "n",
         "value_cents",
     )
-    old_policy = spark.conf.get(_MWM_POLICY_CONF, "min")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(_MWM_POLICY_CONF, policy)
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "multi-watermark drain exceeded 180 s — refusing to "
-                "read a partially-written sink"
-            )
-    finally:
-        spark.conf.set(_MWM_POLICY_CONF, old_policy)
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return q
+    with conf_window(spark, {**_SMALL_STATE, _MWM_POLICY_CONF: policy}):
+        return drain(_parquet_append(out, sink, ck), "multi-watermark", 180)

@@ -124,13 +124,10 @@ def test_persist_sites_are_registry_routed():
     )
 
 
-def test_driver_rows_become_frames_only_through_local_frame():
-    """``createDataFrame(`` appears under glaciersgee_spark/ only
-    inside tables.local_frame. Given a list, createDataFrame is a
-    pickled Python RDD (Scan ExistingRDD) whose every execution runs
-    Python-worker tasks, even for a 24-row result; local_frame hands
-    the same rows to the JVM as one Arrow table (a LocalRelation).
-    Tests may still call createDataFrame directly."""
+def _hits_outside(token: str, module: str, helper: str) -> list[str]:
+    """Lines under glaciersgee_spark/ that contain ``token`` outside
+    the body of function ``helper`` in ``module`` (a path relative to
+    the package). Tests are not scanned."""
     import ast
 
     pkg = Path(glaciersgee_spark.__file__).parent
@@ -138,19 +135,42 @@ def test_driver_rows_become_frames_only_through_local_frame():
     for py in sorted(pkg.rglob("*.py")):
         text = py.read_text()
         allowed: set[int] = set()
-        if py == pkg / "tables.py":
+        if py == pkg / module:
             for node in ast.parse(text).body:
-                if isinstance(node, ast.FunctionDef) and node.name == "local_frame":
+                if isinstance(node, ast.FunctionDef) and node.name == helper:
                     allowed = set(range(node.lineno, node.end_lineno + 1))
         bad += [
             f"{py.relative_to(pkg)}:{i}"
             for i, line in enumerate(text.splitlines(), 1)
-            if "createDataFrame(" in line and i not in allowed
+            if token in line and i not in allowed
         ]
+    return bad
+
+
+def test_driver_rows_become_frames_only_through_local_frame():
+    """``createDataFrame(`` appears under glaciersgee_spark/ only
+    inside tables.local_frame. Given a list, createDataFrame is a
+    pickled Python RDD (Scan ExistingRDD) whose every execution runs
+    Python-worker tasks, even for a 24-row result; local_frame hands
+    the same rows to the JVM as one Arrow table (a LocalRelation).
+    Tests may still call createDataFrame directly."""
+    bad = _hits_outside("createDataFrame(", "tables.py", "local_frame")
     assert not bad, (
         "driver-side rows must become frames through tables.local_frame, "
         f"not createDataFrame: {bad}"
     )
+
+
+def test_streams_run_only_through_drain_and_confs_only_through_conf_window():
+    """``awaitTermination(`` appears under glaciersgee_spark/ only
+    inside streaming.stream.drain, and ``conf.unset(`` only inside
+    session.conf_window: every stream run is bounded, stopped and
+    raised on timeout the same way, and every conf posture is restored
+    (or unset) on every exit path by one context manager."""
+    drains = _hits_outside("awaitTermination(", "streaming/stream.py", "drain")
+    assert not drains, f"run streams through streaming.stream.drain: {drains}"
+    unsets = _hits_outside("conf.unset(", "session.py", "conf_window")
+    assert not unsets, f"apply confs through session.conf_window: {unsets}"
 
 
 _DRIVER_CAP = 50

@@ -8,7 +8,10 @@ inspection helpers live in glaciersgee_spark.plans.inspect so the same
 checks are usable outside tests.
 """
 
+from contextlib import nullcontext
+
 import pyspark.sql.functions as F
+import pytest
 
 from glaciersgee_spark.operators.relational import (
     pricing_summary,
@@ -18,6 +21,7 @@ from glaciersgee_spark.operators.relational import (
     q_b_scan_parquet,
 )
 from glaciersgee_spark.plans import inspect as PI
+from glaciersgee_spark.session import conf_window
 from glaciersgee_spark.tables import load_table
 from tests.conftest import SF_SMOKE
 
@@ -84,6 +88,24 @@ def test_shuffle_count_flagship(spark):
 def test_aqe_enabled_for_engine_sessions(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+@pytest.mark.parametrize("body_raises", [False, True])
+def test_conf_window_restores_set_keys_and_unsets_unset_ones(spark, body_raises):
+    """session.conf_window puts a key that had a value back to it and
+    unsets a key that had none — after a normal exit and after a body
+    that raises (the exception still reaches the caller)."""
+    was_set, was_unset = "spark.ggee.test.was_set", "spark.ggee.test.was_unset"
+    spark.conf.set(was_set, "old")
+    spark.conf.unset(was_unset)
+    with pytest.raises(RuntimeError) if body_raises else nullcontext():
+        with conf_window(spark, {was_set: "new", was_unset: "new"}):
+            assert spark.conf.get(was_set) == spark.conf.get(was_unset) == "new"
+            if body_raises:
+                raise RuntimeError("body failed")
+    assert spark.conf.get(was_set, None) == "old"
+    assert spark.conf.get(was_unset, None) is None
+    spark.conf.unset(was_set)
 
 
 def test_trailing_window_single_shuffle(spark):
@@ -542,14 +564,10 @@ def test_chunked_prefix_plan_and_consumers_build_without_jobs(spark):
         F.expr("id div 16").alias("chunk"),
     )
     # auto-broadcast off: only the helper's own hint may broadcast
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with conf_window(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         plan = PI.formatted(
             chunked_prefix(df, ["g"], ["chunk"], ["id"], {"cum": "v", "rk": None})
         )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     tree = plan.split("\n\n")[0].splitlines()
     windows = [i for i, line in enumerate(tree) if re.search(r"Window \(\d+\)", line)]
     assert len(windows) == 2, plan
@@ -1169,18 +1187,9 @@ def test_join_skew_aqe_splits_the_hot_partition(spark):
 
     adv_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     before = spark.conf.get(adv_key, None)
-    old = {k: spark.conf.get(k, None) for k in _SKEW_AQE_CONFS}
-    for k, v in _SKEW_AQE_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_window(spark, _SKEW_AQE_CONFS):
         df = _skew_aqe_frame(spark, SF_SMOKE)
         plan = PI.executed(df)
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     assert "skew=true" in plan
     assert "skewed" in plan  # the AQEShuffleRead marker on the fact side
     # the registered op (conf window + eager fold) leaves no conf behind
@@ -1589,19 +1598,11 @@ def test_cbo_reorders_selective_join_first(spark):
         JOIN {t_p} p ON l.l_partkey = p.p_partkey
         WHERE p.p_size = 1
     """
-    old = {k: spark.conf.get(k, None) for k in _CBO_CONFS}
-    try:
-        for k, v in _CBO_CONFS.items():
-            spark.conf.set(k, v)
+    with conf_window(spark, _CBO_CONFS):
         plan_on = spark.sql(sql)._jdf.queryExecution().optimizedPlan().toString()
-        spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
+    off = {**_CBO_CONFS, "spark.sql.cbo.joinReorder.enabled": "false"}
+    with conf_window(spark, off):
         plan_off = spark.sql(sql)._jdf.queryExecution().optimizedPlan().toString()
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
     def join_depth(plan: str, table: str) -> int:
         """Line index of the table's relation — deeper (larger) means

@@ -22,16 +22,29 @@ from tests.conftest import SF_SMOKE
 
 
 def _run_to_memory(sdf, name: str, mode: str):
-    q = (
+    return S.drain(
         sdf.writeStream.format("memory")
         .queryName(name)
         .outputMode(mode)
         .option("checkpointLocation", tempfile.mkdtemp(prefix=f"ggee_ck_{name}_"))
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        name,
+        120,
     )
-    q.awaitTermination(120)
-    return q
+
+
+def test_drain_stops_and_raises_at_its_bound(spark):
+    """An unbounded rate stream never terminates by itself: drain must
+    stop it at the bound and raise, leaving no active query behind."""
+    writer = (
+        spark.readStream.format("rate")
+        .load()
+        .writeStream.format("noop")
+        .option("checkpointLocation", tempfile.mkdtemp(prefix="ggee_ck_bound_"))
+    )
+    with pytest.raises(TimeoutError, match="unbounded-rate drain exceeded 1 s"):
+        S.drain(writer, "unbounded-rate", 1)
+    assert spark.streams.active == []
 
 
 def test_tumbling_stream_matches_batch(spark):
@@ -158,17 +171,11 @@ def test_checkpoint_recovery_exactly_once(spark):
     )
 
     def _drain():
-        q = (
-            spark.readStream.schema(schema)
-            .parquet(src)
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        S.drain(
+            S._parquet_append(spark.readStream.schema(schema).parquet(src), sink, ck),
+            "checkpoint-resume",
+            120,
         )
-        q.awaitTermination(120)
 
     _copy_in("a")
     _drain()
@@ -281,16 +288,15 @@ def test_stateful_restart_resumes_from_checkpoint(spark):
             .parquet(src)
             .select("user_id", "value")
         )
-        q = (
+        return S.drain(
             S.running_counts_over(sdf)
             .writeStream.outputMode("update")
             .option("checkpointLocation", ck)
             .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
+            "running-counts",
+            120,
         )
-        assert q.awaitTermination(120)
-        return q
 
     stage(half_a, "a.parquet")
     run(1)
@@ -1209,16 +1215,8 @@ def test_schema_evolve_upgrade_allowed_and_state_change_rejected(spark):
         os.path.join(staged, "events", "chunk_3.parquet"),
         os.path.join(src, "chunk_3b.parquet"),
     )
-    q = (
-        bad.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
     with pytest.raises(StreamingQueryException) as ei:
-        q.awaitTermination(180)
+        S.drain(S._parquet_append(bad, sink, ck), "changed-aggregate", 180)
     msg = str(ei.value)
     assert "chema" in msg or "STATE" in msg, msg[:500]
 
