@@ -32,6 +32,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 
+from glaciersgee_spark import tmpdirs
 from glaciersgee_spark.caches import scoped_persist, scoped_value
 from glaciersgee_spark.operators.lsh import cobucket_pairs
 from glaciersgee_spark.registry import davg, dsum, query
@@ -1144,6 +1145,25 @@ def _pq_lut6a(q: str, c: str, s: int, spark_dialect: bool = False) -> str:
 _PQP_ADC = "round(" + " + ".join(f"l{s}" for s in range(PQ_M)) + ", 6)"
 
 
+def _pq_fixture(e: DataFrame) -> tuple[DataFrame, np.ndarray]:
+    """The module's fixed PQ sub-codebook — vec_id 1..PQ_K, the same
+    rows every PQ op trains against — as a (pcid, cemb) frame and as
+    the (PQ_K, PQ_M, PQ_SUBDIM) array the encoders take."""
+    cb = e.where(F.col("vec_id").between(1, PQ_K)).select(
+        F.col("vec_id").alias("pcid"), F.col("embedding").alias("cemb")
+    )
+    return cb, _codebook_array(cb)
+
+
+def _codebook_array(cb: DataFrame) -> np.ndarray:
+    """Collect a (pcid, cemb) PQ sub-codebook frame, in pcid order, as
+    the (PQ_K, PQ_M, PQ_SUBDIM) array the encoder takes."""
+    rows = sorted(cb.collect(), key=lambda r: r.pcid)
+    return np.array([r.cemb for r in rows], dtype=np.float64).reshape(
+        PQ_K, PQ_M, PQ_SUBDIM
+    )
+
+
 def _pq_adc_kernel(e):
     """The ONE shared PQ/ADC Arrow kernel (q_e_sim_topk_pq and
     q_e_ivf_pq must stay bit-identical, so they call this instead of
@@ -1153,15 +1173,7 @@ def _pq_adc_kernel(e):
     sub-distance, first-min tie-break == the oracle's (d6, cid) rank)
     and gathers the ADC sum in fixed subspace order (== the oracle's
     left-associated sum)."""
-    crows = sorted(
-        e.where(F.col("vec_id").between(1, PQ_K))
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r.vec_id,
-    )
-    c_r = np.array([r.embedding for r in crows], dtype=np.float64).reshape(
-        PQ_K, PQ_M, PQ_SUBDIM
-    )
+    _cb, c_r = _pq_fixture(e)
     qrow = e.where(F.col("vec_id") == 0).select("embedding").collect()[0]
     q_r = np.array(qrow.embedding, dtype=np.float64).reshape(PQ_M, PQ_SUBDIM)
     lut = np.round(np.einsum("sj,csj->cs", q_r, c_r), 6)
@@ -1327,13 +1339,7 @@ def q_e_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel. Note codes here cover ALL vectors (the per-query self-row
     is dropped after scoring), matching the oracle's dists CTE."""
     e = load_table(spark, sf_dir, "embeddings")
-    crows = sorted(
-        e.where(F.col("vec_id").between(1, PQ_K)).select("vec_id", "embedding").collect(),
-        key=lambda r: r.vec_id,
-    )
-    c_r = np.array([r.embedding for r in crows], dtype=np.float64).reshape(
-        PQ_K, PQ_M, PQ_SUBDIM
-    )
+    _cb, c_r = _pq_fixture(e)
     qrows = sorted(
         e.where(F.col("vec_id").isin(list(_RECALL_QIDS)))
         .select("vec_id", "embedding")
@@ -3686,15 +3692,7 @@ def q_e_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import ArrayType
 
     e = load_table(spark, sf_dir, "embeddings")
-    crows = sorted(
-        e.where(F.col("vec_id").between(1, PQ_K))
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r.vec_id,
-    )
-    c_r = np.array([r.embedding for r in crows], dtype=np.float64).reshape(
-        PQ_K, PQ_M, PQ_SUBDIM
-    )
+    _cb, c_r = _pq_fixture(e)
 
     @F.pandas_udf(ArrayType(DoubleType()))
     def _min_dists(emb: pd.Series) -> pd.Series:
@@ -4174,64 +4172,38 @@ def stage_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     desynchronize), then WRITE the index artifacts — the centroid
     codebook, the cell-assignment posting lists, and (r9) the PQ
     sub-codebook + per-vector 8-byte codes — as parquet under
-    a corpus-fingerprinted path (the stage_event_chunks staging
-    contract: mtime+size fingerprint, _READY marker, atomic rename, so
-    a regenerated corpus rebuilds and concurrent sessions never see a
+    a corpus-fingerprinted path (tmpdirs.staged, so a regenerated
+    corpus rebuilds and concurrent sessions never see a
     half-written index). Runs once per corpus; every serve call reads
     the artifacts back from disk. At 100 TB these are object-store
     tables the index-build job publishes and N downstream serving jobs
     scan — centroids O(K·D), postings O(n) but only (cid, vec_id)
     pairs, cid-partitionable for probe-side pruning."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
 
-    st = os.stat(f"{sf_dir}/embeddings.parquet")
+    def build(tmp: str) -> None:
+        _stats, cent = _kmt_train(spark, sf_dir)
+        cdf = local_frame(spark, cent, "cid long, cemb array<double>")
+        cdf.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/centroids")
+        e = load_table(spark, sf_dir, "embeddings")
+        _coarse_assign(e, cdf).write.mode("overwrite").parquet(
+            f"{tmp}/postings"
+        )
+        # --- PQ artifacts (r9, VERDICT r8 item 2 — the FAISS IVFADC
+        # production shape): the 16-entry sub-codebook and the 8-byte
+        # code per vector, so a serving job can ADC-score candidates
+        # from codes alone (32× smaller than raw vectors) with zero
+        # training state. Codes = argmin 6-dp sub-distance per
+        # subspace, first-min tie-break — the identical encode
+        # q_e_sim_topk_pq's kernel uses, so the persisted codes match
+        # the oracle's (d6, cid) rank derivation.
+        cb, c_r = _pq_fixture(e)
+        cb.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/pq_codebook")
+        _pq_encode(e, c_r).write.mode("overwrite").parquet(f"{tmp}/pq_codes")
+
     # "i2" = artifact-set version (r9 added pq_codebook/pq_codes);
     # bumping it makes pre-r9 staged dirs rebuild instead of serving
-    # a _READY dir that lacks the PQ artifacts.
-    staged = os.path.join(
-        tempfile.gettempdir(),
-        "ggee_ivf_index",
-        f"{sf_dir.strip('/').replace('/', '_')}_{st.st_mtime_ns}_{st.st_size}_i2",
-    )
-    if os.path.exists(os.path.join(staged, "_READY")):
-        return staged
-    tmp = f"{staged}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    _stats, cent = _kmt_train(spark, sf_dir)
-    cdf = local_frame(spark, cent, "cid long, cemb array<double>")
-    cdf.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/centroids")
-    e = load_table(spark, sf_dir, "embeddings")
-    _coarse_assign(e, cdf).write.mode("overwrite").parquet(f"{tmp}/postings")
-    # --- PQ artifacts (r9, VERDICT r8 item 2 — the FAISS IVFADC
-    # production shape): the 16-entry sub-codebook and the 8-byte
-    # code per vector, so a serving job can ADC-score candidates from
-    # codes alone (32× smaller than raw vectors) with zero training
-    # state. Codebook = the module's fixed PQ fixture (vec_id 1..16,
-    # the same rows every PQ op trains against); codes = argmin
-    # 6-dp sub-distance per subspace, first-min tie-break — the
-    # identical encode q_e_sim_topk_pq's kernel uses, so the
-    # persisted codes match the oracle's (d6, cid) rank derivation.
-    e.where(F.col("vec_id").between(1, PQ_K)).select(
-        F.col("vec_id").alias("pcid"), F.col("embedding").alias("cemb")
-    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp}/pq_codebook")
-    crows = sorted(
-        e.where(F.col("vec_id").between(1, PQ_K))
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r.vec_id,
-    )
-    c_r = np.array([r.embedding for r in crows], dtype=np.float64).reshape(
-        PQ_K, PQ_M, PQ_SUBDIM
-    )
-    _pq_encode(e, c_r).write.mode("overwrite").parquet(f"{tmp}/pq_codes")
-    open(os.path.join(tmp, "_READY"), "w").close()
-    try:
-        os.rename(tmp, staged)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-    return staged
+    # a published dir that lacks the PQ artifacts.
+    return tmpdirs.staged(sf_dir, "embeddings", "ggee_ivf_index", build, "i2")
 
 
 def _coarse_assign(e: DataFrame, cdf: DataFrame) -> DataFrame:
@@ -4729,50 +4701,25 @@ def stage_ivf_base_index(spark: SparkSession, sf_dir: str) -> str:
     range loses its delta members), postings/codes cover base vectors
     only; the PQ sub-codebook is the shared fixture (PQ codebooks are
     routinely reused across index generations — OPQ/PQ retraining is
-    rare; only the coarse quantizer goes stale). Same staging
-    contract as stage_ivf_index: corpus-fingerprinted path, _READY
-    marker, atomic rename."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
+    rare; only the coarse quantizer goes stale). Staged through
+    tmpdirs.staged like stage_ivf_index."""
 
-    st = os.stat(f"{sf_dir}/embeddings.parquet")
-    staged = os.path.join(
-        tempfile.gettempdir(),
-        "ggee_ivf_index",
-        f"{sf_dir.strip('/').replace('/', '_')}_{st.st_mtime_ns}_{st.st_size}_b1",
-    )
-    if os.path.exists(os.path.join(staged, "_READY")):
-        return staged
-    tmp = f"{staged}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    _stats, cent = _kmt_train(spark, sf_dir, where=_APPEND_BASE)
-    cdf = local_frame(spark, cent, "cid long, cemb array<double>")
-    cdf.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/centroids")
-    e = load_table(spark, sf_dir, "embeddings")
-    base = e.where(F.expr(_APPEND_BASE))
-    _coarse_assign(base, cdf).write.mode("overwrite").parquet(
-        f"{tmp}/postings"
-    )
-    e.where(F.col("vec_id").between(1, PQ_K)).select(
-        F.col("vec_id").alias("pcid"), F.col("embedding").alias("cemb")
-    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp}/pq_codebook")
-    crows = sorted(
-        e.where(F.col("vec_id").between(1, PQ_K))
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r.vec_id,
-    )
-    c_r = np.array([r.embedding for r in crows], dtype=np.float64).reshape(
-        PQ_K, PQ_M, PQ_SUBDIM
-    )
-    _pq_encode(base, c_r).write.mode("overwrite").parquet(f"{tmp}/pq_codes")
-    open(os.path.join(tmp, "_READY"), "w").close()
-    try:
-        os.rename(tmp, staged)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-    return staged
+    def build(tmp: str) -> None:
+        _stats, cent = _kmt_train(spark, sf_dir, where=_APPEND_BASE)
+        cdf = local_frame(spark, cent, "cid long, cemb array<double>")
+        cdf.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/centroids")
+        e = load_table(spark, sf_dir, "embeddings")
+        base = e.where(F.expr(_APPEND_BASE))
+        _coarse_assign(base, cdf).write.mode("overwrite").parquet(
+            f"{tmp}/postings"
+        )
+        cb, c_r = _pq_fixture(e)
+        cb.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/pq_codebook")
+        _pq_encode(base, c_r).write.mode("overwrite").parquet(
+            f"{tmp}/pq_codes"
+        )
+
+    return tmpdirs.staged(sf_dir, "embeddings", "ggee_ivf_index", build, "b1")
 
 
 def stage_ivfpq_append(spark: SparkSession, sf_dir: str) -> str:
@@ -4783,62 +4730,42 @@ def stage_ivfpq_append(spark: SparkSession, sf_dir: str) -> str:
     no `_kmt_train`, no cached centroids, no Lloyd's round anywhere in
     this path (pinned in tests/test_plans.py). The merged generation
     (copied centroids/codebook + unioned postings/codes) publishes
-    atomically under its own fingerprinted path, so serving jobs
-    switch from base to merged the instant _READY lands and never see
-    a half-written union — the daily-ingest production loop of a
-    corpus-scale ANN index.
+    atomically under its own fingerprinted path (tmpdirs.staged), so
+    serving jobs switch from base to merged the instant it is published
+    and never see a half-written union — the daily-ingest production
+    loop of a corpus-scale ANN index.
 
     Scale: the delta pass touches ONLY delta vectors (one broadcast-
     codebook assignment scan + one Arrow encode scan over ~20% of the
     corpus); base postings/codes are copied THROUGH parquet scans
     (never recomputed, never collected) — at 100 TB the union is two
     appends of slim (cid, vec_id) / (vec_id, codes) tables."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
 
-    st = os.stat(f"{sf_dir}/embeddings.parquet")
-    staged = os.path.join(
-        tempfile.gettempdir(),
-        "ggee_ivf_index",
-        f"{sf_dir.strip('/').replace('/', '_')}_{st.st_mtime_ns}_{st.st_size}_m1",
-    )
-    if os.path.exists(os.path.join(staged, "_READY")):
-        return staged
-    base_dir = stage_ivf_base_index(spark, sf_dir)
-    tmp = f"{staged}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    # ---- everything below reads ONLY the base artifacts + the table
-    cdf = spark.read.parquet(f"{base_dir}/centroids")
-    pqc = spark.read.parquet(f"{base_dir}/pq_codebook")
-    e = load_table(spark, sf_dir, "embeddings")
-    delta = e.where(F.expr(_APPEND_DELTA))
-    # frozen-coarse assignment of the delta slice, unioned with the
-    # base postings read straight back from parquet
-    spark.read.parquet(f"{base_dir}/postings").unionByName(
-        _coarse_assign(delta, cdf)
-    ).write.mode("overwrite").parquet(f"{tmp}/postings")
-    # frozen-PQ encode: the 16-row sub-codebook is read back from the
-    # artifact (bounded collect of an artifact scan, not a fixture
-    # re-derivation — the append job owns no training state at all)
-    crows = sorted(
-        pqc.select("pcid", "cemb").collect(), key=lambda r: r.pcid
-    )
-    c_r = np.array([r.cemb for r in crows], dtype=np.float64).reshape(
-        PQ_K, PQ_M, PQ_SUBDIM
-    )
-    spark.read.parquet(f"{base_dir}/pq_codes").unionByName(
-        _pq_encode(delta, c_r)
-    ).write.mode("overwrite").parquet(f"{tmp}/pq_codes")
-    # codebooks carry over unchanged into the merged generation
-    cdf.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/centroids")
-    pqc.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/pq_codebook")
-    open(os.path.join(tmp, "_READY"), "w").close()
-    try:
-        os.rename(tmp, staged)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-    return staged
+    def build(tmp: str) -> None:
+        base_dir = stage_ivf_base_index(spark, sf_dir)
+        # ---- everything below reads ONLY the base artifacts + the table
+        cdf = spark.read.parquet(f"{base_dir}/centroids")
+        pqc = spark.read.parquet(f"{base_dir}/pq_codebook")
+        e = load_table(spark, sf_dir, "embeddings")
+        delta = e.where(F.expr(_APPEND_DELTA))
+        # frozen-coarse assignment of the delta slice, unioned with the
+        # base postings read straight back from parquet
+        spark.read.parquet(f"{base_dir}/postings").unionByName(
+            _coarse_assign(delta, cdf)
+        ).write.mode("overwrite").parquet(f"{tmp}/postings")
+        # frozen-PQ encode: the 16-row sub-codebook is read back from
+        # the artifact (bounded collect of an artifact scan, not a
+        # fixture re-derivation — the append job owns no training
+        # state at all)
+        c_r = _codebook_array(pqc.select("pcid", "cemb"))
+        spark.read.parquet(f"{base_dir}/pq_codes").unionByName(
+            _pq_encode(delta, c_r)
+        ).write.mode("overwrite").parquet(f"{tmp}/pq_codes")
+        # codebooks carry over unchanged into the merged generation
+        cdf.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/centroids")
+        pqc.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/pq_codebook")
+
+    return tmpdirs.staged(sf_dir, "embeddings", "ggee_ivf_index", build, "m1")
 
 
 def _ivfpq_append_oracle() -> str:
@@ -6380,35 +6307,6 @@ def _beam_serve(
     )
 
 
-def _stage_path(sf_dir: str, suffix: str) -> str:
-    """Corpus-fingerprinted staging directory (the stage_ivf_index
-    contract: embeddings mtime+size in the path, so a corpus change
-    invalidates every generation mechanically)."""
-    import os
-    import tempfile
-
-    st = os.stat(f"{sf_dir}/embeddings.parquet")
-    return os.path.join(
-        tempfile.gettempdir(),
-        "ggee_ivf_index",
-        f"{sf_dir.strip('/').replace('/', '_')}_{st.st_mtime_ns}"
-        f"_{st.st_size}_{suffix}",
-    )
-
-
-def _stage_publish(tmp: str, staged: str) -> None:
-    """Atomic artifact publish: _READY marker inside tmp, then one
-    rename — readers either see the complete generation or none."""
-    import os
-    import shutil
-
-    open(os.path.join(tmp, "_READY"), "w").close()
-    try:
-        os.rename(tmp, staged)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-
-
 def _cell_assign(e: DataFrame, cent: DataFrame) -> DataFrame:
     """Nearest-seed cell assignment (6-dp cosine argmax, ties to the
     smaller cid) of (vec_id, embedding) rows against an explicit
@@ -6466,24 +6364,19 @@ def q_e_graph_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stage_beam_graph(spark: SparkSession, sf_dir: str) -> str:
     """BUILD phase of the graph-ANN lifecycle (round 10): persist the
     in-cell {_BEAM_DEG}-NN edge set as a parquet artifact under the
-    corpus-fingerprinted staging contract (stage_ivf_index's
-    convention: mtime+size fingerprint, _READY marker, atomic rename).
+    corpus-fingerprinted staging contract (tmpdirs.staged, like
+    stage_ivf_index).
     The O(Σ|cell|²) pair scoring runs ONCE per corpus; every serve
     call reads the slim (vec_id, nbr) edge table back from disk — the
     HNSW build/serve split, same economics as the IVF artifacts."""
-    import os
-    import uuid
 
-    staged = _stage_path(sf_dir, "g1")
-    if os.path.exists(os.path.join(staged, "_READY")):
-        return staged
-    tmp = f"{staged}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    e = load_table(spark, sf_dir, "embeddings")
-    asg, _cent = _km_assign(spark, sf_dir)
-    members = asg.join(e, "vec_id").select("vec_id", "cid", "embedding")
-    _beam_edges(members).write.mode("overwrite").parquet(f"{tmp}/edges")
-    _stage_publish(tmp, staged)
-    return staged
+    def build(tmp: str) -> None:
+        e = load_table(spark, sf_dir, "embeddings")
+        asg, _cent = _km_assign(spark, sf_dir)
+        members = asg.join(e, "vec_id").select("vec_id", "cid", "embedding")
+        _beam_edges(members).write.mode("overwrite").parquet(f"{tmp}/edges")
+
+    return tmpdirs.staged(sf_dir, "embeddings", "ggee_ivf_index", build, "g1")
 
 
 @query("q_e_beam_persist", oracle=_beam_oracle())
@@ -6517,29 +6410,24 @@ def stage_beam_base_graph(spark: SparkSession, sf_dir: str) -> str:
     in-cell {_BEAM_DEG}-NN edge set is computed over that base
     membership. The artifact carries centroids + postings + edges so
     the append job can run from READ-BACK state alone."""
-    import os
-    import uuid
 
-    staged = _stage_path(sf_dir, "gb1")
-    if os.path.exists(os.path.join(staged, "_READY")):
-        return staged
-    tmp = f"{staged}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    e = load_table(spark, sf_dir, "embeddings")
-    base = e.where(F.expr(_APPEND_BASE))
-    cent = base.where(F.col("vec_id").between(1, KM_K)).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
-    )
-    cent.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/centroids")
-    asg = _cell_assign(base.select("vec_id", "embedding"), cent)
-    asg.write.mode("overwrite").parquet(f"{tmp}/postings")
-    members = (
-        spark.read.parquet(f"{tmp}/postings")
-        .join(e, "vec_id")
-        .select("vec_id", "cid", "embedding")
-    )
-    _beam_edges(members).write.mode("overwrite").parquet(f"{tmp}/edges")
-    _stage_publish(tmp, staged)
-    return staged
+    def build(tmp: str) -> None:
+        e = load_table(spark, sf_dir, "embeddings")
+        base = e.where(F.expr(_APPEND_BASE))
+        cent = base.where(F.col("vec_id").between(1, KM_K)).select(
+            F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
+        )
+        cent.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/centroids")
+        asg = _cell_assign(base.select("vec_id", "embedding"), cent)
+        asg.write.mode("overwrite").parquet(f"{tmp}/postings")
+        members = (
+            spark.read.parquet(f"{tmp}/postings")
+            .join(e, "vec_id")
+            .select("vec_id", "cid", "embedding")
+        )
+        _beam_edges(members).write.mode("overwrite").parquet(f"{tmp}/edges")
+
+    return tmpdirs.staged(sf_dir, "embeddings", "ggee_ivf_index", build, "gb1")
 
 
 def stage_beam_append(spark: SparkSession, sf_dir: str) -> str:
@@ -6573,47 +6461,42 @@ def stage_beam_append(spark: SparkSession, sf_dir: str) -> str:
     (Σ|affected cell|² pair scoring); at a daily-ingest ratio the
     affected set is a small fraction of cells and the kept-edge copy
     is a slim (vec_id, nbr) scan — no corpus-wide recompute."""
-    import os
-    import uuid
 
-    staged = _stage_path(sf_dir, "gm1")
-    if os.path.exists(os.path.join(staged, "_READY")):
-        return staged
-    base_dir = stage_beam_base_graph(spark, sf_dir)
-    tmp = f"{staged}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    # ---- everything below reads ONLY the base artifacts + the table
-    cdf = spark.read.parquet(f"{base_dir}/centroids")
-    bpost = spark.read.parquet(f"{base_dir}/postings")
-    bedges = spark.read.parquet(f"{base_dir}/edges")
-    e = load_table(spark, sf_dir, "embeddings")
-    delta = e.where(F.expr(_APPEND_DELTA)).select("vec_id", "embedding")
-    # frozen-centroid assignment of the delta slice → merged postings
-    dasg = _cell_assign(delta, cdf)
-    merged_post = bpost.unionByName(dasg)
-    merged_post.write.mode("overwrite").parquet(f"{tmp}/postings")
-    merged_post = spark.read.parquet(f"{tmp}/postings")
-    affected = dasg.select("cid").distinct()
-    # affected cells: re-rank in-cell edges over the unioned
-    # membership (delta forward edges + base reverse-edge repair)
-    aff_members = (
-        merged_post.join(F.broadcast(affected), "cid")
-        .join(e, "vec_id")
-        .select("vec_id", "cid", "embedding")
-    )
-    new_edges = _beam_edges(aff_members)
-    # untouched cells: copy the frozen edge lists straight through
-    kept = (
-        bedges.join(bpost, "vec_id")
-        .join(F.broadcast(affected), "cid", "left_anti")
-        .select("vec_id", "nbr")
-    )
-    kept.unionByName(new_edges).write.mode("overwrite").parquet(
-        f"{tmp}/edges"
-    )
-    # centroids carry over unchanged into the merged generation
-    cdf.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/centroids")
-    _stage_publish(tmp, staged)
-    return staged
+    def build(tmp: str) -> None:
+        base_dir = stage_beam_base_graph(spark, sf_dir)
+        # ---- everything below reads ONLY the base artifacts + the table
+        cdf = spark.read.parquet(f"{base_dir}/centroids")
+        bpost = spark.read.parquet(f"{base_dir}/postings")
+        bedges = spark.read.parquet(f"{base_dir}/edges")
+        e = load_table(spark, sf_dir, "embeddings")
+        delta = e.where(F.expr(_APPEND_DELTA)).select("vec_id", "embedding")
+        # frozen-centroid assignment of the delta slice → merged postings
+        dasg = _cell_assign(delta, cdf)
+        merged_post = bpost.unionByName(dasg)
+        merged_post.write.mode("overwrite").parquet(f"{tmp}/postings")
+        merged_post = spark.read.parquet(f"{tmp}/postings")
+        affected = dasg.select("cid").distinct()
+        # affected cells: re-rank in-cell edges over the unioned
+        # membership (delta forward edges + base reverse-edge repair)
+        aff_members = (
+            merged_post.join(F.broadcast(affected), "cid")
+            .join(e, "vec_id")
+            .select("vec_id", "cid", "embedding")
+        )
+        new_edges = _beam_edges(aff_members)
+        # untouched cells: copy the frozen edge lists straight through
+        kept = (
+            bedges.join(bpost, "vec_id")
+            .join(F.broadcast(affected), "cid", "left_anti")
+            .select("vec_id", "nbr")
+        )
+        kept.unionByName(new_edges).write.mode("overwrite").parquet(
+            f"{tmp}/edges"
+        )
+        # centroids carry over unchanged into the merged generation
+        cdf.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/centroids")
+
+    return tmpdirs.staged(sf_dir, "embeddings", "ggee_ivf_index", build, "gm1")
 
 
 @query(

@@ -12,6 +12,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from glaciersgee_spark import tmpdirs
 from glaciersgee_spark.registry import dsum, query
 from glaciersgee_spark.session import conf_window
 from glaciersgee_spark.streaming.stream import _SMALL_STATE, _parquet_append, drain
@@ -559,37 +560,19 @@ def q_d_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctness gate itself proves the checkpoint contract
     (previously only a unit test, tests/test_streaming.py).
 
-    Staging is one narrow projection per sf_dir, cached on disk after
-    the first call. At scale this is the nightly-ingest resume path:
-    file-source offsets live in the checkpoint, the sink is
-    idempotent-append by virtue of the committed-batch log.
+    Staging is one narrow projection per corpus fingerprint
+    (tmpdirs.staged), cached on disk after the first call. At scale
+    this is the nightly-ingest resume path: file-source offsets live
+    in the checkpoint, the sink is idempotent-append by virtue of the
+    committed-batch log.
     """
     import os
     import shutil
-    import tempfile
 
     from glaciersgee_spark.session import ensure_confs
     from pyspark.sql import types as T
 
-    ensure_confs(spark)
-    st = os.stat(f"{sf_dir}/events.parquet")
-    # Fingerprint the source into the staging path so a regenerated
-    # corpus at the same sf_dir re-stages instead of replaying stale
-    # halves against a fresh oracle.
-    staged = os.path.join(
-        tempfile.gettempdir(), "ggee_ckpt_halves",
-        f"{sf_dir.strip('/').replace('/', '_')}_{st.st_mtime_ns}_{st.st_size}",
-    )
-    marker = os.path.join(staged, "_READY")
-    if not os.path.exists(marker):
-        # Stage into a process-unique dir and atomically rename it into
-        # place: a concurrent stager (parallel pytest/battery) can never
-        # rewrite halves under a directory another stream is already
-        # reading (the loser's rename fails on the existing target and
-        # its staging dir is discarded).
-        import uuid
-
-        tmp = f"{staged}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+    def build(tmp: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type"
         )
@@ -599,11 +582,9 @@ def q_d_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.where(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
             "overwrite"
         ).parquet(os.path.join(tmp, "half_b"))
-        open(os.path.join(tmp, "_READY"), "w").close()
-        try:
-            os.rename(tmp, staged)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
+
+    ensure_confs(spark)
+    staged = tmpdirs.staged(sf_dir, "events", "ggee_ckpt_halves", build)
 
     src = scratch_dir(prefix="ggee_ckpt_src_")
     sink = scratch_dir(prefix="ggee_ckpt_sink_")
@@ -835,25 +816,9 @@ def q_d_stream_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     other true streams).
     """
     # The two split sources are STAGED once per corpus fingerprint
-    # (mtime+size, the read_events_stream convention) — re-running the
-    # op streams from the existing stage instead of re-writing the
-    # sources every call.
-    import os
-    import tempfile
-
-    st = os.stat(f"{sf_dir}/events.parquet")
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "ggee_su_src",
-        f"{sf_dir.strip('/').replace('/', '_')}_{st.st_mtime_ns}_{st.st_size}",
-    )
-    if not os.path.isdir(base):
-        # Build under a process-unique dir, then PUBLISH with one
-        # atomic rename: a concurrent session either wins the rename
-        # (and its complete stage is what everyone reads) or loses
-        # (and silently adopts the winner's) — no process can ever
-        # observe a half-written stage.
-        tmp = f"{base}.tmp.{os.getpid()}"
+    # (tmpdirs.staged) — re-running the op streams from the existing
+    # stage instead of re-writing the sources every call.
+    def build(tmp: str) -> None:
         ev_all = load_table(spark, sf_dir, "events").select(
             "event_id", F.col("ts").cast("timestamp").alias("ts"),
             "user_id", "value",
@@ -867,12 +832,8 @@ def q_d_stream_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev_all.where(F.col("user_id") % 2 == 1).coalesce(4).write.mode(
             "overwrite"
         ).parquet(f"{tmp}/odd")
-        try:
-            os.rename(tmp, base)
-        except OSError:  # another session published first — use theirs
-            import shutil
 
-            shutil.rmtree(tmp, ignore_errors=True)
+    base = tmpdirs.staged(sf_dir, "events", "ggee_su_src2", build)
     src_a, src_b = f"{base}/even", f"{base}/odd"
     schema = spark.read.parquet(src_a).schema
 
@@ -1865,13 +1826,14 @@ def q_d_stream_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     sixteenth true-stream surface and the first whose SOURCE is not a
     staged file feed: Spark's deterministic load generator, the tool
     every streaming pipeline is soak-tested with before real data is
-    wired in). The drain runs the unbounded source for ≥4 committed
-    micro-batches (250 rows/batch, event time advancing one minute
-    per batch from a fixed epoch — no wall clock anywhere), stops,
-    and the read-back keeps exactly the first 4 batches' values
-    (value < 1000), which is batching- and race-invariant because
-    parquet sink commits are per-batch atomic and values are a batch-
-    indexed sequence (drain docstring). sf_dir is deliberately unused
+    wired in). The drain commits 4 micro-batches of the unbounded
+    source, one availableNow run each on one checkpoint (250
+    rows/batch, event time advancing one minute per batch from a
+    fixed epoch — no wall clock anywhere), and the read-back keeps
+    exactly the first 4 batches' values (value < 1000), which is
+    batching-invariant because parquet sink commits are per-batch
+    atomic and values are a batch-indexed sequence (drain
+    docstring). sf_dir is deliberately unused
     — the source GENERATES its data; the declared op proves the
     generator's value/timestamp contract against pure arithmetic.
 

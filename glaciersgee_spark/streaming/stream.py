@@ -23,14 +23,17 @@ swap to transformWithStateInPandas where protobuf is available.
 
 from __future__ import annotations
 
-import tempfile
+import os
+import shutil
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from glaciersgee_spark import tmpdirs
 from glaciersgee_spark.session import conf_window, ensure_confs
+from glaciersgee_spark.tables import load_table
 
 # Production state-store provider for the heavy stateful drains
 # (round 8, VERDICT r7 item 3): the default HDFS-backed store keeps
@@ -121,41 +124,22 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming scan of the events table.
 
     The parquet file source requires a *directory*, so the single
-    events.parquet file is staged (hard-linked) into a temp dir — the
-    corpus itself is read-only and untouched.
+    events.parquet file is staged into one (tmpdirs.staged: hard-linked,
+    or copied across devices) — the corpus itself is read-only and
+    untouched.
     """
-    import os
-    import tempfile
-
     ensure_confs(spark)
     srcf = f"{sf_dir}/events.parquet"
-    st = os.stat(srcf)
-    # The source fingerprint is part of the staged path, so a
-    # regenerated corpus at the same sf_dir invalidates the stage
-    # automatically instead of replaying stale data.
-    staged = os.path.join(
-        tempfile.gettempdir(),
-        "ggee_stream_src",
-        f"{sf_dir.strip('/').replace('/', '_')}_{st.st_mtime_ns}_{st.st_size}",
-    )
-    os.makedirs(staged, exist_ok=True)
-    dst = os.path.join(staged, "events.parquet")
-    if not os.path.exists(dst):
+
+    def build(tmp: str) -> None:
+        dst = os.path.join(tmp, "events.parquet")
         try:
             os.link(srcf, dst)
-        except OSError:
-            # EEXIST: a concurrent session linked first — its file is
-            # complete (link is atomic), use it. Anything else (e.g.
-            # cross-device): copy to a unique temp name and publish
-            # with an atomic rename so no reader ever sees a partial
-            # or truncated file.
-            if not os.path.exists(dst):
-                import shutil
+        except OSError:  # cross-device
+            shutil.copyfile(srcf, dst)
 
-                tmp = f"{dst}.tmp.{os.getpid()}"
-                shutil.copyfile(srcf, tmp)
-                os.replace(tmp, dst)
-    raw = spark.readStream.schema(_RAW).parquet(staged)
+    src = tmpdirs.staged(sf_dir, "events", "ggee_stream_src2", build)
+    raw = spark.readStream.schema(_RAW).parquet(src)
     # Watermarks/event-time require TIMESTAMP (not NTZ); session tz is
     # UTC so the cast preserves wall-clock values exactly.
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
@@ -312,13 +296,11 @@ def window_topk_batches(spark: SparkSession, sf_dir: str, table_name: str):
     """
     from pyspark.sql import Window as W
 
-    from glaciersgee_spark.tmpdirs import scratch_dir
-
     ev = read_events_stream(spark, sf_dir).withWatermark("ts", "2 hours")
     counts = ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
         F.count(F.lit(1)).alias("n")
     )
-    out = scratch_dir(prefix="ggee_topk_out_")
+    out = tmpdirs.scratch_dir(prefix="ggee_topk_out_")
 
     def upsert_counts(batch_df, batch_id: int) -> None:
         (
@@ -334,7 +316,9 @@ def window_topk_batches(spark: SparkSession, sf_dir: str, table_name: str):
 
     q = drain(
         counts.writeStream.outputMode("update")
-        .option("checkpointLocation", scratch_dir(prefix="ggee_ck_topk_"))
+        .option(
+            "checkpointLocation", tmpdirs.scratch_dir(prefix="ggee_ck_topk_")
+        )
         .foreachBatch(upsert_counts)
         .trigger(availableNow=True),
         "window_topk_batches",
@@ -410,6 +394,24 @@ def _day_chunk(ev: DataFrame) -> F.Column:
     return F.least(F.lit(3), ((idx * 4) / span_days).cast("int"))
 
 
+def _write_chunks(df: DataFrame, legdir: str) -> None:
+    """Write ``df``'s rows as ``legdir/chunk_{i}.parquet``, one file per
+    ``chk`` value i in 0..3 (the column itself is dropped), with
+    strictly increasing mtimes so a maxFilesPerTrigger file source
+    admits the chunks in order."""
+    os.makedirs(legdir)
+    for i in range(4):
+        part = os.path.join(legdir, f"_w_{i}")
+        df.where(F.col("chk") == i).drop("chk").coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(part)
+        pf = next(f for f in os.listdir(part) if f.endswith(".parquet"))
+        dst = os.path.join(legdir, f"chunk_{i}.parquet")
+        os.rename(os.path.join(part, pf), dst)
+        shutil.rmtree(part)
+        os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
+
+
 def stage_ivjoin_sources(spark: SparkSession, sf_dir: str) -> str:
     """Stage the purchase and click legs as 4 time-ordered chunk files
     each (day-aligned quarters of the feed's observed date span — see
@@ -419,79 +421,41 @@ def stage_ivjoin_sources(spark: SparkSession, sf_dir: str) -> str:
     2 data batches + cleanup) — the multi-batch arrival pattern that
     makes the two-sided watermark actually advance and join state
     actually get evicted mid-query (a single-batch drain never
-    exercises either). Staged once per corpus fingerprint (mtime+size, the
-    read_events_stream convention) with the atomic rename idiom of
-    q_d_checkpoint_resume so concurrent sessions never see a
-    half-staged leg. Chunking is by event-time DAY, so later chunks
-    never carry earlier timestamps and nothing is watermark-late.
+    exercises either). Staged once per corpus fingerprint through
+    tmpdirs.staged, so concurrent sessions never see a half-staged
+    leg. Chunking is by event-time DAY, so later chunks never carry
+    earlier timestamps and nothing is watermark-late.
     """
-    import os
-    import shutil
-    import uuid
 
-    from glaciersgee_spark.tables import load_table
+    def build(tmp: str) -> None:
+        ev = load_table(spark, sf_dir, "events")
+        chunk = _day_chunk(ev)
+        p = ev.where(F.col("event_type") == "purchase").select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user"),
+            F.col("ts").alias("p_ts"),
+            chunk.alias("chk"),
+        )
+        c = ev.where(F.col("event_type") == "click").select(
+            F.col("user_id").alias("c_user"),
+            F.col("ts").alias("c_ts"),
+            chunk.alias("chk"),
+        )
+        _write_chunks(p, os.path.join(tmp, "purchases"))
+        _write_chunks(c, os.path.join(tmp, "clicks"))
 
     ensure_confs(spark)
-    st = os.stat(f"{sf_dir}/events.parquet")
-    staged = os.path.join(
-        tempfile.gettempdir(),
-        "ggee_ivj_src2",
-        f"{sf_dir.strip('/').replace('/', '_')}_{st.st_mtime_ns}_{st.st_size}",
-    )
-    marker = os.path.join(staged, "_READY")
-    if os.path.exists(marker):
-        return staged
-    tmp = f"{staged}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    ev = load_table(spark, sf_dir, "events")
-    chunk = _day_chunk(ev)
-    p = ev.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-        chunk.alias("chk"),
-    )
-    c = ev.where(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-        chunk.alias("chk"),
-    )
-    for leg, df in (("purchases", p), ("clicks", c)):
-        legdir = os.path.join(tmp, leg)
-        os.makedirs(legdir)
-        for i in range(4):
-            part = os.path.join(tmp, f"_w_{leg}_{i}")
-            df.where(F.col("chk") == i).drop("chk").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(part)
-            pf = next(f for f in os.listdir(part) if f.endswith(".parquet"))
-            dst = os.path.join(legdir, f"chunk_{i}.parquet")
-            os.rename(os.path.join(part, pf), dst)
-            shutil.rmtree(part, ignore_errors=True)
-            # strictly increasing mtimes pin the admission order
-            os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-    open(os.path.join(tmp, "_READY"), "w").close()
-    try:
-        os.rename(tmp, staged)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-    return staged
+    return tmpdirs.staged(sf_dir, "events", "ggee_ivj_src2", build)
 
 
-def drain_interval_join(spark: SparkSession, sf_dir: str, sink: str, ck: str):
-    """Run the watermarked purchase⋈click interval join as a REAL
-    multi-batch stream (availableNow, one time-chunk per trigger on
-    each leg) into an append parquet sink; returns the terminated
-    StreamingQuery so callers can assert on its state-store metrics
-    (tests check numRowsRemoved > 0 — state actually evicted as the
-    watermarks pass).
-
-    Exactness under chunked arrival: chunks are day-partitioned, so a
-    batch-k purchase's admissible clicks (≤ 30 min earlier) are in
-    chunk k or the tail of chunk k-1; the click watermark's state
-    bound is p_wm − 30 min = (max p_ts of k−1) − 1 h − 30 min, which
-    retains that tail, so no pair is ever lost and the batch oracle
-    is exact (the same argument q_d_stream_ivjoin's docstring makes).
-    """
+def _ivjoin_pairs(
+    spark: SparkSession, sf_dir: str, how: str, cols: list[str]
+) -> DataFrame:
+    """The watermarked purchase/click interval join every interval-join
+    drain runs: both staged legs at 2 chunk files per trigger, purchases
+    watermarked 1 h and clicks 2 h, a click matching a purchase of the
+    same user up to 30 minutes before it; ``how`` is the join type and
+    ``cols`` the selected columns."""
     staged = stage_ivjoin_sources(spark, sf_dir)
     # Watermarks/event-time require TIMESTAMP (not NTZ); session tz is
     # UTC (ensure_confs in staging) so the cast preserves wall-clock.
@@ -509,12 +473,33 @@ def drain_interval_join(spark: SparkSession, sf_dir: str, sink: str, ck: str):
         .withColumn("c_ts", F.col("c_ts").cast("timestamp"))
         .withWatermark("c_ts", "2 hours")
     )
-    pairs = p.join(
+    return p.join(
         c,
         (F.col("p_user") == F.col("c_user"))
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTE"))
         & (F.col("c_ts") <= F.col("p_ts")),
-    ).select("purchase_id", "p_user", "c_ts")
+        how,
+    ).select(*cols)
+
+
+def drain_interval_join(spark: SparkSession, sf_dir: str, sink: str, ck: str):
+    """Run the watermarked purchase⋈click interval join as a REAL
+    multi-batch stream (availableNow, one time-chunk per trigger on
+    each leg) into an append parquet sink; returns the terminated
+    StreamingQuery so callers can assert on its state-store metrics
+    (tests check numRowsRemoved > 0 — state actually evicted as the
+    watermarks pass).
+
+    Exactness under chunked arrival: chunks are day-partitioned, so a
+    batch-k purchase's admissible clicks (≤ 30 min earlier) are in
+    chunk k or the tail of chunk k-1; the click watermark's state
+    bound is p_wm − 30 min = (max p_ts of k−1) − 1 h − 30 min, which
+    retains that tail, so no pair is ever lost and the batch oracle
+    is exact (the same argument q_d_stream_ivjoin's docstring makes).
+    """
+    pairs = _ivjoin_pairs(
+        spark, sf_dir, "inner", ["purchase_id", "p_user", "c_ts"]
+    )
     # Provider: RocksDB (module docstring at ROCKSDB_PROVIDER) — the
     # two-sided join state is the repo's largest stateful surface.
     with conf_window(spark, _ROCKSDB_POSTURE):
@@ -554,28 +539,9 @@ def drain_outer_interval_join(
     only once no matching click can still arrive). Scale: same
     bounded two-sided state contract as the inner join, plus one
     bit per left row (matched-flag) — the cost of outer semantics."""
-    staged = stage_ivjoin_sources(spark, sf_dir)
-    p = (
-        spark.readStream.schema(_IVJ_SCHEMA_P)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(f"{staged}/purchases")
-        .withColumn("p_ts", F.col("p_ts").cast("timestamp"))
-        .withWatermark("p_ts", "1 hour")
+    pairs = _ivjoin_pairs(
+        spark, sf_dir, "leftOuter", ["purchase_id", "p_user", "p_ts", "c_ts"]
     )
-    c = (
-        spark.readStream.schema(_IVJ_SCHEMA_C)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(f"{staged}/clicks")
-        .withColumn("c_ts", F.col("c_ts").cast("timestamp"))
-        .withWatermark("c_ts", "2 hours")
-    )
-    pairs = p.join(
-        c,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTE"))
-        & (F.col("c_ts") <= F.col("p_ts")),
-        "leftOuter",
-    ).select("purchase_id", "p_user", "p_ts", "c_ts")
     # same state posture as the inner drain: RocksDB + changelog
     # checkpointing (two-sided join state is the heavy class)
     with conf_window(spark, _ROCKSDB_POSTURE):
@@ -609,28 +575,12 @@ def drain_full_outer_interval_join(
     Scale: the same bounded two-sided RocksDB state as the sibling
     drains plus a matched-bit on BOTH sides — full outer costs no
     extra shuffle, only the second side's eviction emission."""
-    staged = stage_ivjoin_sources(spark, sf_dir)
-    p = (
-        spark.readStream.schema(_IVJ_SCHEMA_P)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(f"{staged}/purchases")
-        .withColumn("p_ts", F.col("p_ts").cast("timestamp"))
-        .withWatermark("p_ts", "1 hour")
-    )
-    c = (
-        spark.readStream.schema(_IVJ_SCHEMA_C)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(f"{staged}/clicks")
-        .withColumn("c_ts", F.col("c_ts").cast("timestamp"))
-        .withWatermark("c_ts", "2 hours")
-    )
-    pairs = p.join(
-        c,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTE"))
-        & (F.col("c_ts") <= F.col("p_ts")),
+    pairs = _ivjoin_pairs(
+        spark,
+        sf_dir,
         "fullOuter",
-    ).select("purchase_id", "p_user", "p_ts", "c_user", "c_ts")
+        ["purchase_id", "p_user", "p_ts", "c_user", "c_ts"],
+    )
     with conf_window(spark, _ROCKSDB_POSTURE):
         return drain(
             _parquet_append(pairs, sink, ck), "full-outer-interval-join", 180
@@ -654,49 +604,20 @@ def stage_event_chunks(spark: SparkSession, sf_dir: str) -> str:
     — the shared multi-batch
     arrival fixture for true-stream ops that need watermarks to
     actually advance (a single-file source drains in one batch and
-    never exercises state eviction). Same fingerprint + atomic-rename
-    staging contract as stage_ivjoin_sources. Day chunking means a
+    never exercises state eviction). Staged through tmpdirs.staged
+    like stage_ivjoin_sources. Day chunking means a
     1-minute dedup key NEVER straddles chunks, so within-watermark
     dedup is exact under chunked arrival."""
-    import os
-    import shutil
-    import uuid
 
-    from glaciersgee_spark.tables import load_table
+    def build(tmp: str) -> None:
+        base = load_table(spark, sf_dir, "events")
+        ev = base.select(
+            "user_id", "event_type", "ts", _day_chunk(base).alias("chk")
+        )
+        _write_chunks(ev, os.path.join(tmp, "events"))
 
     ensure_confs(spark)
-    st = os.stat(f"{sf_dir}/events.parquet")
-    staged = os.path.join(
-        tempfile.gettempdir(),
-        "ggee_evch2",
-        f"{sf_dir.strip('/').replace('/', '_')}_{st.st_mtime_ns}_{st.st_size}",
-    )
-    marker = os.path.join(staged, "_READY")
-    if os.path.exists(marker):
-        return staged
-    tmp = f"{staged}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    base = load_table(spark, sf_dir, "events")
-    ev = base.select(
-        "user_id", "event_type", "ts", _day_chunk(base).alias("chk")
-    )
-    legdir = os.path.join(tmp, "events")
-    os.makedirs(legdir)
-    for i in range(4):
-        part = os.path.join(tmp, f"_w_{i}")
-        ev.where(F.col("chk") == i).drop("chk").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(part)
-        pf = next(f for f in os.listdir(part) if f.endswith(".parquet"))
-        dst = os.path.join(legdir, f"chunk_{i}.parquet")
-        os.rename(os.path.join(part, pf), dst)
-        shutil.rmtree(part, ignore_errors=True)
-        os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-    open(os.path.join(tmp, "_READY"), "w").close()
-    try:
-        os.rename(tmp, staged)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-    return staged
+    return tmpdirs.staged(sf_dir, "events", "ggee_evch2", build)
 
 
 def drain_stream_dedup(spark: SparkSession, sf_dir: str, sink: str, ck: str):
@@ -1158,9 +1079,6 @@ def drain_schema_evolve(
     back with lane = NULL under the explicit v2 read schema — the
     sink-side fingerprint of when each row was emitted, which is what
     the oracle encodes via the two watermark cutoffs."""
-    import os
-    import shutil
-
     staged = stage_event_chunks(spark, sf_dir)
 
     def _arrive(idxs) -> None:
@@ -1222,21 +1140,18 @@ RATE_BATCHES = 4  # deterministic prefix consumed by the declared op
 
 
 def drain_rate_source(spark: SparkSession, sink: str, ck: str):
-    """Run the rate-micro-batch synthetic source for at least
-    RATE_BATCHES committed micro-batches into a parquet sink and stop;
-    returns the stopped StreamingQuery.
+    """Commit exactly RATE_BATCHES micro-batches of the rate-micro-batch
+    synthetic source into a parquet sink; returns the last terminated
+    StreamingQuery.
 
-    rate-micro-batch is UNBOUNDED (no availableNow contract), so the
-    drain polls lastProgress and stops after batch RATE_BATCHES
-    commits. Stopping can race one extra in-flight batch into the
-    sink — parquet commits are per-batch atomic, so the sink then
-    holds SOME prefix of batches strictly longer than RATE_BATCHES;
-    the declared op filters to value < RATE_BATCHES·rowsPerBatch,
-    which is exactly the first RATE_BATCHES batches regardless of
-    where the stop landed. That filter is what makes the read-back
-    batching-invariant and the oracle exact."""
-    import time
-
+    The source is unbounded, but it supports the availableNow trigger:
+    each availableNow run on the same checkpoint commits the next ONE
+    batch (rowsPerBatch rows, values continuing where the previous run
+    stopped) and terminates. RATE_BATCHES such runs write values
+    0..RATE_BATCHES·rowsPerBatch−1 once each, and no run is stopped
+    mid-write. The declared op still filters to
+    value < RATE_BATCHES·rowsPerBatch, so the read-back does not depend
+    on how many batches a run commits."""
     src = (
         spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", RATE_ROWS_PER_BATCH)
@@ -1244,26 +1159,8 @@ def drain_rate_source(spark: SparkSession, sink: str, ck: str):
         .option("advanceMillisPerBatch", RATE_ADVANCE_MS)
         .load()
     )
-    q = (
-        src.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .start()
-    )
-    deadline = time.monotonic() + 120
-    done = False
-    while time.monotonic() < deadline:
-        p = q.lastProgress
-        if p is not None and p["batchId"] >= RATE_BATCHES:
-            done = True
-            break
-        time.sleep(0.2)
-    q.stop()
-    if not done:
-        raise TimeoutError(
-            f"rate source did not commit {RATE_BATCHES} batches in 120 s"
-        )
+    for _ in range(RATE_BATCHES):
+        q = drain(_parquet_append(src, sink, ck), "rate-source", 120)
     return q
 
 
@@ -1291,56 +1188,22 @@ def stage_parity_chunks(spark: SparkSession, sf_dir: str) -> str:
     two-datacenter split of q_d_stream_union) × 4 day-aligned,
     mtime-ordered chunk files each, so a union stream over both legs
     advances through event time in lockstep, one day-quarter per
-    micro-batch per leg. Same fingerprint + atomic-rename publish as
+    micro-batch per leg. Staged through tmpdirs.staged like
     stage_event_chunks."""
-    import os
-    import shutil
-    import uuid
 
-    from glaciersgee_spark.tables import load_table
+    def build(tmp: str) -> None:
+        base = load_table(spark, sf_dir, "events")
+        ev = base.select(
+            "user_id", "ts", "value", _day_chunk(base).alias("chk")
+        )
+        for leg, pred in (("fast", 0), ("slow", 1)):
+            _write_chunks(
+                ev.where(F.col("user_id") % 2 == pred),
+                os.path.join(tmp, leg),
+            )
 
     ensure_confs(spark)
-    st = os.stat(f"{sf_dir}/events.parquet")
-    staged = os.path.join(
-        tempfile.gettempdir(),
-        "ggee_mwmch",
-        f"{sf_dir.strip('/').replace('/', '_')}_{st.st_mtime_ns}_{st.st_size}",
-    )
-    marker = os.path.join(staged, "_READY")
-    if os.path.exists(marker):
-        return staged
-    tmp = f"{staged}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    base = load_table(spark, sf_dir, "events")
-    ev = base.select(
-        "user_id", "ts", "value", _day_chunk(base).alias("chk")
-    )
-    for leg, pred in (("fast", 0), ("slow", 1)):
-        legdir = os.path.join(tmp, leg)
-        os.makedirs(legdir)
-        for i in range(4):
-            part = os.path.join(tmp, f"_w_{leg}_{i}")
-            (
-                ev.where(
-                    (F.col("chk") == i) & (F.col("user_id") % 2 == pred)
-                )
-                .drop("chk")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part)
-            )
-            pf = next(
-                f for f in os.listdir(part) if f.endswith(".parquet")
-            )
-            dst = os.path.join(legdir, f"chunk_{i}.parquet")
-            os.rename(os.path.join(part, pf), dst)
-            shutil.rmtree(part, ignore_errors=True)
-            os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-    open(os.path.join(tmp, "_READY"), "w").close()
-    try:
-        os.rename(tmp, staged)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-    return staged
+    return tmpdirs.staged(sf_dir, "events", "ggee_mwmch", build)
 
 
 def drain_multi_watermark(

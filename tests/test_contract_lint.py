@@ -173,6 +173,18 @@ def test_streams_run_only_through_drain_and_confs_only_through_conf_window():
     assert not unsets, f"apply confs through session.conf_window: {unsets}"
 
 
+def test_artifacts_are_staged_only_through_tmpdirs_staged():
+    """``_READY``, ``gettempdir()`` and ``os.getpid()`` appear under
+    glaciersgee_spark/ only inside tmpdirs.staged: every artifact that
+    outlives a session (chunked stream feeds, ANN index generations) is
+    fingerprinted, built in a private dir, marked and published by one
+    rename in one place, so no copy can drift (skip the marker, reuse a
+    pid-only tmp name, leave a failed build behind)."""
+    for token in ("_READY", "gettempdir()", "os.getpid()"):
+        bad = _hits_outside(token, "tmpdirs.py", "staged")
+        assert not bad, f"stage artifacts through tmpdirs.staged: {token} at {bad}"
+
+
 _DRIVER_CAP = 50
 
 

@@ -1111,9 +1111,9 @@ def test_chained_windows_tie_is_strict_and_runs_two_state_stores(spark):
 
 
 def test_rate_source_prefix_is_race_invariant(spark):
-    """The drain may commit MORE than RATE_BATCHES batches (stop
-    races one in-flight batch); the declared op's value-prefix filter
-    must still yield exactly the first RATE_BATCHES batches."""
+    """The declared op's value-prefix filter must yield exactly the
+    first RATE_BATCHES batches, however many batches the drain's runs
+    commit."""
     from glaciersgee_spark.streaming.batch_equiv import q_d_stream_rate
     from glaciersgee_spark.streaming.stream import (
         RATE_BATCHES,
@@ -1125,6 +1125,26 @@ def test_rate_source_prefix_is_race_invariant(spark):
     total = RATE_BATCHES * RATE_ROWS_PER_BATCH
     assert sum(r.sum_value for r in rows) == total * (total - 1) // 2
     assert all(r.n_batches == RATE_BATCHES for r in rows)
+
+
+def test_rate_drain_commits_exactly_rate_batches(spark):
+    """drain_rate_source runs the unbounded rate-micro-batch source as
+    RATE_BATCHES availableNow runs on one checkpoint: each commits one
+    batch, so the sink holds values 0..RATE_BATCHES·rowsPerBatch−1
+    exactly once and no run is stopped while a batch is writing."""
+    from glaciersgee_spark.streaming.stream import (
+        RATE_BATCHES,
+        RATE_ROWS_PER_BATCH,
+        drain_rate_source,
+    )
+    from glaciersgee_spark.tmpdirs import scratch_dir
+
+    sink = scratch_dir(prefix="ggee_rate_t_sink_")
+    ck = scratch_dir(prefix="ggee_rate_t_ck_")
+    q = drain_rate_source(spark, sink, ck)
+    assert q.lastProgress["batchId"] == RATE_BATCHES - 1
+    values = sorted(r.value for r in spark.read.parquet(sink).collect())
+    assert values == list(range(RATE_BATCHES * RATE_ROWS_PER_BATCH))
 
 
 def test_schema_evolve_upgrade_allowed_and_state_change_rejected(spark):
