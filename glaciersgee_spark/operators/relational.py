@@ -9,8 +9,9 @@ would differ at 100 TB.
 
 from __future__ import annotations
 
-import weakref
+import os
 
+from glaciersgee_spark.caches import scoped_value
 from glaciersgee_spark.tmpdirs import scratch_dir
 
 import pyspark.sql.functions as F
@@ -144,46 +145,44 @@ def q_b_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Write the bucketed lineitem/orders layout once per (session,
-    sf_dir) and return the catalog table names.
+    """Write the bucketed lineitem/orders layout once per (app, sf_dir)
+    (caches.scoped_value, so clear_caches() makes the next call re-stage)
+    and return the catalog table names.
 
     Bucketing is an INGEST-time cost: the layout is written once and
     every subsequent join on the bucket key reads it shuffle-free.
     Memoizing mirrors that — repeat calls (and repeat bench runs)
-    measure the recurring join, not the one-time write. Keyed weakly by
-    session like tables._LOADED so entries die with the session."""
-    per = _BUCKETED.setdefault(spark, {})
-    if sf_dir in per:
-        return per[sf_dir]
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_totalprice") > 50000.0)
-        .select("o_orderkey", "o_orderpriority")
-    )
-    out = scratch_dir(prefix="ggee_bkt_")
-    names = (f"ggee_bkt_lineitem_{len(per)}", f"ggee_bkt_orders_{len(per)}")
-    (
-        li.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(8, "l_orderkey")
-        .sortBy("l_orderkey")
-        .option("path", f"{out}/lineitem")
-        .saveAsTable(names[0])
-    )
-    (
-        o.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(8, "o_orderkey")
-        .sortBy("o_orderkey")
-        .option("path", f"{out}/orders")
-        .saveAsTable(names[1])
-    )
-    per[sf_dir] = names
-    return names
+    measure the recurring join, not the one-time write."""
+
+    def stage() -> tuple[str, str]:
+        li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
+        o = (
+            load_table(spark, sf_dir, "orders")
+            .where(F.col("o_totalprice") > 50000.0)
+            .select("o_orderkey", "o_orderpriority")
+        )
+        out = scratch_dir(prefix="ggee_bkt_")
+        names = _staged_names(out, ("lineitem", "orders"))
+        for df, t, key in ((li, "lineitem", "l_orderkey"), (o, "orders", "o_orderkey")):
+            (
+                df.write.mode("overwrite")
+                .format("parquet")
+                .bucketBy(8, key)
+                .sortBy(key)
+                .option("path", f"{out}/{t}")
+                .saveAsTable(names[t])
+            )
+        return names["lineitem"], names["orders"]
+
+    return scoped_value(spark, sf_dir, "bucketed_pair", stage)
 
 
-_BUCKETED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+def _staged_names(out: str, tables: tuple[str, ...]) -> dict[str, str]:
+    """Catalog table names for a layout staged under scratch dir
+    ``out``: the dir's unique name plus the table, so every staging —
+    another sf_dir, or a re-stage after clear_caches() — gets names of
+    its own."""
+    return {t: f"{os.path.basename(out)}_{t}" for t in tables}
 
 
 @query(
@@ -202,7 +201,7 @@ def q_b_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     This is the 100 TB recipe for a fact⋈fact join that recurs on the
     same key (lineitem⋈orders on orderkey): pay one bucketed write at
-    ingest (memoized per session via _bucketed_pair), then every
+    ingest (memoized per (app, sf_dir) via _bucketed_pair), then every
     subsequent join skips its shuffle entirely.
     tests/test_plans.py asserts the only exchange in this plan is the
     final aggregation's. The merge hint pins SMJ so the demonstration
@@ -1423,24 +1422,21 @@ def q_b_window_trailing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DPP: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-
-
 def _dpp_fact_path(spark: SparkSession, sf_dir: str) -> str:
-    """Write lineitem partitioned by ship year once per (session,
-    sf_dir) — the date-partitioned fact layout SURVEY §4.2 mandates at
-    100 TB. Memoized like _bucketed_pair: partitioning is an
-    ingest-time cost; queries measure the pruned read."""
-    per = _DPP.setdefault(spark, {})
-    if sf_dir in per:
-        return per[sf_dir]
-    out = scratch_dir(prefix="ggee_dpp_")
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_quantity", F.year("l_shipdate").cast("long").alias("ship_year")
-    )
-    li.write.mode("overwrite").partitionBy("ship_year").parquet(out)
-    per[sf_dir] = out
-    return out
+    """Write lineitem partitioned by ship year once per (app, sf_dir)
+    — the date-partitioned fact layout SURVEY §4.2 mandates at 100 TB.
+    Memoized like _bucketed_pair: partitioning is an ingest-time cost;
+    queries measure the pruned read."""
+
+    def stage() -> str:
+        out = scratch_dir(prefix="ggee_dpp_")
+        li = load_table(spark, sf_dir, "lineitem").select(
+            "l_quantity", F.year("l_shipdate").cast("long").alias("ship_year")
+        )
+        li.write.mode("overwrite").partitionBy("ship_year").parquet(out)
+        return out
+
+    return scoped_value(spark, sf_dir, "dpp_fact", stage)
 
 
 @query(
@@ -3902,9 +3898,6 @@ def q_b_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_b_join_cbo (round 9)
 # ---------------------------------------------------------------------------
 
-# Session-scoped memo of the ANALYZEd catalog tables (the bucketed-pair
-# convention: stage once, measure the recurring query).
-_CBO_TABLES: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 _CBO_CONFS = {
     "spark.sql.cbo.enabled": "true",
     "spark.sql.cbo.joinReorder.enabled": "true",
@@ -3912,34 +3905,35 @@ _CBO_CONFS = {
 
 
 def _cbo_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
-    per = _CBO_TABLES.setdefault(spark, {})
-    if sf_dir in per:
-        return per[sf_dir]
-    out = scratch_dir(prefix="ggee_cbo_")
-    names = tuple(
-        f"ggee_cbo_{t}_{len(per)}" for t in ("lineitem", "orders", "part")
-    )
-    for t, name in zip(("lineitem", "orders", "part"), names):
-        (
-            load_table(spark, sf_dir, t)
-            .write.mode("overwrite")
-            .format("parquet")
-            .option("path", f"{out}/{t}")
-            .saveAsTable(name)
-        )
-        # Column-level stats on exactly the join/filter columns the
-        # reorderer costs — at 100 TB you ANALYZE the handful of keys,
-        # not ALL COLUMNS (a full-scan per column).
-        cols = {
-            "lineitem": "l_orderkey, l_partkey, l_quantity",
-            "orders": "o_orderkey",
-            "part": "p_partkey, p_size",
-        }[t]
-        spark.sql(
-            f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR COLUMNS {cols}"
-        )
-    per[sf_dir] = names
-    return names
+    """The ANALYZEd lineitem/orders/part catalog tables, staged once per
+    (app, sf_dir) like _bucketed_pair: stage once, measure the
+    recurring query."""
+
+    def stage() -> tuple[str, str, str]:
+        out = scratch_dir(prefix="ggee_cbo_")
+        names = _staged_names(out, ("lineitem", "orders", "part"))
+        for t, name in names.items():
+            (
+                load_table(spark, sf_dir, t)
+                .write.mode("overwrite")
+                .format("parquet")
+                .option("path", f"{out}/{t}")
+                .saveAsTable(name)
+            )
+            # Column-level stats on exactly the join/filter columns the
+            # reorderer costs — at 100 TB you ANALYZE the handful of keys,
+            # not ALL COLUMNS (a full-scan per column).
+            cols = {
+                "lineitem": "l_orderkey, l_partkey, l_quantity",
+                "orders": "o_orderkey",
+                "part": "p_partkey, p_size",
+            }[t]
+            spark.sql(
+                f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR COLUMNS {cols}"
+            )
+        return tuple(names.values())
+
+    return scoped_value(spark, sf_dir, "cbo_tables", stage)
 
 
 @query(
@@ -3976,7 +3970,7 @@ def q_b_join_cbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     restored before returning (q_b_join_skew_aqe precedent); the
     returned frame is the ≤25-row brand rollup of that execution.
     Exactness: counts + exact-decimal quantity sums. Stats staging is
-    memoized per (session, sf) like the bucketed pair, so repeat runs
+    memoized per (app, sf) like the bucketed pair, so repeat runs
     measure the recurring query, not the one-time ANALYZE."""
     t_li, t_o, t_p = _cbo_tables(spark, sf_dir)
     with conf_window(spark, _CBO_CONFS):

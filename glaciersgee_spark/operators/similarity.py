@@ -97,6 +97,103 @@ def _cos6_rows(av: np.ndarray, bv: np.ndarray) -> np.ndarray:
     return np.round(dots / (na * nb), 6)
 
 
+# The module's vector kernels, one definition per formula. Cosine has
+# two named spellings on purpose: _cos6_rows (row-wise einsum, the
+# per-pair _cos6 UDF's bits) and cos6_panel (one BLAS matmul against a
+# small query panel). Their sums may differ in the last bit before the
+# 6-dp rounding, so each consumer keeps the spelling its oracle parity
+# was proven with; they are never merged.
+
+
+def cos6_panel(v: np.ndarray, qmat: np.ndarray) -> np.ndarray:
+    """(n, q) 6-dp cosines of n rows against a q-row panel as one
+    (n, DIM) @ (DIM, q) matmul."""
+    nv = np.sqrt(np.einsum("ij,ij->i", v, v))
+    nq = np.sqrt(np.einsum("ij,ij->i", qmat, qmat))
+    return np.round((v @ qmat.T) / (nv[:, None] * nq[None, :]), 6)
+
+
+def pq_dist6(v: np.ndarray, c_r: np.ndarray) -> np.ndarray:
+    """(n, K, M) 6-dp squared sub-distances of (n, M, SUB) subspace-split
+    vectors against a (K, M, SUB) sub-codebook: argmin over axis 1 is
+    the PQ code (first minimum = smaller codebook id, the oracle's
+    (d6, cid) rank), min the distortion."""
+    return np.round(((v[:, None] - c_r[None]) ** 2).sum(-1), 6)
+
+
+def adc6(codes: np.ndarray, lut: np.ndarray, acc0=0.0) -> np.ndarray:
+    """6-dp ADC score of (n, M) codes against a (K, M) LUT: acc0 plus
+    the M gathers lut[code_s, s], added in fixed subspace order — the
+    oracle's left-associated sum."""
+    acc = acc0
+    for s in range(codes.shape[1]):
+        acc = acc + lut[codes[:, s], s]
+    return np.round(acc, 6)
+
+
+def _query_panel(e: DataFrame) -> list:
+    """The fixed _RECALL_QIDS query rows (vec_id, embedding) in vec_id
+    order — a bounded 5-row collect at plan build."""
+    return sorted(
+        e.where(F.col("vec_id").isin(list(_RECALL_QIDS)))
+        .select("vec_id", "embedding")
+        .collect(),
+        key=lambda r: r.vec_id,
+    )
+
+
+def _query_rows(e: DataFrame) -> DataFrame:
+    """(qid, embedding): the _RECALL_QIDS query rows as a frame — the
+    ``rows`` side of a panel probe through top_cells."""
+    return e.where(F.col("vec_id").isin(list(_RECALL_QIDS))).select(
+        F.col("vec_id").alias("qid"), "embedding"
+    )
+
+
+def panel_rows(
+    frame: DataFrame, qrows: list, kernel_col, name: str = "score"
+) -> DataFrame:
+    """(qid, vec_id, <name>): explode a panel kernel's array column
+    (one value per query row, in qrows order) over a vec_id frame, map
+    each position to its query id, and drop the self-pairs."""
+    qid_lits = F.array(*[F.lit(int(r.vec_id)).cast("long") for r in qrows])
+    return (
+        frame.select("vec_id", F.posexplode(kernel_col).alias("qidx", name))
+        .select(F.element_at(qid_lits, F.col("qidx") + 1).alias("qid"), "vec_id", name)
+        .where(F.col("vec_id") != F.col("qid"))
+    )
+
+
+def _seed_cells(e: DataFrame, k: int) -> DataFrame:
+    """(cid, cemb): the deterministic seed centroids, vec_id 1..k."""
+    return e.where(F.col("vec_id").between(1, k)).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
+    )
+
+
+def top_cells(rows: DataFrame, cent: DataFrame, by, n: int) -> DataFrame:
+    """(*by, cid, cs, rk): the n nearest cells of each ``by`` group.
+    Every (…, embedding) row is scored against every broadcast (cid,
+    cemb) centroid with _cos6 and ranked by row_number over ``by``
+    ordered ``cs DESC, cid ASC`` — ties go to the smaller cid and NaN
+    ranks first, as in every oracle's cell CTE. n=1 with by=vec_id is
+    a vector's cell; n=nprobe with by=qid a query's probe list. With
+    ``by=()`` the ranking is global and is spelled orderBy().limit(n)
+    (a TakeOrderedAndProject, never a one-partition window), so its
+    rows carry no rk."""
+    by = [by] if isinstance(by, str) else list(by)
+    scored = rows.join(F.broadcast(cent)).select(
+        *by, "cid", _cos6("embedding", "cemb").alias("cs")
+    )
+    order = (F.col("cs").desc(), F.col("cid").asc())
+    if not by:
+        return scored.orderBy(*order).limit(n)
+    rk = F.row_number().over(Window.partitionBy(*by).orderBy(*order))
+    # n=1 filters on equality, the form of every oracle's `rk = 1` cell CTE
+    keep = F.col("rk") == 1 if n == 1 else F.col("rk") <= n
+    return scored.withColumn("rk", rk).where(keep)
+
+
 _PAIR_SCHEMA = "vec_id long, cid long, nbr long, cs double"
 
 
@@ -439,28 +536,12 @@ def q_e_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (score, cid) tie-break is bit-identical across both engines.
     """
     e = load_table(spark, sf_dir, "embeddings")
-    cent = e.where(F.col("vec_id").between(1, IVF_NLIST)).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
-    )
-    scored_c = (
-        e.where(F.col("vec_id") != 0)
-        .join(F.broadcast(cent))
-        .select("vec_id", "cid", _cos6("embedding", "cemb").alias("cscore"))
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cscore").desc(), F.col("cid").asc())
-    cell = (
-        scored_c.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .select("vec_id", "cid")
+    cent = _seed_cells(e, IVF_NLIST)
+    cell = top_cells(e.where(F.col("vec_id") != 0), cent, "vec_id", 1).select(
+        "vec_id", "cid"
     )
     q = e.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qemb"))
-    probe = (
-        cent.join(F.broadcast(q))
-        .select("cid", _cos6("cemb", "qemb").alias("qscore"))
-        .orderBy(F.col("qscore").desc(), F.col("cid").asc())
-        .limit(IVF_NPROBE)
-        .select("cid")
-    )
+    probe = top_cells(e.where(F.col("vec_id") == 0), cent, (), IVF_NPROBE).select("cid")
     return (
         cell.join(F.broadcast(probe), "cid")
         .join(e, "vec_id")
@@ -617,29 +698,15 @@ def _panel_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rank read these scores — vectors cross the Python boundary once
     instead of once per (query, consumer)."""
     e = load_table(spark, sf_dir, "embeddings")
-    qrows = sorted(
-        e.where(F.col("vec_id").isin(list(_RECALL_QIDS)))
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r.vec_id,
-    )
+    qrows = _query_panel(e)
     qmat = np.array([r.embedding for r in qrows], dtype=np.float64)
-    qn = np.sqrt(np.einsum("ij,ij->i", qmat, qmat))
-    qid_lits = F.array(*[F.lit(int(r.vec_id)).cast("long") for r in qrows])
 
     @F.pandas_udf(ArrayType(DoubleType()))
     def _cos_panel(emb: pd.Series) -> pd.Series:
-        v = _to_mat(emb)
-        nv = np.sqrt(np.einsum("ij,ij->i", v, v))
-        sc = np.round((v @ qmat.T) / (nv[:, None] * qn[None, :]), 6)
-        return pd.Series(sc.tolist())
+        return pd.Series(cos6_panel(_to_mat(emb), qmat).tolist())
 
     ef = fan_out(e.select("vec_id", "embedding"), "vec_id")
-    s = ef.select("vec_id", F.posexplode(_cos_panel("embedding")).alias("qidx", "score"))
-    return s.select(
-        F.element_at(qid_lits, F.col("qidx") + 1).alias("qid"), "vec_id", "score"
-    ).where(F.col("vec_id") != F.col("qid"))
-
+    return panel_rows(ef, qrows, _cos_panel("embedding"))
 
 
 def _panel_scores_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -945,37 +1012,10 @@ def q_e_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     are a 5×16 broadcast rank; exact side is the shared 5-row
     broadcast cross score."""
     e = load_table(spark, sf_dir, "embeddings")
-    cent = e.where(F.col("vec_id").between(1, IVF_NLIST)).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
-    )
-    cell = (
-        fan_out(e, "vec_id")
-        .join(F.broadcast(cent))
-        .select("vec_id", "cid", _cos6("embedding", "cemb").alias("cscore"))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(
-                    F.col("cscore").desc(), F.col("cid").asc()
-                )
-            ),
-        )
-        .where(F.col("rk") == 1)
-        .select("vec_id", "cid")
-    )
+    cent = _seed_cells(e, IVF_NLIST)
+    cell = top_cells(fan_out(e, "vec_id"), cent, "vec_id", 1).select("vec_id", "cid")
     cell = scoped_persist(cell, spark, sf_dir, "ivf_recall_cell")
-    qids = list(_RECALL_QIDS)
-    qv = e.where(F.col("vec_id").isin(qids)).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qemb")
-    )
-    wq = Window.partitionBy("qid").orderBy(F.col("qscore").desc(), F.col("cid").asc())
-    probe = (
-        cent.join(F.broadcast(qv))
-        .select("qid", "cid", _cos6("cemb", "qemb").alias("qscore"))
-        .withColumn("rk", F.row_number().over(wq))
-        .where(F.col("rk") <= IVF_NPROBE)
-        .select("qid", "cid")
-    )
+    probe = top_cells(_query_rows(e), cent, "qid", IVF_NPROBE).select("qid", "cid")
     cand = (
         cell.join(F.broadcast(probe), "cid")
         .where(F.col("vec_id") != F.col("qid"))
@@ -1180,14 +1220,8 @@ def _pq_adc_kernel(e):
 
     @F.pandas_udf(DoubleType())
     def _adc6(emb: pd.Series) -> pd.Series:
-        v = _to_mat(emb)
-        v_r = v.reshape(-1, PQ_M, PQ_SUBDIM)
-        d = np.round(((v_r[:, None, :, :] - c_r[None, :, :, :]) ** 2).sum(-1), 6)
-        codes = d.argmin(axis=1)
-        acc = np.zeros(len(v))
-        for s in range(PQ_M):
-            acc = acc + lut[codes[:, s], s]
-        return pd.Series(np.round(acc, 6))
+        v_r = _to_mat(emb).reshape(-1, PQ_M, PQ_SUBDIM)
+        return pd.Series(adc6(pq_dist6(v_r, c_r).argmin(axis=1), lut))
 
     return _adc6
 
@@ -1340,37 +1374,23 @@ def q_e_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     is dropped after scoring), matching the oracle's dists CTE."""
     e = load_table(spark, sf_dir, "embeddings")
     _cb, c_r = _pq_fixture(e)
-    qrows = sorted(
-        e.where(F.col("vec_id").isin(list(_RECALL_QIDS)))
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r.vec_id,
-    )
+    qrows = _query_panel(e)
     qmats = np.array([r.embedding for r in qrows], dtype=np.float64).reshape(
         len(qrows), PQ_M, PQ_SUBDIM
     )
     luts = np.round(np.einsum("qsj,csj->qcs", qmats, c_r), 6)  # (5, 16, 8)
-    qid_lits = F.array(*[F.lit(int(r.vec_id)).cast("long") for r in qrows])
 
     @F.pandas_udf(ArrayType(DoubleType()))
     def _adc_panel(emb: pd.Series) -> pd.Series:
         v = _to_mat(emb).reshape(-1, PQ_M, PQ_SUBDIM)
-        d = np.round(((v[:, None, :, :] - c_r[None, :, :, :]) ** 2).sum(-1), 6)
-        codes = d.argmin(axis=1)  # (n, 8)
+        codes = pq_dist6(v, c_r).argmin(axis=1)  # (n, 8)
         out = np.zeros((len(v), len(luts)))
         for qi in range(len(luts)):
-            acc = np.zeros(len(v))
-            for s in range(PQ_M):  # fixed order == oracle left-assoc
-                acc = acc + luts[qi][codes[:, s], s]
-            out[:, qi] = np.round(acc, 6)
+            out[:, qi] = adc6(codes, luts[qi])
         return pd.Series(out.tolist())
 
     ef = fan_out(e.select("vec_id", "embedding"), "vec_id")
-    adc = (
-        ef.select("vec_id", F.posexplode(_adc_panel("embedding")).alias("qidx", "adc6"))
-        .select(F.element_at(qid_lits, F.col("qidx") + 1).alias("qid"), "vec_id", "adc6")
-        .where(F.col("vec_id") != F.col("qid"))
-    )
+    adc = panel_rows(ef, qrows, _adc_panel("embedding"), "adc6")
     rk_a = Window.partitionBy("qid").orderBy(F.col("adc6").desc(), F.col("vec_id").asc())
     approx = (
         adc.withColumn("rk", F.row_number().over(rk_a))
@@ -1488,14 +1508,8 @@ def q_e_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     only in a deployment — here the encode+score fuse into one pass
     because the corpus fits a single scan."""
     e = load_table(spark, sf_dir, "embeddings")
-    crows = sorted(
-        e.where(F.col("vec_id").between(1, IVF_NLIST))
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r.vec_id,
-    )
-    c_mat = np.array([r.embedding for r in crows], dtype=np.float64)
-    c_nrm = np.sqrt(np.einsum("ij,ij->i", c_mat, c_mat))
+    crows = sorted(_seed_cells(e, IVF_NLIST).collect(), key=lambda r: r.cid)
+    c_mat = np.array([r.cemb for r in crows], dtype=np.float64)
     c_r = c_mat.reshape(IVF_NLIST, PQ_M, PQ_SUBDIM)
     qrow = e.where(F.col("vec_id") == 0).select("embedding").collect()[0]
     q_v = np.array(qrow.embedding, dtype=np.float64)
@@ -1506,17 +1520,11 @@ def q_e_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     @F.pandas_udf(DoubleType())
     def _radc6(emb: pd.Series) -> pd.Series:
         v = _to_mat(emb)
-        nv = np.sqrt(np.einsum("ij,ij->i", v, v))
-        cs = np.round((v @ c_mat.T) / (nv[:, None] * c_nrm[None, :]), 6)
         # argmax with cid-asc tie-break == first maximum
-        cell = cs.argmax(axis=1)
+        cell = cos6_panel(v, c_mat).argmax(axis=1)
         r = (v - c_mat[cell]).reshape(-1, PQ_M, PQ_SUBDIM)
-        d = np.round(((r[:, None, :, :] - c_r[None, :, :, :]) ** 2).sum(-1), 6)
-        codes = d.argmin(axis=1)
-        acc = qc_all[cell].copy()
-        for s in range(PQ_M):  # fixed order == oracle left-assoc
-            acc = acc + lut[codes[:, s], s]
-        return pd.Series(np.round(acc, 6))
+        codes = pq_dist6(r, c_r).argmin(axis=1)
+        return pd.Series(adc6(codes, lut, qc_all[cell]))
 
     ef = fan_out(e.where(F.col("vec_id") != 0), "vec_id")
     qv = e.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qemb"))
@@ -1560,10 +1568,9 @@ def _km_assign(spark: SparkSession, sf_dir: str):
     (cosine argmax, ties to the smaller cid) + the K-row centroid
     table. The Spark twin of _KM_CTES."""
     e = load_table(spark, sf_dir, "embeddings")
-    cent = e.where(F.col("vec_id").between(1, KM_K)).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
-    )
-    return _cell_assign(e.select("vec_id", "embedding"), cent), cent
+    cent = _seed_cells(e, KM_K)
+    rows = e.select("vec_id", "embedding")
+    return top_cells(rows, cent, "vec_id", 1).select("vec_id", "cid"), cent
 
 
 
@@ -1792,20 +1799,18 @@ def _kmt_train(spark: SparkSession, sf_dir: str, where: str | None = None):
 def _kmt_lloyd(spark: SparkSession, sf_dir: str, where: str | None):
     """Each round is one assignment pass (the _kmt_assign Arrow kernel),
     one (cid, d) mean aggregate whose count(*) is the cell size, and
-    one stats aggregate over the broadcast old panel that also
-    collects the new centroid per cell — so a single collect() per
-    round returns both the stats rows and the next centroids. The old
-    panel is a tables.local_frame (a JVM LocalRelation), so its
-    broadcast job is a JVM-side collect with no Python task."""
+    one stats aggregate that also collects the new centroid per cell —
+    so a single collect() per round returns both the stats rows and
+    the next centroids: 3 jobs per round, 10 for the cold build with
+    the seed collect. The old centroids the shift is measured against
+    are a map literal of the round's closed-over panel, so no frame is
+    joined or broadcast for them."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     if where is not None:
         e = e.where(F.expr(where))
-    seeds = sorted(
-        e.where(F.col("vec_id").between(1, KM_K)).collect(),
-        key=lambda r: r.vec_id,
-    )
+    seeds = sorted(_seed_cells(e, KM_K).collect(), key=lambda r: r.cid)
     cent: list[tuple[int, list[float]]] = [
-        (int(r.vec_id), [float(x) for x in r.embedding]) for r in seeds
+        (int(r.cid), [float(x) for x in r.cemb]) for r in seeds
     ]
     stats_rows: list[tuple] = []
     for rnd in range(1, KMT_ROUNDS + 1):
@@ -1820,13 +1825,16 @@ def _kmt_lloyd(spark: SparkSession, sf_dir: str, where: str | None):
                 F.count(F.lit(1)).alias("n_assigned"),
             )
         )
-        old = local_frame(
-            spark,
-            [(cid, d + 1, v) for cid, arr in cent for d, v in enumerate(arr)],
-            "cid long, d int, ov double",
+        # ov = the old centroid's d-th value, looked up in a cid → vector
+        # map literal of the closed-over centroids. repr round-trips each
+        # double exactly; one SQL parse takes ~1 ms where building 512
+        # F.lit columns takes ~0.3 s of Py4J calls (4-vCPU VM)
+        old = ", ".join(
+            f"{cid}L, array({', '.join(f'{float(v)!r}D' for v in arr)})"
+            for cid, arr in cent
         )
         rows = (
-            newc.join(F.broadcast(old), ["cid", "d"])
+            newc.withColumn("ov", F.expr(f"element_at(element_at(map({old}), cid), d)"))
             .groupBy("cid", "n_assigned")
             .agg(
                 F.round(
@@ -1869,15 +1877,14 @@ def q_e_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent). Per round the corpus is read ONCE: the _kmt_assign
     Arrow kernel scores each vector against the panel it closes over,
     with _cos6's bits, and emits (cid, embedding) straight into the
-    posexplode mean agg, whose count(*) is the cell size; the 512-row
-    (cid, d) result meets the broadcast old panel in the stats agg,
-    which also collects each cell's new centroid — so one collect()
-    per round, 4 jobs (13 for the cold build with the seed collect),
-    and nothing persisted. The old panel and this result are
-    tables.local_frame relations: the panel broadcast is a JVM collect
-    of a local relation and the result a LocalTableScan, neither runs
-    a Python task. Empty cells shrink K identically in both engines
-    (no re-seeding — documented Lloyd behavior)."""
+    posexplode mean agg, whose count(*) is the cell size; the stats agg
+    reads each (cid, d)'s old value from a literal of the closed-over
+    panel and also collects each cell's new centroid — so one collect()
+    per round, 3 jobs (10 for the cold build with the seed collect),
+    and nothing persisted. The result is a tables.local_frame relation
+    (a LocalTableScan, no Python task). Empty cells shrink K
+    identically in both engines (no re-seeding — documented Lloyd
+    behavior)."""
     from pyspark.sql import types as T
 
     stats_rows, _cent = _kmt_train(spark, sf_dir)
@@ -2213,37 +2220,10 @@ def q_e_ann_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; the 5×16 probe ranking is constant-sized. Nothing here
     touches raw vectors beyond the one assignment pass."""
     e = load_table(spark, sf_dir, "embeddings")
-    cent = e.where(F.col("vec_id").between(1, IVF_NLIST)).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
-    )
-    scored = e.join(F.broadcast(cent)).select(
-        "vec_id", "cid", _cos6("embedding", "cemb").alias("cscore")
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cscore").desc(), F.col("cid").asc()
-    )
-    cell = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .select("vec_id", "cid")
-    )
+    cent = _seed_cells(e, IVF_NLIST)
+    cell = top_cells(e, cent, "vec_id", 1).select("vec_id", "cid")
     sizes = cell.groupBy("cid").agg(F.count(F.lit(1)).alias("n"))
-    qs = e.where(F.col("vec_id").isin(list(_RECALL_QIDS))).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qemb")
-    )
-    wq = Window.partitionBy("qid")
-    probes = (
-        cent.join(F.broadcast(qs))
-        .select("qid", "cid", _cos6("cemb", "qemb").alias("qscore"))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                wq.orderBy(F.col("qscore").desc(), F.col("cid").asc())
-            ),
-        )
-        .where(F.col("rk") <= IVF_NPROBE)
-        .select("qid", "cid")
-    )
+    probes = top_cells(_query_rows(e), cent, "qid", IVF_NPROBE).select("qid", "cid")
     tot = cell.agg(F.count(F.lit(1)).alias("n_total"))
     return (
         probes.join(sizes, "cid")
@@ -2572,28 +2552,12 @@ def q_e_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded codebook/query panels (16+1 rows), per the module
     convention."""
     e = load_table(spark, sf_dir, "embeddings")
-    cent = e.where(F.col("vec_id").between(1, IVF_NLIST)).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
-    )
-    scored_c = (
-        e.where(F.col("vec_id") != 0)
-        .join(F.broadcast(cent))
-        .select("vec_id", "cid", _cos6("embedding", "cemb").alias("cscore"))
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cscore").desc(), F.col("cid").asc())
-    cell = (
-        scored_c.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .select("vec_id", "cid")
+    cent = _seed_cells(e, IVF_NLIST)
+    cell = top_cells(e.where(F.col("vec_id") != 0), cent, "vec_id", 1).select(
+        "vec_id", "cid"
     )
     qv = e.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qemb"))
-    probe = (
-        cent.join(F.broadcast(qv))
-        .select("cid", _cos6("cemb", "qemb").alias("qscore"))
-        .orderBy(F.col("qscore").desc(), F.col("cid").asc())
-        .limit(IVF_NPROBE)
-        .select("cid")
-    )
+    probe = top_cells(e.where(F.col("vec_id") == 0), cent, (), IVF_NPROBE).select("cid")
     _adc6 = _pq_adc_kernel(e)
     cand = cell.join(F.broadcast(probe), "cid").select("vec_id")
     ef = fan_out(e.join(cand, "vec_id"), "vec_id")
@@ -3007,37 +2971,11 @@ def q_e_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted n_cand per probe level is the cost axis of the same
     curve."""
     e = load_table(spark, sf_dir, "embeddings")
-    cent = e.where(F.col("vec_id").between(1, IVF_NLIST)).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
-    )
-    cell = (
-        fan_out(e, "vec_id")
-        .join(F.broadcast(cent))
-        .select("vec_id", "cid", _cos6("embedding", "cemb").alias("cscore"))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(
-                    F.col("cscore").desc(), F.col("cid").asc()
-                )
-            ),
-        )
-        .where(F.col("rk") == 1)
-        .select("vec_id", "cid")
-    )
-    qids = list(_RECALL_QIDS)
-    qv = e.where(F.col("vec_id").isin(qids)).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qemb")
-    )
-    wq = Window.partitionBy("qid").orderBy(
-        F.col("qscore").desc(), F.col("cid").asc()
-    )
-    qrk = (
-        cent.join(F.broadcast(qv))
-        .select("qid", "cid", _cos6("cemb", "qemb").alias("qscore"))
-        .withColumn("prank", F.row_number().over(wq))
-        .where(F.col("prank") <= max(_PROBE_GRID))
-        .select("qid", "cid", "prank")
+    cent = _seed_cells(e, IVF_NLIST)
+    cell = top_cells(fan_out(e, "vec_id"), cent, "vec_id", 1).select("vec_id", "cid")
+    qv = _query_rows(e)
+    qrk = top_cells(qv, cent, "qid", max(_PROBE_GRID)).select(
+        "qid", "cid", F.col("rk").alias("prank")
     )
     cand = (
         cell.join(F.broadcast(qrk), "cid")
@@ -3697,8 +3635,7 @@ def q_e_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     @F.pandas_udf(ArrayType(DoubleType()))
     def _min_dists(emb: pd.Series) -> pd.Series:
         v_r = _to_mat(emb).reshape(-1, PQ_M, PQ_SUBDIM)
-        d = np.round(((v_r[:, None, :, :] - c_r[None, :, :, :]) ** 2).sum(-1), 6)
-        return pd.Series(d.min(axis=1).tolist())
+        return pd.Series(pq_dist6(v_r, c_r).min(axis=1).tolist())
 
     ef = fan_out(e.where(F.col("vec_id") != 0), "vec_id")
     mins = ef.select(
@@ -3810,12 +3747,7 @@ def q_e_int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     _quant floors its scale so even a stray zero row yields zero
     codes, never NaN."""
     e = load_table(spark, sf_dir, "embeddings")
-    qrows = sorted(
-        e.where(F.col("vec_id").isin(list(_RECALL_QIDS)))
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r.vec_id,
-    )
+    qrows = _query_panel(e)
     if any(max(abs(float(x)) for x in r.embedding) == 0.0 for r in qrows):
         raise ValueError(
             "q_e_int8_recall: a fixed-panel query vector is zero-norm — "
@@ -3831,17 +3763,10 @@ def q_e_int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         return np.clip(q, -127.0, 127.0)
 
     qmat = _quant(np.array([r.embedding for r in qrows], dtype=np.float64))
-    qs2 = np.einsum("ij,ij->i", qmat, qmat)
-    qid_lits = F.array(*[F.lit(int(r.vec_id)).cast("long") for r in qrows])
 
     @F.pandas_udf(ArrayType(DoubleType()))
     def _i8_panel(emb: pd.Series) -> pd.Series:
-        v = _quant(_to_mat(emb))
-        s2 = np.einsum("ij,ij->i", v, v)
-        sc = np.round(
-            (v @ qmat.T) / (np.sqrt(s2)[:, None] * np.sqrt(qs2)[None, :]), 6
-        )
-        return pd.Series(sc.tolist())
+        return pd.Series(cos6_panel(_quant(_to_mat(emb)), qmat).tolist())
 
     ef = fan_out(
         e.select("vec_id", "embedding").where(
@@ -3850,13 +3775,7 @@ def q_e_int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "vec_id",
     )
-    s = ef.select(
-        "vec_id", F.posexplode(_i8_panel("embedding")).alias("qidx", "score")
-    ).select(
-        F.element_at(qid_lits, F.col("qidx") + 1).alias("qid"),
-        "vec_id",
-        "score",
-    ).where(F.col("vec_id") != F.col("qid"))
+    s = panel_rows(ef, qrows, _i8_panel("embedding"))
     rk = Window.partitionBy("qid").orderBy(
         F.col("score").desc(), F.col("vec_id").asc()
     )
@@ -3973,35 +3892,9 @@ def q_e_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     _stats, cent = _kmt_train(spark, sf_dir)
     cdf = local_frame(spark, cent, "cid long, cemb array<double>")
-    cell = (
-        fan_out(e.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(cdf))
-        .select("vec_id", "cid", _cos6("embedding", "cemb").alias("cscore"))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(
-                    F.col("cscore").desc(), F.col("cid").asc()
-                )
-            ),
-        )
-        .where(F.col("rk") == 1)
-        .select("vec_id", "cid")
-    )
-    qids = list(_RECALL_QIDS)
-    qv = e.where(F.col("vec_id").isin(qids)).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qemb")
-    )
-    wq = Window.partitionBy("qid").orderBy(
-        F.col("qscore").desc(), F.col("cid").asc()
-    )
-    probe = (
-        qv.join(F.broadcast(cdf))
-        .select("qid", "cid", _cos6("qemb", "cemb").alias("qscore"))
-        .withColumn("rk", F.row_number().over(wq))
-        .where(F.col("rk") <= IVT_NPROBE)
-        .select("qid", "cid")
-    )
+    rows = fan_out(e.select("vec_id", "embedding"), "vec_id")
+    cell = top_cells(rows, cdf, "vec_id", 1).select("vec_id", "cid")
+    probe = top_cells(_query_rows(e), cdf, "qid", IVT_NPROBE).select("qid", "cid")
     cand = (
         cell.join(F.broadcast(probe), "cid")
         .where(F.col("vec_id") != F.col("qid"))
@@ -4104,21 +3997,8 @@ def q_e_cluster_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
     asg, _cent = _km_assign(spark, sf_dir)
     _stats, cent = _kmt_train(spark, sf_dir)
     cdf = local_frame(spark, cent, "cid long, cemb array<double>")
-    cell = (
-        fan_out(e.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(cdf))
-        .select("vec_id", "cid", _cos6("embedding", "cemb").alias("cscore"))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(
-                    F.col("cscore").desc(), F.col("cid").asc()
-                )
-            ),
-        )
-        .where(F.col("rk") == 1)
-        .select("vec_id", F.col("cid").alias("cb"))
-    )
+    rows = fan_out(e.select("vec_id", "embedding"), "vec_id")
+    cell = top_cells(rows, cdf, "vec_id", 1).select("vec_id", F.col("cid").alias("cb"))
     pairs = (
         asg.select("vec_id", F.col("cid").alias("ca"))
         .join(cell, "vec_id")
@@ -4185,9 +4065,10 @@ def stage_ivf_index(spark: SparkSession, sf_dir: str) -> str:
         cdf = local_frame(spark, cent, "cid long, cemb array<double>")
         cdf.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/centroids")
         e = load_table(spark, sf_dir, "embeddings")
-        _coarse_assign(e, cdf).write.mode("overwrite").parquet(
-            f"{tmp}/postings"
-        )
+        rows = fan_out(e.select("vec_id", "embedding"), "vec_id")
+        top_cells(rows, cdf, "vec_id", 1).select("cid", "vec_id").write.mode(
+            "overwrite"
+        ).parquet(f"{tmp}/postings")
         # --- PQ artifacts (r9, VERDICT r8 item 2 — the FAISS IVFADC
         # production shape): the 16-entry sub-codebook and the 8-byte
         # code per vector, so a serving job can ADC-score candidates
@@ -4206,28 +4087,6 @@ def stage_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     return tmpdirs.staged(sf_dir, "embeddings", "ggee_ivf_index", build, "i2")
 
 
-def _coarse_assign(e: DataFrame, cdf: DataFrame) -> DataFrame:
-    """(cid, vec_id): cosine-argmax cell of each vector against the
-    (broadcast) coarse codebook — the ONE encode spelling shared by the
-    full build, the base build, and the round-10 delta ingest, so the
-    three can never desynchronize."""
-    return (
-        fan_out(e.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(cdf))
-        .select("vec_id", "cid", _cos6("embedding", "cemb").alias("cscore"))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(
-                    F.col("cscore").desc(), F.col("cid").asc()
-                )
-            ),
-        )
-        .where(F.col("rk") == 1)
-        .select("cid", "vec_id")
-    )
-
-
 def _pq_encode(e: DataFrame, c_r) -> DataFrame:
     """(vec_id, codes): the proven 6-dp argmin PQ encode (first-min
     tie ≡ the oracle's (d6, pcid) rank) against the (PQ_K, PQ_M,
@@ -4237,8 +4096,7 @@ def _pq_encode(e: DataFrame, c_r) -> DataFrame:
     @F.pandas_udf(ArrayType(LongType()))
     def _codes(emb: pd.Series) -> pd.Series:
         v = _to_mat(emb).reshape(-1, PQ_M, PQ_SUBDIM)
-        d = np.round(((v[:, None, :, :] - c_r[None, :, :, :]) ** 2).sum(-1), 6)
-        return pd.Series(list(d.argmin(axis=1) + 1))  # cid is 1-based
+        return pd.Series(list(pq_dist6(v, c_r).argmin(axis=1) + 1))  # cid is 1-based
 
     return fan_out(e.select("vec_id", "embedding"), "vec_id").select(
         "vec_id", _codes("embedding").alias("codes")
@@ -4314,20 +4172,7 @@ def q_e_ivf_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     cdf = spark.read.parquet(f"{staged}/centroids")
     postings = spark.read.parquet(f"{staged}/postings")
     e = load_table(spark, sf_dir, "embeddings")
-    qids = list(_RECALL_QIDS)
-    qv = e.where(F.col("vec_id").isin(qids)).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qemb")
-    )
-    wq = Window.partitionBy("qid").orderBy(
-        F.col("qscore").desc(), F.col("cid").asc()
-    )
-    probe = (
-        qv.join(F.broadcast(cdf))
-        .select("qid", "cid", _cos6("qemb", "cemb").alias("qscore"))
-        .withColumn("rk", F.row_number().over(wq))
-        .where(F.col("rk") <= IVT_NPROBE)
-        .select("qid", "cid")
-    )
+    probe = top_cells(_query_rows(e), cdf, "qid", IVT_NPROBE).select("qid", "cid")
     cand = (
         postings.join(F.broadcast(probe), "cid")
         .where(F.col("vec_id") != F.col("qid"))
@@ -4544,18 +4389,9 @@ def _ivfpq_serve_frames(
     serve."""
     gcols = ["gen"] if gen_keyed else []
     e = load_table(spark, sf_dir, "embeddings")
-    qv = e.where(F.col("vec_id").isin(list(_RECALL_QIDS))).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qemb")
-    )
-    wq = Window.partitionBy(*gcols, "qid").orderBy(
-        F.col("qscore").desc(), F.col("cid").asc()
-    )
-    probe = (
-        qv.join(F.broadcast(cdf))
-        .select(*gcols, "qid", "cid", _cos6("qemb", "cemb").alias("qscore"))
-        .withColumn("rk", F.row_number().over(wq))
-        .where(F.col("rk") <= IVT_NPROBE)
-        .select(*gcols, "qid", "cid")
+    qv = _query_rows(e)
+    probe = top_cells(qv, cdf, gcols + ["qid"], IVT_NPROBE).select(
+        *gcols, "qid", "cid"
     )
     cand = (
         postings.join(F.broadcast(probe), gcols + ["cid"])
@@ -4570,7 +4406,7 @@ def _ivfpq_serve_frames(
             "qid",
             "pcid",
             *[
-                F.expr(_pq_lut6a("qemb", "cemb", s, spark_dialect=True)).alias(
+                F.expr(_pq_lut6a("embedding", "cemb", s, spark_dialect=True)).alias(
                     f"l{s}"
                 )
                 for s in range(PQ_M)
@@ -4710,9 +4546,10 @@ def stage_ivf_base_index(spark: SparkSession, sf_dir: str) -> str:
         cdf.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/centroids")
         e = load_table(spark, sf_dir, "embeddings")
         base = e.where(F.expr(_APPEND_BASE))
-        _coarse_assign(base, cdf).write.mode("overwrite").parquet(
-            f"{tmp}/postings"
-        )
+        rows = fan_out(base.select("vec_id", "embedding"), "vec_id")
+        top_cells(rows, cdf, "vec_id", 1).select("cid", "vec_id").write.mode(
+            "overwrite"
+        ).parquet(f"{tmp}/postings")
         cb, c_r = _pq_fixture(e)
         cb.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/pq_codebook")
         _pq_encode(base, c_r).write.mode("overwrite").parquet(
@@ -4750,8 +4587,9 @@ def stage_ivfpq_append(spark: SparkSession, sf_dir: str) -> str:
         delta = e.where(F.expr(_APPEND_DELTA))
         # frozen-coarse assignment of the delta slice, unioned with the
         # base postings read straight back from parquet
+        rows = fan_out(delta.select("vec_id", "embedding"), "vec_id")
         spark.read.parquet(f"{base_dir}/postings").unionByName(
-            _coarse_assign(delta, cdf)
+            top_cells(rows, cdf, "vec_id", 1).select("cid", "vec_id")
         ).write.mode("overwrite").parquet(f"{tmp}/postings")
         # frozen-PQ encode: the 16-row sub-codebook is read back from
         # the artifact (bounded collect of an artifact scan, not a
@@ -6212,7 +6050,7 @@ def _beam_edges(members: DataFrame) -> DataFrame:
     membership frame — ONE spelling shared by the in-process search,
     the staged build, and the append's affected-cell re-rank, so the
     build and serve graphs cannot desynchronize (ADVICE r10: the IVF
-    family's _coarse_assign/_pq_encode factoring, applied here).
+    family's top_cells/_pq_encode factoring, applied here).
     O(Σ|cell|²) pair scoring, never O(n²): the pair kernel is keyed
     on cid (round-11: _cell_pair_scores — one Arrow crossing per
     cell, bit-identical scores), so each cell's pairs rank
@@ -6307,25 +6145,6 @@ def _beam_serve(
     )
 
 
-def _cell_assign(e: DataFrame, cent: DataFrame) -> DataFrame:
-    """Nearest-seed cell assignment (6-dp cosine argmax, ties to the
-    smaller cid) of (vec_id, embedding) rows against an explicit
-    (cid, cemb) centroid frame — the _km_assign spelling with the
-    centroids injectable, so the append path can assign against
-    READ-BACK frozen centroids instead of re-deriving them."""
-    scored = e.join(F.broadcast(cent)).select(
-        "vec_id", "cid", _cos6("embedding", "cemb").alias("cs")
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cs").desc(), F.col("cid").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .select("vec_id", "cid")
-    )
-
-
 @query("q_e_graph_beam_search", oracle=_beam_oracle())
 def q_e_graph_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GRAPH-ANN greedy beam search (round 10) — the HNSW/NSW layer-0
@@ -6414,12 +6233,10 @@ def stage_beam_base_graph(spark: SparkSession, sf_dir: str) -> str:
     def build(tmp: str) -> None:
         e = load_table(spark, sf_dir, "embeddings")
         base = e.where(F.expr(_APPEND_BASE))
-        cent = base.where(F.col("vec_id").between(1, KM_K)).select(
-            F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
-        )
+        cent = _seed_cells(base, KM_K)
         cent.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/centroids")
-        asg = _cell_assign(base.select("vec_id", "embedding"), cent)
-        asg.write.mode("overwrite").parquet(f"{tmp}/postings")
+        asg = top_cells(base.select("vec_id", "embedding"), cent, "vec_id", 1)
+        asg.select("vec_id", "cid").write.mode("overwrite").parquet(f"{tmp}/postings")
         members = (
             spark.read.parquet(f"{tmp}/postings")
             .join(e, "vec_id")
@@ -6439,7 +6256,7 @@ def stage_beam_append(spark: SparkSession, sf_dir: str) -> str:
     cells — pinned in tests/test_plans.py):
 
     1. Delta vectors are coarse-assigned against the READ-BACK frozen
-       centroids (_cell_assign — the exact build spelling).
+       centroids (top_cells — the exact build spelling).
     2. Cells receiving ≥1 delta vector ("affected") get their in-cell
        {_BEAM_DEG}-NN edge lists re-ranked over the UNIONED
        membership — this inserts the delta vectors' forward edges AND
@@ -6471,7 +6288,7 @@ def stage_beam_append(spark: SparkSession, sf_dir: str) -> str:
         e = load_table(spark, sf_dir, "embeddings")
         delta = e.where(F.expr(_APPEND_DELTA)).select("vec_id", "embedding")
         # frozen-centroid assignment of the delta slice → merged postings
-        dasg = _cell_assign(delta, cdf)
+        dasg = top_cells(delta, cdf, "vec_id", 1).select("vec_id", "cid")
         merged_post = bpost.unionByName(dasg)
         merged_post.write.mode("overwrite").parquet(f"{tmp}/postings")
         merged_post = spark.read.parquet(f"{tmp}/postings")

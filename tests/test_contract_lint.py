@@ -185,6 +185,31 @@ def test_artifacts_are_staged_only_through_tmpdirs_staged():
         assert not bad, f"stage artifacts through tmpdirs.staged: {token} at {bad}"
 
 
+def test_vector_kernels_and_memos_have_one_definition():
+    """The PQ sub-distance spelling appears under glaciersgee_spark/
+    only inside similarity.pq_dist6, the query-id literal panel
+    (``qid_lits``) only inside similarity.panel_rows, and the cell-rank
+    order ``cs DESC, cid ASC`` only inside similarity.top_cells: every
+    encoder, panel kernel and cell/probe ranking shares one spelling,
+    so no copy can drift in its tie rule or rounding. And
+    ``WeakKeyDictionary`` appears only in caches.py and tables.py: an
+    operator memo goes through caches.scoped_value, where
+    clear_caches() reaches it."""
+    for token, helper in (
+        (") ** 2).sum(-1)", "pq_dist6"),
+        ("qid_lits", "panel_rows"),
+        ('desc(), F.col("cid").asc()', "top_cells"),
+    ):
+        bad = _hits_outside(token, "operators/similarity.py", helper)
+        assert not bad, f"use similarity.{helper}: {token!r} at {bad}"
+    memos = [
+        hit
+        for hit in _hits_outside("WeakKeyDictionary", "caches.py", "")
+        if not hit.startswith(("caches.py:", "tables.py:"))
+    ]
+    assert not memos, f"memoize through caches.scoped_value: {memos}"
+
+
 _DRIVER_CAP = 50
 
 

@@ -4724,6 +4724,79 @@ def test_kmt_cos6_matches_cos6_bits():
     assert out["cid"].tolist() == best
 
 
+def test_top_cells_agrees_with_kmt_assign(spark):
+    """top_cells(n=1), the frame-level cell ranking, picks the same cell
+    as Lloyd's closure kernel _kmt_assign for every vector against the
+    seed cells — including a constructed exact 6-dp tie, which both
+    must give to the smaller cid."""
+    import numpy as np
+
+    from glaciersgee_spark.operators.similarity import (
+        DIM,
+        KM_K,
+        _kmt_assign,
+        _seed_cells,
+        top_cells,
+    )
+    from glaciersgee_spark.tables import load_table, local_frame
+
+    e = load_table(spark, SF_SMOKE, "embeddings")
+    cent = _seed_cells(e, KM_K)
+    rows = e.select("vec_id", "embedding")
+    got = {r.vec_id: r.cid for r in top_cells(rows, cent, "vec_id", 1).collect()}
+    seeds = [(r.cid, [float(x) for x in r.cemb]) for r in cent.collect()]
+    batch = rows.toPandas()
+    (out,) = list(_kmt_assign(seeds)(iter([batch])))
+    want = dict(zip(batch["vec_id"].tolist(), out["cid"].tolist()))
+    assert len(want) == e.count() and got == want
+
+    v = np.zeros(DIM)
+    v[0] = 1.0
+    far, near = v.copy(), v.copy()
+    far[1], near[1] = 2e-4, 1e-4  # both cosines round to 1.0 at 6 dp
+    tie_rows = local_frame(spark, [(1, list(v))], "vec_id long, embedding array<double>")
+    tie_cent = local_frame(
+        spark, [(7, list(near)), (3, list(far))], "cid long, cemb array<double>"
+    )
+    (r,) = top_cells(tie_rows, tie_cent, "vec_id", 1).collect()
+    assert (r.cid, r.cs, r.rk) == (3, 1.0, 1)
+    (k,) = list(_kmt_assign([(7, list(near)), (3, list(far))])(iter([_emb_batch([v])])))
+    assert k["cid"].tolist() == [3]
+
+
+def test_top_cells_keeps_rank_order(spark):
+    """top_cells(n>1) keeps each group's n best cells, numbered 1..n
+    in (cs DESC, cid ASC) order — checked against a numpy ranking of
+    the _cos6 bits for every panel query against the 16 seed cells."""
+    import numpy as np
+    import pandas as pd
+
+    from glaciersgee_spark.operators.similarity import (
+        IVF_NLIST,
+        _cos6,
+        _query_rows,
+        _seed_cells,
+        top_cells,
+    )
+    from glaciersgee_spark.tables import load_table
+
+    e = load_table(spark, SF_SMOKE, "embeddings")
+    cent = _seed_cells(e, IVF_NLIST).collect()
+    qrows = _query_rows(e).collect()
+    got = top_cells(_query_rows(e), _seed_cells(e, IVF_NLIST), "qid", 4).collect()
+    for q in qrows:
+        cs = _cos6.func(
+            pd.Series([q.embedding] * len(cent)), pd.Series([c.cemb for c in cent])
+        ).to_numpy()
+        ranked = sorted(zip(cs, [c.cid for c in cent]), key=lambda t: (-t[0], t[1]))
+        mine = sorted((r.rk, r.cid, r.cs) for r in got if r.qid == q.qid)
+        assert [rk for rk, _, _ in mine] == [1, 2, 3, 4]
+        assert [(cid, s) for _, cid, s in mine] == [
+            (cid, float(s)) for s, cid in ranked[:4]
+        ]
+        assert np.all(np.diff([s for _, _, s in mine]) <= 0)
+
+
 def test_order_ship_arrow_bucket_kernel_edges():
     """The bucketed cogroup kernel preserves the per-key semantics:
     an order with no line items in the bucket emits nothing (inner
@@ -5019,3 +5092,33 @@ def test_langid_f1_role_explode_edge_cases(spark):
         "xx": (1, 0, 0),   # its one doc went to zz
     }
     assert "zz" not in got  # only-predicted language excluded
+
+
+def test_staged_catalog_layouts_restage_after_clear_caches(spark):
+    """The bucketed pair, the DPP fact layout and the ANALYZEd CBO
+    tables are caches.scoped_value memos: a repeat call serves the
+    staged layout, clear_caches() drops it, the next call stages a
+    fresh one under new names, and each query still matches its
+    oracle on the re-staged layout."""
+    import glaciersgee_spark
+    from glaciersgee_spark.operators.relational import (
+        _bucketed_pair,
+        _cbo_tables,
+        _dpp_fact_path,
+    )
+    from glaciersgee_spark.registry import ORACLE, QUERIES
+    from tests.parity import compare, make_duck
+
+    con = make_duck(SF_SMOKE)
+    stagers = {
+        "q_b_join_bucketed": _bucketed_pair,
+        "q_b_join_dpp": _dpp_fact_path,
+        "q_b_join_cbo": _cbo_tables,
+    }
+    for name, stage in stagers.items():
+        before = stage(spark, SF_SMOKE)
+        assert stage(spark, SF_SMOKE) == before
+        glaciersgee_spark.clear_caches()
+        after = stage(spark, SF_SMOKE)
+        assert after != before
+        assert compare(name, QUERIES[name](spark, SF_SMOKE), ORACLE[name], con) is None

@@ -1773,11 +1773,11 @@ def test_beam_append_repairs_edges_without_rebuild_and_serves_merged(
     from glaciersgee_spark.operators.similarity import (
         _APPEND_BASE,
         _beam_edges,
-        _cell_assign,
         KM_K,
         q_e_beam_append,
         stage_beam_append,
         stage_beam_base_graph,
+        top_cells,
     )
     from glaciersgee_spark.tables import load_table
 
@@ -1792,7 +1792,8 @@ def test_beam_append_repairs_edges_without_rebuild_and_serves_merged(
         .where(F.col("vec_id").between(1, KM_K))
         .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb"))
     )
-    asg = _cell_assign(e.select("vec_id", "embedding"), cent)
+    asg = top_cells(e.select("vec_id", "embedding"), cent, "vec_id", 1)
+    asg = asg.select("vec_id", "cid")
     members = asg.join(e, "vec_id").select("vec_id", "cid", "embedding")
     want = _beam_edges(members)
     got = spark.read.parquet(f"{merged}/edges")
