@@ -205,6 +205,67 @@ _CLS_STOPWORDS = ("the", "a", "of", "and", "to", "in")
 _STOP_IN = ", ".join(f"'{s}'" for s in _CLS_STOPWORDS)
 
 
+def _quality_features(spark: SparkSession, sf_dir: str, *keep: str) -> DataFrame:
+    """(*keep, n_tokens, distinct_ratio, stop_ratio, avg_token_len): the
+    quality classifier's per-doc features over space-split tokens —
+    the one Spark spelling of every oracle's ``feat`` CTE."""
+    d = load_table(spark, sf_dir, "documents")
+    words = F.split("text", " ")
+    n_tok = F.size(words)
+    stop_arr = F.array(*[F.lit(s) for s in _CLS_STOPWORDS])
+    return d.select(
+        *keep,
+        n_tok.cast("long").alias("n_tokens"),
+        (F.size(F.array_distinct(words)).cast("double") / n_tok).alias(
+            "distinct_ratio"
+        ),
+        (
+            F.size(F.filter(words, lambda x: F.array_contains(stop_arr, x))).cast(
+                "double"
+            )
+            / n_tok
+        ).alias("stop_ratio"),
+        ((F.col("n_chars") - (n_tok - 1)).cast("double") / n_tok).alias(
+            "avg_token_len"
+        ),
+    )
+
+
+def _quality_logit():
+    """The fixed-weight logit over _quality_features' columns, rounded
+    at 6 dp before any sigmoid (SURVEY.md §7.4)."""
+    return F.round(
+        F.lit(_W0)
+        + F.lit(_W_LEN) * (F.col("n_tokens").cast("double") / 100.0)
+        + F.lit(_W_DISTINCT) * F.col("distinct_ratio")
+        + F.lit(_W_STOP) * F.col("stop_ratio")
+        + F.lit(_W_TOKLEN) * (F.col("avg_token_len") / 10.0),
+        6,
+    )
+
+
+def _quality_gold():
+    """The gopher-lite gold label (1/0) over _quality_features' columns:
+    length band, mean-token-length band and stopword floor."""
+    return (
+        F.col("n_tokens").between(10, 5000)
+        & F.col("avg_token_len").between(2.5, 10.0)
+        & (F.col("stop_ratio") >= 0.02)
+    ).cast("int")
+
+
+def _quality_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(score, gold): every doc's 6-dp sigmoid quality score next to
+    its gold label — the frame the calibration audits bin and rank."""
+    feat = _quality_features(spark, sf_dir)
+    return feat.select(
+        F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-_quality_logit())), 6).alias(
+            "score"
+        ),
+        _quality_gold().alias("gold"),
+    )
+
+
 @query(
     "q_e_quality_classifier",
     oracle=f"""
@@ -244,37 +305,10 @@ def q_e_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     logit is rounded at 6 dp before the sigmoid (and the sigmoid
     re-rounded) per the cross-engine libm contract of SURVEY.md §7.4.
     """
-    d = load_table(spark, sf_dir, "documents")
-    words = F.split("text", " ")
-    n_tok = F.size(words)
-    stop_arr = F.array(*[F.lit(s) for s in _CLS_STOPWORDS])
-    feat = d.select(
-        "doc_id",
-        n_tok.cast("long").alias("n_tokens"),
-        (F.size(F.array_distinct(words)).cast("double") / n_tok).alias(
-            "distinct_ratio"
-        ),
-        (
-            F.size(F.filter(words, lambda x: F.array_contains(stop_arr, x))).cast(
-                "double"
-            )
-            / n_tok
-        ).alias("stop_ratio"),
-        ((F.col("n_chars") - (n_tok - 1)).cast("double") / n_tok).alias(
-            "avg_token_len"
-        ),
-    )
-    logit = F.round(
-        F.lit(_W0)
-        + F.lit(_W_LEN) * (F.col("n_tokens").cast("double") / 100.0)
-        + F.lit(_W_DISTINCT) * F.col("distinct_ratio")
-        + F.lit(_W_STOP) * F.col("stop_ratio")
-        + F.lit(_W_TOKLEN) * (F.col("avg_token_len") / 10.0),
-        6,
-    )
+    feat = _quality_features(spark, sf_dir, "doc_id")
     score = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("logit"))), 6)
     return (
-        feat.withColumn("logit", logit)
+        feat.withColumn("logit", _quality_logit())
         .select(
             "doc_id",
             "n_tokens",
@@ -902,44 +936,7 @@ def q_e_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     no window over the corpus, no driver collect. Same shape at any
     corpus size: per-task state is 10 bins × 3 partials.
     """
-    d = load_table(spark, sf_dir, "documents")
-    words = F.split("text", " ")
-    n_tok = F.size(words)
-    stop_arr = F.array(*[F.lit(s) for s in _CLS_STOPWORDS])
-    feat = d.select(
-        "doc_id",
-        n_tok.cast("long").alias("n_tokens"),
-        (F.size(F.array_distinct(words)).cast("double") / n_tok).alias(
-            "distinct_ratio"
-        ),
-        (
-            F.size(F.filter(words, lambda x: F.array_contains(stop_arr, x))).cast(
-                "double"
-            )
-            / n_tok
-        ).alias("stop_ratio"),
-        ((F.col("n_chars") - (n_tok - 1)).cast("double") / n_tok).alias(
-            "avg_token_len"
-        ),
-    )
-    logit = F.round(
-        F.lit(_W0)
-        + F.lit(_W_LEN) * (F.col("n_tokens").cast("double") / 100.0)
-        + F.lit(_W_DISTINCT) * F.col("distinct_ratio")
-        + F.lit(_W_STOP) * F.col("stop_ratio")
-        + F.lit(_W_TOKLEN) * (F.col("avg_token_len") / 10.0),
-        6,
-    )
-    gold = (
-        F.col("n_tokens").between(10, 5000)
-        & F.col("avg_token_len").between(2.5, 10.0)
-        & (F.col("stop_ratio") >= 0.02)
-    ).cast("int")
-    scored = feat.select(
-        F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 6).alias("score"),
-        gold.alias("gold"),
-    )
-    binned = scored.withColumn(
+    binned = _quality_scored(spark, sf_dir).withColumn(
         "bin", F.least(F.floor(F.col("score") * 10), F.lit(9)).cast("long")
     )
     bins = binned.groupBy("bin").agg(
@@ -1882,43 +1879,7 @@ def _cal_per_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold-free audits (ROC AUC via q_e_quality_auc, PR average
     precision via q_e_pr_auc) rank over — 6-dp sigmoid score,
     rule-based gold label, one combinable groupBy(score)."""
-    d = load_table(spark, sf_dir, "documents")
-    words = F.split("text", " ")
-    n_tok = F.size(words)
-    stop_arr = F.array(*[F.lit(s) for s in _CLS_STOPWORDS])
-    feat = d.select(
-        n_tok.cast("long").alias("n_tokens"),
-        (F.size(F.array_distinct(words)).cast("double") / n_tok).alias(
-            "distinct_ratio"
-        ),
-        (
-            F.size(F.filter(words, lambda x: F.array_contains(stop_arr, x))).cast(
-                "double"
-            )
-            / n_tok
-        ).alias("stop_ratio"),
-        ((F.col("n_chars") - (n_tok - 1)).cast("double") / n_tok).alias(
-            "avg_token_len"
-        ),
-    )
-    logit = F.round(
-        F.lit(_W0)
-        + F.lit(_W_LEN) * (F.col("n_tokens").cast("double") / 100.0)
-        + F.lit(_W_DISTINCT) * F.col("distinct_ratio")
-        + F.lit(_W_STOP) * F.col("stop_ratio")
-        + F.lit(_W_TOKLEN) * (F.col("avg_token_len") / 10.0),
-        6,
-    )
-    gold = (
-        F.col("n_tokens").between(10, 5000)
-        & F.col("avg_token_len").between(2.5, 10.0)
-        & (F.col("stop_ratio") >= 0.02)
-    ).cast("int")
-    scored = feat.select(
-        F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 6).alias("score"),
-        gold.alias("gold"),
-    )
-    return scored.groupBy("score").agg(
+    return _quality_scored(spark, sf_dir).groupBy("score").agg(
         F.sum("gold").cast("long").alias("pos"),
         (F.count(F.lit(1)) - F.sum("gold")).cast("long").alias("neg"),
     )
@@ -2161,31 +2122,10 @@ def q_e_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row closed-form arithmetic on the |sources|-row frame (sqrt is
     IEEE-correctly-rounded; identical expression trees both engines;
     floor-quantized outputs — no round() ties)."""
-    d = load_table(spark, sf_dir, "documents")
-    words = F.split("text", " ")
-    n_tok = F.size(words)
-    stop_arr = F.array(*[F.lit(s) for s in _CLS_STOPWORDS])
-    feat = d.select(
-        "source",
-        n_tok.cast("long").alias("n_tokens"),
-        (
-            F.size(F.filter(words, lambda x: F.array_contains(stop_arr, x))).cast(
-                "double"
-            )
-            / n_tok
-        ).alias("stop_ratio"),
-        ((F.col("n_chars") - (n_tok - 1)).cast("double") / n_tok).alias(
-            "avg_token_len"
-        ),
-    )
-    gold = (
-        F.col("n_tokens").between(10, 5000)
-        & F.col("avg_token_len").between(2.5, 10.0)
-        & (F.col("stop_ratio") >= 0.02)
-    ).cast("int")
+    feat = _quality_features(spark, sf_dir, "source")
     per = feat.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(gold).cast("long").alias("k"),
+        F.sum(_quality_gold()).cast("long").alias("k"),
     )
     p = F.col("k").cast("double") / F.col("n")
     zz = F.lit(_WILSON_Z * _WILSON_Z) / F.col("n")
@@ -4265,6 +4205,22 @@ def _lr_weight_parts(with_doc_id: bool = False) -> list[str]:
     return parts
 
 
+def _lr_features(spark: SparkSession, sf_dir: str, *keep: str) -> DataFrame:
+    """(*keep, x0..x4, y): the logistic-regression design matrix over
+    _quality_features (bias, tokens/100, distinct ratio, stopword
+    ratio, mean token length/10) and the gold label as target."""
+    base = _quality_features(spark, sf_dir, *keep)
+    return base.select(
+        *keep,
+        F.lit(1.0).alias("x0"),
+        (F.col("n_tokens").cast("double") / 100.0).alias("x1"),
+        F.col("distinct_ratio").alias("x2"),
+        F.col("stop_ratio").alias("x3"),
+        (F.col("avg_token_len") / 10.0).alias("x4"),
+        _quality_gold().alias("y"),
+    )
+
+
 def _lr_sql() -> str:
     q6 = _lr_q6
     parts = _lr_weight_parts()
@@ -4309,38 +4265,7 @@ def q_e_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines walk the same weight vectors exactly."""
     import math
 
-    d = load_table(spark, sf_dir, "documents")
-    words = F.split("text", " ")
-    n_tok = F.size(words).cast("long")
-    stop_arr = F.array(*[F.lit(s) for s in _CLS_STOPWORDS])
-    base = d.select(
-        n_tok.alias("n_tokens"),
-        (F.size(F.array_distinct(words)).cast("double") / n_tok).alias(
-            "distinct_ratio"
-        ),
-        (
-            F.size(
-                F.filter(words, lambda x: F.array_contains(stop_arr, x))
-            ).cast("double")
-            / n_tok
-        ).alias("stop_ratio"),
-        ((F.col("n_chars") - (n_tok - 1)).cast("double") / n_tok).alias(
-            "avg_token_len"
-        ),
-    )
-    gold = (
-        F.col("n_tokens").between(10, 5000)
-        & F.col("avg_token_len").between(2.5, 10.0)
-        & (F.col("stop_ratio") >= 0.02)
-    ).cast("int")
-    feat = base.select(
-        F.lit(1.0).alias("x0"),
-        (F.col("n_tokens").cast("double") / 100.0).alias("x1"),
-        F.col("distinct_ratio").alias("x2"),
-        F.col("stop_ratio").alias("x3"),
-        (F.col("avg_token_len") / 10.0).alias("x4"),
-        gold.alias("y"),
-    )
+    feat = _lr_features(spark, sf_dir)
     feat = scoped_persist(feat, spark, sf_dir, "logreg_feat")
 
     def _q6(v: float) -> float:
@@ -4673,40 +4598,7 @@ def q_e_cartography(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection in Spark) and a 4-row region rollup."""
     import math
 
-    d = load_table(spark, sf_dir, "documents")
-    words = F.split("text", " ")
-    n_tok = F.size(words).cast("long")
-    stop_arr = F.array(*[F.lit(s) for s in _CLS_STOPWORDS])
-    base = d.select(
-        "doc_id",
-        n_tok.alias("n_tokens"),
-        (F.size(F.array_distinct(words)).cast("double") / n_tok).alias(
-            "distinct_ratio"
-        ),
-        (
-            F.size(
-                F.filter(words, lambda x: F.array_contains(stop_arr, x))
-            ).cast("double")
-            / n_tok
-        ).alias("stop_ratio"),
-        ((F.col("n_chars") - (n_tok - 1)).cast("double") / n_tok).alias(
-            "avg_token_len"
-        ),
-    )
-    gold = (
-        F.col("n_tokens").between(10, 5000)
-        & F.col("avg_token_len").between(2.5, 10.0)
-        & (F.col("stop_ratio") >= 0.02)
-    ).cast("int")
-    feat = base.select(
-        "doc_id",
-        F.lit(1.0).alias("x0"),
-        (F.col("n_tokens").cast("double") / 100.0).alias("x1"),
-        F.col("distinct_ratio").alias("x2"),
-        F.col("stop_ratio").alias("x3"),
-        (F.col("avg_token_len") / 10.0).alias("x4"),
-        gold.alias("y"),
-    )
+    feat = _lr_features(spark, sf_dir, "doc_id")
     feat = scoped_persist(feat, spark, sf_dir, "cartography_feat")
 
     def _q6(v: float) -> float:

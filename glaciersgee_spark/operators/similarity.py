@@ -194,6 +194,69 @@ def top_cells(rows: DataFrame, cent: DataFrame, by, n: int) -> DataFrame:
     return scored.withColumn("rk", rk).where(keep)
 
 
+def top_vectors(
+    scored: DataFrame, by, k: "int | None", score: str = "score", rk: str = "rk"
+) -> DataFrame:
+    """The k best vectors of each ``by`` group: row_number over ``by``
+    ordered ``<score> DESC, vec_id ASC`` as column ``rk``, kept while
+    ``rk <= k`` — ties go to the smaller vec_id and NaN ranks first, as
+    in every oracle's neighbour rank. k=None keeps every row with its
+    rank. With ``by=()`` the ranking is global and is spelled
+    orderBy().limit(k) (a TakeOrderedAndProject, never a one-partition
+    window), so its rows carry no rank and k is required."""
+    by = [by] if isinstance(by, str) else list(by)
+    order = (F.col(score).desc(), F.col("vec_id").asc())
+    if not by:
+        return scored.orderBy(*order).limit(k)
+    ranked = scored.withColumn(
+        rk, F.row_number().over(Window.partitionBy(*by).orderBy(*order))
+    )
+    return ranked if k is None else ranked.where(F.col(rk) <= k)
+
+
+def lsh_candidates(bands: DataFrame) -> DataFrame:
+    """(qid, vec_id): the distinct SRP band collisions of each
+    _RECALL_QIDS panel query, without the self-pair — the LSH
+    candidate set every panel audit ranks. ``bands`` is _banded's
+    (vec_id, band, bucket) frame; the 5 × N_BANDS query buckets ride
+    as a broadcast."""
+    qb = bands.where(F.col("vec_id").isin(list(_RECALL_QIDS))).select(
+        F.col("vec_id").alias("qid"), "band", "bucket"
+    )
+    return (
+        bands.join(F.broadcast(qb), ["band", "bucket"])
+        .where(F.col("vec_id") != F.col("qid"))
+        .select("qid", "vec_id")
+        .distinct()
+    )
+
+
+def recall_at_k(
+    spine: DataFrame, approx: DataFrame, scores: DataFrame, keys=("qid",)
+) -> DataFrame:
+    """(*spine columns, n_hit, recall6): recall@_RECALL_K of an
+    approximate top list against brute force. The exact top-_RECALL_K
+    of each query comes from ``scores`` (qid, vec_id, score) through
+    top_vectors; ``approx`` rows (keys…, vec_id) that hit it are
+    counted per ``keys`` (the truth is per qid, so the hit join is on
+    qid and vec_id) and left-joined onto ``spine``, so a spine row
+    with no hit reads n_hit 0 and recall6 0.0, as the oracles'
+    COALESCE does."""
+    keys = list(keys)
+    exact = top_vectors(scores, "qid", _RECALL_K).select("qid", "vec_id")
+    hits = (
+        approx.join(exact, ["qid", "vec_id"])
+        .groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("n_hit"))
+    )
+    n_hit = F.coalesce("n_hit", F.lit(0))
+    return spine.join(hits, keys, "left").select(
+        *spine.columns,
+        n_hit.cast("long").alias("n_hit"),
+        F.round(n_hit / float(_RECALL_K), 6).alias("recall6"),
+    )
+
+
 _PAIR_SCHEMA = "vec_id long, cid long, nbr long, cs double"
 
 
@@ -321,21 +384,21 @@ def q_e_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qemb"))
-    return (
+    scored = (
         e.where(F.col("vec_id") != 0)
         .join(F.broadcast(q))
         .select("vec_id", "label", _cos6("embedding", "qemb").alias("score"))
-        .orderBy(F.col("score").desc(), F.col("vec_id").asc())
-        .limit(20)
     )
+    return top_vectors(scored, (), 20)
 
 
 def _banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, band, bucket) — each vector lands in N_BANDS buckets.
 
-    One persisted copy per (app, sf_dir) (scoped_persist): five
-    declared queries consume it (sim_join, sim_topk_lsh, ann_recall,
-    recall_curve, …)."""
+    One persisted copy per (app, sf_dir) (scoped_persist), shared by
+    every banded consumer: the pair joins (sim_join, dedup_embed), the
+    single-query probes (sim_topk_lsh, lsh_multiprobe) and the panel
+    audits, which take their candidates from lsh_candidates."""
     e = fan_out(load_table(spark, sf_dir, "embeddings"), "vec_id")
     d = e.select("vec_id", _srp_buckets("embedding").alias("buckets"))
     return scoped_persist(
@@ -425,12 +488,7 @@ def q_e_knn_pergroup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(q))
         .select("label", "vec_id", _cos6("embedding", "qemb").alias("score"))
     )
-    w = Window.partitionBy("label").orderBy(F.col("score").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 3)
-        .select("label", "vec_id", "score", "rk")
-    )
+    return top_vectors(scored, "label", 3).select("label", "vec_id", "score", "rk")
 
 
 @query(
@@ -474,13 +532,12 @@ def q_e_sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     q = e.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qemb"))
-    return (
+    scored = (
         cand.join(e, "vec_id")
         .join(F.broadcast(q))
         .select("vec_id", "label", _cos6("embedding", "qemb").alias("score"))
-        .orderBy(F.col("score").desc(), F.col("vec_id").asc())
-        .limit(20)
     )
+    return top_vectors(scored, (), 20)
 
 
 # IVF-style ANN: nlist deterministic "centroids" (the corpus vectors
@@ -542,14 +599,13 @@ def q_e_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = e.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qemb"))
     probe = top_cells(e.where(F.col("vec_id") == 0), cent, (), IVF_NPROBE).select("cid")
-    return (
+    scored = (
         cell.join(F.broadcast(probe), "cid")
         .join(e, "vec_id")
         .join(F.broadcast(q))
         .select("vec_id", "label", _cos6("embedding", "qemb").alias("score"))
-        .orderBy(F.col("score").desc(), F.col("vec_id").asc())
-        .limit(20)
     )
+    return top_vectors(scored, (), 20)
 
 
 # Embedding-cosine near-duplicate detection: the dedup-flavored view
@@ -786,47 +842,16 @@ def q_e_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTINCT over (qid, cand); exact side is a 5-row broadcast cross
     score. At 100 TB the exact side runs on a sampled panel exactly
     like this, amortized across the corpus scan."""
-    e = load_table(spark, sf_dir, "embeddings")
-    # The SRP signature kernel feeds THREE consumers here (query
-    # buckets, probe join, candidate count); _banded hands back the
-    # shared per-(app, sf_dir) persisted frame, so the matmul pass
-    # runs once per session, not per consumer or per call.
-    bands = _banded(spark, sf_dir)
-    qids = list(_RECALL_QIDS)
-    qb = (
-        bands.where(F.col("vec_id").isin(qids))
-        .select(F.col("vec_id").alias("qid"), "band", "bucket")
+    # _banded hands back the shared per-(app, sf_dir) persisted frame,
+    # so the SRP matmul pass runs once per session, not once for each
+    # of lsh_candidates' two reads (query buckets, probe join).
+    cand = scoped_persist(
+        lsh_candidates(_banded(spark, sf_dir)), spark, sf_dir, "ann_recall_cand"
     )
-    cand = (
-        bands.join(F.broadcast(qb), ["band", "bucket"])
-        .where(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id")
-        .distinct()
-    )
-    cand = scoped_persist(cand, spark, sf_dir, "ann_recall_cand")
     scores = _panel_scores_persisted(spark, sf_dir)
-    rk = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("vec_id").asc())
-    approx = (
-        scores.join(cand, ["qid", "vec_id"])
-        .withColumn("rk", F.row_number().over(rk))
-        .where(F.col("rk") <= _RECALL_K)
-        .select("qid", "vec_id")
-    )
-    exact = (
-        scores.withColumn("rk", F.row_number().over(rk))
-        .where(F.col("rk") <= _RECALL_K)
-        .select("qid", "vec_id")
-    )
+    approx = top_vectors(scores.join(cand, ["qid", "vec_id"]), "qid", _RECALL_K)
     ncand = cand.groupBy("qid").agg(F.count(F.lit(1)).alias("n_cand"))
-    hits = approx.join(exact, ["qid", "vec_id"]).groupBy("qid").agg(
-        F.count(F.lit(1)).alias("n_hit")
-    )
-    return ncand.join(hits, "qid", "left").select(
-        "qid",
-        "n_cand",
-        F.coalesce("n_hit", F.lit(0)).alias("n_hit"),
-        F.round(F.coalesce("n_hit", F.lit(0)) / float(_RECALL_K), 6).alias("recall6"),
-    )
+    return recall_at_k(ncand, approx, scores)
 
 
 _CURVE_KS = (1, 5, 10, 20)
@@ -893,29 +918,13 @@ def q_e_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries in a single Arrow batch; both rank windows share the same
     (qid)-partitioned sort. The k dimension is a 4-row explode on the
     5-qid spine — measurement cost does not grow with k."""
-    bands = _banded(spark, sf_dir)
-    qids = list(_RECALL_QIDS)
-    qb = (
-        bands.where(F.col("vec_id").isin(qids))
-        .select(F.col("vec_id").alias("qid"), "band", "bucket")
-    )
-    cand = (
-        bands.join(F.broadcast(qb), ["band", "bucket"])
-        .where(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id")
-        .distinct()
-    )
+    cand = lsh_candidates(_banded(spark, sf_dir))
     # persist rationale: _panel_scores_persisted docstring
     scores = _panel_scores_persisted(spark, sf_dir)
-    rk = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    ranked_a = (
-        scores.join(cand, ["qid", "vec_id"])
-        .withColumn("rka", F.row_number().over(rk))
-        .select("qid", "vec_id", "rka")
-    )
-    ranked_e = scores.withColumn("rke", F.row_number().over(rk)).select(
+    ranked_a = top_vectors(
+        scores.join(cand, ["qid", "vec_id"]), "qid", None, rk="rka"
+    ).select("qid", "vec_id", "rka")
+    ranked_e = top_vectors(scores, "qid", None, rk="rke").select(
         "qid", "vec_id", "rke"
     )
     j = ranked_a.join(ranked_e, ["qid", "vec_id"]).select("qid", "rka", "rke")
@@ -1023,28 +1032,9 @@ def q_e_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = scoped_persist(cand, spark, sf_dir, "ivf_recall_cand")
     scores = _panel_scores_persisted(spark, sf_dir)
-    rk = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("vec_id").asc())
-    approx = (
-        scores.join(cand, ["qid", "vec_id"])
-        .withColumn("rk", F.row_number().over(rk))
-        .where(F.col("rk") <= _RECALL_K)
-        .select("qid", "vec_id")
-    )
-    exact = (
-        scores.withColumn("rk", F.row_number().over(rk))
-        .where(F.col("rk") <= _RECALL_K)
-        .select("qid", "vec_id")
-    )
+    approx = top_vectors(scores.join(cand, ["qid", "vec_id"]), "qid", _RECALL_K)
     ncand = cand.groupBy("qid").agg(F.count(F.lit(1)).alias("n_cand"))
-    hits = approx.join(exact, ["qid", "vec_id"]).groupBy("qid").agg(
-        F.count(F.lit(1)).alias("n_hit")
-    )
-    return ncand.join(hits, "qid", "left").select(
-        "qid",
-        "n_cand",
-        F.coalesce("n_hit", F.lit(0)).alias("n_hit"),
-        F.round(F.coalesce("n_hit", F.lit(0)) / float(_RECALL_K), 6).alias("recall6"),
-    )
+    return recall_at_k(ncand, approx, scores)
 
 
 @query(
@@ -1120,11 +1110,8 @@ def q_e_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     qlab = e.where(F.col("vec_id").isin(list(_RECALL_QIDS))).select(
         F.col("vec_id").alias("qid"), F.col("label").alias("qlabel")
     )
-    rk = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("vec_id").asc())
     return (
-        _panel_scores(spark, sf_dir)
-        .withColumn("rk", F.row_number().over(rk))
-        .where(F.col("rk") <= 50)
+        top_vectors(_panel_scores(spark, sf_dir), "qid", 50)
         .join(F.broadcast(labels), "vec_id")
         .join(F.broadcast(qlab), "qid")
         .where(F.col("label") != F.col("qlabel"))
@@ -1289,10 +1276,9 @@ def q_e_sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     _adc6 = _pq_adc_kernel(e)
     ef = fan_out(e.where(F.col("vec_id") != 0), "vec_id")
     qv = e.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qemb"))
+    scored = ef.select("vec_id", "label", "embedding", _adc6("embedding").alias("adc6"))
     return (
-        ef.select("vec_id", "label", "embedding", _adc6("embedding").alias("adc6"))
-        .orderBy(F.col("adc6").desc(), F.col("vec_id").asc())
-        .limit(20)
+        top_vectors(scored, (), 20, "adc6")
         .join(F.broadcast(qv))
         .select("vec_id", "label", "adc6", _cos6("embedding", "qemb").alias("cos6"))
     )
@@ -1391,29 +1377,9 @@ def q_e_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ef = fan_out(e.select("vec_id", "embedding"), "vec_id")
     adc = panel_rows(ef, qrows, _adc_panel("embedding"), "adc6")
-    rk_a = Window.partitionBy("qid").orderBy(F.col("adc6").desc(), F.col("vec_id").asc())
-    approx = (
-        adc.withColumn("rk", F.row_number().over(rk_a))
-        .where(F.col("rk") <= _RECALL_K)
-        .select("qid", "vec_id")
-    )
-    rk_e = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("vec_id").asc())
-    exact = (
-        _panel_scores(spark, sf_dir)
-        .withColumn("rk", F.row_number().over(rk_e))
-        .where(F.col("rk") <= _RECALL_K)
-        .select("qid", "vec_id")
-    )
-    hits = approx.join(exact, ["qid", "vec_id"]).groupBy("qid").agg(
-        F.count(F.lit(1)).alias("n_hit")
-    )
-    panel = e.where(F.col("vec_id").isin(list(_RECALL_QIDS))).select(
-        F.col("vec_id").alias("qid")
-    )
-    return panel.join(hits, "qid", "left").select(
-        "qid",
-        F.coalesce("n_hit", F.lit(0)).alias("n_hit"),
-        F.round(F.coalesce("n_hit", F.lit(0)) / float(_RECALL_K), 6).alias("recall6"),
+    approx = top_vectors(adc, "qid", _RECALL_K, "adc6")
+    return recall_at_k(
+        _query_rows(e).select("qid"), approx, _panel_scores(spark, sf_dir)
     )
 
 
@@ -1528,12 +1494,11 @@ def q_e_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ef = fan_out(e.where(F.col("vec_id") != 0), "vec_id")
     qv = e.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qemb"))
+    scored = ef.select(
+        "vec_id", "label", "embedding", _radc6("embedding").alias("adc6")
+    )
     return (
-        ef.select(
-            "vec_id", "label", "embedding", _radc6("embedding").alias("adc6")
-        )
-        .orderBy(F.col("adc6").desc(), F.col("vec_id").asc())
-        .limit(20)
+        top_vectors(scored, (), 20, "adc6")
         .join(F.broadcast(qv))
         .select(
             "vec_id", "label", "adc6", _cos6("embedding", "qemb").alias("cos6")
@@ -2118,14 +2083,9 @@ def q_e_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cent), "cid")
         .select("vec_id", "cid", _cos6("embedding", "cemb").alias("cs"))
     )
-    wp = Window.partitionBy("cid").orderBy(F.col("cs").desc(), F.col("vec_id").asc())
     we = Window.partitionBy("cid").orderBy(F.col("cs").asc(), F.col("vec_id").asc())
-    ranked = scored.select(
-        "vec_id",
-        "cid",
-        "cs",
-        F.row_number().over(wp).alias("rk_proto"),
-        F.row_number().over(we).alias("rk_edge"),
+    ranked = top_vectors(scored, "cid", None, "cs", "rk_proto").withColumn(
+        "rk_edge", F.row_number().over(we)
     )
     return (
         ranked.where((F.col("rk_proto") <= 5) | (F.col("rk_edge") <= 5))
@@ -2561,10 +2521,9 @@ def q_e_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     _adc6 = _pq_adc_kernel(e)
     cand = cell.join(F.broadcast(probe), "cid").select("vec_id")
     ef = fan_out(e.join(cand, "vec_id"), "vec_id")
+    scored = ef.select("vec_id", "label", "embedding", _adc6("embedding").alias("adc6"))
     return (
-        ef.select("vec_id", "label", "embedding", _adc6("embedding").alias("adc6"))
-        .orderBy(F.col("adc6").desc(), F.col("vec_id").asc())
-        .limit(20)
+        top_vectors(scored, (), 20, "adc6")
         .join(F.broadcast(qv))
         .select("vec_id", "label", "adc6", _cos6("embedding", "qemb").alias("cos6"))
     )
@@ -2702,21 +2661,18 @@ def q_e_sim_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(q))
         .select("vec_id", "label", _cos6("embedding", "qemb").alias("score"))
     )
-    # Corpus-wide ordering via orderBy().limit() — TakeOrderedAndProject
+    # Corpus-wide ordering via top_vectors(by=()) — TakeOrderedAndProject
     # (per-partition top-k + driver merge), never a single-partition
     # rank window over the whole corpus; the rank window then runs on
     # the bounded 20-row result only.
     w20 = Window.orderBy(F.col("score").desc(), F.col("vec_id").asc())
     pre = (
-        scored.where(F.col("label") == _FILTER_LABEL)
-        .orderBy(F.col("score").desc(), F.col("vec_id").asc())
-        .limit(20)
+        top_vectors(scored.where(F.col("label") == _FILTER_LABEL), (), 20)
         .withColumn("rank", F.row_number().over(w20))
         .select("rank", "vec_id", "score")
     )
     post = (
-        scored.orderBy(F.col("score").desc(), F.col("vec_id").asc())
-        .limit(20)
+        top_vectors(scored, (), 20)
         .where(F.col("label") == _FILTER_LABEL)
         .select(F.col("vec_id").alias("p_id"))
     )
@@ -2831,29 +2787,13 @@ def q_e_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     spliced into both dialects, so the only float op is the final
     quantized DCG/IDCG division. At 100 TB the panel is a sample and
     every stage stays cell-scoped, exactly like the recall audits."""
-    bands = _banded(spark, sf_dir)
-    qids = list(_RECALL_QIDS)
-    qb = (
-        bands.where(F.col("vec_id").isin(qids))
-        .select(F.col("vec_id").alias("qid"), "band", "bucket")
-    )
-    cand = (
-        bands.join(F.broadcast(qb), ["band", "bucket"])
-        .where(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id")
-        .distinct()
-    )
+    cand = lsh_candidates(_banded(spark, sf_dir))
     # persist rationale: _panel_scores_persisted docstring
     scores = _panel_scores_persisted(spark, sf_dir)
-    rk = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    ranked_a = (
-        scores.join(cand, ["qid", "vec_id"])
-        .withColumn("rka", F.row_number().over(rk))
-        .select("qid", "vec_id", "rka")
-    )
-    ranked_e = scores.withColumn("rke", F.row_number().over(rk)).select(
+    ranked_a = top_vectors(
+        scores.join(cand, ["qid", "vec_id"]), "qid", None, rk="rka"
+    ).select("qid", "vec_id", "rka")
+    ranked_e = top_vectors(scores, "qid", None, rk="rke").select(
         "qid", "vec_id", "rke"
     )
     j = ranked_a.join(ranked_e, ["qid", "vec_id"]).select("qid", "rka", "rke")
@@ -2993,36 +2933,17 @@ def q_e_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.array(*[F.lit(p) for p in _PROBE_GRID])).alias("p"),
     )
     expanded = grid.join(scored, "qid").where(F.col("prank") <= F.col("p"))
-    rka_w = Window.partitionBy("qid", "p").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    ranked_a = expanded.withColumn("rka", F.row_number().over(rka_w))
-    rk = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    exact = (
-        scores.withColumn("rk", F.row_number().over(rk))
-        .where(F.col("rk") <= _RECALL_K)
-        .select("qid", "vec_id")
-    )
+    approx = top_vectors(expanded, ("qid", "p"), _RECALL_K, rk="rka")
     ncand = expanded.groupBy("qid", "p").agg(F.count(F.lit(1)).alias("n_cand"))
-    hits = (
-        ranked_a.where(F.col("rka") <= _RECALL_K)
-        .join(exact, ["qid", "vec_id"])
-        .groupBy("qid", "p")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-    )
+    spine = grid.join(ncand, ["qid", "p"], "left")
     return (
-        grid.join(ncand, ["qid", "p"], "left")
-        .join(hits, ["qid", "p"], "left")
+        recall_at_k(spine, approx, scores, keys=("qid", "p"))
         .select(
             "qid",
             F.col("p").cast("int").alias("nprobe"),
             F.coalesce("n_cand", F.lit(0)).cast("long").alias("n_cand"),
-            F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
-            F.round(
-                F.coalesce("n_hit", F.lit(0)) / float(_RECALL_K), 6
-            ).alias("recall6"),
+            "n_hit",
+            "recall6",
         )
         .orderBy("qid", "nprobe")
     )
@@ -3178,13 +3099,7 @@ def q_e_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
             _cos6("embedding", "qemb").alias("score"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    top = sc.withColumn("rk", F.row_number().over(w)).where(
-        F.col("rk") <= _KNN_CLS_K
-    )
-    votes = top.groupBy("qid", "qlab", "label").agg(
+    votes = top_vectors(sc, "qid", _KNN_CLS_K).groupBy("qid", "qlab", "label").agg(
         F.count(F.lit(1)).alias("c")
     )
     w2 = Window.partitionBy("qid").orderBy(F.col("c").desc(), F.col("label").asc())
@@ -3776,37 +3691,10 @@ def q_e_int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
     )
     s = panel_rows(ef, qrows, _i8_panel("embedding"))
-    rk = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    approx = (
-        s.withColumn("rk", F.row_number().over(rk))
-        .where(F.col("rk") <= _RECALL_K)
-        .select("qid", "vec_id")
-    )
-    exact = (
-        _panel_scores(spark, sf_dir)
-        .withColumn("rk", F.row_number().over(rk))
-        .where(F.col("rk") <= _RECALL_K)
-        .select("qid", "vec_id")
-    )
-    hits = approx.join(exact, ["qid", "vec_id"]).groupBy("qid").agg(
-        F.count(F.lit(1)).alias("n_hit")
-    )
-    panel = e.where(F.col("vec_id").isin(list(_RECALL_QIDS))).select(
-        F.col("vec_id").alias("qid")
-    )
-    return (
-        panel.join(hits, "qid", "left")
-        .select(
-            "qid",
-            F.coalesce("n_hit", F.lit(0)).alias("n_hit"),
-            F.round(
-                F.coalesce("n_hit", F.lit(0)) / float(_RECALL_K), 6
-            ).alias("recall6"),
-        )
-        .orderBy("qid")
-    )
+    approx = top_vectors(s, "qid", _RECALL_K)
+    return recall_at_k(
+        _query_rows(e).select("qid"), approx, _panel_scores(spark, sf_dir)
+    ).orderBy("qid")
 
 
 # ---------------------------------------------------------------------------
@@ -3905,36 +3793,9 @@ def q_e_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     # truth — persisted like q_e_ann_recall's copy (cell above has ONE
     # consumer, cand, and is deliberately NOT persisted)
     scores = _panel_scores_persisted(spark, sf_dir)
-    rk = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    approx = (
-        cand.join(scores, ["qid", "vec_id"])
-        .withColumn("rk", F.row_number().over(rk))
-        .where(F.col("rk") <= _RECALL_K)
-        .select("qid", "vec_id")
-    )
-    exact = (
-        scores.withColumn("rk", F.row_number().over(rk))
-        .where(F.col("rk") <= _RECALL_K)
-        .select("qid", "vec_id")
-    )
-    hits = approx.join(exact, ["qid", "vec_id"]).groupBy("qid").agg(
-        F.count(F.lit(1)).alias("n_hit")
-    )
+    approx = top_vectors(cand.join(scores, ["qid", "vec_id"]), "qid", _RECALL_K)
     ncand = cand.groupBy("qid").agg(F.count(F.lit(1)).alias("n_cand"))
-    return (
-        ncand.join(hits, "qid", "left")
-        .select(
-            "qid",
-            "n_cand",
-            F.coalesce("n_hit", F.lit(0)).alias("n_hit"),
-            F.round(
-                F.coalesce("n_hit", F.lit(0)) / float(_RECALL_K), 6
-            ).alias("recall6"),
-        )
-        .orderBy("qid")
-    )
+    return recall_at_k(ncand, approx, scores).orderBy("qid")
 
 
 def _ari_oracle() -> str:
@@ -4178,13 +4039,10 @@ def q_e_ivf_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("vec_id") != F.col("qid"))
         .select("qid", "vec_id")
     )
-    rk = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
     return (
-        cand.join(_panel_scores(spark, sf_dir), ["qid", "vec_id"])
-        .withColumn("rk", F.row_number().over(rk))
-        .where(F.col("rk") <= _RECALL_K)
+        top_vectors(
+            cand.join(_panel_scores(spark, sf_dir), ["qid", "vec_id"]), "qid", _RECALL_K
+        )
         .select("qid", "rk", "vec_id", F.col("score").alias("score6"))
         .orderBy("qid", "rk")
     )
@@ -4434,13 +4292,9 @@ def _ivfpq_serve_frames(
             ]
         )
     )
-    rkw = Window.partitionBy(*gcols, "qid").orderBy(
-        F.col("adc6").desc(), F.col("vec_id").asc()
-    )
+    adc = parts.select(*gcols, "qid", "vec_id", F.expr(_PQP_ADC).alias("adc6"))
     return (
-        parts.select(*gcols, "qid", "vec_id", F.expr(_PQP_ADC).alias("adc6"))
-        .withColumn("rk", F.row_number().over(rkw))
-        .where(F.col("rk") <= _RECALL_K)
+        top_vectors(adc, gcols + ["qid"], _RECALL_K, "adc6")
         .select(*gcols, "qid", "rk", "vec_id", "adc6")
         .orderBy(*gcols, "qid", "rk")
     )
@@ -4492,36 +4346,11 @@ def q_e_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM ADC); the exact side reuses the shared _panel_scores Arrow
     pass. Both sides are deterministic rank spellings, so recall is
     hash-exact, not a tolerance check."""
-    approx = q_e_ivfpq_persist(spark, sf_dir).select("qid", "vec_id")
-    rkw = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    exact = (
-        _panel_scores(spark, sf_dir)
-        .withColumn("rk", F.row_number().over(rkw))
-        .where(F.col("rk") <= _RECALL_K)
-        .select("qid", "vec_id")
-    )
-    hits = (
-        approx.join(exact, ["qid", "vec_id"])
-        .groupBy("qid")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_hit"))
-    )
+    approx = q_e_ivfpq_persist(spark, sf_dir)
     e = load_table(spark, sf_dir, "embeddings")
-    panel = e.where(F.col("vec_id").isin(list(_RECALL_QIDS))).select(
-        F.col("vec_id").alias("qid")
-    )
-    return (
-        panel.join(hits, "qid", "left")
-        .select(
-            "qid",
-            F.coalesce(F.col("n_hit"), F.lit(0)).cast("long").alias("n_hit"),
-            F.round(
-                F.coalesce(F.col("n_hit"), F.lit(0)) / float(_RECALL_K), 6
-            ).alias("recall6"),
-        )
-        .orderBy("qid")
-    )
+    return recall_at_k(
+        _query_rows(e).select("qid"), approx, _panel_scores(spark, sf_dir)
+    ).orderBy("qid")
 
 
 # ---------------------------------------------------------------------------
@@ -4732,14 +4561,8 @@ def q_e_ivfpq_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rebuild": stage_ivf_index(spark, sf_dir),
         },
     ).select("gen", "qid", "vec_id")
-    rkw = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    exact = (
-        _panel_scores(spark, sf_dir)
-        .withColumn("rk", F.row_number().over(rkw))
-        .where(F.col("rk") <= _RECALL_K)
-        .select("qid", "vec_id")
+    exact = top_vectors(_panel_scores(spark, sf_dir), "qid", _RECALL_K).select(
+        "qid", "vec_id"
     )
     hits = (
         fused.join(exact, ["qid", "vec_id"])
@@ -4753,10 +4576,7 @@ def q_e_ivfpq_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("nr"),
         )
     )
-    e = load_table(spark, sf_dir, "embeddings")
-    panel = e.where(F.col("vec_id").isin(list(_RECALL_QIDS))).select(
-        F.col("vec_id").alias("qid")
-    )
+    panel = _query_rows(load_table(spark, sf_dir, "embeddings")).select("qid")
     nb = F.coalesce(F.col("nb"), F.lit(0))
     nr = F.coalesce(F.col("nr"), F.lit(0))
     return (
@@ -5245,13 +5065,8 @@ def q_e_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("qid", "vec_id", F.col("ds.d").alias("d"), F.col("ds.score").alias("score"))
     )
-    rk = Window.partitionBy("qid", "d").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    top = (
-        scored.withColumn("r", F.row_number().over(rk))
-        .where(F.col("r") <= _RECALL_K)
-        .select("qid", "vec_id", "d")
+    top = top_vectors(scored, ("qid", "d"), _RECALL_K, rk="r").select(
+        "qid", "vec_id", "d"
     )
     top = scoped_persist(top, spark, sf_dir, "matryoshka_top")
     ref = top.where(F.col("d") == 64).select(
@@ -5765,29 +5580,13 @@ def q_e_retrieval_err(spark: SparkSession, sf_dir: str) -> DataFrame:
     err6 is bit-deterministic in both engines; docstring math above).
     At 100 TB the panel is a sample and every stage stays cell-scoped,
     exactly like the recall/ndcg audits."""
-    bands = _banded(spark, sf_dir)
-    qids = list(_RECALL_QIDS)
-    qb = (
-        bands.where(F.col("vec_id").isin(qids))
-        .select(F.col("vec_id").alias("qid"), "band", "bucket")
-    )
-    cand = (
-        bands.join(F.broadcast(qb), ["band", "bucket"])
-        .where(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id")
-        .distinct()
-    )
+    cand = lsh_candidates(_banded(spark, sf_dir))
     # persist rationale: _panel_scores_persisted docstring
     scores = _panel_scores_persisted(spark, sf_dir)
-    rk = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    ranked_a = (
-        scores.join(cand, ["qid", "vec_id"])
-        .withColumn("rka", F.row_number().over(rk))
-        .select("qid", "vec_id", "rka")
-    )
-    ranked_e = scores.withColumn("rke", F.row_number().over(rk)).select(
+    ranked_a = top_vectors(
+        scores.join(cand, ["qid", "vec_id"]), "qid", None, rk="rka"
+    ).select("qid", "vec_id", "rka")
+    ranked_e = top_vectors(scores, "qid", None, rk="rke").select(
         "qid", "vec_id", "rke"
     )
     g = F.when(
@@ -5934,12 +5733,7 @@ def q_e_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     sel_vecs = [list(sel_rows[0].qv)]
 
     for s in range(1, _CS_PICKS + 1):
-        top = (
-            _coreset_step_frame(q, sel_vecs)
-            .orderBy(F.col("mind").desc(), F.col("vec_id").asc())
-            .limit(1)
-            .collect()[0]
-        )
+        top = top_vectors(_coreset_step_frame(q, sel_vecs), (), 1, "mind").collect()[0]
         centers.append((s, int(top.vec_id), int(top.mind)))
         sel_vecs.append(list(top.qv))
 
@@ -6100,9 +5894,6 @@ def _beam_serve(
             "vec_id",
             "s",
         )
-    bw = Window.partitionBy(*gcols, "qid").orderBy(
-        F.col("s").desc(), F.col("vec_id").asc()
-    )
     for _hop in range(_BEAM_HOPS):
         # One reference to `beam` per hop (round 11): the historical
         # spelling unioned beam with beam.join(edges), referencing the
@@ -6131,15 +5922,16 @@ def _beam_serve(
             )
             .distinct()
         )
-        beam = (
-            cand.join(qs, ["qid", "vec_id"])
-            .select(*gcols, "qid", "vec_id", F.col("score").alias("s"))
-            .withColumn("rk", F.row_number().over(bw))
-            .where(F.col("rk") <= _BEAM_W)
-            .select(*gcols, "qid", "vec_id", "s")
-        )
+        beam = top_vectors(
+            cand.join(qs, ["qid", "vec_id"]).select(
+                *gcols, "qid", "vec_id", F.col("score").alias("s")
+            ),
+            gcols + ["qid"],
+            _BEAM_W,
+            "s",
+        ).select(*gcols, "qid", "vec_id", "s")
     return (
-        beam.withColumn("rk", F.row_number().over(bw))
+        top_vectors(beam, gcols + ["qid"], None, "s")
         .select(*gcols, "qid", "rk", "vec_id", F.col("s").alias("score6"))
         .orderBy(*gcols, "qid", "rk")
     )
@@ -6423,15 +6215,9 @@ def q_e_beam_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     fused = _beam_serve(
         spark, sf_dir, edges, gens=["append", "rebuild"]
     ).select("gen", "qid", "vec_id")
-    rkw = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    exact = (
-        _panel_scores_persisted(spark, sf_dir)
-        .withColumn("rk", F.row_number().over(rkw))
-        .where(F.col("rk") <= _RECALL_K)
-        .select("qid", "vec_id")
-    )
+    exact = top_vectors(
+        _panel_scores_persisted(spark, sf_dir), "qid", _RECALL_K
+    ).select("qid", "vec_id")
     hits = (
         fused.join(exact, ["qid", "vec_id"])
         .groupBy("qid")
@@ -6444,10 +6230,7 @@ def q_e_beam_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("nr"),
         )
     )
-    e = load_table(spark, sf_dir, "embeddings")
-    panel = e.where(F.col("vec_id").isin(list(_RECALL_QIDS))).select(
-        F.col("vec_id").alias("qid")
-    )
+    panel = _query_rows(load_table(spark, sf_dir, "embeddings")).select("qid")
     nb = F.coalesce(F.col("nb"), F.lit(0))
     nr = F.coalesce(F.col("nr"), F.lit(0))
     return (
@@ -6504,36 +6287,11 @@ def q_e_beam_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_e_ivf_recall / q_e_ivfpq_recall (coarse quantizer ± PQ), THIS
     (navigable graph). Both sides are deterministic rank spellings,
     so recall is hash-exact, not a tolerance check."""
-    approx = q_e_beam_persist(spark, sf_dir).select("qid", "vec_id")
-    rkw = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    exact = (
-        _panel_scores_persisted(spark, sf_dir)
-        .withColumn("rk", F.row_number().over(rkw))
-        .where(F.col("rk") <= _RECALL_K)
-        .select("qid", "vec_id")
-    )
-    hits = (
-        approx.join(exact, ["qid", "vec_id"])
-        .groupBy("qid")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_hit"))
-    )
+    approx = q_e_beam_persist(spark, sf_dir)
     e = load_table(spark, sf_dir, "embeddings")
-    panel = e.where(F.col("vec_id").isin(list(_RECALL_QIDS))).select(
-        F.col("vec_id").alias("qid")
-    )
-    return (
-        panel.join(hits, "qid", "left")
-        .select(
-            "qid",
-            F.coalesce(F.col("n_hit"), F.lit(0)).cast("long").alias("n_hit"),
-            F.round(
-                F.coalesce(F.col("n_hit"), F.lit(0)) / float(_RECALL_K), 6
-            ).alias("recall6"),
-        )
-        .orderBy("qid")
-    )
+    return recall_at_k(
+        _query_rows(e).select("qid"), approx, _panel_scores_persisted(spark, sf_dir)
+    ).orderBy("qid")
 
 
 # ---------------------------------------------------------------------------
@@ -6980,7 +6738,7 @@ def q_e_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("hit1", F.lit(True))
     )
     q = e.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qemb"))
-    return (
+    scored = (
         cand.join(e, "vec_id")
         .join(F.broadcast(q))
         .join(F.broadcast(single), "vec_id", "left")
@@ -6990,6 +6748,5 @@ def q_e_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
             _cos6("embedding", "qemb").alias("score"),
             F.col("hit1").isNull().cast("boolean").alias("via_flip"),
         )
-        .orderBy(F.col("score").desc(), F.col("vec_id").asc())
-        .limit(20)
     )
+    return top_vectors(scored, (), 20)

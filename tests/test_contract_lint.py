@@ -124,21 +124,27 @@ def test_persist_sites_are_registry_routed():
     )
 
 
+def _function_lines(module: str, name: str) -> set[int]:
+    """Line numbers of the body of top-level function ``name`` in
+    ``module`` (a path relative to the package)."""
+    import ast
+
+    text = (Path(glaciersgee_spark.__file__).parent / module).read_text()
+    for node in ast.parse(text).body:
+        if isinstance(node, ast.FunctionDef) and node.name == name:
+            return set(range(node.lineno, node.end_lineno + 1))
+    return set()
+
+
 def _hits_outside(token: str, module: str, helper: str) -> list[str]:
     """Lines under glaciersgee_spark/ that contain ``token`` outside
     the body of function ``helper`` in ``module`` (a path relative to
     the package). Tests are not scanned."""
-    import ast
-
     pkg = Path(glaciersgee_spark.__file__).parent
     bad: list[str] = []
     for py in sorted(pkg.rglob("*.py")):
         text = py.read_text()
-        allowed: set[int] = set()
-        if py == pkg / module:
-            for node in ast.parse(text).body:
-                if isinstance(node, ast.FunctionDef) and node.name == helper:
-                    allowed = set(range(node.lineno, node.end_lineno + 1))
+        allowed = _function_lines(module, helper) if py == pkg / module else set()
         bad += [
             f"{py.relative_to(pkg)}:{i}"
             for i, line in enumerate(text.splitlines(), 1)
@@ -188,20 +194,45 @@ def test_artifacts_are_staged_only_through_tmpdirs_staged():
 def test_vector_kernels_and_memos_have_one_definition():
     """The PQ sub-distance spelling appears under glaciersgee_spark/
     only inside similarity.pq_dist6, the query-id literal panel
-    (``qid_lits``) only inside similarity.panel_rows, and the cell-rank
-    order ``cs DESC, cid ASC`` only inside similarity.top_cells: every
-    encoder, panel kernel and cell/probe ranking shares one spelling,
-    so no copy can drift in its tie rule or rounding. And
-    ``WeakKeyDictionary`` appears only in caches.py and tables.py: an
-    operator memo goes through caches.scoped_value, where
-    clear_caches() reaches it."""
-    for token, helper in (
-        (") ** 2).sum(-1)", "pq_dist6"),
-        ("qid_lits", "panel_rows"),
-        ('desc(), F.col("cid").asc()', "top_cells"),
+    (``qid_lits``) only inside similarity.panel_rows, the cell-rank
+    order ``cs DESC, cid ASC`` only inside similarity.top_cells, the
+    neighbour order ``<score> DESC, vec_id ASC`` only inside
+    similarity.top_vectors, the panel's LSH band-collision join only
+    inside similarity.lsh_candidates and the recall tail's ``n_hit``
+    coalesce only inside similarity.recall_at_k: every encoder, panel
+    kernel, ranking and recall audit shares one spelling, so no copy
+    can drift in its tie rule, rounding or zero-hit row. The quality
+    classifier's stopword feature, logit weights and gopher-lite gold
+    rule appear only inside curation._quality_features,
+    _quality_logit and _quality_gold. And ``WeakKeyDictionary``
+    appears only in caches.py and tables.py: an operator memo goes
+    through caches.scoped_value, where clear_caches() reaches it."""
+    for module, token, helper in (
+        ("similarity", ") ** 2).sum(-1)", "pq_dist6"),
+        ("similarity", "qid_lits", "panel_rows"),
+        ("similarity", 'desc(), F.col("cid").asc()', "top_cells"),
+        ("similarity", "bands.join(F.broadcast(qb)", "lsh_candidates"),
+        ("similarity", 'F.coalesce("n_hit", F.lit(0))', "recall_at_k"),
+        ("similarity", 'F.coalesce(F.col("n_hit"), F.lit(0))', "recall_at_k"),
+        ("curation", "array_contains(stop_arr", "_quality_features"),
+        ("curation", "F.lit(_W_TOKLEN)", "_quality_logit"),
+        ("curation", "between(10, 5000)", "_quality_gold"),
     ):
-        bad = _hits_outside(token, "operators/similarity.py", helper)
-        assert not bad, f"use similarity.{helper}: {token!r} at {bad}"
+        bad = _hits_outside(token, f"operators/{module}.py", helper)
+        assert not bad, f"use {module}.{helper}: {token!r} at {bad}"
+    ranks = _hits_outside(
+        'desc(), F.col("vec_id").asc()', "operators/similarity.py", "top_vectors"
+    )
+    # The one unrouted neighbour rank: q_e_sim_topk_filtered numbers its
+    # pre-filtered result with its own Window.orderBy, a window over the
+    # at most 20 rows that top_vectors' TakeOrderedAndProject already cut.
+    kept = {
+        f"operators/similarity.py:{i}"
+        for i in _function_lines("operators/similarity.py", "q_e_sim_topk_filtered")
+    }
+    assert len([h for h in ranks if h in kept]) <= 1, ranks
+    bad = [h for h in ranks if h not in kept]
+    assert not bad, f"rank neighbours through similarity.top_vectors: {bad}"
     memos = [
         hit
         for hit in _hits_outside("WeakKeyDictionary", "caches.py", "")

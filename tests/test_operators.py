@@ -4797,6 +4797,98 @@ def test_top_cells_keeps_rank_order(spark):
         assert np.all(np.diff([s for _, _, s in mine]) <= 0)
 
 
+def test_top_vectors_ties_to_smaller_vec_id_and_ranks_nan_first(spark):
+    """top_vectors ranks each group by (score DESC, vec_id ASC): an
+    exact 6-dp score tie goes to the smaller vec_id and a NaN score
+    ranks first, as in the oracles' ORDER BY; k cuts the rank and
+    k=None keeps every row with its rank."""
+    from glaciersgee_spark.operators.similarity import top_vectors
+    from glaciersgee_spark.tables import local_frame
+
+    rows = [
+        (1, 8, 0.123456),
+        (1, 5, 0.123456),  # exact 6-dp tie with vec_id 8
+        (1, 9, float("nan")),
+        (1, 2, -0.5),
+        (2, 4, 0.9),
+    ]
+    scored = local_frame(spark, rows, "qid long, vec_id long, score double")
+    got = [
+        (r.qid, r.rk, r.vec_id)
+        for r in top_vectors(scored, "qid", 2).orderBy("qid", "rk").collect()
+    ]
+    assert got == [(1, 1, 9), (1, 2, 5), (2, 1, 4)]
+    every = top_vectors(scored, "qid", None).orderBy("qid", "rk").collect()
+    assert [(r.qid, r.rk, r.vec_id) for r in every] == [
+        (1, 1, 9),
+        (1, 2, 5),
+        (1, 3, 8),
+        (1, 4, 2),
+        (2, 1, 4),
+    ]
+    named = top_vectors(scored.withColumnRenamed("score", "s"), "qid", 1, "s", "r")
+    assert sorted((r.qid, r.r, r.vec_id) for r in named.collect()) == [
+        (1, 1, 9),
+        (2, 1, 4),
+    ]
+
+
+def test_top_vectors_global_rank_is_take_ordered(spark):
+    """With by=() top_vectors is orderBy().limit(k): the plan is a
+    TakeOrderedAndProject with no Window and no single-partition
+    exchange, and the rows are the k best in (score DESC, vec_id ASC)
+    order over the whole sf0.001 embeddings table."""
+    from glaciersgee_spark.operators.similarity import top_vectors
+    from glaciersgee_spark.tables import load_table
+
+    e = load_table(spark, SF_SMOKE, "embeddings")
+    scored = e.select("vec_id", (F.col("vec_id") % 7).cast("double").alias("score"))
+    top = top_vectors(scored, (), 5)
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        top._jdf.queryExecution(), "formatted"
+    )
+    assert "TakeOrderedAndProject" in plan
+    assert "Window" not in plan and "SinglePartition" not in plan
+    ids = sorted(r.vec_id for r in e.select("vec_id").collect())
+    want = sorted(ids, key=lambda v: (-(v % 7), v))[:5]
+    assert [r.vec_id for r in top.collect()] == want
+
+
+def test_recall_at_k_counts_hits_and_zero_fills_the_spine(spark):
+    """recall_at_k on the sf0.001 panel matches a hand count against
+    the exact top-_RECALL_K of _panel_scores, and a spine query with
+    no approximate rows reads n_hit 0 and recall6 0.0."""
+    from glaciersgee_spark.operators.similarity import (
+        _RECALL_K,
+        _panel_scores,
+        _query_rows,
+        recall_at_k,
+        top_vectors,
+    )
+    from glaciersgee_spark.tables import load_table, local_frame
+
+    scores = _panel_scores(spark, SF_SMOKE)
+    rows = scores.collect()
+    # approximate side: the top-k among even vec_ids only
+    approx = top_vectors(scores.where(F.col("vec_id") % 2 == 0), "qid", _RECALL_K)
+    panel = _query_rows(load_table(spark, SF_SMOKE, "embeddings")).select("qid")
+    spine = panel.unionByName(local_frame(spark, [(-1,)], "qid long"))
+    out = recall_at_k(spine, approx, scores).collect()
+    got = {r.qid: (r.n_hit, r.recall6) for r in out}
+
+    def top(cands):
+        ranked = sorted(cands, key=lambda r: (-r.score, r.vec_id))
+        return {r.vec_id for r in ranked[:_RECALL_K]}
+
+    want = {-1: (0, 0.0)}
+    for qid in {r.qid for r in rows}:
+        mine = [r for r in rows if r.qid == qid]
+        n = len(top(mine) & top([r for r in mine if r.vec_id % 2 == 0]))
+        want[qid] = (n, round(n / _RECALL_K, 6))
+    assert got == want
+    assert 0 < sum(n for n, _ in want.values()) < _RECALL_K * (len(want) - 1)
+
+
 def test_order_ship_arrow_bucket_kernel_edges():
     """The bucketed cogroup kernel preserves the per-key semantics:
     an order with no line items in the bucket emits nothing (inner
@@ -4908,21 +5000,18 @@ def test_beam_serve_explode_hop_matches_union_hop(spark):
     win). exceptAll both ways, single-gen AND fused-gen modes."""
     from pyspark.sql import Window
 
-    from glaciersgee_spark.caches import scoped_persist
     from glaciersgee_spark.operators.similarity import (
         _BEAM_ENTRY,
         _BEAM_HOPS,
         _BEAM_W,
         _beam_serve,
-        _panel_scores,
+        _panel_scores_persisted,
         stage_beam_graph,
     )
 
     def union_serve(edges, gens=None):
         gcols = ["gen"] if gens else []
-        qs = scoped_persist(
-            _panel_scores(spark, SF_SMOKE), spark, SF_SMOKE, "panel_scores"
-        )
+        qs = _panel_scores_persisted(spark, SF_SMOKE)
         beam = qs.where(F.col("vec_id") == _BEAM_ENTRY).select(
             "qid", "vec_id", F.col("score").alias("s")
         )
