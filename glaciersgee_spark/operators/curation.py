@@ -28,8 +28,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from glaciersgee_spark.caches import scoped_persist
-from glaciersgee_spark.registry import davg, dsum, query
+from glaciersgee_spark.caches import scoped_persist, scoped_value
+from glaciersgee_spark.registry import davg, dsum, py_q6, q6, query
 from glaciersgee_spark.tables import chunked_prefix, fan_out, load_table, local_frame
 
 # ---------------------------------------------------------------------------
@@ -231,6 +231,31 @@ def _quality_features(spark: SparkSession, sf_dir: str, *keep: str) -> DataFrame
     )
 
 
+def _d_quality_features(*keep: str, name: str = "feat") -> str:
+    """{name} (*keep, n_tokens, distinct_ratio, stop_ratio,
+    avg_token_len): the DuckDB mirror of _quality_features."""
+    cols = "".join(f"{k}, " for k in keep)
+    return f"""{name} AS (
+      SELECT {cols}CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+             CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
+               / len(string_split(text, ' ')) AS distinct_ratio,
+             CAST(len(list_filter(string_split(text, ' '),
+                                  x -> x IN ({_STOP_IN}))) AS DOUBLE)
+               / len(string_split(text, ' ')) AS stop_ratio,
+             CAST(n_chars - (len(string_split(text, ' ')) - 1) AS DOUBLE)
+               / len(string_split(text, ' ')) AS avg_token_len
+      FROM documents
+    )"""
+
+
+# The DuckDB mirror of _quality_logit, over _d_quality_features' columns.
+_D_QUALITY_LOGIT = (
+    f"round({_W0} + {_W_LEN} * (CAST(n_tokens AS DOUBLE) / 100.0)"
+    f" + {_W_DISTINCT} * distinct_ratio + {_W_STOP} * stop_ratio"
+    f" + {_W_TOKLEN} * (avg_token_len / 10.0), 6)"
+)
+
+
 def _quality_logit():
     """The fixed-weight logit over _quality_features' columns, rounded
     at 6 dp before any sigmoid (SURVEY.md §7.4)."""
@@ -269,24 +294,10 @@ def _quality_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_e_quality_classifier",
     oracle=f"""
-    WITH feat AS (
-      SELECT doc_id,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-             CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-               / len(string_split(text, ' ')) AS distinct_ratio,
-             CAST(len(list_filter(string_split(text, ' '),
-                                  x -> x IN ({_STOP_IN}))) AS DOUBLE)
-               / len(string_split(text, ' ')) AS stop_ratio,
-             CAST(n_chars - (len(string_split(text, ' ')) - 1) AS DOUBLE)
-               / len(string_split(text, ' ')) AS avg_token_len
-      FROM documents
-    ),
+    WITH {_d_quality_features('doc_id')},
     scored AS (
       SELECT doc_id, n_tokens, distinct_ratio, stop_ratio,
-             round({_W0} + {_W_LEN} * (CAST(n_tokens AS DOUBLE) / 100.0)
-                   + {_W_DISTINCT} * distinct_ratio
-                   + {_W_STOP} * stop_ratio
-                   + {_W_TOKLEN} * (avg_token_len / 10.0), 6) AS logit
+             {_D_QUALITY_LOGIT} AS logit
       FROM feat
     )
     SELECT doc_id, n_tokens, distinct_ratio, stop_ratio, logit,
@@ -870,25 +881,10 @@ _CAL_GOLD_DUCK = (
 @query(
     "q_e_quality_calibration",
     oracle=f"""
-    WITH feat AS (
-      SELECT doc_id,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-             CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-               / len(string_split(text, ' ')) AS distinct_ratio,
-             CAST(len(list_filter(string_split(text, ' '),
-                                  x -> x IN ({_STOP_IN}))) AS DOUBLE)
-               / len(string_split(text, ' ')) AS stop_ratio,
-             CAST(n_chars - (len(string_split(text, ' ')) - 1) AS DOUBLE)
-               / len(string_split(text, ' ')) AS avg_token_len
-      FROM documents
-    ),
+    WITH {_d_quality_features('doc_id')},
     scored AS (
       SELECT doc_id,
-             round(1.0 / (1.0 + exp(-round({_W0}
-                   + {_W_LEN} * (CAST(n_tokens AS DOUBLE) / 100.0)
-                   + {_W_DISTINCT} * distinct_ratio
-                   + {_W_STOP} * stop_ratio
-                   + {_W_TOKLEN} * (avg_token_len / 10.0), 6))), 6) AS score,
+             round(1.0 / (1.0 + exp(-{_D_QUALITY_LOGIT})), 6) AS score,
              CASE WHEN {_CAL_GOLD_DUCK} THEN 1 ELSE 0 END AS gold
       FROM feat
     ),
@@ -1845,24 +1841,9 @@ def q_e_shard_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Shared calibration per-score frame (q_e_quality_auc /
 # q_e_pr_auc): the 6-dp sigmoid score, the rule-based gold label, and
 # the per-score (pos, neg) counts — identical text in both oracles.
-_CAL_PER_CTES = f"""feat AS (
-      SELECT doc_id,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-             CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-               / len(string_split(text, ' ')) AS distinct_ratio,
-             CAST(len(list_filter(string_split(text, ' '),
-                                  x -> x IN ({_STOP_IN}))) AS DOUBLE)
-               / len(string_split(text, ' ')) AS stop_ratio,
-             CAST(n_chars - (len(string_split(text, ' ')) - 1) AS DOUBLE)
-               / len(string_split(text, ' ')) AS avg_token_len
-      FROM documents
-    ),
+_CAL_PER_CTES = f"""{_d_quality_features('doc_id')},
     scored AS (
-      SELECT round(1.0 / (1.0 + exp(-round({_W0}
-                   + {_W_LEN} * (CAST(n_tokens AS DOUBLE) / 100.0)
-                   + {_W_DISTINCT} * distinct_ratio
-                   + {_W_STOP} * stop_ratio
-                   + {_W_TOKLEN} * (avg_token_len / 10.0), 6))), 6) AS score,
+      SELECT round(1.0 / (1.0 + exp(-{_D_QUALITY_LOGIT})), 6) AS score,
              CASE WHEN {_CAL_GOLD_DUCK} THEN 1 ELSE 0 END AS gold
       FROM feat
     ),
@@ -2046,7 +2027,7 @@ def q_e_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_classes"),
             F.sum("k").cast("long").alias("n_docs"),
-            # _q6 floor quantizer, not round(): this mean LANDED on an
+            # q6 floor quantizer (registry.q6), not round(): this mean LANDED on an
             # exact 5e-7 tie at sf0.1 where Spark's HALF_UP and
             # DuckDB's HALF_EVEN round() diverge
             (
@@ -2074,16 +2055,7 @@ _QC_SLA = 0.5  # quality-rate SLA the CI is tested against
 @query(
     "q_e_wilson_ci",
     oracle=f"""
-    WITH feat AS (
-      SELECT source,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-             CAST(len(list_filter(string_split(text, ' '),
-                                  x -> x IN ({_STOP_IN}))) AS DOUBLE)
-               / len(string_split(text, ' ')) AS stop_ratio,
-             CAST(n_chars - (len(string_split(text, ' ')) - 1) AS DOUBLE)
-               / len(string_split(text, ' ')) AS avg_token_len
-      FROM documents
-    ),
+    WITH {_d_quality_features('source')},
     per AS (
       SELECT source, CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(CASE WHEN {_CAL_GOLD_DUCK} THEN 1 ELSE 0 END)
@@ -4145,10 +4117,6 @@ _LR_FEATS = ("bias", "distinct", "len100", "stop", "toklen10")
 _LR_XCOLS = ("x0", "x2", "x1", "x3", "x4")  # aligned with _LR_FEATS
 
 
-def _lr_q6(x: str) -> str:
-    return f"floor(({x}) * 1000000.0 + 0.5) / 1000000.0"
-
-
 _LR_LOGIT = "round(w.w0*x0 + w.w1*x1 + w.w2*x2 + w.w3*x3 + w.w4*x4, 6)"
 _LR_SCORE = f"round(1.0 / (1.0 + exp(-{_LR_LOGIT})), 6)"
 
@@ -4159,28 +4127,19 @@ def _lr_weight_parts(with_doc_id: bool = False) -> list[str]:
     oracles so both walk the identical weight trajectory."""
     did = "doc_id, " if with_doc_id else ""
     parts = [
+        _d_quality_features(*(["doc_id"] if with_doc_id else []), name="qf"),
         f"""feat AS (
       SELECT {did}1.0 AS x0,
              CAST(n_tokens AS DOUBLE) / 100.0 AS x1,
              distinct_ratio AS x2, stop_ratio AS x3,
              avg_token_len / 10.0 AS x4,
              CASE WHEN {_CAL_GOLD_DUCK} THEN 1 ELSE 0 END AS y
-      FROM (
-        SELECT {did}CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-               CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-                 / len(string_split(text, ' ')) AS distinct_ratio,
-               CAST(len(list_filter(string_split(text, ' '),
-                                    x -> x IN ({_STOP_IN}))) AS DOUBLE)
-                 / len(string_split(text, ' ')) AS stop_ratio,
-               CAST(n_chars - (len(string_split(text, ' ')) - 1) AS DOUBLE)
-                 / len(string_split(text, ' ')) AS avg_token_len
-        FROM documents
-      )
+      FROM qf
     )""",
         "w0_ AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2,"
         " 0.0 AS w3, 0.0 AS w4)",
     ]
-    q6, score = _lr_q6, _LR_SCORE
+    score = _LR_SCORE
     for k in range(1, _LR_ROUNDS + 1):
         grads = ",\n             ".join(
             f"{dsum(f'(s - y) * x{j}')} / COUNT(*) AS g{j}" for j in range(5)
@@ -4205,13 +4164,13 @@ def _lr_weight_parts(with_doc_id: bool = False) -> list[str]:
     return parts
 
 
-def _lr_features(spark: SparkSession, sf_dir: str, *keep: str) -> DataFrame:
-    """(*keep, x0..x4, y): the logistic-regression design matrix over
+def _lr_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(x0..x4, y): the logistic-regression design matrix over
     _quality_features (bias, tokens/100, distinct ratio, stopword
-    ratio, mean token length/10) and the gold label as target."""
-    base = _quality_features(spark, sf_dir, *keep)
-    return base.select(
-        *keep,
+    ratio, mean token length/10) and the gold label as target. One
+    persisted copy per (app, sf_dir), read by every round of the
+    training walk and by q_e_cartography's scoring pass."""
+    feat = _quality_features(spark, sf_dir).select(
         F.lit(1.0).alias("x0"),
         (F.col("n_tokens").cast("double") / 100.0).alias("x1"),
         F.col("distinct_ratio").alias("x2"),
@@ -4219,10 +4178,52 @@ def _lr_features(spark: SparkSession, sf_dir: str, *keep: str) -> DataFrame:
         (F.col("avg_token_len") / 10.0).alias("x4"),
         _quality_gold().alias("y"),
     )
+    return scoped_persist(feat, spark, sf_dir, "logreg_feat")
+
+
+def _lr_score6(w: list[float]):
+    """The 6-dp sigmoid score of the weight vector w over _lr_features'
+    x0..x4, its logit rounded at 6 dp first — the oracle's _LR_SCORE."""
+    logit = F.round(sum(F.lit(w[j]) * F.col(f"x{j}") for j in range(5)), 6)
+    return F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 6)
+
+
+def _lr_trajectory(spark: SparkSession, sf_dir: str) -> list[tuple]:
+    """[(gradients, log-loss, weights after the update)] of each of the
+    _LR_ROUNDS full-batch GD rounds (lr = 1, w₀ = 0) over _lr_features,
+    walked once per (app, sf_dir) through scoped_value: q_e_logreg_train
+    emits it and q_e_cartography scores every doc at its weights. Each
+    round is ONE combinable aggregate (5 gradient sums + the log-loss
+    sum, all exact-decimal dsum, so any row order gives the same bits)
+    whose collect holds 6 doubles; the weights land on the py_q6
+    lattice the oracle's unrolled CTEs share."""
+
+    def walk() -> list[tuple]:
+        feat = _lr_features(spark, sf_dir)
+        w = [0.0] * 5
+        rounds = []
+        for _step in range(_LR_ROUNDS):
+            score = _lr_score6(w)
+            p = F.greatest(F.lit(0.000001), F.least(score, F.lit(0.999999)))
+            aggs = [
+                F.expr(f"{dsum(f'(s - y) * x{j}')} / COUNT(*)").alias(f"g{j}")
+                for j in range(5)
+            ]
+            ll_term = "-(y * round(ln(p), 6) + (1 - y) * round(ln(1.0 - p), 6))"
+            aggs.append(F.expr(f"{dsum(ll_term)} / COUNT(*)").alias("ll"))
+            scored = feat.select(
+                "y", "x0", "x1", "x2", "x3", "x4", score.alias("s"), p.alias("p")
+            )
+            r = scored.agg(*aggs).collect()[0]  # 1 row, 6 doubles — bounded
+            g = [r[f"g{j}"] for j in range(5)]
+            w = [py_q6(w[j] - g[j]) for j in range(5)]
+            rounds.append((g, r["ll"], w))
+        return rounds
+
+    return scoped_value(spark, sf_dir, "lr_trajectory", walk)
 
 
 def _lr_sql() -> str:
-    q6 = _lr_q6
     parts = _lr_weight_parts()
     emits = []
     for k in range(1, _LR_ROUNDS + 1):
@@ -4254,50 +4255,18 @@ def q_e_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     log-loss) — log-loss decreasing across steps is the training
     curve.
 
-    Execution (the q_e_kmeans_train discipline): the feature frame
-    is computed once and persisted; each round is ONE combinable
-    aggregate over it (5 gradient sums + the log-loss sum, all
-    through exact-decimal dsum so any row order produces identical
-    bits); the driver holds only the 6-double gradient row per round
-    and re-emits literal weights — never corpus rows. The oracle
-    unrolls the identical 3 rounds as chained CTEs; every weight
-    update lands on the shared floor half-up lattice, so both
-    engines walk the same weight vectors exactly."""
-    import math
-
-    feat = _lr_features(spark, sf_dir)
-    feat = scoped_persist(feat, spark, sf_dir, "logreg_feat")
-
-    def _q6(v: float) -> float:
-        return math.floor(v * 1000000.0 + 0.5) / 1000000.0
-
-    w = [0.0] * 5
-    out = []
-    for step in range(1, _LR_ROUNDS + 1):
-        logit = F.round(
-            sum(F.lit(w[j]) * F.col(f"x{j}") for j in range(5)), 6
-        )
-        score = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 6)
-        p = F.greatest(
-            F.lit(0.000001), F.least(score, F.lit(0.999999))
-        )
-        scored = feat.select(
-            "y", "x0", "x1", "x2", "x3", "x4",
-            score.alias("s"), p.alias("p"),
-        )
-        aggs = [
-            F.expr(f"{dsum(f'(s - y) * x{j}')} / COUNT(*)").alias(f"g{j}")
-            for j in range(5)
-        ]
-        ll_term = "-(y * round(ln(p), 6) + (1 - y) * round(ln(1.0 - p), 6))"
-        aggs.append(F.expr(f"{dsum(ll_term)} / COUNT(*)").alias("ll"))
-        r = scored.agg(*aggs).collect()[0]  # 1 row, 6 doubles — bounded
-        g = [r[f"g{j}"] for j in range(5)]
-        w = [_q6(w[j] - g[j]) for j in range(5)]
-        for name, xc in zip(_LR_FEATS, _LR_XCOLS):
-            j = int(xc[1])
-            out.append((step, name, _q6(g[j]), w[j], _q6(r["ll"])))
-    feat.unpersist()
+    Execution (the q_e_kmeans_train discipline): the walk is
+    _lr_trajectory, shared with q_e_cartography through scoped_value;
+    the driver holds only the 6-double gradient row per round and
+    re-emits literal weights — never corpus rows. The oracle unrolls
+    the identical 3 rounds as chained CTEs; every weight update lands
+    on the shared floor half-up lattice, so both engines walk the
+    same weight vectors exactly."""
+    out = [
+        (step, name, py_q6(g[int(xc[1])]), w[int(xc[1])], py_q6(ll))
+        for step, (g, ll, w) in enumerate(_lr_trajectory(spark, sf_dir), 1)
+        for name, xc in zip(_LR_FEATS, _LR_XCOLS)
+    ]
     import pyspark.sql.types as T
 
     schema = T.StructType(
@@ -4591,54 +4560,23 @@ def q_e_cartography(spark: SparkSession, sf_dir: str) -> DataFrame:
     INTEGERS (c6), so Σc and the variability score 3·Σc² − (Σc)²
     are exact BIGINT arithmetic — region assignment is an integer
     comparison, immune to float drift; the same trick as the ERR
-    cascade. Scale (the kmeans/logreg discipline): the feature frame
-    persists once; each training round is one combinable aggregate;
-    the cartography pass is ONE scan with three literal weight
-    vectors (no joins — the oracle's s1⋈s2⋈s3 collapses to one
-    projection in Spark) and a 4-row region rollup."""
-    import math
-
-    feat = _lr_features(spark, sf_dir, "doc_id")
-    feat = scoped_persist(feat, spark, sf_dir, "cartography_feat")
-
-    def _q6(v: float) -> float:
-        return math.floor(v * 1000000.0 + 0.5) / 1000000.0
-
-    # identical GD walk to q_e_logreg_train (lr=1, w0=0, 3 rounds)
-    w = [0.0] * 5
-    trajectory = []
-    for _step in range(1, _LR_ROUNDS + 1):
-        logit = F.round(
-            sum(F.lit(w[j]) * F.col(f"x{j}") for j in range(5)), 6
-        )
-        score = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 6)
-        g = feat.select(
-            score.alias("s"), "y", "x0", "x1", "x2", "x3", "x4"
-        ).agg(
-            *[
-                F.expr(f"{dsum(f'(s - y) * x{j}')} / COUNT(*)").alias(
-                    f"g{j}"
-                )
-                for j in range(5)
-            ]
-        ).first()
-        w = [_q6(w[j] - g[f"g{j}"]) for j in range(5)]
-        trajectory.append(list(w))
+    cascade. Scale (the kmeans/logreg discipline): the weights are
+    q_e_logreg_train's _lr_trajectory, walked once per session over
+    the shared persisted feature frame; the cartography pass is ONE
+    scan of that frame with three literal weight vectors (no joins —
+    the oracle's s1⋈s2⋈s3 collapses to one projection in Spark) and a
+    4-row region rollup."""
 
     def conf6(wk: list[float]):
-        logit = F.round(
-            sum(F.lit(wk[j]) * F.col(f"x{j}") for j in range(5)), 6
-        )
-        s = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 6)
+        s = _lr_score6(wk)
         c = F.when(F.col("y") == 1, s).otherwise(F.lit(1.0) - s)
         return F.floor(c * 1000000.0 + F.lit(0.5)).cast("long")
 
-    traced = feat.select(
-        "doc_id",
+    trajectory = [w for _g, _ll, w in _lr_trajectory(spark, sf_dir)]
+    traced = _lr_features(spark, sf_dir).select(
         "y",
         *[conf6(trajectory[k]).alias(f"c{k + 1}") for k in range(3)],
     ).selectExpr(
-        "doc_id",
         "y",
         "c1 + c2 + c3 AS csum",
         "3 * (c1*c1 + c2*c2 + c3*c3)"

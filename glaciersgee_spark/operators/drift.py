@@ -9,13 +9,11 @@ contributes relative to everything ingested before it).
 
 from __future__ import annotations
 
-import math
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from glaciersgee_spark.caches import scoped_persist
-from glaciersgee_spark.registry import davg, dsum, query
+from glaciersgee_spark.registry import davg, dsum, py_q6, q6, query
 from glaciersgee_spark.tables import chunked_prefix, fan_out, load_table, local_frame
 
 # Minimum combined token count to score drift on (rarer tokens are
@@ -890,19 +888,6 @@ def q_e_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # engines where round(double, 6) tie-breaking is not (the bigram_lm
 # lesson); shared verbatim by the Spark query and the oracle.
 _ED_Q6 = "(CAST(floor(({x}) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0)"
-
-
-def _py_q6(v: float) -> float:
-    """Driver-side mirror of _ED_Q6: 6-dp half-UP quantizer.
-
-    Python's round() is round-half-to-EVEN while DuckDB's round() is
-    half-away-from-zero — near-tie lattice points diverge between the
-    driver folds and their WITH RECURSIVE oracles. floor(x*1e6+0.5)
-    is round-half-toward-+inf in all three engines (Spark floor,
-    DuckDB floor, math.floor), so every recurrence op quantizes
-    through this instead (r8 parity fix for q_e_ewma_chart /
-    q_e_holt_trend)."""
-    return math.floor(v * 1000000.0 + 0.5) / 1000000.0
 _ED_DELTA = _ED_Q6.format(x="ma - mb")
 
 
@@ -2539,7 +2524,7 @@ def q_e_ewma_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     ew = 0.0
     rows = []
     for i, r in enumerate(panel):
-        ew = _py_q6(0.2 * r.z6 + (0.8 * ew if i else 0.0))
+        ew = py_q6(0.2 * r.z6 + (0.8 * ew if i else 0.0))
         rows.append((r.day, r.z6, ew, abs(ew) > 1.0))
     import pyspark.sql.types as T
 
@@ -2625,9 +2610,9 @@ def q_e_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         if i == 0:
             lvl, trd, fcst = float(r.x), 0.0, None
         else:
-            fcst = _py_q6(lvl + trd)
-            new_lvl = _py_q6(0.3 * r.x + 0.7 * (lvl + trd))
-            trd = _py_q6(0.1 * (new_lvl - lvl) + 0.9 * trd)
+            fcst = py_q6(lvl + trd)
+            new_lvl = py_q6(0.3 * r.x + 0.7 * (lvl + trd))
+            trd = py_q6(0.1 * (new_lvl - lvl) + 0.9 * trd)
             lvl = new_lvl
         rows.append(
             (
@@ -2636,7 +2621,7 @@ def q_e_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lvl,
                 trd,
                 fcst,
-                _py_q6(abs(r.x - fcst)) if fcst is not None else None,
+                py_q6(abs(r.x - fcst)) if fcst is not None else None,
             )
         )
     import pyspark.sql.types as T
@@ -2664,11 +2649,9 @@ def q_e_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the 7-slot seasonal queue (q1 = next slot to use) and rotates it
 # each step — the standard trick for lag-m references, which a
 # recursive CTE (previous row only) cannot otherwise reach.
-_HW_Q6 = "floor(({x}) * 1000000.0 + 0.5) / 1000000.0"
 
 
 def _hw_sql() -> str:
-    q6 = _HW_Q6.format
     new_lvl = q6(x="0.3 * (z.x - h.q1) + 0.7 * (h.lvl + h.trd)")
     return f"""
     WITH RECURSIVE days AS (
@@ -2729,7 +2712,7 @@ def q_e_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Execution split (q_e_ewma_chart precedent): the corpus collapses
     engine-side to the bounded day panel; the inherently-sequential
     three-state recurrence folds driver-side on the shared 6-dp
-    half-up lattice (_py_q6). The DuckDB oracle is the identical
+    half-up lattice (registry.py_q6). The DuckDB oracle is the identical
     recurrence as WITH RECURSIVE whose state row carries the 7-slot
     seasonal queue and rotates it each step — the lag-m access a
     previous-row-only recursive CTE cannot express otherwise."""
@@ -2742,19 +2725,19 @@ def q_e_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     panel = days.collect()
     rows = []
     if len(panel) >= 8:
-        lvl = _py_q6(sum(float(r.x) for r in panel[:7]) / 7.0)
+        lvl = py_q6(sum(float(r.x) for r in panel[:7]) / 7.0)
         trd = 0.0
-        queue = [_py_q6(float(r.x) - lvl) for r in panel[:7]]
+        queue = [py_q6(float(r.x) - lvl) for r in panel[:7]]
         for r in panel[7:]:
             s_used = queue.pop(0)
-            fcst = _py_q6(lvl + trd + s_used)
-            new_lvl = _py_q6(0.3 * (r.x - s_used) + 0.7 * (lvl + trd))
-            trd = _py_q6(0.1 * (new_lvl - lvl) + 0.9 * trd)
-            queue.append(_py_q6(0.2 * (r.x - new_lvl) + 0.8 * s_used))
+            fcst = py_q6(lvl + trd + s_used)
+            new_lvl = py_q6(0.3 * (r.x - s_used) + 0.7 * (lvl + trd))
+            trd = py_q6(0.1 * (new_lvl - lvl) + 0.9 * trd)
+            queue.append(py_q6(0.2 * (r.x - new_lvl) + 0.8 * s_used))
             lvl = new_lvl
             rows.append(
                 (r.day, r.x, lvl, trd, s_used, fcst,
-                 _py_q6(abs(r.x - fcst)))
+                 py_q6(abs(r.x - fcst)))
             )
     import pyspark.sql.types as T
 

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from glaciersgee_spark.operators.similarity import _cos6, _D_NRM, _d_cos6, _D_VEC
 from glaciersgee_spark.operators.text import BM25_CTES, q_e_bm25
 from glaciersgee_spark.caches import scoped_persist
-from glaciersgee_spark.registry import dsum, query
+from glaciersgee_spark.registry import dsum, py_q6, q6, query
 from glaciersgee_spark.tables import chunked_prefix, fan_out, load_table, local_frame
 
 RRF_K = 60
@@ -141,19 +141,12 @@ MMR_LAMBDA = 0.7
 MMR_K = 5
 MMR_POOL = 20
 
-# Cross-engine 6-dp quantizer (the _FH_RATE6 floor idiom — round()
-# half-up/half-even tie behavior diverges between engines; floor+0.5
-# is identical everywhere, including for the negative MMR scores).
-def _q6(x: str) -> str:
-    return f"floor(({x}) * 1000000.0 + 0.5) / 1000000.0"
-
-
 def _mmr_oracle() -> str:
     """Unrolled greedy MMR as a CTE chain (k is a fixed literal, so the
     iteration unrolls into k dependent CTE steps — no recursion)."""
     steps = [
         f"""sel1 AS (
-      SELECT doc_id, rel6, {_q6(f'{MMR_LAMBDA} * rel6')} AS mmr6,
+      SELECT doc_id, rel6, {q6(f'{MMR_LAMBDA} * rel6')} AS mmr6,
              CAST(1 AS BIGINT) AS rk
       FROM cand ORDER BY mmr6 DESC, doc_id ASC LIMIT 1
     )"""
@@ -172,7 +165,7 @@ def _mmr_oracle() -> str:
     ),
     sel{k} AS (
       SELECT doc_id, rel6,
-             {_q6(f'{MMR_LAMBDA} * rel6 - {round(1 - MMR_LAMBDA, 1)} * pen')}
+             {q6(f'{MMR_LAMBDA} * rel6 - {round(1 - MMR_LAMBDA, 1)} * pen')}
                AS mmr6,
              CAST({k} AS BIGINT) AS rk
       FROM pen{k} ORDER BY mmr6 DESC, doc_id ASC LIMIT 1
@@ -215,8 +208,6 @@ def q_e_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-quantized in both engines so greedy ties break identically;
     the oracle unrolls the same greedy as 5 dependent CTE steps.
     """
-    import math
-
     from pyspark.sql import types as T
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -242,9 +233,6 @@ def q_e_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sim = {(r.ia, r.ib): r.s for r in sims.collect()}
 
-    def q6(x: float) -> float:
-        return math.floor(x * 1_000_000.0 + 0.5) / 1_000_000.0
-
     lam, mu = MMR_LAMBDA, round(1 - MMR_LAMBDA, 1)
     selected: list[tuple[int, int, float, float]] = []  # rk, doc, rel6, mmr6
     chosen: list[int] = []
@@ -254,7 +242,7 @@ def q_e_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
             if doc in chosen:
                 continue
             pen = max((sim[(doc, j)] for j in chosen), default=0.0)
-            m6 = q6(lam * r6) if not chosen else q6(lam * r6 - mu * pen)
+            m6 = py_q6(lam * r6) if not chosen else py_q6(lam * r6 - mu * pen)
             if best is None or (m6, -doc) > (best[3], -best[1]):
                 best = (rk, doc, r6, m6)
         assert best is not None, "candidate pool exhausted before k picks"

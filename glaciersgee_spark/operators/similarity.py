@@ -54,6 +54,10 @@ _P_MAT = _PLANES.reshape(N_PLANES, DIM)  # row j = hyperplane j
 _POW2 = (2 ** np.arange(PLANES_PER_BAND)).astype(np.int64)
 _PF_DUCK = "[" + ",".join(f"{w:.0f}.0" for w in _PLANES) + "]"
 
+# The fixed query panel of every recall audit, and its cut-off.
+_RECALL_QIDS = (0, 11, 22, 33, 44)
+_RECALL_K = 10
+
 
 def _to_mat(s: pd.Series) -> np.ndarray:
     """Arrow list column → (n, DIM) float64 matrix (exact f32→f64)."""
@@ -361,6 +365,113 @@ _DUCK_BUCKETS = (
     + ")"
 )
 
+# Oracle CTE builders, one per ANN mechanism, each the DuckDB mirror of
+# the Spark helper named in its docstring. They emit SQL text only and
+# read no Spark helper, so the oracles stay an independent engine. Row
+# tables keyed by vec_id carry (ve, nrm); panel query rows (qid, qv, qn);
+# centroid tables (cid, cve, cnrm).
+
+
+def _d_lsh_bands(label: bool = False) -> str:
+    """p, v, d, bk, bands: the SRP chain, every vector's (vec_id, band,
+    bucket) rows — the mirror of _banded. ``label`` keeps v's label."""
+    lab = "label, " if label else ""
+    return f"""p AS (SELECT {_PF_DUCK} AS pf),
+    v AS (SELECT vec_id, {lab}{_D_VEC} AS ve, {_D_NRM} AS nrm FROM embeddings),
+    d AS (SELECT vec_id, ve, nrm, {_DUCK_DOTS} AS dots FROM v, p),
+    bk AS (SELECT vec_id, {_DUCK_BUCKETS} AS buckets FROM d),
+    bands AS (SELECT vec_id,
+                     CAST(generate_subscripts(buckets, 1) - 1 AS BIGINT) AS band,
+                     CAST(unnest(buckets) AS BIGINT) AS bucket
+              FROM bk)"""
+
+
+def _d_query_rows(name: str = "qv", extra: str = "") -> str:
+    """{name} (qid, qv, qn, *extra): the _RECALL_QIDS panel rows of v —
+    the mirror of _query_rows."""
+    return f"""{name} AS (SELECT vec_id AS qid, ve AS qv, nrm AS qn{extra} FROM v
+           WHERE vec_id IN {_RECALL_QIDS})"""
+
+
+def _d_lsh_candidates() -> str:
+    """qb, cand (qid, vec_id): the distinct SRP band collisions of each
+    panel query, without the self-pair — the mirror of lsh_candidates.
+    Needs bands (_d_lsh_bands) and qv (_d_query_rows) before it."""
+    return """qb AS (SELECT vec_id AS qid, band, bucket FROM bands
+           WHERE vec_id IN (SELECT qid FROM qv)),
+    cand AS (SELECT DISTINCT qb.qid, b.vec_id
+             FROM qb JOIN bands b ON qb.band = b.band AND qb.bucket = b.bucket
+             WHERE b.vec_id <> qb.qid)"""
+
+
+def _d_seed_cells(k: int, name: str = "c", src: str = "v", where: str = "") -> str:
+    """{name} (cid, cve, cnrm): the seed centroids, vec_id 1..k of
+    ``src`` (and ``where``) — the mirror of _seed_cells."""
+    also = f" AND {where}" if where else ""
+    return f"""{name} AS (SELECT vec_id AS cid, ve AS cve, nrm AS cnrm
+          FROM {src} WHERE vec_id BETWEEN 1 AND {k}{also})"""
+
+
+def _d_top_cells(rows: str, cent: str, by, n: int, name: str) -> str:
+    """{name} (*by, cid, cs, rk): the n nearest cells of each ``by``
+    group — the mirror of top_cells. Every ``rows`` row (a table or a
+    parenthesised subquery) is scored against every ``cent`` centroid
+    and ranked by row_number over ``by`` ordered ``cs DESC, cid ASC``:
+    ties go to the smaller cid and NaN ranks first. Rows keyed by
+    vec_id are vectors (ve, nrm); any other key, or by=() (one global
+    rank), means panel query rows (qv, qn)."""
+    by = [by] if isinstance(by, str) else list(by)
+    ve, nrm = ("r.ve", "r.nrm") if "vec_id" in by else ("r.qv", "r.qn")
+    part = f"PARTITION BY {', '.join(by)} " if by else ""
+    keep = "rk = 1" if n == 1 else f"rk <= {n}"
+    return f"""{name} AS (SELECT * FROM (
+        SELECT *, ROW_NUMBER() OVER ({part}ORDER BY cs DESC, cid ASC) AS rk
+        FROM (SELECT {''.join(f'r.{b}, ' for b in by)}c.cid,
+                     {_d_cos6(ve, 'c.cve', nrm, 'c.cnrm')} AS cs
+              FROM {rows} r, {cent} c)) WHERE {keep})"""
+
+
+def _d_exact_topk(
+    k: "int | None" = _RECALL_K, name: str = "exact", rk: str = "rk", cand: str = ""
+) -> str:
+    """{name} (qid, vec_id, score, rk): every vector of v ranked by
+    6-dp cosine against each qv panel row, self-pair excluded, by
+    row_number over qid ordered ``score DESC, vec_id ASC`` and kept
+    while rk <= k (k=None keeps every rank) — the brute-force ground
+    truth of recall_at_k, in top_vectors' order. With ``cand`` (a
+    (qid, vec_id) table) only those pairs are ranked: an index's
+    candidate re-rank, in the same order."""
+    keep = f" WHERE {rk} <= {k}" if k is not None else ""
+    pairs = (
+        f"FROM {cand} c JOIN v ON c.vec_id = v.vec_id JOIN qv q ON c.qid = q.qid"
+        if cand
+        else "FROM v CROSS JOIN qv q WHERE v.vec_id <> q.qid"
+    )
+    return f"""{name} AS (SELECT * FROM (
+        SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
+                                     ORDER BY score DESC, vec_id ASC) AS {rk}
+        FROM (SELECT q.qid, v.vec_id,
+                     {_d_cos6('v.ve', 'q.qv', 'v.nrm', 'q.qn')} AS score
+              {pairs})){keep})"""
+
+
+def _d_recall(
+    spine: str, keys=("qid",), approx: str = "approx", name: str = "recall"
+) -> str:
+    """{name}_hits, {name} (*spine columns, n_hit, recall6): the hits of
+    ``approx`` (keys…, vec_id) in the exact top-_RECALL_K
+    (_d_exact_topk), counted per ``keys`` and left-joined onto ``spine``,
+    so a spine row with no hit reads n_hit 0 and recall6 0.0 — the
+    mirror of recall_at_k's tail."""
+    ak = ", ".join(f"a.{k}" for k in keys)
+    on = " AND ".join(f"s.{k} = h.{k}" for k in keys)
+    return f"""{name}_hits AS (SELECT {ak}, COUNT(*) AS n_hit
+             FROM {approx} a JOIN exact e ON a.qid = e.qid AND a.vec_id = e.vec_id
+             GROUP BY {ak}),
+    {name} AS (SELECT s.*, CAST(COALESCE(h.n_hit, 0) AS BIGINT) AS n_hit,
+                      round(COALESCE(h.n_hit, 0) / {float(_RECALL_K)}, 6) AS recall6
+               FROM {spine} s LEFT JOIN {name}_hits h ON {on})"""
+
 
 @query(
     "q_e_sim_topk",
@@ -412,14 +523,7 @@ def _banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_e_sim_join",
     oracle=f"""
-    WITH p AS (SELECT {_PF_DUCK} AS pf),
-    v AS (SELECT vec_id, {_D_VEC} AS ve, {_D_NRM} AS nrm FROM embeddings),
-    d AS (SELECT vec_id, ve, nrm, {_DUCK_DOTS} AS dots FROM v, p),
-    bk AS (SELECT vec_id, ve, nrm, {_DUCK_BUCKETS} AS buckets FROM d),
-    bands AS (SELECT vec_id,
-                     CAST(generate_subscripts(buckets, 1) - 1 AS BIGINT) AS band,
-                     CAST(unnest(buckets) AS BIGINT) AS bucket
-              FROM bk),
+    WITH {_d_lsh_bands()},
     cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
              FROM bands a JOIN bands b
                ON a.band = b.band AND a.bucket = b.bucket
@@ -494,14 +598,7 @@ def q_e_knn_pergroup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_e_sim_topk_lsh",
     oracle=f"""
-    WITH p AS (SELECT {_PF_DUCK} AS pf),
-    v AS (SELECT vec_id, label, {_D_VEC} AS ve, {_D_NRM} AS nrm FROM embeddings),
-    d AS (SELECT vec_id, ve, nrm, {_DUCK_DOTS} AS dots FROM v, p),
-    bk AS (SELECT vec_id, {_DUCK_BUCKETS} AS buckets FROM d),
-    bands AS (SELECT vec_id,
-                     CAST(generate_subscripts(buckets, 1) - 1 AS BIGINT) AS band,
-                     CAST(unnest(buckets) AS BIGINT) AS bucket
-              FROM bk),
+    WITH {_d_lsh_bands(label=True)},
     qb AS (SELECT band, bucket FROM bands WHERE vec_id = 0),
     cand AS (SELECT DISTINCT b.vec_id
              FROM qb JOIN bands b ON qb.band = b.band AND qb.bucket = b.bucket
@@ -553,23 +650,10 @@ IVF_NPROBE = 4
     "q_e_sim_topk_ivf",
     oracle=f"""
     WITH v AS (SELECT vec_id, label, {_D_VEC} AS ve, {_D_NRM} AS nrm FROM embeddings),
-    c AS (SELECT vec_id AS cid, ve AS cv, nrm AS cn FROM v
-          WHERE vec_id BETWEEN 1 AND {IVF_NLIST}),
-    sc AS (SELECT v.vec_id, c.cid,
-                  {_d_cos6('v.ve', 'c.cv', 'v.nrm', 'c.cn')} AS cscore
-           FROM v, c WHERE v.vec_id <> 0),
-    cell AS (SELECT vec_id, cid FROM (
-               SELECT vec_id, cid,
-                      ROW_NUMBER() OVER (PARTITION BY vec_id
-                                         ORDER BY cscore DESC, cid ASC) AS rk
-               FROM sc) WHERE rk = 1),
+    {_d_seed_cells(IVF_NLIST)},
+    {_d_top_cells('(SELECT * FROM v WHERE vec_id <> 0)', 'c', 'vec_id', 1, 'cell')},
     q AS (SELECT ve AS qv, nrm AS qn FROM v WHERE vec_id = 0),
-    probe AS (SELECT cid FROM (
-                SELECT c.cid,
-                       ROW_NUMBER() OVER (
-                         ORDER BY {_d_cos6('c.cv', 'q.qv', 'c.cn', 'q.qn')} DESC,
-                                  c.cid ASC) AS rk
-                FROM c, q) WHERE rk <= {IVF_NPROBE})
+    {_d_top_cells('q', 'c', (), IVF_NPROBE, 'probe')}
     SELECT v.vec_id, v.label, {_d_cos6('v.ve', 'q.qv', 'v.nrm', 'q.qn')} AS score
     FROM cell JOIN probe USING (cid) JOIN v ON cell.vec_id = v.vec_id, q
     ORDER BY score DESC, v.vec_id ASC
@@ -618,14 +702,7 @@ DEDUP_COS_THR = 0.4
 @query(
     "q_e_dedup_embed",
     oracle=f"""
-    WITH p AS (SELECT {_PF_DUCK} AS pf),
-    v AS (SELECT vec_id, {_D_VEC} AS ve, {_D_NRM} AS nrm FROM embeddings),
-    d AS (SELECT vec_id, ve, nrm, {_DUCK_DOTS} AS dots FROM v, p),
-    bk AS (SELECT vec_id, {_DUCK_BUCKETS} AS buckets FROM d),
-    bands AS (SELECT vec_id,
-                     CAST(generate_subscripts(buckets, 1) - 1 AS BIGINT) AS band,
-                     CAST(unnest(buckets) AS BIGINT) AS bucket
-              FROM bk),
+    WITH {_d_lsh_bands()},
     cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
              FROM bands a JOIN bands b
                ON a.band = b.band AND a.bucket = b.bucket
@@ -740,9 +817,6 @@ def q_e_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------- ANN recall
 
-_RECALL_QIDS = (0, 11, 22, 33, 44)
-_RECALL_K = 10
-
 
 def _panel_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(qid, vec_id, score): 6-dp cosine of every corpus vector against
@@ -784,49 +858,14 @@ def _panel_scores_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_e_ann_recall",
     oracle=f"""
-    WITH p AS (SELECT {_PF_DUCK} AS pf),
-    v AS (SELECT vec_id, {_D_VEC} AS ve, {_D_NRM} AS nrm FROM embeddings),
-    d AS (SELECT vec_id, ve, nrm, {_DUCK_DOTS} AS dots FROM v, p),
-    bk AS (SELECT vec_id, {_DUCK_BUCKETS} AS buckets FROM d),
-    bands AS (SELECT vec_id,
-                     CAST(generate_subscripts(buckets, 1) - 1 AS BIGINT) AS band,
-                     CAST(unnest(buckets) AS BIGINT) AS bucket
-              FROM bk),
-    qb AS (SELECT vec_id AS qid, band, bucket FROM bands
-           WHERE vec_id IN {_RECALL_QIDS}),
-    cand AS (SELECT DISTINCT qb.qid, b.vec_id
-             FROM qb JOIN bands b ON qb.band = b.band AND qb.bucket = b.bucket
-             WHERE b.vec_id <> qb.qid),
-    qv AS (SELECT vec_id AS qid, ve AS qv, nrm AS qn FROM v
-           WHERE vec_id IN {_RECALL_QIDS}),
-    approx AS (
-      SELECT qid, vec_id FROM (
-        SELECT c.qid, c.vec_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY c.qid
-                 ORDER BY {_d_cos6('v.ve', 'q.qv', 'v.nrm', 'q.qn')} DESC,
-                          c.vec_id ASC) AS rk
-        FROM cand c JOIN v ON c.vec_id = v.vec_id JOIN qv q ON c.qid = q.qid
-      ) WHERE rk <= {_RECALL_K}
-    ),
-    exact AS (
-      SELECT qid, vec_id FROM (
-        SELECT q.qid, v.vec_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.qid
-                 ORDER BY {_d_cos6('v.ve', 'q.qv', 'v.nrm', 'q.qn')} DESC,
-                          v.vec_id ASC) AS rk
-        FROM v CROSS JOIN qv q WHERE v.vec_id <> q.qid
-      ) WHERE rk <= {_RECALL_K}
-    ),
+    WITH {_d_lsh_bands()},
+    {_d_query_rows()},
+    {_d_lsh_candidates()},
+    {_d_exact_topk(name='approx', cand='cand')},
+    {_d_exact_topk()},
     ncand AS (SELECT qid, COUNT(*) AS n_cand FROM cand GROUP BY qid),
-    hits AS (SELECT a.qid, COUNT(*) AS n_hit
-             FROM approx a JOIN exact e ON a.qid = e.qid AND a.vec_id = e.vec_id
-             GROUP BY a.qid)
-    SELECT n.qid, n.n_cand,
-           COALESCE(h.n_hit, 0) AS n_hit,
-           round(COALESCE(h.n_hit, 0) / {float(_RECALL_K)}, 6) AS recall6
-    FROM ncand n LEFT JOIN hits h ON n.qid = h.qid
+    {_d_recall('ncand')}
+    SELECT * FROM recall
     """,
 )
 def q_e_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -860,37 +899,11 @@ _CURVE_KS = (1, 5, 10, 20)
 @query(
     "q_e_recall_curve",
     oracle=f"""
-    WITH p AS (SELECT {_PF_DUCK} AS pf),
-    v AS (SELECT vec_id, {_D_VEC} AS ve, {_D_NRM} AS nrm FROM embeddings),
-    d AS (SELECT vec_id, ve, nrm, {_DUCK_DOTS} AS dots FROM v, p),
-    bk AS (SELECT vec_id, {_DUCK_BUCKETS} AS buckets FROM d),
-    bands AS (SELECT vec_id,
-                     CAST(generate_subscripts(buckets, 1) - 1 AS BIGINT) AS band,
-                     CAST(unnest(buckets) AS BIGINT) AS bucket
-              FROM bk),
-    qb AS (SELECT vec_id AS qid, band, bucket FROM bands
-           WHERE vec_id IN {_RECALL_QIDS}),
-    cand AS (SELECT DISTINCT qb.qid, b.vec_id
-             FROM qb JOIN bands b ON qb.band = b.band AND qb.bucket = b.bucket
-             WHERE b.vec_id <> qb.qid),
-    qv AS (SELECT vec_id AS qid, ve AS qv, nrm AS qn FROM v
-           WHERE vec_id IN {_RECALL_QIDS}),
-    ranked_a AS (
-      SELECT c.qid, c.vec_id,
-             ROW_NUMBER() OVER (
-               PARTITION BY c.qid
-               ORDER BY {_d_cos6('v.ve', 'q.qv', 'v.nrm', 'q.qn')} DESC,
-                        c.vec_id ASC) AS rka
-      FROM cand c JOIN v ON c.vec_id = v.vec_id JOIN qv q ON c.qid = q.qid
-    ),
-    ranked_e AS (
-      SELECT q.qid, v.vec_id,
-             ROW_NUMBER() OVER (
-               PARTITION BY q.qid
-               ORDER BY {_d_cos6('v.ve', 'q.qv', 'v.nrm', 'q.qn')} DESC,
-                        v.vec_id ASC) AS rke
-      FROM v CROSS JOIN qv q WHERE v.vec_id <> q.qid
-    ),
+    WITH {_d_lsh_bands()},
+    {_d_query_rows()},
+    {_d_lsh_candidates()},
+    {_d_exact_topk(None, 'ranked_a', 'rka', cand='cand')},
+    {_d_exact_topk(None, 'ranked_e', 'rke')},
     j AS (SELECT a.qid, a.rka, e.rke
           FROM ranked_a a JOIN ranked_e e
             ON a.qid = e.qid AND a.vec_id = e.vec_id),
@@ -957,56 +970,18 @@ def q_e_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_e_ivf_recall",
     oracle=f"""
     WITH v AS (SELECT vec_id, {_D_VEC} AS ve, {_D_NRM} AS nrm FROM embeddings),
-    c AS (SELECT vec_id AS cid, ve AS cv, nrm AS cn FROM v
-          WHERE vec_id BETWEEN 1 AND {IVF_NLIST}),
-    sc AS (SELECT v.vec_id, c.cid,
-                  {_d_cos6('v.ve', 'c.cv', 'v.nrm', 'c.cn')} AS cscore
-           FROM v, c),
-    cell AS (SELECT vec_id, cid FROM (
-               SELECT vec_id, cid,
-                      ROW_NUMBER() OVER (PARTITION BY vec_id
-                                         ORDER BY cscore DESC, cid ASC) AS rk
-               FROM sc) WHERE rk = 1),
-    qv AS (SELECT vec_id AS qid, ve AS qv, nrm AS qn FROM v
-           WHERE vec_id IN {_RECALL_QIDS}),
-    probe AS (SELECT qid, cid FROM (
-                SELECT q.qid, c.cid,
-                       ROW_NUMBER() OVER (
-                         PARTITION BY q.qid
-                         ORDER BY {_d_cos6('c.cv', 'q.qv', 'c.cn', 'q.qn')} DESC,
-                                  c.cid ASC) AS rk
-                FROM c, qv q) WHERE rk <= {IVF_NPROBE}),
+    {_d_seed_cells(IVF_NLIST)},
+    {_d_top_cells('v', 'c', 'vec_id', 1, 'cell')},
+    {_d_query_rows()},
+    {_d_top_cells('qv', 'c', 'qid', IVF_NPROBE, 'probe')},
     cand AS (SELECT p.qid, cell.vec_id
              FROM cell JOIN probe p USING (cid)
              WHERE cell.vec_id <> p.qid),
-    approx AS (
-      SELECT qid, vec_id FROM (
-        SELECT cd.qid, cd.vec_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY cd.qid
-                 ORDER BY {_d_cos6('v.ve', 'q.qv', 'v.nrm', 'q.qn')} DESC,
-                          cd.vec_id ASC) AS rk
-        FROM cand cd JOIN v ON cd.vec_id = v.vec_id JOIN qv q ON cd.qid = q.qid
-      ) WHERE rk <= {_RECALL_K}
-    ),
-    exact AS (
-      SELECT qid, vec_id FROM (
-        SELECT q.qid, v.vec_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.qid
-                 ORDER BY {_d_cos6('v.ve', 'q.qv', 'v.nrm', 'q.qn')} DESC,
-                          v.vec_id ASC) AS rk
-        FROM v CROSS JOIN qv q WHERE v.vec_id <> q.qid
-      ) WHERE rk <= {_RECALL_K}
-    ),
+    {_d_exact_topk(name='approx', cand='cand')},
+    {_d_exact_topk()},
     ncand AS (SELECT qid, COUNT(*) AS n_cand FROM cand GROUP BY qid),
-    hits AS (SELECT a.qid, COUNT(*) AS n_hit
-             FROM approx a JOIN exact e ON a.qid = e.qid AND a.vec_id = e.vec_id
-             GROUP BY a.qid)
-    SELECT n.qid, n.n_cand,
-           COALESCE(h.n_hit, 0) AS n_hit,
-           round(COALESCE(h.n_hit, 0) / {float(_RECALL_K)}, 6) AS recall6
-    FROM ncand n LEFT JOIN hits h ON n.qid = h.qid
+    {_d_recall('ncand')}
+    SELECT * FROM recall
     """,
 )
 def q_e_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1077,21 +1052,11 @@ def q_e_embed_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_e_hard_negatives",
     oracle=f"""
     WITH v AS (SELECT vec_id, label, {_D_VEC} AS ve, {_D_NRM} AS nrm FROM embeddings),
-    qv AS (SELECT vec_id AS qid, label AS qlabel, ve AS qe, nrm AS qn FROM v
-           WHERE vec_id IN {_RECALL_QIDS}),
-    scored AS (
-      SELECT q.qid, q.qlabel, v.vec_id, v.label,
-             {_d_cos6('v.ve', 'q.qe', 'v.nrm', 'q.qn')} AS score
-      FROM v CROSS JOIN qv q WHERE v.vec_id <> q.qid
-    ),
-    ranked AS (
-      SELECT qid, qlabel, vec_id, label, score,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY score DESC, vec_id ASC) AS rk
-      FROM scored
-    )
-    SELECT qid, vec_id, label, score, rk
-    FROM ranked WHERE rk <= 50 AND label <> qlabel
+    {_d_query_rows(extra=', label AS qlabel')},
+    {_d_exact_topk(50, 'ranked')}
+    SELECT r.qid, r.vec_id, v.label, r.score, r.rk
+    FROM ranked r JOIN v ON r.vec_id = v.vec_id JOIN qv q ON r.qid = q.qid
+    WHERE v.label <> q.qlabel
     """,
 )
 def q_e_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1289,8 +1254,7 @@ def q_e_sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH v AS (SELECT vec_id, {_D_VEC} AS ve, {_D_NRM} AS nrm FROM embeddings),
     c AS (SELECT vec_id AS cid, ve AS cv FROM v WHERE vec_id BETWEEN 1 AND {PQ_K}),
-    qv AS (SELECT vec_id AS qid, ve AS qe, nrm AS qn FROM v
-           WHERE vec_id IN {_RECALL_QIDS}),
+    {_d_query_rows()},
     dists AS (
       SELECT v.vec_id, c.cid, s.s,
              CASE s.s {' '.join(f"WHEN {s} THEN {_pq_dist6('v.ve', 'c.cv', s)}" for s in range(PQ_M))} END AS d6
@@ -1306,7 +1270,7 @@ def q_e_sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     lut AS (
       SELECT q.qid, c.cid, s.s,
-             CASE s.s {' '.join(f"WHEN {s} THEN {_pq_lut6('q.qe', 'c.cv', s)}" for s in range(PQ_M))} END AS l6
+             CASE s.s {' '.join(f"WHEN {s} THEN {_pq_lut6('q.qv', 'c.cv', s)}" for s in range(PQ_M))} END AS l6
       FROM c, qv q, (SELECT unnest(range(0, {PQ_M})) AS s) s
     ),
     parts AS (
@@ -1328,21 +1292,9 @@ def q_e_sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM adc
       ) WHERE rk <= {_RECALL_K}
     ),
-    exact AS (
-      SELECT qid, vec_id FROM (
-        SELECT q.qid, v.vec_id,
-               ROW_NUMBER() OVER (PARTITION BY q.qid
-                                  ORDER BY {_d_cos6('v.ve', 'q.qe', 'v.nrm', 'q.qn')} DESC,
-                                           v.vec_id ASC) AS rk
-        FROM v CROSS JOIN qv q WHERE v.vec_id <> q.qid
-      ) WHERE rk <= {_RECALL_K}
-    ),
-    hits AS (SELECT a.qid, COUNT(*) AS n_hit
-             FROM approx a JOIN exact e ON a.qid = e.qid AND a.vec_id = e.vec_id
-             GROUP BY a.qid)
-    SELECT q.qid, COALESCE(h.n_hit, 0) AS n_hit,
-           round(COALESCE(h.n_hit, 0) / {float(_RECALL_K)}, 6) AS recall6
-    FROM (SELECT qid FROM qv) q LEFT JOIN hits h ON q.qid = h.qid
+    {_d_exact_topk()},
+    {_d_recall('(SELECT qid FROM qv)')}
+    SELECT * FROM recall
     """,
 )
 def q_e_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1391,10 +1343,10 @@ def q_e_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pqr_oracle() -> str:
     srange = f"(SELECT unnest(range(0, {PQ_M})) AS s) AS s"
     dist_case = " ".join(
-        f"WHEN {s} THEN {_pq_dist6('r.rv', 'cb.cv', s)}" for s in range(PQ_M)
+        f"WHEN {s} THEN {_pq_dist6('r.rv', 'cb.cve', s)}" for s in range(PQ_M)
     )
     lut_case = " ".join(
-        f"WHEN {s} THEN {_pq_lut6('q.qv', 'cb.cv', s)}" for s in range(PQ_M)
+        f"WHEN {s} THEN {_pq_lut6('q.qv', 'cb.cve', s)}" for s in range(PQ_M)
     )
     parts_cols = ", ".join(
         f"MAX(CASE WHEN k.s = {s} THEN l.l6 END) AS l{s}" for s in range(PQ_M)
@@ -1403,23 +1355,17 @@ def _pqr_oracle() -> str:
     return f"""
     WITH v AS (SELECT vec_id, label, {_D_VEC} AS ve, {_D_NRM} AS nrm
                FROM embeddings),
-    c AS (SELECT vec_id AS cid, ve AS cv, nrm AS cnrm
-          FROM v WHERE vec_id BETWEEN 1 AND {IVF_NLIST}),
+    {_d_seed_cells(IVF_NLIST)},
     q AS (SELECT ve AS qv, nrm AS qn FROM v WHERE vec_id = 0),
-    cell AS (SELECT vec_id, cid FROM (
-               SELECT v.vec_id, c.cid,
-                      ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                         ORDER BY {_d_cos6('v.ve', 'c.cv', 'v.nrm', 'c.cnrm')} DESC,
-                                                  c.cid ASC) AS rk
-               FROM v, c WHERE v.vec_id <> 0) WHERE rk = 1),
+    {_d_top_cells('(SELECT * FROM v WHERE vec_id <> 0)', 'c', 'vec_id', 1, 'cell')},
     res AS (SELECT v.vec_id, cell.cid,
                    list_transform(range(1, {DIM + 1}),
-                                  i -> v.ve[i] - c.cv[i]) AS rv
+                                  i -> v.ve[i] - c.cve[i]) AS rv
             FROM v JOIN cell ON v.vec_id = cell.vec_id
                    JOIN c ON cell.cid = c.cid),
     qc AS (SELECT cell.vec_id,
                   round(list_sum(list_transform(range(1, {DIM + 1}),
-                                 i -> q.qv[i] * c.cv[i])), 6) AS qc6
+                                 i -> q.qv[i] * c.cve[i])), 6) AS qc6
            FROM cell JOIN c ON cell.cid = c.cid CROSS JOIN q),
     dists AS (
       SELECT r.vec_id, cb.cid AS pcid, s.s,
@@ -1512,20 +1458,13 @@ def q_e_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 KM_K = 8  # distinct from IVF_NLIST=16 so the two ops exercise different cells
 
-# Shared centroid-assignment spelling — ONE definition consumed by BOTH
-# q_e_kmeans_iter and q_e_semdedup (Spark helper + oracle CTE chain),
-# so a tie-break or K change can never desynchronize the two queries.
+# The k-means seed assignment every cell-scoped oracle starts from: the
+# KM_K seed cells c and each vector's nearest cell asg (vec_id, cid, cs,
+# rk) — _d_seed_cells and _d_top_cells, the mirrors of _km_assign's
+# _seed_cells and top_cells, so the oracle and Spark share one tie rule.
 _KM_CTES = f"""v AS (SELECT vec_id, {_D_VEC} AS ve, {_D_NRM} AS nrm FROM embeddings),
-    c AS (SELECT vec_id AS cid, ve AS cve, nrm AS cnrm
-          FROM v WHERE vec_id BETWEEN 1 AND {KM_K}),
-    sc AS (SELECT v.vec_id, c.cid,
-                  {_d_cos6('v.ve', 'c.cve', 'v.nrm', 'c.cnrm')} AS cs
-           FROM v, c),
-    asg AS (SELECT vec_id, cid FROM (
-              SELECT vec_id, cid,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id
-                                        ORDER BY cs DESC, cid ASC) AS rk
-              FROM sc) WHERE rk = 1)"""
+    {_d_seed_cells(KM_K)},
+    {_d_top_cells('v', 'c', 'vec_id', 1, 'asg')}"""
 
 
 def _km_assign(spark: SparkSession, sf_dir: str):
@@ -1626,14 +1565,7 @@ def _kmt_rounds(pfx: str = "") -> list:
     prev = f"{pfx}seed"
     vn = f"{pfx}v"
     for r in range(1, KMT_ROUNDS + 1):
-        rounds.append(f"""{pfx}sc{r} AS (SELECT v.vec_id, c.cid,
-                  {_d_cos6('v.ve', 'c.cve', 'v.nrm', 'c.cnrm')} AS cs
-           FROM {vn} AS v, {prev} c),
-    {pfx}asg{r} AS (SELECT vec_id, cid FROM (
-              SELECT vec_id, cid,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id
-                                        ORDER BY cs DESC, cid ASC) AS rk
-              FROM {pfx}sc{r}) WHERE rk = 1),
+        rounds.append(f"""{_d_top_cells(vn, prev, 'vec_id', 1, f'{pfx}asg{r}')},
     {pfx}sz{r} AS (SELECT cid, CAST(COUNT(*) AS BIGINT) AS n_assigned
               FROM {pfx}asg{r} GROUP BY cid),
     {pfx}dm{r} AS (SELECT a.cid,
@@ -1668,8 +1600,7 @@ def _kmt_chain() -> str:
     audit so the two can never desynchronize."""
     rounds = _kmt_rounds()
     return f"""v AS (SELECT vec_id, {_D_VEC} AS ve, {_D_NRM} AS nrm FROM embeddings),
-    seed AS (SELECT vec_id AS cid, ve AS cve, nrm AS cnrm
-             FROM v WHERE vec_id BETWEEN 1 AND {KM_K}),
+    {_d_seed_cells(KM_K, 'seed')},
     {','.join(rounds)}"""
 
 
@@ -1690,8 +1621,7 @@ def _kmt_chain_b() -> str:
     population) to be defined earlier in the WITH body."""
     rounds = _kmt_rounds(pfx="b")
     return f"""bv AS (SELECT vec_id, ve, nrm FROM v WHERE {_APPEND_BASE}),
-    bseed AS (SELECT vec_id AS cid, ve AS cve, nrm AS cnrm
-              FROM bv WHERE vec_id BETWEEN 1 AND {KM_K}),
+    {_d_seed_cells(KM_K, 'bseed', 'bv')},
     {','.join(rounds)}"""
 
 
@@ -2046,17 +1976,13 @@ def q_e_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_e_diversity_sample",
     oracle=f"""
     WITH {_KM_CTES},
-    scored AS (
-      SELECT a.vec_id, a.cid, sc.cs
-      FROM asg a JOIN sc ON a.vec_id = sc.vec_id AND a.cid = sc.cid
-    ),
     ranked AS (
       SELECT vec_id, cid, cs,
              ROW_NUMBER() OVER (PARTITION BY cid ORDER BY cs DESC, vec_id ASC)
                AS rk_proto,
              ROW_NUMBER() OVER (PARTITION BY cid ORDER BY cs ASC, vec_id ASC)
                AS rk_edge
-      FROM scored
+      FROM asg
     )
     SELECT cid, vec_id,
            CASE WHEN rk_proto <= 5 THEN 'prototype' ELSE 'boundary' END AS role,
@@ -2138,26 +2064,11 @@ def q_e_label_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_e_ann_cost",
     oracle=f"""
     WITH v AS (SELECT vec_id, {_D_VEC} AS ve, {_D_NRM} AS nrm FROM embeddings),
-    c AS (SELECT vec_id AS cid, ve AS cv, nrm AS cn FROM v
-          WHERE vec_id BETWEEN 1 AND {IVF_NLIST}),
-    sc AS (SELECT v.vec_id, c.cid,
-                  {_d_cos6('v.ve', 'c.cv', 'v.nrm', 'c.cn')} AS cscore
-           FROM v, c),
-    cell AS (SELECT vec_id, cid FROM (
-               SELECT vec_id, cid,
-                      ROW_NUMBER() OVER (PARTITION BY vec_id
-                                         ORDER BY cscore DESC, cid ASC) AS rk
-               FROM sc) WHERE rk = 1),
+    {_d_seed_cells(IVF_NLIST)},
+    {_d_top_cells('v', 'c', 'vec_id', 1, 'cell')},
     sizes AS (SELECT cid, COUNT(*) AS n FROM cell GROUP BY cid),
-    qs AS (SELECT vec_id AS qid, ve AS qv, nrm AS qn FROM v
-           WHERE vec_id IN (0, 11, 22, 33, 44)),
-    probes AS (SELECT qid, cid FROM (
-                 SELECT qs.qid, c.cid,
-                        ROW_NUMBER() OVER (
-                          PARTITION BY qs.qid
-                          ORDER BY {_d_cos6('c.cv', 'qs.qv', 'c.cn', 'qs.qn')}
-                                   DESC, c.cid ASC) AS rk
-                 FROM c, qs) WHERE rk <= {IVF_NPROBE}),
+    {_d_query_rows()},
+    {_d_top_cells('qv', 'c', 'qid', IVF_NPROBE, 'probes')},
     tot AS (SELECT COUNT(*) AS n_total FROM cell)
     SELECT p.qid,
            CAST(SUM(s.n) AS BIGINT) AS n_probed,
@@ -2375,21 +2286,17 @@ def q_e_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_e_embed_outliers",
     oracle=f"""
     WITH {_KM_CTES},
-    own AS (
-      SELECT a.vec_id, a.cid, sc.cs
-      FROM asg a JOIN sc ON a.vec_id = sc.vec_id AND a.cid = sc.cid
-    ),
     stats AS (
       SELECT cid, COUNT(*) AS n,
              CAST(SUM(CAST(cs AS DECIMAL(30,6))) AS DOUBLE) AS s1,
              CAST(SUM(CAST(cs * cs AS DECIMAL(30,12))) AS DOUBLE) AS s2
-      FROM own GROUP BY cid
+      FROM asg GROUP BY cid
     )
     SELECT o.vec_id, o.cid, round(o.cs, 6) AS centroid_cos,
            round((o.cs - s.s1 / s.n)
                  / sqrt(greatest(s.s2 / s.n - (s.s1 / s.n) * (s.s1 / s.n),
                                  1e-12)), 6) AS z
-    FROM own o JOIN stats s ON o.cid = s.cid
+    FROM asg o JOIN stats s ON o.cid = s.cid
     WHERE s.n >= 10
       AND (o.cs - s.s1 / s.n)
           / sqrt(greatest(s.s2 / s.n - (s.s1 / s.n) * (s.s1 / s.n), 1e-12))
@@ -2440,25 +2347,12 @@ def q_e_embed_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_e_ivf_pq",
     oracle=f"""
     WITH v AS (SELECT vec_id, label, {_D_VEC} AS ve, {_D_NRM} AS nrm FROM embeddings),
-    c AS (SELECT vec_id AS cid, ve AS cv, nrm AS cn FROM v
-          WHERE vec_id BETWEEN 1 AND {IVF_NLIST}),
+    {_d_seed_cells(IVF_NLIST)},
     q AS (SELECT ve AS qv, nrm AS qn FROM v WHERE vec_id = 0),
     ck AS (SELECT vec_id AS cid, ve AS cv FROM v
            WHERE vec_id BETWEEN 1 AND {PQ_K}),
-    sc AS (SELECT v.vec_id, c.cid,
-                  {_d_cos6('v.ve', 'c.cv', 'v.nrm', 'c.cn')} AS cscore
-           FROM v, c WHERE v.vec_id <> 0),
-    cell AS (SELECT vec_id, cid FROM (
-               SELECT vec_id, cid,
-                      ROW_NUMBER() OVER (PARTITION BY vec_id
-                                         ORDER BY cscore DESC, cid ASC) AS rk
-               FROM sc) WHERE rk = 1),
-    probe AS (SELECT cid FROM (
-                SELECT c.cid,
-                       ROW_NUMBER() OVER (
-                         ORDER BY {_d_cos6('c.cv', 'q.qv', 'c.cn', 'q.qn')} DESC,
-                                  c.cid ASC) AS rk
-                FROM c, q) WHERE rk <= {IVF_NPROBE}),
+    {_d_top_cells('(SELECT * FROM v WHERE vec_id <> 0)', 'c', 'vec_id', 1, 'cell')},
+    {_d_top_cells('q', 'c', (), IVF_NPROBE, 'probe')},
     cand AS (SELECT cell.vec_id FROM cell JOIN probe USING (cid)),
     dists AS (
       SELECT v.vec_id, ck.cid, s.s,
@@ -2716,37 +2610,11 @@ _MRR6 = (
 @query(
     "q_e_retrieval_ndcg",
     oracle=f"""
-    WITH p AS (SELECT {_PF_DUCK} AS pf),
-    v AS (SELECT vec_id, {_D_VEC} AS ve, {_D_NRM} AS nrm FROM embeddings),
-    d AS (SELECT vec_id, ve, nrm, {_DUCK_DOTS} AS dots FROM v, p),
-    bk AS (SELECT vec_id, {_DUCK_BUCKETS} AS buckets FROM d),
-    bands AS (SELECT vec_id,
-                     CAST(generate_subscripts(buckets, 1) - 1 AS BIGINT) AS band,
-                     CAST(unnest(buckets) AS BIGINT) AS bucket
-              FROM bk),
-    qb AS (SELECT vec_id AS qid, band, bucket FROM bands
-           WHERE vec_id IN {_RECALL_QIDS}),
-    cand AS (SELECT DISTINCT qb.qid, b.vec_id
-             FROM qb JOIN bands b ON qb.band = b.band AND qb.bucket = b.bucket
-             WHERE b.vec_id <> qb.qid),
-    qv AS (SELECT vec_id AS qid, ve AS qv, nrm AS qn FROM v
-           WHERE vec_id IN {_RECALL_QIDS}),
-    ranked_a AS (
-      SELECT c.qid, c.vec_id,
-             ROW_NUMBER() OVER (
-               PARTITION BY c.qid
-               ORDER BY {_d_cos6('v.ve', 'q.qv', 'v.nrm', 'q.qn')} DESC,
-                        c.vec_id ASC) AS rka
-      FROM cand c JOIN v ON c.vec_id = v.vec_id JOIN qv q ON c.qid = q.qid
-    ),
-    ranked_e AS (
-      SELECT q.qid, v.vec_id,
-             ROW_NUMBER() OVER (
-               PARTITION BY q.qid
-               ORDER BY {_d_cos6('v.ve', 'q.qv', 'v.nrm', 'q.qn')} DESC,
-                        v.vec_id ASC) AS rke
-      FROM v CROSS JOIN qv q WHERE v.vec_id <> q.qid
-    ),
+    WITH {_d_lsh_bands()},
+    {_d_query_rows()},
+    {_d_lsh_candidates()},
+    {_d_exact_topk(None, 'ranked_a', 'rka', cand='cand')},
+    {_d_exact_topk(None, 'ranked_e', 'rke')},
     j AS (SELECT a.qid, a.rka, e.rke
           FROM ranked_a a JOIN ranked_e e
             ON a.qid = e.qid AND a.vec_id = e.vec_id),
@@ -2836,61 +2704,32 @@ _PROBE_GRID = (1, 2, 4, 8)
     "q_e_ivf_probe_curve",
     oracle=f"""
     WITH v AS (SELECT vec_id, {_D_VEC} AS ve, {_D_NRM} AS nrm FROM embeddings),
-    c AS (SELECT vec_id AS cid, ve AS cv, nrm AS cn FROM v
-          WHERE vec_id BETWEEN 1 AND {IVF_NLIST}),
-    cell AS (SELECT vec_id, cid FROM (
-               SELECT v.vec_id, c.cid,
-                      ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                        ORDER BY {_d_cos6('v.ve', 'c.cv', 'v.nrm', 'c.cn')} DESC,
-                                 c.cid ASC) AS rk
-               FROM v, c) WHERE rk = 1),
-    qv AS (SELECT vec_id AS qid, ve AS qv, nrm AS qn FROM v
-           WHERE vec_id IN {_RECALL_QIDS}),
-    qrk AS (SELECT q.qid, c.cid,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY q.qid
-                     ORDER BY {_d_cos6('c.cv', 'q.qv', 'c.cn', 'q.qn')} DESC,
-                              c.cid ASC) AS prank
-            FROM c, qv q),
-    cand AS (SELECT q.qid, cell.vec_id, q.prank
+    {_d_seed_cells(IVF_NLIST)},
+    {_d_top_cells('v', 'c', 'vec_id', 1, 'cell')},
+    {_d_query_rows()},
+    {_d_top_cells('qv', 'c', 'qid', max(_PROBE_GRID), 'qrk')},
+    cand AS (SELECT q.qid, cell.vec_id, q.rk AS prank
              FROM qrk q JOIN cell ON cell.cid = q.cid
-             WHERE q.prank <= {max(_PROBE_GRID)} AND cell.vec_id <> q.qid),
+             WHERE cell.vec_id <> q.qid),
     scored AS (SELECT cd.qid, cd.vec_id, cd.prank,
                       {_d_cos6('v.ve', 'q.qv', 'v.nrm', 'q.qn')} AS score
                FROM cand cd JOIN v ON cd.vec_id = v.vec_id
                JOIN qv q ON cd.qid = q.qid),
-    grid AS (SELECT q.qid, g.p FROM qv q
-             CROSS JOIN (VALUES {', '.join(f'({p})' for p in _PROBE_GRID)}) g(p)),
-    ranked_a AS (SELECT g.qid, g.p, s.vec_id,
+    grid AS (SELECT q.qid, g.nprobe FROM qv q
+             CROSS JOIN (VALUES {', '.join(f'({p})' for p in _PROBE_GRID)}) g(nprobe)),
+    approx AS (SELECT qid, nprobe, vec_id FROM (
+                 SELECT g.qid, g.nprobe, s.vec_id,
                         ROW_NUMBER() OVER (
-                          PARTITION BY g.qid, g.p
+                          PARTITION BY g.qid, g.nprobe
                           ORDER BY s.score DESC, s.vec_id ASC) AS rka
                  FROM grid g JOIN scored s
-                   ON s.qid = g.qid AND s.prank <= g.p),
-    exact AS (SELECT qid, vec_id FROM (
-                SELECT q.qid, v.vec_id,
-                       ROW_NUMBER() OVER (
-                         PARTITION BY q.qid
-                         ORDER BY {_d_cos6('v.ve', 'q.qv', 'v.nrm', 'q.qn')} DESC,
-                                  v.vec_id ASC) AS rk
-                FROM v CROSS JOIN qv q WHERE v.vec_id <> q.qid
-              ) WHERE rk <= {_RECALL_K}),
-    ncand AS (SELECT qid, p, COUNT(*) AS n_cand
-              FROM grid JOIN scored s USING (qid)
-              WHERE s.prank <= grid.p GROUP BY qid, p),
-    hits AS (SELECT a.qid, a.p, COUNT(*) AS n_hit
-             FROM ranked_a a JOIN exact e
-               ON a.qid = e.qid AND a.vec_id = e.vec_id
-             WHERE a.rka <= {_RECALL_K} GROUP BY a.qid, a.p)
-    SELECT g.qid, CAST(g.p AS INT) AS nprobe,
-           CAST(coalesce(nc.n_cand, 0) AS BIGINT) AS n_cand,
-           CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-           round(coalesce(h.n_hit, 0) / CAST({_RECALL_K} AS DOUBLE), 6)
-             AS recall6
-    FROM grid g
-    LEFT JOIN ncand nc ON g.qid = nc.qid AND g.p = nc.p
-    LEFT JOIN hits h ON g.qid = h.qid AND g.p = h.p
-    ORDER BY g.qid, nprobe
+                   ON s.qid = g.qid AND s.prank <= g.nprobe) WHERE rka <= {_RECALL_K}),
+    {_d_exact_topk()},
+    spine AS (SELECT g.qid, g.nprobe, CAST(COUNT(s.vec_id) AS BIGINT) AS n_cand
+              FROM grid g LEFT JOIN scored s ON s.qid = g.qid AND s.prank <= g.nprobe
+              GROUP BY g.qid, g.nprobe),
+    {_d_recall('spine', ('qid', 'nprobe'))}
+    SELECT * FROM recall ORDER BY qid, nprobe
     """,
 )
 def q_e_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3595,8 +3434,9 @@ _I8_QL = (
     qn AS (SELECT vec_id, nrm, q,
                   list_sum(list_transform(q, y -> y * y)) AS s2
            FROM qz),
+    {_d_query_rows()},
     panel AS (SELECT vec_id AS qid, q AS qq, s2 AS qs2 FROM qn
-              WHERE vec_id IN {_RECALL_QIDS}),
+              WHERE vec_id IN (SELECT qid FROM qv)),
     approx AS (
       SELECT qid, vec_id FROM (
         SELECT p.qid, n.vec_id,
@@ -3611,25 +3451,9 @@ _I8_QL = (
         FROM qn n CROSS JOIN panel p WHERE n.vec_id <> p.qid
       ) WHERE rk <= {_RECALL_K}
     ),
-    qv AS (SELECT vec_id AS qid, ve AS qv, nrm AS qnr FROM v
-           WHERE vec_id IN {_RECALL_QIDS}),
-    exact AS (
-      SELECT qid, vec_id FROM (
-        SELECT q.qid, v.vec_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.qid
-                 ORDER BY {_d_cos6('v.ve', 'q.qv', 'v.nrm', 'q.qnr')} DESC,
-                          v.vec_id ASC) AS rk
-        FROM v CROSS JOIN qv q WHERE v.vec_id <> q.qid
-      ) WHERE rk <= {_RECALL_K}
-    ),
-    hits AS (SELECT a.qid, COUNT(*) AS n_hit
-             FROM approx a JOIN exact e ON a.qid = e.qid AND a.vec_id = e.vec_id
-             GROUP BY a.qid)
-    SELECT p.qid, COALESCE(h.n_hit, 0) AS n_hit,
-           round(COALESCE(h.n_hit, 0) / {float(_RECALL_K)}, 6) AS recall6
-    FROM (SELECT qid FROM panel) p LEFT JOIN hits h ON p.qid = h.qid
-    ORDER BY p.qid
+    {_d_exact_topk()},
+    {_d_recall('(SELECT qid FROM panel)')}
+    SELECT * FROM recall ORDER BY qid
     """,
 )
 def q_e_int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3708,53 +3532,17 @@ def _ivt_oracle() -> str:
     tc = f"c{KMT_ROUNDS + 1}"  # the trained-centroid table the chain ends at
     return f"""
     WITH {_kmt_chain()},
-    cell AS (SELECT vec_id, cid FROM (
-               SELECT v.vec_id, c.cid,
-                      ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                         ORDER BY {_d_cos6('v.ve', 'c.cve', 'v.nrm', 'c.cnrm')} DESC,
-                                                  c.cid ASC) AS rk
-               FROM v, {tc} c) WHERE rk = 1),
-    qv AS (SELECT vec_id AS qid, ve AS qvv, nrm AS qn FROM v
-           WHERE vec_id IN {_RECALL_QIDS}),
-    probe AS (SELECT qid, cid FROM (
-                SELECT q.qid, c.cid,
-                       ROW_NUMBER() OVER (
-                         PARTITION BY q.qid
-                         ORDER BY {_d_cos6('c.cve', 'q.qvv', 'c.cnrm', 'q.qn')} DESC,
-                                  c.cid ASC) AS rk
-                FROM {tc} c, qv q) WHERE rk <= {IVT_NPROBE}),
+    {_d_top_cells('v', tc, 'vec_id', 1, 'cell')},
+    {_d_query_rows()},
+    {_d_top_cells('qv', tc, 'qid', IVT_NPROBE, 'probe')},
     cand AS (SELECT p.qid, cell.vec_id
              FROM cell JOIN probe p USING (cid)
              WHERE cell.vec_id <> p.qid),
-    approx AS (
-      SELECT qid, vec_id FROM (
-        SELECT cd.qid, cd.vec_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY cd.qid
-                 ORDER BY {_d_cos6('v.ve', 'q.qvv', 'v.nrm', 'q.qn')} DESC,
-                          cd.vec_id ASC) AS rk
-        FROM cand cd JOIN v ON cd.vec_id = v.vec_id JOIN qv q ON cd.qid = q.qid
-      ) WHERE rk <= {_RECALL_K}
-    ),
-    exact AS (
-      SELECT qid, vec_id FROM (
-        SELECT q.qid, v.vec_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.qid
-                 ORDER BY {_d_cos6('v.ve', 'q.qvv', 'v.nrm', 'q.qn')} DESC,
-                          v.vec_id ASC) AS rk
-        FROM v CROSS JOIN qv q WHERE v.vec_id <> q.qid
-      ) WHERE rk <= {_RECALL_K}
-    ),
+    {_d_exact_topk(name='approx', cand='cand')},
+    {_d_exact_topk()},
     ncand AS (SELECT qid, COUNT(*) AS n_cand FROM cand GROUP BY qid),
-    hits AS (SELECT a.qid, COUNT(*) AS n_hit
-             FROM approx a JOIN exact e ON a.qid = e.qid AND a.vec_id = e.vec_id
-             GROUP BY a.qid)
-    SELECT n.qid, n.n_cand,
-           COALESCE(h.n_hit, 0) AS n_hit,
-           round(COALESCE(h.n_hit, 0) / {float(_RECALL_K)}, 6) AS recall6
-    FROM ncand n LEFT JOIN hits h ON n.qid = h.qid
-    ORDER BY n.qid
+    {_d_recall('ncand')}
+    SELECT * FROM recall ORDER BY qid
     """
 
 
@@ -3802,12 +3590,7 @@ def _ari_oracle() -> str:
     tc = f"c{KMT_ROUNDS + 1}"
     return f"""
     WITH {_kmt_chain()},
-    cell AS (SELECT vec_id, cid FROM (
-               SELECT v.vec_id, c.cid,
-                      ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                         ORDER BY {_d_cos6('v.ve', 'c.cve', 'v.nrm', 'c.cnrm')} DESC,
-                                                  c.cid ASC) AS rk
-               FROM v, {tc} c) WHERE rk = 1),
+    {_d_top_cells('v', tc, 'vec_id', 1, 'cell')},
     pairs AS (SELECT a.cid AS ca, t.cid AS cb,
                      CAST(COUNT(*) AS BIGINT) AS nij
               FROM asg1 a JOIN cell t USING (vec_id)
@@ -3968,33 +3751,14 @@ def _ivp_oracle() -> str:
     tc = f"c{KMT_ROUNDS + 1}"  # trained centroids, end of the shared chain
     return f"""
     WITH {_kmt_chain()},
-    cell AS (SELECT vec_id, cid FROM (
-               SELECT v.vec_id, c.cid,
-                      ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                         ORDER BY {_d_cos6('v.ve', 'c.cve', 'v.nrm', 'c.cnrm')} DESC,
-                                                  c.cid ASC) AS rk
-               FROM v, {tc} c) WHERE rk = 1),
-    qv AS (SELECT vec_id AS qid, ve AS qvv, nrm AS qn FROM v
-           WHERE vec_id IN {_RECALL_QIDS}),
-    probe AS (SELECT qid, cid FROM (
-                SELECT q.qid, c.cid,
-                       ROW_NUMBER() OVER (
-                         PARTITION BY q.qid
-                         ORDER BY {_d_cos6('c.cve', 'q.qvv', 'c.cnrm', 'q.qn')} DESC,
-                                  c.cid ASC) AS rk
-                FROM {tc} c, qv q) WHERE rk <= {IVT_NPROBE}),
+    {_d_top_cells('v', tc, 'vec_id', 1, 'cell')},
+    {_d_query_rows()},
+    {_d_top_cells('qv', tc, 'qid', IVT_NPROBE, 'probe')},
     cand AS (SELECT p.qid, cell.vec_id
              FROM cell JOIN probe p USING (cid)
-             WHERE cell.vec_id <> p.qid)
-    SELECT qid, rk, vec_id, score6 FROM (
-      SELECT cd.qid, cd.vec_id,
-             {_d_cos6('v.ve', 'q.qvv', 'v.nrm', 'q.qn')} AS score6,
-             ROW_NUMBER() OVER (
-               PARTITION BY cd.qid
-               ORDER BY {_d_cos6('v.ve', 'q.qvv', 'v.nrm', 'q.qn')} DESC,
-                        cd.vec_id ASC) AS rk
-      FROM cand cd JOIN v ON cd.vec_id = v.vec_id JOIN qv q ON cd.qid = q.qid
-    ) WHERE rk <= {_RECALL_K}
+             WHERE cell.vec_id <> p.qid),
+    {_d_exact_topk(name='top', cand='cand')}
+    SELECT qid, rk, vec_id, score AS score6 FROM top
     ORDER BY qid, rk
     """
 
@@ -4067,26 +3831,14 @@ def _ivfpq_body(pfx: str = "", tc: str | None = None) -> str:
         f"WHEN {s} THEN {_pq_dist6('v.ve', 'c.cv', s)}" for s in range(PQ_M)
     )
     lut_case = " ".join(
-        f"WHEN {s} THEN {_pq_lut6a('q.qvv', 'c.cv', s)}" for s in range(PQ_M)
+        f"WHEN {s} THEN {_pq_lut6a('q.qv', 'c.cv', s)}" for s in range(PQ_M)
     )
     parts_cols = ", ".join(
         f"MAX(CASE WHEN k.s = {s} THEN l.l6 END) AS l{s}" for s in range(PQ_M)
     )
-    return f"""{pfx}cell AS (SELECT vec_id, cid FROM (
-               SELECT v.vec_id, c.cid,
-                      ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                         ORDER BY {_d_cos6('v.ve', 'c.cve', 'v.nrm', 'c.cnrm')} DESC,
-                                                  c.cid ASC) AS rk
-               FROM v, {tc} c) WHERE rk = 1),
-    {pfx}qv AS (SELECT vec_id AS qid, ve AS qvv, nrm AS qn FROM v
-           WHERE vec_id IN {_RECALL_QIDS}),
-    {pfx}probe AS (SELECT qid, cid FROM (
-                SELECT q.qid, c.cid,
-                       ROW_NUMBER() OVER (
-                         PARTITION BY q.qid
-                         ORDER BY {_d_cos6('c.cve', 'q.qvv', 'c.cnrm', 'q.qn')} DESC,
-                                  c.cid ASC) AS rk
-                FROM {tc} c, {pfx}qv q) WHERE rk <= {IVT_NPROBE}),
+    return f"""{_d_top_cells('v', tc, 'vec_id', 1, f'{pfx}cell')},
+    {_d_query_rows(f'{pfx}qv')},
+    {_d_top_cells(f'{pfx}qv', tc, 'qid', IVT_NPROBE, f'{pfx}probe')},
     {pfx}cand AS (SELECT p.qid, {pfx}cell.vec_id
              FROM {pfx}cell JOIN {pfx}probe p USING (cid)
              WHERE {pfx}cell.vec_id <> p.qid),
@@ -4310,22 +4062,9 @@ def _ivfpq_recall_oracle() -> str:
                                            ORDER BY adc6 DESC, vec_id ASC)
                           AS rk
                  FROM adc) WHERE rk <= {_RECALL_K}),
-    exact AS (SELECT qid, vec_id FROM (
-                SELECT q.qid, v.vec_id,
-                       ROW_NUMBER() OVER (
-                         PARTITION BY q.qid
-                         ORDER BY {_d_cos6('v.ve', 'q.qvv', 'v.nrm', 'q.qn')} DESC,
-                                  v.vec_id ASC) AS rk
-                FROM v CROSS JOIN qv q WHERE v.vec_id <> q.qid
-              ) WHERE rk <= {_RECALL_K}),
-    hits AS (SELECT a.qid, COUNT(*) AS n_hit
-             FROM approx a JOIN exact e ON a.qid = e.qid
-                                       AND a.vec_id = e.vec_id
-             GROUP BY a.qid)
-    SELECT q.qid, CAST(COALESCE(h.n_hit, 0) AS BIGINT) AS n_hit,
-           round(COALESCE(h.n_hit, 0) / {float(_RECALL_K)}, 6) AS recall6
-    FROM (SELECT qid FROM qv) q LEFT JOIN hits h ON q.qid = h.qid
-    ORDER BY q.qid
+    {_d_exact_topk()},
+    {_d_recall('(SELECT qid FROM qv)')}
+    SELECT * FROM recall ORDER BY qid
     """
 
 
@@ -4478,6 +4217,18 @@ def q_e_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivfpq_serve(spark, sf_dir, staged)
 
 
+# The two-generation drift tail shared by both drift audits: recall of
+# the append generation (bapprox) and of the rebuild (rapprox) through
+# _d_recall, pivoted side by side with their difference.
+_DRIFT_TAIL = f"""{_d_recall('(SELECT qid FROM qv)', approx='bapprox', name='brec')},
+    {_d_recall('(SELECT qid FROM qv)', approx='rapprox', name='rrec')}
+    SELECT b.qid, b.n_hit AS n_hit_append, b.recall6 AS recall_append6,
+           r.n_hit AS n_hit_rebuild, r.recall6 AS recall_rebuild6,
+           round(r.recall6 - b.recall6, 6) AS drift6
+    FROM brec b JOIN rrec r ON b.qid = r.qid
+    ORDER BY b.qid"""
+
+
 def _ivfpq_drift_oracle() -> str:
     tb = f"bc{KMT_ROUNDS + 1}"
     return f"""
@@ -4497,34 +4248,8 @@ def _ivfpq_drift_oracle() -> str:
                                             ORDER BY {_PQP_ADC} DESC,
                                                      vec_id ASC) AS rk
                   FROM bparts) WHERE rk <= {_RECALL_K}),
-    exact AS (SELECT qid, vec_id FROM (
-                SELECT q.qid, v.vec_id,
-                       ROW_NUMBER() OVER (
-                         PARTITION BY q.qid
-                         ORDER BY {_d_cos6('v.ve', 'q.qvv', 'v.nrm', 'q.qn')} DESC,
-                                  v.vec_id ASC) AS rk
-                FROM v CROSS JOIN qv q WHERE v.vec_id <> q.qid
-              ) WHERE rk <= {_RECALL_K}),
-    rh AS (SELECT a.qid, COUNT(*) AS n FROM rapprox a
-           JOIN exact e ON a.qid = e.qid AND a.vec_id = e.vec_id
-           GROUP BY a.qid),
-    bh AS (SELECT a.qid, COUNT(*) AS n FROM bapprox a
-           JOIN exact e ON a.qid = e.qid AND a.vec_id = e.vec_id
-           GROUP BY a.qid)
-    SELECT q.qid,
-           CAST(COALESCE(bh.n, 0) AS BIGINT) AS n_hit_append,
-           round(COALESCE(bh.n, 0) / {float(_RECALL_K)}, 6)
-             AS recall_append6,
-           CAST(COALESCE(rh.n, 0) AS BIGINT) AS n_hit_rebuild,
-           round(COALESCE(rh.n, 0) / {float(_RECALL_K)}, 6)
-             AS recall_rebuild6,
-           round(round(COALESCE(rh.n, 0) / {float(_RECALL_K)}, 6)
-                 - round(COALESCE(bh.n, 0) / {float(_RECALL_K)}, 6), 6)
-             AS drift6
-    FROM (SELECT qid FROM qv) q
-    LEFT JOIN rh ON q.qid = rh.qid
-    LEFT JOIN bh ON q.qid = bh.qid
-    ORDER BY q.qid
+    {_d_exact_topk()},
+    {_DRIFT_TAIL}
     """
 
 
@@ -5510,37 +5235,11 @@ _ERR6 = (
 @query(
     "q_e_retrieval_err",
     oracle=f"""
-    WITH p AS (SELECT {_PF_DUCK} AS pf),
-    v AS (SELECT vec_id, {_D_VEC} AS ve, {_D_NRM} AS nrm FROM embeddings),
-    d AS (SELECT vec_id, ve, nrm, {_DUCK_DOTS} AS dots FROM v, p),
-    bk AS (SELECT vec_id, {_DUCK_BUCKETS} AS buckets FROM d),
-    bands AS (SELECT vec_id,
-                     CAST(generate_subscripts(buckets, 1) - 1 AS BIGINT) AS band,
-                     CAST(unnest(buckets) AS BIGINT) AS bucket
-              FROM bk),
-    qb AS (SELECT vec_id AS qid, band, bucket FROM bands
-           WHERE vec_id IN {_RECALL_QIDS}),
-    cand AS (SELECT DISTINCT qb.qid, b.vec_id
-             FROM qb JOIN bands b ON qb.band = b.band AND qb.bucket = b.bucket
-             WHERE b.vec_id <> qb.qid),
-    qv AS (SELECT vec_id AS qid, ve AS qv, nrm AS qn FROM v
-           WHERE vec_id IN {_RECALL_QIDS}),
-    ranked_a AS (
-      SELECT c.qid, c.vec_id,
-             ROW_NUMBER() OVER (
-               PARTITION BY c.qid
-               ORDER BY {_d_cos6('v.ve', 'q.qv', 'v.nrm', 'q.qn')} DESC,
-                        c.vec_id ASC) AS rka
-      FROM cand c JOIN v ON c.vec_id = v.vec_id JOIN qv q ON c.qid = q.qid
-    ),
-    ranked_e AS (
-      SELECT q.qid, v.vec_id,
-             ROW_NUMBER() OVER (
-               PARTITION BY q.qid
-               ORDER BY {_d_cos6('v.ve', 'q.qv', 'v.nrm', 'q.qn')} DESC,
-                        v.vec_id ASC) AS rke
-      FROM v CROSS JOIN qv q WHERE v.vec_id <> q.qid
-    ),
+    WITH {_d_lsh_bands()},
+    {_d_query_rows()},
+    {_d_lsh_candidates()},
+    {_d_exact_topk(None, 'ranked_a', 'rka', cand='cand')},
+    {_d_exact_topk(None, 'ranked_e', 'rke')},
     j AS (SELECT a.qid, a.rka,
                  CASE WHEN a.rka <= {_ERR_K} AND e.rke <= {_ERR_K}
                       THEN 11 - e.rke ELSE 0 END AS g
@@ -5752,31 +5451,27 @@ _BEAM_W = 10  # beam width (= the emitted top-k)
 _BEAM_HOPS = 3  # fixed hop budget, unrolled in both engines
 _BEAM_ENTRY = 1  # fixed global entry node (the HNSW entry-point role)
 
-# Cell seeds of the FULL-corpus graph (the q_e_knn_graph convention:
-# seed vectors 1..KM_K) and of the BASE generation (round 11: the
-# corpus before the delta slice arrived loses the delta-member seeds
-# — the graph twin of _kmt_chain_b's stale coarse quantizer).
-_BEAM_SEEDS_FULL = f"vec_id BETWEEN 1 AND {KM_K}"
-_BEAM_SEEDS_BASE = f"vec_id BETWEEN 1 AND {KM_K} AND {_APPEND_BASE}"
-
 # Shared oracle prelude: the doubled corpus view, the query panel, and
 # the panel score matrix every beam chain walks.
 _BEAM_PRELUDE = f"""v AS (SELECT vec_id, {_D_VEC} AS ve, {_D_NRM} AS nrm FROM embeddings),
-    qv AS (SELECT vec_id AS qid, ve AS qvv, nrm AS qn FROM v
-           WHERE vec_id IN {_RECALL_QIDS}),
+    {_d_query_rows()},
     qs AS (SELECT q.qid, v.vec_id,
-                  {_d_cos6('v.ve', 'q.qvv', 'v.nrm', 'q.qn')} AS s
+                  {_d_cos6('v.ve', 'q.qv', 'v.nrm', 'q.qn')} AS s
            FROM v CROSS JOIN qv q)"""
 
 
-def _beam_body(pfx: str = "", seed_where: str = _BEAM_SEEDS_FULL) -> str:
+def _beam_body(pfx: str = "", seed_where: str = "") -> str:
     """The beam chain as a WITH-body fragment: seed cells → nearest-
     seed assignment → in-cell {_BEAM_DEG}-NN edges → {_BEAM_HOPS}
     unrolled hop CTEs ending at ``{pfx}b{_BEAM_HOPS}``. ``pfx``
     prefixes every CTE so two graphs — e.g. the round-11 append
     generation next to the full rebuild — coexist in one WITH body
-    (the _kmt_rounds convention). Requires _BEAM_PRELUDE earlier in
-    the WITH body."""
+    (the _kmt_rounds convention). Seeds are the vec_id 1..{KM_K}
+    cells (the q_e_knn_graph convention); ``seed_where`` narrows them,
+    as the base generation's _APPEND_BASE does (the corpus before the
+    delta slice arrived loses the delta-member seeds — the graph twin
+    of _kmt_chain_b's stale coarse quantizer). Requires _BEAM_PRELUDE
+    earlier in the WITH body."""
     edge_cos = _d_cos6("a.ve", "b.ve", "a.nrm", "b.nrm")
     hops = []
     prev = f"{pfx}b0"
@@ -5795,16 +5490,8 @@ def _beam_body(pfx: str = "", seed_where: str = _BEAM_SEEDS_FULL) -> str:
         FROM {pfx}cand{h} c JOIN qs ON qs.qid = c.qid
                               AND qs.vec_id = c.vec_id) WHERE rk <= {_BEAM_W})""")
         prev = f"{pfx}b{h}"
-    return f"""{pfx}c AS (SELECT vec_id AS cid, ve AS cve, nrm AS cnrm
-            FROM v WHERE {seed_where}),
-    {pfx}sc AS (SELECT v.vec_id, c.cid,
-                  {_d_cos6('v.ve', 'c.cve', 'v.nrm', 'c.cnrm')} AS cs
-           FROM v, {pfx}c AS c),
-    {pfx}asg AS (SELECT vec_id, cid FROM (
-              SELECT vec_id, cid,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id
-                                        ORDER BY cs DESC, cid ASC) AS rk
-              FROM {pfx}sc) WHERE rk = 1),
+    return f"""{_d_seed_cells(KM_K, f'{pfx}c', where=seed_where)},
+    {_d_top_cells('v', f'{pfx}c', 'vec_id', 1, f'{pfx}asg')},
     {pfx}nodes AS (SELECT a.vec_id, a.cid, v.ve, v.nrm
               FROM {pfx}asg a JOIN v USING (vec_id)),
     {pfx}edges AS (SELECT vec_id, nbr FROM (
@@ -5831,7 +5518,7 @@ def _beam_select(pfx: str = "") -> str:
     ORDER BY qid, rk"""
 
 
-def _beam_oracle(pfx: str = "", seed_where: str = _BEAM_SEEDS_FULL) -> str:
+def _beam_oracle(pfx: str = "", seed_where: str = "") -> str:
     return f"""
     WITH {_BEAM_PRELUDE},
     {_beam_body(pfx, seed_where)}
@@ -6110,7 +5797,7 @@ def stage_beam_append(spark: SparkSession, sf_dir: str) -> str:
 
 @query(
     "q_e_beam_append",
-    oracle=_beam_oracle(pfx="m", seed_where=_BEAM_SEEDS_BASE),
+    oracle=_beam_oracle(pfx="m", seed_where=_APPEND_BASE),
 )
 def q_e_beam_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental graph-ANN ingest, served (round 11, VERDICT r10
@@ -6142,37 +5829,11 @@ def _beam_drift_oracle() -> str:
     return f"""
     WITH {_BEAM_PRELUDE},
     {_beam_body()},
-    {_beam_body(pfx='m', seed_where=_BEAM_SEEDS_BASE)},
+    {_beam_body(pfx='m', seed_where=_APPEND_BASE)},
     rapprox AS (SELECT qid, vec_id FROM b{_BEAM_HOPS}),
     bapprox AS (SELECT qid, vec_id FROM mb{_BEAM_HOPS}),
-    exact AS (SELECT qid, vec_id FROM (
-                SELECT q.qid, v.vec_id,
-                       ROW_NUMBER() OVER (
-                         PARTITION BY q.qid
-                         ORDER BY {_d_cos6('v.ve', 'q.qvv', 'v.nrm', 'q.qn')} DESC,
-                                  v.vec_id ASC) AS rk
-                FROM v CROSS JOIN qv q WHERE v.vec_id <> q.qid
-              ) WHERE rk <= {_RECALL_K}),
-    rh AS (SELECT a.qid, COUNT(*) AS n FROM rapprox a
-           JOIN exact e ON a.qid = e.qid AND a.vec_id = e.vec_id
-           GROUP BY a.qid),
-    bh AS (SELECT a.qid, COUNT(*) AS n FROM bapprox a
-           JOIN exact e ON a.qid = e.qid AND a.vec_id = e.vec_id
-           GROUP BY a.qid)
-    SELECT q.qid,
-           CAST(COALESCE(bh.n, 0) AS BIGINT) AS n_hit_append,
-           round(COALESCE(bh.n, 0) / {float(_RECALL_K)}, 6)
-             AS recall_append6,
-           CAST(COALESCE(rh.n, 0) AS BIGINT) AS n_hit_rebuild,
-           round(COALESCE(rh.n, 0) / {float(_RECALL_K)}, 6)
-             AS recall_rebuild6,
-           round(round(COALESCE(rh.n, 0) / {float(_RECALL_K)}, 6)
-                 - round(COALESCE(bh.n, 0) / {float(_RECALL_K)}, 6), 6)
-             AS drift6
-    FROM (SELECT qid FROM qv) q
-    LEFT JOIN rh ON q.qid = rh.qid
-    LEFT JOIN bh ON q.qid = bh.qid
-    ORDER BY q.qid
+    {_d_exact_topk()},
+    {_DRIFT_TAIL}
     """
 
 
@@ -6257,22 +5918,9 @@ def _beam_recall_oracle() -> str:
     WITH {_BEAM_PRELUDE},
     {_beam_body()},
     approx AS (SELECT qid, vec_id FROM b{_BEAM_HOPS}),
-    exact AS (SELECT qid, vec_id FROM (
-                SELECT q.qid, v.vec_id,
-                       ROW_NUMBER() OVER (
-                         PARTITION BY q.qid
-                         ORDER BY {_d_cos6('v.ve', 'q.qvv', 'v.nrm', 'q.qn')} DESC,
-                                  v.vec_id ASC) AS rk
-                FROM v CROSS JOIN qv q WHERE v.vec_id <> q.qid
-              ) WHERE rk <= {_RECALL_K}),
-    hits AS (SELECT a.qid, COUNT(*) AS n_hit
-             FROM approx a JOIN exact e ON a.qid = e.qid
-                                       AND a.vec_id = e.vec_id
-             GROUP BY a.qid)
-    SELECT q.qid, CAST(COALESCE(h.n_hit, 0) AS BIGINT) AS n_hit,
-           round(COALESCE(h.n_hit, 0) / {float(_RECALL_K)}, 6) AS recall6
-    FROM (SELECT qid FROM qv) q LEFT JOIN hits h ON q.qid = h.qid
-    ORDER BY q.qid
+    {_d_exact_topk()},
+    {_d_recall('(SELECT qid FROM qv)')}
+    SELECT * FROM recall ORDER BY qid
     """
 
 
@@ -6313,16 +5961,8 @@ def _retrain_policy_oracle() -> str:
                       AS BIGINT) AS n_delta
           FROM embeddings),
     v2 AS (SELECT vec_id, {_D_VEC} AS ve, {_D_NRM} AS nrm FROM embeddings),
-    bc2 AS (SELECT vec_id AS cid, ve AS cve, nrm AS cnrm
-            FROM v2 WHERE {_BEAM_SEEDS_BASE}),
-    masg2 AS (SELECT vec_id, cid FROM (
-               SELECT v2.vec_id, bc2.cid,
-                      ROW_NUMBER() OVER (
-                        PARTITION BY v2.vec_id
-                        ORDER BY {_d_cos6('v2.ve', 'bc2.cve',
-                                          'v2.nrm', 'bc2.cnrm')} DESC,
-                                 bc2.cid ASC) AS rk
-               FROM v2, bc2) WHERE rk = 1),
+    {_d_seed_cells(KM_K, 'bc2', 'v2', _APPEND_BASE)},
+    {_d_top_cells('v2', 'bc2', 'vec_id', 1, 'masg2')},
     touch AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_aff FROM masg2
               WHERE cid IN (SELECT DISTINCT cid FROM masg2
                             WHERE {_APPEND_DELTA})),
@@ -6660,14 +6300,7 @@ _MP_FLIPS = [2**k for k in range(PLANES_PER_BAND)]
 @query(
     "q_e_lsh_multiprobe",
     oracle=f"""
-    WITH p AS (SELECT {_PF_DUCK} AS pf),
-    v AS (SELECT vec_id, label, {_D_VEC} AS ve, {_D_NRM} AS nrm FROM embeddings),
-    d AS (SELECT vec_id, ve, nrm, {_DUCK_DOTS} AS dots FROM v, p),
-    bk AS (SELECT vec_id, {_DUCK_BUCKETS} AS buckets FROM d),
-    bands AS (SELECT vec_id,
-                     CAST(generate_subscripts(buckets, 1) - 1 AS BIGINT) AS band,
-                     CAST(unnest(buckets) AS BIGINT) AS bucket
-              FROM bk),
+    WITH {_d_lsh_bands(label=True)},
     qb AS (SELECT band, bucket FROM bands WHERE vec_id = 0),
     probes AS (SELECT band, bucket FROM qb
                UNION

@@ -14,6 +14,7 @@ and need no special handling.
 
 from __future__ import annotations
 
+import math
 import textwrap
 from collections.abc import Callable
 
@@ -56,3 +57,21 @@ def davg(expr: str, scale: int = 6, precision: int = 30) -> str:
     so semantics match AVG if that ever changes.
     """
     return f"({dsum(expr, scale, precision)} / COUNT({expr}))"
+
+
+def q6(x: str) -> str:
+    """6-dp floor half-up quantizer of a double expression.
+
+    floor(x·1e6 + 0.5)/1e6 puts a tie on the upper lattice point in
+    Spark and DuckDB alike, where round() breaks ties differently per
+    engine (half-even vs half-away-from-zero), negative values
+    included. Valid verbatim in both dialects.
+    """
+    return f"floor(({x}) * 1000000.0 + 0.5) / 1000000.0"
+
+
+def py_q6(x: float) -> float:
+    """q6 on the driver, for folds whose oracle is a recursive or
+    unrolled CTE: math.floor lands on the engines' lattice point,
+    where Python's round() is half-to-even."""
+    return math.floor(x * 1000000.0 + 0.5) / 1000000.0

@@ -191,6 +191,16 @@ def test_artifacts_are_staged_only_through_tmpdirs_staged():
         assert not bad, f"stage artifacts through tmpdirs.staged: {token} at {bad}"
 
 
+def _source_lines(hits: list[str]) -> list[str]:
+    """The source text of ``_hits_outside`` hits (``module:line``)."""
+    pkg = Path(glaciersgee_spark.__file__).parent
+    out = []
+    for hit in hits:
+        module, line = hit.rsplit(":", 1)
+        out.append((pkg / module).read_text().splitlines()[int(line) - 1])
+    return out
+
+
 def test_vector_kernels_and_memos_have_one_definition():
     """The PQ sub-distance spelling appears under glaciersgee_spark/
     only inside similarity.pq_dist6, the query-id literal panel
@@ -206,7 +216,19 @@ def test_vector_kernels_and_memos_have_one_definition():
     rule appear only inside curation._quality_features,
     _quality_logit and _quality_gold. And ``WeakKeyDictionary``
     appears only in caches.py and tables.py: an operator memo goes
-    through caches.scoped_value, where clear_caches() reaches it."""
+    through caches.scoped_value, where clear_caches() reaches it.
+
+    The DuckDB oracles have one spelling per ANN mechanism too, each
+    inside the ``_d_*`` CTE builder in similarity.py that mirrors the
+    Spark helper: the SRP band chain in _d_lsh_bands (_banded), the
+    panel band-collision candidates in _d_lsh_candidates
+    (lsh_candidates), the panel query rows in _d_query_rows
+    (_query_rows), the seed centroids in _d_seed_cells (_seed_cells),
+    the nearest-cell rank in _d_top_cells (top_cells), and the
+    brute-force top-_RECALL_K and recall hit join in _d_exact_topk and
+    _d_recall (recall_at_k). The quality classifier's oracle features
+    appear only in curation._d_quality_features, and the 6-dp floor
+    quantizer is registry.q6 / registry.py_q6."""
     for module, token, helper in (
         ("similarity", ") ** 2).sum(-1)", "pq_dist6"),
         ("similarity", "qid_lits", "panel_rows"),
@@ -239,6 +261,38 @@ def test_vector_kernels_and_memos_have_one_definition():
         if not hit.startswith(("caches.py:", "tables.py:"))
     ]
     assert not memos, f"memoize through caches.scoped_value: {memos}"
+    for module, token, helper in (
+        ("similarity", "generate_subscripts(buckets, 1)", "_d_lsh_bands"),
+        (
+            "similarity",
+            "qb AS (SELECT vec_id AS qid, band, bucket FROM bands",
+            "_d_lsh_candidates",
+        ),
+        ("similarity", "WHERE vec_id IN {_RECALL_QIDS}", "_d_query_rows"),
+        (
+            "similarity",
+            "FROM v CROSS JOIN qv q WHERE v.vec_id <> q.qid",
+            "_d_exact_topk",
+        ),
+        ("similarity", "JOIN exact e ON a.qid = e.qid", "_d_recall"),
+        ("curation", "x -> x IN ({_STOP_IN})", "_d_quality_features"),
+    ):
+        bad = _hits_outside(token, f"operators/{module}.py", helper)
+        assert not bad, f"use {module}.{helper}: {token!r} at {bad}"
+    # The PQ codebook seeds (vec_id 1..PQ_K) carry no norm column and
+    # the PQ code ranks order by ``d6 ASC, cid ASC`` (nearest sub-code),
+    # not by cosine: both keep their own CTEs.
+    seeds = _hits_outside(
+        "WHERE vec_id BETWEEN 1 AND {", "operators/similarity.py", "_d_seed_cells"
+    )
+    bad = [h for h, src in zip(seeds, _source_lines(seeds)) if "{PQ_K}" not in src]
+    assert not bad, f"select seed cells through similarity._d_seed_cells: {bad}"
+    ranks = _hits_outside("cid ASC) AS rk", "operators/similarity.py", "_d_top_cells")
+    bad = [h for h, src in zip(ranks, _source_lines(ranks)) if "d6 ASC, " not in src]
+    assert not bad, f"rank cells through similarity._d_top_cells: {bad}"
+    for token in ("def _lr_q6", "def _py_q6", "_HW_Q6 =", "def _q6("):
+        bad = _hits_outside(token, "registry.py", "")
+        assert not bad, f"quantize through registry.q6 / py_q6: {token!r} at {bad}"
 
 
 _DRIVER_CAP = 50

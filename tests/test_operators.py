@@ -3456,19 +3456,21 @@ def test_band_math_masks_and_bounds(spark):
 
 
 def test_ewma_recurrence_replay(spark):
-    from glaciersgee_spark.operators.drift import _py_q6, q_e_ewma_chart
+    from glaciersgee_spark.operators.drift import q_e_ewma_chart
+    from glaciersgee_spark.registry import py_q6
 
     rows = sorted(q_e_ewma_chart(spark, SF_SMOKE).collect(),
                   key=lambda r: r.day)
     e = 0.0
     for i, r in enumerate(rows):
-        e = _py_q6(0.2 * r.z6 + (0.8 * e if i else 0.0))
+        e = py_q6(0.2 * r.z6 + (0.8 * e if i else 0.0))
         assert abs(r.ewma6 - e) < 1e-9, (r.day, r.ewma6, e)
         assert r.alarm == (abs(r.ewma6) > 1.0)
 
 
 def test_holt_trend_recurrence_replay(spark):
-    from glaciersgee_spark.operators.drift import _py_q6, q_e_holt_trend
+    from glaciersgee_spark.operators.drift import q_e_holt_trend
+    from glaciersgee_spark.registry import py_q6
 
     rows = sorted(q_e_holt_trend(spark, SF_SMOKE).collect(),
                   key=lambda r: r.day)
@@ -3479,14 +3481,14 @@ def test_holt_trend_recurrence_replay(spark):
     assert rows[0].fcst6 is None and rows[0].abs_err6 is None
     lvl, trd = rows[0].level6, 0.0
     for r in rows[1:]:
-        fcst = _py_q6(lvl + trd)
-        new_lvl = _py_q6(0.3 * r.n_events + 0.7 * (lvl + trd))
-        trd = _py_q6(0.1 * (new_lvl - lvl) + 0.9 * trd)
+        fcst = py_q6(lvl + trd)
+        new_lvl = py_q6(0.3 * r.n_events + 0.7 * (lvl + trd))
+        trd = py_q6(0.1 * (new_lvl - lvl) + 0.9 * trd)
         lvl = new_lvl
         assert abs(r.level6 - lvl) < 1e-9, (r.day, r.level6, lvl)
         assert abs(r.trend6 - trd) < 1e-9
         assert abs(r.fcst6 - fcst) < 1e-9
-        assert abs(r.abs_err6 - _py_q6(abs(r.n_events - fcst))) < 1e-9
+        assert abs(r.abs_err6 - py_q6(abs(r.n_events - fcst))) < 1e-9
 
 
 def test_uuid_layout_and_determinism(spark):
@@ -3586,7 +3588,8 @@ def test_perplexity_heldout_split(spark):
 
 
 def test_holt_winters_recurrence_replay(spark):
-    from glaciersgee_spark.operators.drift import _py_q6, q_e_holt_winters
+    from glaciersgee_spark.operators.drift import q_e_holt_winters
+    from glaciersgee_spark.registry import py_q6
     from glaciersgee_spark.operators.etl import q_a_filter_date  # noqa: F401
     from glaciersgee_spark.tables import load_table
 
@@ -3602,21 +3605,21 @@ def test_holt_winters_recurrence_replay(spark):
         key=lambda r: r.day,
     )
     assert len(rows) == len(days) - 7
-    lvl = _py_q6(sum(float(d["count"]) for d in days[:7]) / 7.0)
+    lvl = py_q6(sum(float(d["count"]) for d in days[:7]) / 7.0)
     trd = 0.0
-    queue = [_py_q6(float(d["count"]) - lvl) for d in days[:7]]
+    queue = [py_q6(float(d["count"]) - lvl) for d in days[:7]]
     for r, d in zip(rows, days[7:]):
         assert r.day == d.day and r.n_events == d["count"]
         s_used = queue.pop(0)
-        fcst = _py_q6(lvl + trd + s_used)
-        new_lvl = _py_q6(0.3 * (d["count"] - s_used) + 0.7 * (lvl + trd))
-        trd = _py_q6(0.1 * (new_lvl - lvl) + 0.9 * trd)
-        queue.append(_py_q6(0.2 * (d["count"] - new_lvl) + 0.8 * s_used))
+        fcst = py_q6(lvl + trd + s_used)
+        new_lvl = py_q6(0.3 * (d["count"] - s_used) + 0.7 * (lvl + trd))
+        trd = py_q6(0.1 * (new_lvl - lvl) + 0.9 * trd)
+        queue.append(py_q6(0.2 * (d["count"] - new_lvl) + 0.8 * s_used))
         lvl = new_lvl
         assert abs(r.level6 - lvl) < 1e-9 and abs(r.trend6 - trd) < 1e-9
         assert abs(r.season6 - s_used) < 1e-9
         assert abs(r.fcst6 - fcst) < 1e-9
-        assert abs(r.abs_err6 - _py_q6(abs(d["count"] - fcst))) < 1e-9
+        assert abs(r.abs_err6 - py_q6(abs(d["count"] - fcst))) < 1e-9
 
 
 def test_pack_audit_ledger_consistency(spark):
@@ -3671,6 +3674,29 @@ def test_logreg_train_trace(spark):
     b1 = by_step[1]["bias"]
     assert -1.0 < b1.grad6 < 1.0
     assert abs(b1.weight6 + b1.grad6) < 2e-6
+
+
+def test_cartography_reuses_logreg_trajectory(spark):
+    """q_e_cartography scores every doc at q_e_logreg_train's weights
+    from the shared _lr_trajectory (a scoped_value): once logreg has
+    trained, cartography's build launches no job, and the weights it
+    reads are the weight6 trace logreg emitted."""
+    from glaciersgee_spark import clear_caches
+    from glaciersgee_spark.operators.curation import (
+        _LR_FEATS, _LR_XCOLS, _lr_trajectory, q_e_cartography, q_e_logreg_train)
+
+    clear_caches()
+    rows = q_e_logreg_train(spark, SF_SMOKE).collect()
+    tracker = spark.sparkContext.statusTracker()
+    before = tracker.getJobIdsForGroup(None)
+    carto = q_e_cartography(spark, SF_SMOKE)
+    assert len(tracker.getJobIdsForGroup(None)) == len(before)
+    assert carto.count() > 0
+    weight6 = {(r.step, r.feature): r.weight6 for r in rows}
+    for step, (_g, _ll, w) in enumerate(_lr_trajectory(spark, SF_SMOKE), 1):
+        for name, xc in zip(_LR_FEATS, _LR_XCOLS):
+            assert weight6[(step, name)] == w[int(xc[1])]
+    clear_caches()
 
 
 def test_ab_test_srm_and_welch(spark):
