@@ -15,9 +15,15 @@ round-over-round regression diffs are mechanical, not limited to the
 
 Methodology (documented in BASELINE.md §protocol): each query runs
 FOUR times — an untimed warm-up (Catalyst planning, whole-stage
-codegen compilation, Python-worker spin-up: one-time costs that
-amortize to zero at any real scale) and three timed steady-state
-runs, of which the MINIMUM is reported. Min-of-3 because this host shows
+codegen compilation, Python-worker spin-up) and three timed
+steady-state runs, of which the MINIMUM is reported. Compilation is
+paid in the warm-up only because Spark keeps each compiled class in
+its codegen cache (`spark.sql.codegen.cache.maxEntries`), an LRU that
+`get_spark` sizes to hold every class the inventory generates (with
+Spark's default of 100 entries, a run needing more classes recompiles
+them all), and only for queries whose generated source is the same on
+every run; a few queries regenerate some classes each run (CHANGES.md).
+Min-of-3 because this host shows
 random multi-second stalls that hit a different query every run
 (measured: the same query swinging 1.4 s ↔ 20.7 s across identical-
 code runs while the rest of the suite was unchanged) — the minimum is

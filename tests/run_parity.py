@@ -5,7 +5,6 @@ Usage: python tests/run_parity.py [sf_dir] [name_filter...]
 
 from __future__ import annotations
 
-import os
 import sys
 import time
 
@@ -20,13 +19,9 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = sys.argv[2:]
     # Result lines must start at column 0 so `grep -c '^✓'` counts the
-    # passes of a `> log 2>&1` run: Spark's console progress bar redraws
-    # `[Stage ...]` on stderr with no newline, so this run turns it off
-    # (read once, at JVM start), and stdout is flushed line by line.
-    submit = os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
-    os.environ["PYSPARK_SUBMIT_ARGS"] = (
-        f"--conf spark.ui.showConsoleProgress=false {submit}"
-    )
+    # passes of a `> log 2>&1` run: get_spark turns Spark's console
+    # progress bar off, and stdout is flushed line by line so no result
+    # line is split by a stderr write.
     sys.stdout.reconfigure(line_buffering=True)
     spark = get_spark("parity")
     con = make_duck(sf_dir)

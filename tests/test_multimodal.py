@@ -3,7 +3,6 @@ files on disk + the Arrow-batched decode pipeline (stubbed decoder,
 real schema/batching — see operators/multimodal.py)."""
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 
@@ -22,16 +21,14 @@ PAYLOADS = {
 }
 
 
-def _fixture_dir():
-    d = tempfile.mkdtemp(prefix="ggee_bin_")
+def _fixture_dir(tmp_path):
     for name, data in PAYLOADS.items():
-        with open(os.path.join(d, name), "wb") as f:
-            f.write(data)
-    return d
+        (tmp_path / name).write_bytes(data)
+    return str(tmp_path)
 
 
-def test_binaryfile_source_roundtrip(spark):
-    d = _fixture_dir()
+def test_binaryfile_source_roundtrip(spark, tmp_path):
+    d = _fixture_dir(tmp_path)
     df = read_binary_dir(spark, d)
     assert set(df.columns) == {"path", "modificationTime", "length", "content"}
     rows = {os.path.basename(r.path): bytes(r.content) for r in df.collect()}
@@ -46,8 +43,8 @@ def test_binaryfile_source_roundtrip(spark):
     assert lens == {k: len(v) for k, v in PAYLOADS.items() if v}
 
 
-def test_binaryfile_magic_byte_sniffing(spark):
-    d = _fixture_dir()
+def test_binaryfile_magic_byte_sniffing(spark, tmp_path):
+    d = _fixture_dir(tmp_path)
     df = (
         spark.read.format("binaryFile")
         .load(d)
