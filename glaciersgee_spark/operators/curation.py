@@ -1009,12 +1009,10 @@ def q_e_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the corpus. At 100 TB with 64 Ki shards the same plan holds —
     the audit frame is |shards| rows, driver-free throughout.
     """
+    from glaciersgee_spark.operators.dedup import _doc_hash
+
     d = load_table(spark, sf_dir, "documents")
-    shard = F.expr(
-        "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15), 16, 10)"
-        f" AS BIGINT) % {_N_SHARDS}"
-    )
-    per = d.groupBy(shard.alias("shard")).agg(
+    per = d.groupBy((_doc_hash() % _N_SHARDS).alias("shard")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").cast("long").alias("total_chars"),
     )
@@ -1341,15 +1339,10 @@ def q_e_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang, never the corpus. All-integer arithmetic: 60-bit hashes,
     (k−1)·2^60 fits int64, floor division both engines.
     """
+    from glaciersgee_spark.operators.dedup import _doc_hash
+
     d = load_table(spark, sf_dir, "documents")
-    h = d.select(
-        "lang",
-        "doc_id",
-        F.expr(
-            "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15), 16, 10)"
-            " AS BIGINT)"
-        ).alias("hv"),
-    )
+    h = d.select("lang", "doc_id", _doc_hash().alias("hv"))
     w = Window.partitionBy("lang").orderBy("hv", "doc_id")
     wn = Window.partitionBy("lang")
     r = h.select(
@@ -1802,15 +1795,11 @@ def q_e_shard_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shard, source) count grid (≤ 16·|sources| rows, combinable);
     shard totals ride a whole-partition window-free second aggregate;
     all lns 6-dp through exact decimal."""
+    from glaciersgee_spark.operators.dedup import _doc_hash
+
     d = load_table(spark, sf_dir, "documents")
     c = (
-        d.select(
-            F.expr(
-                "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15),"
-                " 16, 10) AS BIGINT) % 16"
-            ).alias("shard"),
-            "source",
-        )
+        d.select((_doc_hash() % 16).alias("shard"), "source")
         .groupBy("shard", "source")
         .agg(F.count(F.lit(1)).alias("c"))
     )

@@ -1,14 +1,25 @@
 """Group E — deduplication (exact + MinHash/LSH near-dup).
 
 Exact dedup is content-hash groupBy (SQL-checkable). Near-dup is the
-classic shingle → MinHash → LSH-band → candidate-join → exact-Jaccard
-pipeline, in two oracle-backed configurations over the SAME md5-derived
-cross-engine hash family: q_e_dedup_near_md5 (4 bands × 2 rows over 8
-minhashes — the precision/cost-balanced default) and q_e_dedup_near
-(8 bands × 2 rows over an independent 16-permutation family — the
-high-recall OR-amplified variant). The exact-Jaccard verify stage
-is additionally declared standalone (q_e_jaccard_verify), per
-SURVEY.md §2.
+shingle → MinHash → LSH-band → candidate-join → exact-Jaccard pipeline
+(Broder's MinHash with the banding of Leskovec et al., Mining of
+Massive Datasets ch. 3) over one md5-derived cross-engine hash family.
+Each stage has one Spark helper and one DuckDB CTE builder, and every
+operator and oracle composes them:
+
+  stage                 Spark                    DuckDB oracle
+  shingle hashes        _md5_base                _D_HASHED (d, h)
+  minhash signature     _banded / _sig_pairs     _d_lsh (mh)
+  band rows             _explode_bands           _d_band_rows
+  candidate pairs       _cand_pairs              _d_cand
+  signature agreement   _agree                   _d_agree
+  verified pairs        _md5_pairs               _duck_md5_ctes
+  exact shingle overlap _shingle_overlap         _d_sh_pairs
+
+The builders emit SQL text only and call no Spark helper, so the
+oracles stay an independent engine. `_exact_key`, `_doc_hash` and
+`_hash_split` are the content key, md5 doc bucket and 80/10/10 split
+that the text, curation and pipeline modules import from here.
 
 Determinism: minhash "permutations" are seeded by fixed literal salts;
 candidate pairs are canonicalized (id_a < id_b); no rand() anywhere
@@ -20,12 +31,12 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql.types import ArrayType, LongType
 
 from glaciersgee_spark.caches import scoped_persist, scoped_value
 from glaciersgee_spark.operators.lsh import cobucket_pairs, posting_copairs
-from glaciersgee_spark.registry import davg, query
+from glaciersgee_spark.registry import ORACLE as _ORACLE, davg, query
 from glaciersgee_spark.tables import chunked_prefix, fan_out, load_table
 
 N_MINHASH = 8
@@ -60,6 +71,26 @@ def _exact_key():
     summary cards) MUST use this helper so the contract cannot
     diverge."""
     return F.md5(F.concat_ws("|", "lang", "source", F.col("n_chars").cast("string")))
+
+
+def _doc_hash() -> Column:
+    """The first 60 md5 bits of doc_id as a BIGINT: the content-stable
+    doc bucket behind every split, sample and shard (DuckDB spelling:
+    CAST(concat('0x', substring(md5(...), 1, 15)) AS BIGINT))."""
+    return F.expr(
+        "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15), 16, 10) AS BIGINT)"
+    )
+
+
+def _hash_split(train_pct: int = 80, val_pct: int = 10) -> Column:
+    """'train' / 'val' / 'test' by md5 doc bucket: [0, train_pct),
+    [train_pct, train_pct + val_pct), the rest."""
+    bucket = _doc_hash() % 100
+    return (
+        F.when(bucket < train_pct, "train")
+        .when(bucket < train_pct + val_pct, "val")
+        .otherwise("test")
+    )
 
 
 @query(
@@ -168,26 +199,95 @@ _DUCK_SHHASH = (
 )
 
 
+def _mh_body(p: int, perms: list[tuple[int, int]] = _MH_PERMS) -> str:
+    """Permutation p's affine map of a shingle hash `x`, one text for
+    both dialects."""
+    a, b = perms[p]
+    return f"({a} * (x % {_MHM}) + {b}) % {_MHM}"
+
+
 def _mh_expr(
     dialect: str, p: int, perms: list[tuple[int, int]] = _MH_PERMS
 ) -> str:
-    a, b = perms[p]
-    body = f"({a} * (x % {_MHM}) + {b}) % {_MHM}"
     if dialect == "spark":
-        return f"array_min(transform(hh, x -> {body}))"
-    return f"list_min(list_transform(hh, x -> {body}))"
+        return f"array_min(transform(hh, x -> {_mh_body(p, perms)}))"
+    return f"list_min(list_transform(hh, x -> {_mh_body(p, perms)}))"
 
 
-# Band key: exact base-M packing of the band's `band_size` minhashes
-# (band_size=1 ⇒ the minhash itself) — identical in both dialects.
-def _duck_bkey(k: int, band_size: int) -> str:
-    terms = [
-        f"mhs[{band_size * k + j + 1}] * {_MHM ** (band_size - 1 - j)}"
-        if band_size - 1 - j > 0
-        else f"mhs[{band_size * k + j + 1}]"
-        for j in range(band_size)
-    ]
-    return " + ".join(terms)
+# ------------------------------------------------ DuckDB oracle builders
+
+# `d(doc_id, lang, source, sh)`: the shingled documents; `h(doc_id,
+# hh)`: their md5 shingle hashes (_md5_base).
+_D_SHINGLED = f"""d AS (
+      SELECT doc_id, lang, source, {_DUCK_SHINGLES} AS sh
+      FROM documents WHERE len(string_split(text, ' ')) >= 3
+    )"""
+_D_HASHED = f"""{_D_SHINGLED},
+    h AS (SELECT doc_id, {_DUCK_SHHASH} AS hh FROM d)"""
+
+
+def _d_band_rows(src: str, carry: str, bkeys: list[str], name: str = "bands") -> str:
+    """`<name>(<carry>, band, bkey)`: one row per band k of each `src`
+    row, keyed bkeys[k] (_explode_bands)."""
+    rows = " UNION ALL ".join(
+        f"SELECT {carry}, {k} AS band, {key} AS bkey FROM {src}"
+        for k, key in enumerate(bkeys)
+    )
+    return f"{name} AS ({rows})"
+
+
+def _d_cand(bands: str = "bands", name: str = "cand", carry: tuple[str, ...] = ()) -> str:
+    """`<name>(id_a, id_b, <c>_a, <c>_b ...)`: the DISTINCT doc pairs,
+    id_a < id_b, that share a (band, bkey) bucket (_cand_pairs)."""
+    extra = "".join(f", a.{c} AS {c}_a, b.{c} AS {c}_b" for c in carry)
+    return f"""{name} AS (
+      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b{extra}
+      FROM {bands} a JOIN {bands} b
+        ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id)"""
+
+
+def _d_lsh(
+    band_size: int = BAND_SIZE,
+    n_minhash: int = N_MINHASH,
+    perms: list[tuple[int, int]] = _MH_PERMS,
+    fold: int = _MHM,
+    tag: str = "",
+) -> str:
+    """`mh<tag>(doc_id, mhs)`, `bands<tag>(doc_id, band, bkey)` and
+    `cand<tag>(id_a, id_b)` over `h`: the minhash signature, the band
+    keys (a Horner fold of each band's minhashes with base `fold`) and
+    the candidate pairs (_sig_pairs, _banded, _cand_pairs)."""
+    sig = ", ".join(_mh_expr("duck", p, perms) for p in range(n_minhash))
+
+    def bkey(k: int) -> str:
+        key = f"mhs[{band_size * k + 1}]"
+        for j in range(1, band_size):
+            key = f"({key}) * {fold} + mhs[{band_size * k + j + 1}]"
+        return key
+
+    keys = [bkey(k) for k in range(n_minhash // band_size)]
+    return f"""mh{tag} AS (SELECT doc_id, [{sig}] AS mhs FROM h),
+    {_d_band_rows(f"mh{tag}", "doc_id", keys, f"bands{tag}")},
+    {_d_cand(f"bands{tag}", f"cand{tag}")}"""
+
+
+def _d_agree(pred: str = "x.mhs[i] = y.mhs[i]") -> str:
+    """The number of signature slots i at which `pred` holds for the
+    mh rows x, y (_agree)."""
+    return (
+        f"list_sum(list_transform(range(1, {N_MINHASH + 1}),"
+        f" i -> CASE WHEN {pred} THEN 1 ELSE 0 END))"
+    )
+
+
+# `inter(id_a, id_b, i, na, nb)`: |A ∩ B| and set sizes of every
+# candidate's md5 shingle hashes.
+_D_INTER = """inter AS (
+      SELECT c.id_a, c.id_b,
+             len(list_filter(x.hh, e -> list_contains(y.hh, e))) AS i,
+             len(x.hh) AS na, len(y.hh) AS nb
+      FROM cand c JOIN h x ON c.id_a = x.doc_id JOIN h y ON c.id_b = y.doc_id
+    )"""
 
 
 def _duck_md5_ctes(
@@ -196,33 +296,13 @@ def _duck_md5_ctes(
     perms: list[tuple[int, int]] | None = None,
 ) -> str:
     """The md5-MinHash pipeline as a CTE chain ending in `mpairs(id_a,
-    id_b, jaccard)` — shared by the pair queries (q_e_dedup_near_md5:
-    4×2 over 8 perms; q_e_dedup_near: 8×2 over 16 perms) and the
-    cluster query (q_e_dedup_cluster) so the oracles stay literally
-    identical on the candidate/verify stages."""
+    id_b, jaccard)` (_md5_pairs) — shared by the pair queries
+    (q_e_dedup_near_md5: 4×2 over 8 perms; q_e_dedup_near: 8×2 over 16
+    perms) and every consumer of their pair set."""
     perms = _MH_PERMS if perms is None else perms
-    return f"""d AS (
-      SELECT doc_id, {_DUCK_SHINGLES} AS sh
-      FROM documents WHERE len(string_split(text, ' ')) >= 3
-    ),
-    h AS (SELECT doc_id, {_DUCK_SHHASH} AS hh FROM d),
-    mh AS (SELECT doc_id,
-                  [{', '.join(_mh_expr('duck', p, perms) for p in range(n_minhash))}] AS mhs
-           FROM h),
-    bands AS (
-      {' UNION ALL '.join(
-          f"SELECT doc_id, {k} AS band, {_duck_bkey(k, band_size)} AS bkey FROM mh"
-          for k in range(n_minhash // band_size))}
-    ),
-    cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-             FROM bands a JOIN bands b
-               ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
-    inter AS (
-      SELECT c.id_a, c.id_b,
-             len(list_filter(x.hh, e -> list_contains(y.hh, e))) AS i,
-             len(x.hh) AS na, len(y.hh) AS nb
-      FROM cand c JOIN h x ON c.id_a = x.doc_id JOIN h y ON c.id_b = y.doc_id
-    ),
+    return f"""{_D_HASHED},
+    {_d_lsh(band_size, n_minhash, perms)},
+    {_D_INTER},
     mpairs AS (
       SELECT id_a, id_b,
              CAST(i AS DOUBLE) / CAST(na + nb - i AS DOUBLE) AS jaccard
@@ -232,6 +312,37 @@ def _duck_md5_ctes(
 
 
 _DUCK_MD5_CTES = _duck_md5_ctes(BAND_SIZE)
+
+_D_BLOCK_PAIRS = (
+    "d a JOIN d b ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id"
+)
+
+
+def _d_sh_pairs(
+    name: str = "sp",
+    keep: str = "a.doc_id AS id_a, b.doc_id AS id_b, a.lang, a.source",
+    pairs: str = _D_BLOCK_PAIRS,
+) -> str:
+    """`<name>(<keep>, inter, na, nb)`: the shingle intersection size
+    and both set sizes of every row pair (a, b) of `pairs` — by default
+    each same-(lang, source) pair of `d`, the exact self-join that
+    _shingle_overlap's inverted index answers. Each oracle applies its
+    own score."""
+    return f"""{name} AS (
+      SELECT {keep},
+             len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS inter,
+             len(a.sh) AS na, len(b.sh) AS nb
+      FROM {pairs}
+    )"""
+
+
+# Exact shingle Jaccard of a _d_sh_pairs row: the shingle lists are
+# distinct, so |A ∪ B| = na + nb - inter.
+_D_JACCARD = "CAST(inter AS DOUBLE) / (na + nb - inter)"
+
+
+# ------------------------------------------------ Spark pipeline helpers
+
 
 def _shingle_base(
     spark: SparkSession, sf_dir: str, re_persist: bool = True
@@ -260,33 +371,88 @@ def _md5_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scoped_persist(hh, spark, sf_dir, "md5_base")
 
 
-def _banded(base, band_size: int, n_minhash: int, perms) -> DataFrame:
+def _side(df: DataFrame, s: str, *cols: str) -> DataFrame:
+    """df's doc_id as id_<s> and each of cols as <col>_<s>: one side of
+    a pair join."""
+    return df.select(
+        F.col("doc_id").alias(f"id_{s}"), *[F.col(c).alias(f"{c}_{s}") for c in cols]
+    )
+
+
+def _explode_bands(df: DataFrame, carry: list[str], bkeys: list[Column]) -> DataFrame:
+    """(*carry, band, bkey): one row per band k of each df row, keyed
+    bkeys[k] (DuckDB: _d_band_rows)."""
+    bands = [
+        F.struct(F.lit(k).alias("band"), key.alias("bkey")) for k, key in enumerate(bkeys)
+    ]
+    return df.select(*carry, F.explode(F.array(*bands)).alias("bb")).select(
+        *carry, F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey")
+    )
+
+
+def _banded(
+    base: DataFrame, band_size: int, n_minhash: int, perms, fold: int = _MHM
+) -> DataFrame:
     """(doc_id, band, bkey): the banded minhash expansion — THE one
-    Spark spelling of the band-key packing (Horner fold base _MHM),
-    mirrored by _duck_bkey in the oracle chain. Every consumer
-    (_md5_pairs, q_e_band_explain) must use this helper so the packing
-    contract cannot fork."""
+    Spark spelling of the band key, a Horner fold of the band's
+    band_size minhashes with base `fold`, mirrored by _d_lsh. The pair
+    queries fold with _MHM, an exact base-M packing at band_size 2.
+    q_e_lsh_tuning's sweep folds with 31, because M³ overflows int64 at
+    band_size 4: its keys stay below 3·10¹³, and a fold collision
+    (≈10⁻⁹ per pair) only ever ADDS a candidate, identically in both
+    engines."""
     mh = [
         F.expr(_mh_expr("spark", p, perms)).alias(f"mh{p}") for p in range(n_minhash)
     ]
 
-    def bkey(k: int):
+    def bkey(k: int) -> Column:
         col = F.col(f"mh{band_size * k}")
         for j in range(1, band_size):
-            col = col * _MHM + F.col(f"mh{band_size * k + j}")
+            col = col * fold + F.col(f"mh{band_size * k + j}")
         return col
 
-    return base.select("doc_id", *mh).select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(k).alias("band"), bkey(k).alias("bkey"))
-                    for k in range(n_minhash // band_size)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
+    keys = [bkey(k) for k in range(n_minhash // band_size)]
+    return _explode_bands(base.select("doc_id", *mh), ["doc_id"], keys)
+
+
+def _cand_pairs(banded: DataFrame, *carry: str) -> DataFrame:
+    """(id_a, id_b, <c>_a, <c>_b ...): the distinct doc pairs, id_a <
+    id_b, that share a (band, bkey) bucket, with each carry column of
+    both docs (DuckDB: _d_cand). cobucket_pairs caps hot buckets and
+    the oracle does not, so parity needs every bucket under the cap
+    (the bucket-overflow test audits the corpus)."""
+    return cobucket_pairs(banded, ["band", "bkey"], ["doc_id", *carry]).select(
+        F.col("a.doc_id").alias("id_a"),
+        F.col("b.doc_id").alias("id_b"),
+        *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"],
+    )
+
+
+def _agree(pred=lambda x, y: x == y) -> Column:
+    """The number of signature slots i at which pred(mhs_a[i],
+    mhs_b[i]) holds (DuckDB: _d_agree)."""
+    return F.aggregate(
+        F.zip_with("mhs_a", "mhs_b", lambda x, y: F.when(pred(x, y), 1).otherwise(0)),
+        F.lit(0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _sig_pairs(base: DataFrame) -> DataFrame:
+    """(id_a, id_b, mhs_a, mhs_b): the default banding's candidate
+    pairs with both docs' 8-wide signature arrays (DuckDB: _d_lsh's
+    mh) — the estimator audits' input."""
+    sig = F.array(*[F.expr(_mh_expr("spark", p)) for p in range(N_MINHASH)])
+    mh = base.select("doc_id", sig.alias("mhs"))
+    cand = _cand_pairs(_banded(base, BAND_SIZE, N_MINHASH, _MH_PERMS))
+    return cand.join(_side(mh, "a", "mhs"), "id_a").join(_side(mh, "b", "mhs"), "id_b")
+
+
+def _hh_jaccard() -> Column:
+    """Exact Jaccard of the shingle-hash sets hh_a, hh_b (DuckDB: the
+    `inter` CTE's i / (na + nb - i))."""
+    inter = F.size(F.array_intersect("hh_a", "hh_b"))
+    return inter.cast("double") / (F.size("hh_a") + F.size("hh_b") - inter).cast("double")
 
 
 def _md5_pairs(
@@ -303,20 +469,11 @@ def _md5_pairs(
     instead of once per downstream query."""
     perms = _MH_PERMS if perms is None else perms
     base = _md5_base(spark, sf_dir)
-    banded = _banded(base, band_size, n_minhash, perms)
-    cand = cobucket_pairs(banded, ["band", "bkey"], ["doc_id"]).select(
-        F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-    )
-    ha = base.select(F.col("doc_id").alias("id_a"), F.col("hh").alias("hh_a"))
-    hb = base.select(F.col("doc_id").alias("id_b"), F.col("hh").alias("hh_b"))
-    inter = F.size(F.array_intersect("hh_a", "hh_b"))
-    jac = inter.cast("double") / (
-        F.size("hh_a") + F.size("hh_b") - inter
-    ).cast("double")
+    cand = _cand_pairs(_banded(base, band_size, n_minhash, perms))
     pairs = (
-        cand.join(ha, "id_a")
-        .join(hb, "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard"))
+        cand.join(_side(base, "a", "hh"), "id_a")
+        .join(_side(base, "b", "hh"), "id_b")
+        .select("id_a", "id_b", _hh_jaccard().alias("jaccard"))
         .where(F.col("jaccard") >= 0.5)
     )
     # The perm family is part of the identity: same (band_size,
@@ -324,6 +481,62 @@ def _md5_pairs(
     # cached pair set, and the schema guard cannot tell them apart.
     return scoped_persist(
         pairs, spark, sf_dir, f"md5_pairs:{band_size}:{n_minhash}:{tuple(perms)}"
+    )
+
+
+def _shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(id_a, id_b, inter, na, nb): for every same-(lang, source) doc
+    pair that shares a shingle, |A ∩ B| and both set sizes (DuckDB:
+    _d_sh_pairs). Each query applies its own score; a pair sharing no
+    shingle scores 0 under all of them and is correctly absent."""
+    # Inverted-index formulation: explode shingles, group postings by
+    # shingle value and expand in-posting pairs, so only pairs that
+    # actually share a shingle ever materialize. At 100 TB this is the
+    # only viable shape — the blocked nested-loop with per-pair
+    # array_intersect evaluates |block|² set intersections; this is one
+    # shuffle on the posting key, a pair-count aggregation, then two
+    # slim joins for sizes.
+    #
+    # The posting key is xxhash64(lang, source, shingle) — one int64
+    # instead of three strings in the shuffle — and the shingled base
+    # is the shared per-(app, sf_dir) persisted copy (the posting path
+    # and the size path would otherwise each re-run
+    # scan→split→shingle). Counts are identical to the string-keyed
+    # oracle grouping modulo 64-bit collisions (~10⁻⁹ at this
+    # cardinality).
+    base = _shingle_base(spark, sf_dir)
+    post = base.select(
+        "doc_id",
+        "lang",
+        "source",
+        F.explode("sh").alias("shingle"),
+    ).select("doc_id", F.xxhash64("lang", "source", "shingle").alias("pkey"))
+    # Every posting pair row is one unit of some pair's |∩|, so an
+    # exact verify cannot cap/drop contributions — instead of the
+    # capped collect_list path (cobucket_pairs) this uses the
+    # spill-safe posting self-join: a corpus-frequent shingle costs
+    # quadratic output rows (inherent to exactness; the (lang, source)
+    # blocking is the structural bound) but never an unbounded
+    # in-memory bucket array. `post` projects off the persisted
+    # shingle base, so both join branches re-read cache, not parquet.
+    inter = (
+        posting_copairs(post, ["pkey"], "doc_id")
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("inter"))
+    )
+    sizes = base.select("doc_id", F.size("sh").alias("n"))
+    na = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na"))
+    nb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("nb"))
+    return inter.join(na, "id_a").join(nb, "id_b")
+
+
+def _jaccard_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(id_a, id_b): the exact J ≥ 0.5 pairs — the ground truth of the
+    recall audits."""
+    return (
+        q_e_jaccard_verify(spark, sf_dir)
+        .where(F.col("jaccard") >= 0.5)
+        .select("id_a", "id_b")
     )
 
 
@@ -384,68 +597,21 @@ def q_e_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_e_jaccard_verify",
     oracle=f"""
-    WITH d AS (
-      SELECT doc_id, lang, source, {_DUCK_SHINGLES} AS sh
-      FROM documents WHERE len(string_split(text, ' ')) >= 3
-    )
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS DOUBLE)
-             / len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
-    FROM d a JOIN d b
-      ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id
-    WHERE CAST(len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS DOUBLE)
-             / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.2
+    WITH {_D_SHINGLED}, {_d_sh_pairs()}
+    SELECT id_a, id_b, {_D_JACCARD} AS jaccard
+    FROM sp WHERE {_D_JACCARD} >= 0.2
     """,
 )
 def q_e_jaccard_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact shingle-Jaccard verification stage (SQL-checkable half of
     the near-dup pipeline): blocked candidate pairs (same lang+source)
-    scored with exact |∩|/|∪| over distinct bigram shingles."""
-    # Inverted-index formulation: explode shingles, group postings by
-    # shingle value and expand in-posting pairs, so only pairs that
-    # actually share a shingle ever materialize (pairs with empty
-    # intersection have J=0 < 0.2 and are correctly absent). At 100 TB
-    # this is the only viable shape — the blocked nested-loop with
-    # per-pair array_intersect evaluates |block|² set intersections;
-    # this is one shuffle on the posting key, a pair-count aggregation,
-    # then two slim joins for sizes.
-    #
-    # The posting key is xxhash64(lang, source, shingle) — one int64
-    # instead of three strings in the shuffle — and the shingled base
-    # is the shared per-(app, sf_dir) persisted copy (the posting path
-    # and the size path would otherwise each re-run
-    # scan→split→shingle). Counts are identical to the string-keyed
-    # oracle grouping modulo 64-bit collisions (~10⁻⁹ at this
-    # cardinality).
-    base = _shingle_base(spark, sf_dir)
-    post = base.select(
-        "doc_id",
-        "lang",
-        "source",
-        F.explode("sh").alias("shingle"),
-    ).select("doc_id", F.xxhash64("lang", "source", "shingle").alias("pkey"))
-    # Every posting pair row is one unit of some pair's |∩|, so an
-    # exact verify cannot cap/drop contributions — instead of the
-    # capped collect_list path (cobucket_pairs) this uses the
-    # spill-safe posting self-join: a corpus-frequent shingle costs
-    # quadratic output rows (inherent to exactness; the (lang, source)
-    # blocking is the structural bound) but never an unbounded
-    # in-memory bucket array. `post` projects off the persisted
-    # shingle base, so both join branches re-read cache, not parquet.
-    inter = (
-        posting_copairs(post, ["pkey"], "doc_id")
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    sizes = base.select("doc_id", F.size("sh").alias("n"))
-    na = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("nb"))
+    scored with exact |∩|/|∪| over distinct bigram shingles, from the
+    inverted index of _shingle_overlap."""
     jac = F.col("inter").cast("double") / (
         F.col("na") + F.col("nb") - F.col("inter")
     ).cast("double")
     return (
-        inter.join(na, "id_a")
-        .join(nb, "id_b")
+        _shingle_overlap(spark, sf_dir)
         .select("id_a", "id_b", jac.alias("jaccard"))
         .where(F.col("jaccard") >= 0.2)
     )
@@ -580,17 +746,9 @@ _BAND_KEYS = [2 ** (SIM_BAND_BITS * k) for k in range(SIMHASH_BITS // SIM_BAND_B
       FROM tok GROUP BY doc_id
     ),
     sims AS (SELECT doc_id, {_SIM_FROM_SUMS} AS sim FROM sums),
-    bands2 AS (
-      {' UNION ALL '.join(
-          f"SELECT doc_id, sim, {k} AS band, (sim // {d}) % {2 ** SIM_BAND_BITS} AS bkey FROM sims"
-          for k, d in enumerate(_BAND_KEYS))}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-             a.sim AS sim_a, b.sim AS sim_b
-      FROM bands2 a JOIN bands2 b
-        ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-    )
+    {_d_band_rows("sims", "doc_id, sim", [
+        f"(sim // {d}) % {2 ** SIM_BAND_BITS}" for d in _BAND_KEYS])},
+    {_d_cand(carry=("sim",))}
     SELECT id_a, id_b, CAST(bit_count(xor(sim_a, sim_b)) AS INT) AS hamming
     FROM cand WHERE bit_count(xor(sim_a, sim_b)) <= {SIM_HAMMING_MAX}
     """,
@@ -614,29 +772,12 @@ def q_e_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     sims = sums.select("doc_id", F.expr(_SIM_FROM_SUMS).alias("sim"))
-    bands = sims.select(
-        "doc_id",
-        "sim",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("band"),
-                        F.expr(
-                            f"(sim DIV {d_}) % {2 ** SIM_BAND_BITS}"
-                        ).alias("bkey"),
-                    )
-                    for k, d_ in enumerate(_BAND_KEYS)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "sim", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
-    cand = cobucket_pairs(bands, ["band", "bkey"], ["doc_id", "sim"]).select(
-        F.col("a.doc_id").alias("id_a"),
-        F.col("b.doc_id").alias("id_b"),
-        F.col("a.sim").alias("sim_a"),
-        F.col("b.sim").alias("sim_b"),
+    bands = _explode_bands(
+        sims,
+        ["doc_id", "sim"],
+        [F.expr(f"(sim DIV {d}) % {2 ** SIM_BAND_BITS}") for d in _BAND_KEYS],
     )
+    cand = _cand_pairs(bands, "sim")
     ham = F.expr("CAST(bit_count(sim_a ^ sim_b) AS INT)")
     return (
         cand.select("id_a", "id_b", ham.alias("hamming"))
@@ -804,26 +945,7 @@ def star_components(e: DataFrame, max_rounds: int = 12) -> DataFrame:
 
 
 
-@query(
-    "q_e_cc_stars",
-    oracle=f"""
-    WITH RECURSIVE {_DUCK_MD5_CTES},
-    ue AS (
-      SELECT id_a AS u, id_b AS v FROM mpairs
-      UNION ALL
-      SELECT id_b AS u, id_a AS v FROM mpairs
-    ),
-    reach(u, r) AS (
-      SELECT u, u FROM ue
-      UNION
-      SELECT ue.u, reach.r FROM ue JOIN reach ON ue.v = reach.u
-    ),
-    lab AS (SELECT u AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY u)
-    SELECT doc_id, cluster_id,
-           COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size
-    FROM lab
-    """,
-)
+@query("q_e_cc_stars", oracle=_ORACLE["q_e_dedup_cluster"])
 def q_e_cc_stars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components via alternating LARGE-STAR / SMALL-STAR
     contraction over the same near-dup pair graph as q_e_dedup_cluster
@@ -851,43 +973,15 @@ def q_e_cc_stars(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_e_minhash_est_err",
     oracle=f"""
-    WITH d AS (
-      SELECT doc_id, {_DUCK_SHINGLES} AS sh
-      FROM documents WHERE len(string_split(text, ' ')) >= 3
-    ),
-    h AS (SELECT doc_id, {_DUCK_SHHASH} AS hh FROM d),
-    mh AS (SELECT doc_id,
-                  [{', '.join(_mh_expr('duck', p) for p in range(N_MINHASH))}] AS mhs
-           FROM h),
-    bands AS (
-      {' UNION ALL '.join(
-          f"SELECT doc_id, {k} AS band,"
-          f" mhs[{BAND_SIZE * k + 1}] * {_MHM} + mhs[{BAND_SIZE * k + 2}] AS bkey"
-          " FROM mh"
-          for k in range(N_MINHASH // BAND_SIZE))}
-    ),
-    cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-             FROM bands a JOIN bands b
-               ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id)
-    SELECT c.id_a, c.id_b,
-           round(list_sum(list_transform(range(1, {N_MINHASH + 1}),
-                   i -> CASE WHEN x.mhs[i] = y.mhs[i] THEN 1 ELSE 0 END))
-                 / {float(N_MINHASH)}, 6) AS est6,
-           round(CAST(len(list_filter(hx.hh, e -> list_contains(hy.hh, e))) AS DOUBLE)
-                 / (len(hx.hh) + len(hy.hh)
-                    - len(list_filter(hx.hh, e -> list_contains(hy.hh, e)))),
-                 6) AS exact6,
-           round(abs(
-             round(list_sum(list_transform(range(1, {N_MINHASH + 1}),
-                     i -> CASE WHEN x.mhs[i] = y.mhs[i] THEN 1 ELSE 0 END))
-                   / {float(N_MINHASH)}, 6)
-             - round(CAST(len(list_filter(hx.hh, e -> list_contains(hy.hh, e))) AS DOUBLE)
-                     / (len(hx.hh) + len(hy.hh)
-                        - len(list_filter(hx.hh, e -> list_contains(hy.hh, e)))),
-                     6)), 6) AS abs_err6
-    FROM cand c
-    JOIN mh x ON c.id_a = x.doc_id JOIN mh y ON c.id_b = y.doc_id
-    JOIN h hx ON c.id_a = hx.doc_id JOIN h hy ON c.id_b = hy.doc_id
+    WITH {_D_HASHED}, {_d_lsh()}, {_D_INTER},
+    s AS (
+      SELECT c.id_a, c.id_b,
+             round({_d_agree()} / {float(N_MINHASH)}, 6) AS est6,
+             round(CAST(c.i AS DOUBLE) / (c.na + c.nb - c.i), 6) AS exact6
+      FROM inter c JOIN mh x ON c.id_a = x.doc_id JOIN mh y ON c.id_b = y.doc_id
+    )
+    SELECT id_a, id_b, est6, exact6, round(abs(est6 - exact6), 6) AS abs_err6
+    FROM s
     """,
 )
 def q_e_minhash_est_err(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -899,52 +993,17 @@ def q_e_minhash_est_err(spark: SparkSession, sf_dir: str) -> DataFrame:
     J, σ = √(J(1−J)/8) ≈ 0.17 at J=0.5, so per-pair error is large by
     design — the audit shows it).
 
-    Same candidate generation as q_e_dedup_near_md5 (shared banding
-    constants → oracle CTEs literally parallel); adds one broadcast-
-    sized join of the 8-wide signature arrays. All hashes md5-derived
-    → fully hash-checkable end to end."""
+    Same candidate generation as q_e_dedup_near_md5 (_sig_pairs: the
+    default _banded and _cand_pairs; the oracle shares _d_lsh); adds
+    the 8-wide signature arrays and hashed shingle sets of both docs.
+    All hashes md5-derived → fully hash-checkable end to end."""
     base = _md5_base(spark, sf_dir)
-    mharr = F.array(*[F.expr(_mh_expr("spark", p)) for p in range(N_MINHASH)])
-    mh = base.select("doc_id", mharr.alias("mhs"))
-    banded = mh.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("band"),
-                        (
-                            F.element_at("mhs", BAND_SIZE * k + 1) * _MHM
-                            + F.element_at("mhs", BAND_SIZE * k + 2)
-                        ).alias("bkey"),
-                    )
-                    for k in range(N_MINHASH // BAND_SIZE)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
-    cand = cobucket_pairs(banded, ["band", "bkey"], ["doc_id"]).select(
-        F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-    )
-    ma = mh.select(F.col("doc_id").alias("id_a"), F.col("mhs").alias("mhs_a"))
-    mb = mh.select(F.col("doc_id").alias("id_b"), F.col("mhs").alias("mhs_b"))
-    ha = base.select(F.col("doc_id").alias("id_a"), F.col("hh").alias("hh_a"))
-    hb = base.select(F.col("doc_id").alias("id_b"), F.col("hh").alias("hh_b"))
-    agree = F.aggregate(
-        F.zip_with("mhs_a", "mhs_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    est6 = F.round(agree / float(N_MINHASH), 6)
-    inter = F.size(F.array_intersect("hh_a", "hh_b"))
-    exact6 = F.round(
-        inter.cast("double") / (F.size("hh_a") + F.size("hh_b") - inter), 6
-    )
+    est6 = F.round(_agree() / float(N_MINHASH), 6)
+    exact6 = F.round(_hh_jaccard(), 6)
     return (
-        cand.join(ma, "id_a")
-        .join(mb, "id_b")
-        .join(ha, "id_a")
-        .join(hb, "id_b")
+        _sig_pairs(base)
+        .join(_side(base, "a", "hh"), "id_a")
+        .join(_side(base, "b", "hh"), "id_b")
         .select(
             "id_a",
             "id_b",
@@ -1074,10 +1133,7 @@ def q_e_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality = n_tok.between(10, 200) & (
         F.size(F.array_distinct(words)).cast("double") / n_tok > 0.3
     )
-    bucket = F.expr(
-        "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15), 16, 10) AS BIGINT)"
-        " % 100"
-    )
+    bucket = _doc_hash() % 100
     rate = F.lit(0)
     for k, v in sorted(SAMPLE_RATES.items()):
         rate = F.when(F.col("lang") == k, v).otherwise(rate)
@@ -1104,18 +1160,8 @@ def q_e_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_e_minhash_recall",
     oracle=f"""
-    WITH {_DUCK_MD5_CTES},
-    dd AS (
-      SELECT doc_id, lang, source, {_DUCK_SHINGLES} AS sh
-      FROM documents WHERE len(string_split(text, ' ')) >= 3
-    ),
-    truth AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.lang, a.source
-      FROM dd a JOIN dd b
-        ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id
-      WHERE CAST(len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS DOUBLE)
-            / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.5
-    )
+    WITH {_D_HASHED}, {_d_lsh()}, {_d_sh_pairs()},
+    truth AS (SELECT id_a, id_b, lang, source FROM sp WHERE {_D_JACCARD} >= 0.5)
     SELECT t.lang, t.source,
            COUNT(*) AS n_true,
            COUNT(c.id_a) AS n_caught,
@@ -1132,42 +1178,17 @@ def q_e_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     J = 0.5 rising fast with J — this measures it per block, the
     dedup-family analogue of the three ANN recall audits.
 
-    Ground truth reuses q_e_jaccard_verify's inverted-index pipeline
-    (shared spelling, threshold lifted to 0.5); the candidate set is
-    q_e_dedup_near_md5's banding stage (shared CTEs). One extra
-    broadcast-sized left join and a tiny groupBy."""
-    truth = (
-        q_e_jaccard_verify(spark, sf_dir)
-        .where(F.col("jaccard") >= 0.5)
-        .select("id_a", "id_b")
-    )
+    Ground truth is _jaccard_truth (q_e_jaccard_verify's inverted
+    index at J ≥ 0.5); the candidate set is q_e_dedup_near_md5's
+    banding stage (_banded, _cand_pairs). One extra broadcast-sized
+    left join and a tiny groupBy."""
+    # Truth first: it persists the shingle base, which _md5_base then
+    # reads from cache instead of re-scanning the documents.
+    truth = _jaccard_truth(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
     blocks = d.select(F.col("doc_id").alias("id_a"), "lang", "source")
-
-    base = _md5_base(spark, sf_dir)
-    mh = [F.expr(_mh_expr("spark", p)).alias(f"mh{p}") for p in range(N_MINHASH)]
-    banded = base.select("doc_id", *mh).select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("band"),
-                        (
-                            F.col(f"mh{BAND_SIZE * k}") * _MHM
-                            + F.col(f"mh{BAND_SIZE * k + 1}")
-                        ).alias("bkey"),
-                    )
-                    for k in range(N_MINHASH // BAND_SIZE)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
-    cand = cobucket_pairs(banded, ["band", "bkey"], ["doc_id"]).select(
-        F.col("a.doc_id").alias("id_a"),
-        F.col("b.doc_id").alias("id_b"),
-        F.lit(1).alias("caught"),
-    )
+    banded = _banded(_md5_base(spark, sf_dir), BAND_SIZE, N_MINHASH, _MH_PERMS)
+    cand = _cand_pairs(banded).withColumn("caught", F.lit(1))
     return (
         truth.join(F.broadcast(cand), ["id_a", "id_b"], "left")
         .join(F.broadcast(blocks), "id_a")
@@ -1189,77 +1210,16 @@ def q_e_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Sweep configurations: (label, band_size r, n_minhash, perm family).
 # 4×2 is the shipped default (q_e_dedup_near_md5), 8×2 the high-recall
 # variant (q_e_dedup_near), 4×4 the AND-amplified high-precision end.
+# Every config folds its band keys with ×31 (see _banded).
 _SWEEP = (
-    ("4x2", 2, 8),
-    ("8x2", 2, 16),
-    ("4x4", 4, 16),
+    ("4x2", 2, 8, _MH_PERMS),
+    ("8x2", 2, 16, _MH_PERMS_HR),
+    ("4x4", 4, 16, _MH_PERMS_HR),
 )
 
 
-def _mix_bkey_spark(band_size: int, k: int):
-    """Band key for the sweep: 31-mix fold of the band's minhashes.
-
-    The pair queries pack base-M (exact, collision-free) but M³
-    overflows int64 at r=4, so the sweep folds with ×31 instead —
-    values stay < 3·10¹³ at r=4 and the identical fold runs in DuckDB.
-    Fold collisions (≈10⁻⁹/pair) only ever ADD candidates, and
-    identically in both engines.
-    """
-    col = F.col(f"mh{band_size * k}")
-    for j in range(1, band_size):
-        col = col * 31 + F.col(f"mh{band_size * k + j}")
-    return col
-
-
-def _mix_bkey_duck(band_size: int, k: int) -> str:
-    expr = f"mhs[{band_size * k + 1}]"
-    for j in range(1, band_size):
-        expr = f"({expr}) * 31 + mhs[{band_size * k + j + 1}]"
-    return expr
-
-
-def _sweep_banded(spark: SparkSession, sf_dir: str, band_size: int, n_minhash: int) -> DataFrame:
-    base = _md5_base(spark, sf_dir)
-    perms = _MH_PERMS_HR if n_minhash > N_MINHASH else _MH_PERMS
-    mh = [F.expr(_mh_expr("spark", p, perms)).alias(f"mh{p}") for p in range(n_minhash)]
-    return base.select("doc_id", *mh).select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("band"),
-                        _mix_bkey_spark(band_size, k).alias("bkey"),
-                    )
-                    for k in range(n_minhash // band_size)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
-
-
-def _sweep_cands(spark: SparkSession, sf_dir: str, band_size: int, n_minhash: int) -> DataFrame:
-    banded = _sweep_banded(spark, sf_dir, band_size, n_minhash)
-    return cobucket_pairs(banded, ["band", "bkey"], ["doc_id"]).select(
-        F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-    )
-
-
-def _duck_sweep_ctes(tag: str, band_size: int, n_minhash: int) -> str:
-    perms = _MH_PERMS_HR if n_minhash > N_MINHASH else _MH_PERMS
-    bands = " UNION ALL ".join(
-        f"SELECT doc_id, {k} AS band, {_mix_bkey_duck(band_size, k)} AS bkey"
-        f" FROM mh_{tag}"
-        for k in range(n_minhash // band_size)
-    )
-    return f"""mh_{tag} AS (SELECT doc_id,
-         [{', '.join(_mh_expr('duck', p, perms) for p in range(n_minhash))}] AS mhs
-       FROM h),
-    bands_{tag} AS ({bands}),
-    cand_{tag} AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-                   FROM bands_{tag} a JOIN bands_{tag} b
-                     ON a.band = b.band AND a.bkey = b.bkey
-                    AND a.doc_id < b.doc_id),
+def _duck_sweep_ctes(tag: str, band_size: int, n_minhash: int, perms) -> str:
+    return f"""{_d_lsh(band_size, n_minhash, perms, 31, f"_{tag}")},
     stats_{tag} AS (
       SELECT '{tag}' AS config, {band_size} AS band_size,
              {n_minhash // band_size} AS n_bands,
@@ -1273,29 +1233,15 @@ def _duck_sweep_ctes(tag: str, band_size: int, n_minhash: int) -> str:
 @query(
     "q_e_lsh_tuning",
     oracle=f"""
-    WITH d AS (
-      SELECT doc_id, {_DUCK_SHINGLES} AS sh
-      FROM documents WHERE len(string_split(text, ' ')) >= 3
-    ),
-    h AS (SELECT doc_id, {_DUCK_SHHASH} AS hh FROM d),
-    dd AS (
-      SELECT doc_id, lang, source, {_DUCK_SHINGLES} AS sh
-      FROM documents WHERE len(string_split(text, ' ')) >= 3
-    ),
-    truth AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM dd a JOIN dd b
-        ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id
-      WHERE CAST(len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS DOUBLE)
-            / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.5
-    ),
-    {','.join(_duck_sweep_ctes(t, bs, n) for t, bs, n in _SWEEP)},
+    WITH {_D_HASHED}, {_d_sh_pairs()},
+    truth AS (SELECT id_a, id_b FROM sp WHERE {_D_JACCARD} >= 0.5),
+    {','.join(_duck_sweep_ctes(*cfg) for cfg in _SWEEP)},
     n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_true FROM truth)
     SELECT s.config, s.band_size, s.n_bands, s.n_candidates, s.n_caught,
            n.n_true,
            round(CAST(s.n_caught AS DOUBLE) / n.n_true, 6) AS recall6,
            round(CAST(s.n_caught AS DOUBLE) / s.n_candidates, 6) AS precision6
-    FROM ({' UNION ALL '.join(f'SELECT * FROM stats_{t}' for t, _, _ in _SWEEP)}) s
+    FROM ({' UNION ALL '.join(f'SELECT * FROM stats_{cfg[0]}' for cfg in _SWEEP)}) s
     CROSS JOIN n
     """,
 )
@@ -1316,18 +1262,17 @@ def q_e_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded, never all-pairs. Cost is 3 bandings, not 3 pipelines.
     """
     truth = scoped_persist(
-        q_e_jaccard_verify(spark, sf_dir)
-        .where(F.col("jaccard") >= 0.5)
-        .select("id_a", "id_b", F.lit(1).alias("is_true")),
+        _jaccard_truth(spark, sf_dir).withColumn("is_true", F.lit(1)),
         spark,
         sf_dir,
         "jv_truth",
     )
     # bounded scalar (block-local true pairs)
     n_true = scoped_value(spark, sf_dir, "jv_truth_n", truth.count)
+    base = _md5_base(spark, sf_dir)
     per_cfg = []
-    for tag, bs, n in _SWEEP:
-        cand = _sweep_cands(spark, sf_dir, bs, n)
+    for tag, bs, n, perms in _SWEEP:
+        cand = _cand_pairs(_banded(base, bs, n, perms, fold=31))
         per_cfg.append(
             cand.join(F.broadcast(truth), ["id_a", "id_b"], "left").agg(
                 F.count(F.lit(1)).alias("n_candidates"),
@@ -1465,23 +1410,12 @@ def q_e_dup_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_e_containment",
     oracle=f"""
-    WITH d AS (
-      SELECT doc_id, lang, source, {_DUCK_SHINGLES} AS sh
-      FROM documents WHERE len(string_split(text, ' ')) >= 3
-    )
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(len(a.sh) AS BIGINT) AS na, CAST(len(b.sh) AS BIGINT) AS nb,
-           round(CAST(len(list_filter(a.sh, x -> list_contains(b.sh, x)))
-                 AS DOUBLE) / len(a.sh), 6) AS cont_ab,
-           round(CAST(len(list_filter(a.sh, x -> list_contains(b.sh, x)))
-                 AS DOUBLE) / len(b.sh), 6) AS cont_ba
-    FROM d a JOIN d b
-      ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id
-    WHERE greatest(
-            CAST(len(list_filter(a.sh, x -> list_contains(b.sh, x)))
-              AS DOUBLE) / len(a.sh),
-            CAST(len(list_filter(a.sh, x -> list_contains(b.sh, x)))
-              AS DOUBLE) / len(b.sh)) >= 0.25
+    WITH {_D_SHINGLED}, {_d_sh_pairs()}
+    SELECT id_a, id_b, CAST(na AS BIGINT) AS na, CAST(nb AS BIGINT) AS nb,
+           round(CAST(inter AS DOUBLE) / na, 6) AS cont_ab,
+           round(CAST(inter AS DOUBLE) / nb, 6) AS cont_ba
+    FROM sp
+    WHERE greatest(CAST(inter AS DOUBLE) / na, CAST(inter AS DOUBLE) / nb) >= 0.25
     """,
 )
 def q_e_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1497,25 +1431,10 @@ def q_e_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair-materializing shuffle is bounded by pairs that actually
     share a shingle), only the final score differs: inter/na and
     inter/nb instead of inter/union."""
-    base = _shingle_base(spark, sf_dir)
-    post = base.select(
-        "doc_id", "lang", "source", F.explode("sh").alias("shingle")
-    ).select("doc_id", F.xxhash64("lang", "source", "shingle").alias("pkey"))
-    # Spill-safe posting self-join for the same exactness reason as
-    # q_e_jaccard_verify (contributions must not be capped).
-    inter = (
-        posting_copairs(post, ["pkey"], "doc_id")
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    sizes = base.select("doc_id", F.size("sh").alias("n"))
-    na = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("nb"))
     c_ab = F.round(F.col("inter").cast("double") / F.col("na"), 6)
     c_ba = F.round(F.col("inter").cast("double") / F.col("nb"), 6)
     return (
-        inter.join(na, "id_a")
-        .join(nb, "id_b")
+        _shingle_overlap(spark, sf_dir)
         .select(
             "id_a",
             "id_b",
@@ -1615,9 +1534,6 @@ def q_e_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Recall audit for the SHIPPED simhash config, composed from the two
 # registered oracles (both are full SELECTs → legal derived tables).
-from glaciersgee_spark.registry import ORACLE as _ORACLE  # noqa: E402
-
-
 @query(
     "q_e_simhash_recall",
     oracle=f"""
@@ -1653,13 +1569,8 @@ def q_e_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     index truth) with one full outer join on the pair key; output is
     a single ledger row."""
     simc = q_e_dedup_simhash(spark, sf_dir).select("id_a", "id_b")
-    truth = (
-        q_e_jaccard_verify(spark, sf_dir)
-        .where(F.col("jaccard") >= 0.5)
-        .select("id_a", "id_b")
-    )
     s = simc.withColumn("in_cand", F.lit(True)).alias("s")
-    t = truth.withColumn("in_truth", F.lit(True)).alias("t")
+    t = _jaccard_truth(spark, sf_dir).withColumn("in_truth", F.lit(True)).alias("t")
     joined = s.join(
         t,
         (F.col("s.id_a") == F.col("t.id_a")) & (F.col("s.id_b") == F.col("t.id_b")),
@@ -1806,17 +1717,8 @@ def q_e_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_e_jaccard_sweep",
     oracle=f"""
-    WITH d AS (
-      SELECT doc_id, lang, source, {_DUCK_SHINGLES} AS sh
-      FROM documents WHERE len(string_split(text, ' ')) >= 3
-    ),
-    scored AS (
-      SELECT CAST(len(list_filter(a.sh, x -> list_contains(b.sh, x)))
-               AS DOUBLE)
-             / len(list_distinct(list_concat(a.sh, b.sh))) AS j
-      FROM d a JOIN d b
-        ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id
-    )
+    WITH {_D_SHINGLED}, {_d_sh_pairs()},
+    scored AS (SELECT {_D_JACCARD} AS j FROM sp)
     SELECT COUNT(*) FILTER (WHERE j >= 0.3) AS pairs_j30,
            COUNT(*) FILTER (WHERE j >= 0.5) AS pairs_j50,
            COUNT(*) FILTER (WHERE j >= 0.7) AS pairs_j70,
@@ -1913,44 +1815,19 @@ def q_e_band_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_e_minhash_bbit",
     oracle=f"""
-    WITH d AS (
-      SELECT doc_id, {_DUCK_SHINGLES} AS sh
-      FROM documents WHERE len(string_split(text, ' ')) >= 3
-    ),
-    h AS (SELECT doc_id, {_DUCK_SHHASH} AS hh FROM d),
-    mh AS (SELECT doc_id,
-                  [{', '.join(_mh_expr('duck', p) for p in range(N_MINHASH))}] AS mhs
-           FROM h),
-    bands AS (
-      {' UNION ALL '.join(
-          f"SELECT doc_id, {k} AS band,"
-          f" mhs[{BAND_SIZE * k + 1}] * {_MHM} + mhs[{BAND_SIZE * k + 2}] AS bkey"
-          " FROM mh"
-          for k in range(N_MINHASH // BAND_SIZE))}
-    ),
-    cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-             FROM bands a JOIN bands b
-               ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id)
-    SELECT c.id_a, c.id_b,
-           round(list_sum(list_transform(range(1, {N_MINHASH + 1}),
-                   i -> CASE WHEN x.mhs[i] = y.mhs[i] THEN 1 ELSE 0 END))
-                 / {float(N_MINHASH)}, 6) AS est_full6,
-           round(greatest(0.0,
-             2.0 * (list_sum(list_transform(range(1, {N_MINHASH + 1}),
-                      i -> CASE WHEN x.mhs[i] % 2 = y.mhs[i] % 2
-                           THEN 1 ELSE 0 END))
-                    / {float(N_MINHASH)}) - 1.0), 6) AS est_1bit6,
-           round(abs(
-             round(list_sum(list_transform(range(1, {N_MINHASH + 1}),
-                     i -> CASE WHEN x.mhs[i] = y.mhs[i] THEN 1 ELSE 0 END))
-                   / {float(N_MINHASH)}, 6)
-             - round(greatest(0.0,
-                 2.0 * (list_sum(list_transform(range(1, {N_MINHASH + 1}),
-                          i -> CASE WHEN x.mhs[i] % 2 = y.mhs[i] % 2
-                               THEN 1 ELSE 0 END))
-                        / {float(N_MINHASH)}) - 1.0), 6)), 6) AS gap6
-    FROM cand c
-    JOIN mh x ON c.id_a = x.doc_id JOIN mh y ON c.id_b = y.doc_id
+    WITH {_D_HASHED}, {_d_lsh()},
+    s AS (
+      SELECT c.id_a, c.id_b,
+             round({_d_agree()} / {float(N_MINHASH)}, 6) AS est_full6,
+             round(greatest(0.0,
+               2.0 * ({_d_agree("x.mhs[i] % 2 = y.mhs[i] % 2")}
+                      / {float(N_MINHASH)}) - 1.0), 6) AS est_1bit6
+      FROM cand c
+      JOIN mh x ON c.id_a = x.doc_id JOIN mh y ON c.id_b = y.doc_id
+    )
+    SELECT id_a, id_b, est_full6, est_1bit6,
+           round(abs(est_full6 - est_1bit6), 6) AS gap6
+    FROM s
     """,
 )
 def q_e_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1964,9 +1841,9 @@ def q_e_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
     variance that THIS audit measures on the actual corpus.
 
     Same candidate generation and signature chain as
-    q_e_minhash_est_err (shared helpers, literally parallel oracle
-    CTEs); integer agreement sums with one final division keep both
-    estimates bit-identical across engines.
+    q_e_minhash_est_err (_sig_pairs and _agree; the oracles share
+    _d_lsh and _d_agree); integer agreement sums with one final
+    division keep both estimates bit-identical across engines.
 
     Cap dependency (shared with q_e_minhash_est_err): candidates come
     from the default-capped cobucket_pairs while the oracle's DISTINCT
@@ -1975,41 +1852,17 @@ def q_e_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding in tests/test_operators.py's bucket-overflow audit); a
     corpus with a hotter bucket would surface as a row-count mismatch,
     not silent wrongness."""
-    base = _md5_base(spark, sf_dir)
-    mharr = F.array(*[F.expr(_mh_expr("spark", p)) for p in range(N_MINHASH)])
-    mh = base.select("doc_id", mharr.alias("mhs"))
-    banded = _banded(base, BAND_SIZE, N_MINHASH, _MH_PERMS)
-    cand = cobucket_pairs(banded, ["band", "bkey"], ["doc_id"]).select(
-        F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-    )
-    ma = mh.select(F.col("doc_id").alias("id_a"), F.col("mhs").alias("mhs_a"))
-    mb = mh.select(F.col("doc_id").alias("id_b"), F.col("mhs").alias("mhs_b"))
-    agree_full = F.aggregate(
-        F.zip_with("mhs_a", "mhs_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    agree_bit = F.aggregate(
-        F.zip_with(
-            "mhs_a", "mhs_b", lambda x, y: F.when(x % 2 == y % 2, 1).otherwise(0)
-        ),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    est_full6 = F.round(agree_full / float(N_MINHASH), 6)
+    agree_bit = _agree(lambda x, y: x % 2 == y % 2)
+    est_full6 = F.round(_agree() / float(N_MINHASH), 6)
     est_1bit6 = F.round(
         F.greatest(F.lit(0.0), 2.0 * (agree_bit / float(N_MINHASH)) - 1.0), 6
     )
-    return (
-        cand.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            est_full6.alias("est_full6"),
-            est_1bit6.alias("est_1bit6"),
-            F.round(F.abs(est_full6 - est_1bit6), 6).alias("gap6"),
-        )
+    return _sig_pairs(_md5_base(spark, sf_dir)).select(
+        "id_a",
+        "id_b",
+        est_full6.alias("est_full6"),
+        est_1bit6.alias("est_1bit6"),
+        F.round(F.abs(est_full6 - est_1bit6), 6).alias("gap6"),
     )
 
 
@@ -2255,14 +2108,11 @@ def integer_pagerank(pairs: DataFrame, rounds: int = _PR_ROUNDS) -> DataFrame:
 _MU_SLOT_PPM = 1_000_000 // N_MINHASH_HR
 
 
-def _mu_min_expr(dialect: str, j: int) -> str:
-    a, b = _MH_PERMS_HR[j]
-    return f"MIN(({a} * (x % {_MHM}) + {b}) % {_MHM})"
+def _mu_min_expr(j: int) -> str:
+    return f"MIN({_mh_body(j, _MH_PERMS_HR)})"
 
 
-_MU_SIG_DUCK = ", ".join(
-    f"{_mu_min_expr('duck', j)} AS m{j}" for j in range(N_MINHASH_HR)
-)
+_MU_SIG_DUCK = ", ".join(f"{_mu_min_expr(j)} AS m{j}" for j in range(N_MINHASH_HR))
 _MU_KEQ_DUCK = " + ".join(
     f"CASE WHEN a.m{j} = b.m{j} THEN 1 ELSE 0 END" for j in range(N_MINHASH_HR)
 )
@@ -2272,10 +2122,7 @@ _MU_EXACT_PPM = "COALESCE(i.i, 0) * 1000000 // (g.n_a + g.n_b - COALESCE(i.i, 0)
 @query(
     "q_e_minhash_union",
     oracle=f"""
-    WITH d AS (
-      SELECT source, {_DUCK_SHINGLES} AS sh
-      FROM documents WHERE len(string_split(text, ' ')) >= 3
-    ),
+    WITH {_D_SHINGLED},
     h AS (SELECT source, {_DUCK_SHHASH} AS hh FROM d),
     eh AS (SELECT DISTINCT source, unnest(hh) AS x FROM h),
     sig AS (SELECT source, COUNT(*) AS n, {_MU_SIG_DUCK}
@@ -2332,7 +2179,7 @@ def q_e_minhash_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = raw.groupBy("source").agg(
         F.countDistinct("x").alias("n"),
         *[
-            F.expr(_mu_min_expr("spark", j)).alias(f"m{j}")
+            F.expr(_mu_min_expr(j)).alias(f"m{j}")
             for j in range(N_MINHASH_HR)
         ],
     )
@@ -2594,15 +2441,8 @@ def q_e_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     test→train never split a count.
     """
     pairs = q_e_dedup_near_md5(spark, sf_dir).select("id_a", "id_b")
-    bucket = F.expr(
-        "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15), 16, 10)"
-        " AS BIGINT) % 100"
-    )
-    split = (
-        F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
-    )
     sp = load_table(spark, sf_dir, "documents").select(
-        "doc_id", split.alias("split")
+        "doc_id", _hash_split().alias("split")
     )
     sa = sp.select(F.col("doc_id").alias("id_a"), F.col("split").alias("sp_a"))
     sb = sp.select(F.col("doc_id").alias("id_b"), F.col("split").alias("sp_b"))
@@ -2930,6 +2770,11 @@ _SNM_KEY_DUCK = (
 )
 _SNM_W = 3  # neighborhood window (positions ahead in the sorted order)
 _SNM_TAU = 0.5  # verify threshold on 2-gram shingle jaccard
+# each rank's _SNM_W successors in (bkey, doc_id) order
+_SNM_PAIRS = (
+    f"(SELECT unnest(range(1, {_SNM_W} + 1)) AS d) o"
+    " JOIN r a ON TRUE JOIN r b ON b.rk = a.rk + o.d"
+)
 
 
 @query(
@@ -2945,15 +2790,8 @@ _SNM_TAU = 0.5  # verify threshold on 2-gram shingle jaccard
              row_number() OVER (ORDER BY bkey, doc_id) AS rk
       FROM d
     ),
-    cand AS (
-      SELECT o.d AS d,
-             CAST(len(list_filter(a.sh, x -> list_contains(b.sh, x)))
-                  AS DOUBLE)
-               / len(list_distinct(list_concat(a.sh, b.sh))) AS jac
-      FROM (SELECT unnest(range(1, {_SNM_W} + 1)) AS d) o
-      JOIN r a ON TRUE
-      JOIN r b ON b.rk = a.rk + o.d
-    )
+    {_d_sh_pairs("nbr", "o.d AS d", _SNM_PAIRS)},
+    cand AS (SELECT d, {_D_JACCARD} AS jac FROM nbr)
     SELECT d,
            CAST(COUNT(*) AS BIGINT) AS n_candidates,
            CAST(SUM(CASE WHEN jac >= {_SNM_TAU} THEN 1 ELSE 0 END)
@@ -3198,16 +3036,11 @@ _BH_MD5_DUCK = (
       FROM sigs),
     keyed AS (
       SELECT doc_id, sig, band,
-             (sig >> CAST(band * 15 AS INT)) & 32767 AS bval
+             (sig >> CAST(band * 15 AS INT)) & 32767 AS bkey
       FROM bands),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-             a.sig AS sa, b.sig AS sb
-      FROM keyed a JOIN keyed b
-        ON a.band = b.band AND a.bval = b.bval
-       AND a.doc_id < b.doc_id),
+    {_d_cand("keyed", carry=("sig",))},
     scored AS (
-      SELECT CAST(bit_count(xor(sa, sb)) AS INT) AS ham FROM cand)
+      SELECT CAST(bit_count(xor(sig_a, sig_b)) AS INT) AS ham FROM cand)
     SELECT ham,
            CAST(COUNT(*) AS BIGINT) AS n_pairs,
            CAST(ham <= {_BH_TAU} AS BOOLEAN) AS is_near_dup

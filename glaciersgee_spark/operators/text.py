@@ -387,15 +387,10 @@ def q_e_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning (df.sample() is none of those); the same doc always
     lands in the same split across reruns and backfills. One narrow
     stage + a |splits|×|langs| aggregate."""
+    from glaciersgee_spark.operators.dedup import _hash_split
+
     d = load_table(spark, sf_dir, "documents")
-    bucket = F.expr(
-        "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15), 16, 10) AS BIGINT)"
-        " % 100"
-    )
-    split = (
-        F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
-    )
-    return d.groupBy(split.alias("split"), F.col("lang")).agg(
+    return d.groupBy(_hash_split().alias("split"), F.col("lang")).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("n_chars").cast("long").alias("total_chars"),
     )
@@ -1226,11 +1221,10 @@ def q_e_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster — re-runs are reproducible and incremental re-ingest keeps
     prior decisions. Pure narrow filter on the scan; the CASE and hash
     are codegen expressions, zero shuffles at any scale."""
+    from glaciersgee_spark.operators.dedup import _doc_hash
+
     d = load_table(spark, sf_dir, "documents")
-    bucket = F.expr(
-        "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15), 16, 10) AS BIGINT)"
-        " % 100"
-    )
+    bucket = _doc_hash() % 100
     rate = F.lit(0)
     for k, v in sorted(SAMPLE_RATES.items()):
         rate = F.when(F.col("lang") == k, v).otherwise(rate)

@@ -224,6 +224,8 @@ def clean_corpus(d: DataFrame, cfg: CorpusCleanConfig) -> DataFrame:
 
     The kept row per content key is min(doc_id) — deterministic at any
     partitioning, unlike dropDuplicates."""
+    from glaciersgee_spark.operators.dedup import _exact_key, _hash_split
+
     words = F.split("text", " ")
     n_tok = F.size(words)
     docs = d.withColumn("n_tokens", n_tok.cast("long")).where(
@@ -235,24 +237,13 @@ def clean_corpus(d: DataFrame, cfg: CorpusCleanConfig) -> DataFrame:
         )
     )
     if cfg.dedup:
-        key = F.md5(F.concat_ws("|", "lang", "source", F.col("n_chars").cast("string")))
-        w = Window.partitionBy(key).orderBy(F.col("doc_id").asc())
+        w = Window.partitionBy(_exact_key()).orderBy(F.col("doc_id").asc())
         docs = (
             docs.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .drop("_rn")
         )
-    bucket = F.expr(
-        "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15), 16, 10) AS BIGINT)"
-        " % 100"
-    )
-    train, val, test = SPLITS
-    split = (
-        F.when(bucket < cfg.train_pct, train)
-        .when(bucket < cfg.train_pct + cfg.val_pct, val)
-        .otherwise(test)
-    )
-    return docs.withColumn("split", split)
+    return docs.withColumn("split", _hash_split(cfg.train_pct, cfg.val_pct))
 
 
 def run_corpus_pipeline(

@@ -295,6 +295,42 @@ def test_vector_kernels_and_memos_have_one_definition():
         assert not bad, f"quantize through registry.q6 / py_q6: {token!r} at {bad}"
 
 
+def test_dedup_mechanisms_have_one_definition():
+    """Each stage of the MinHash/LSH dedup pipeline is spelled once
+    under glaciersgee_spark/, inside its helper in dedup.py: the band
+    explode in _explode_bands, the co-banded candidate pairs in
+    _cand_pairs, the Spark minhash columns in _banded and _sig_pairs, the
+    signature agreement sum in _agree, the inverted-index posting key
+    in _shingle_overlap, the J >= 0.5 cut in _jaccard_truth and
+    _md5_pairs, the md5 doc bucket in _doc_hash, the train/val/test
+    ladder in _hash_split and the exact-dup content key in _exact_key.
+    The DuckDB oracles mirror them in the _d_* builders: the minhash
+    signature in _d_lsh, the band rows in _d_band_rows, the DISTINCT
+    candidate pairs in _d_cand, the agreement sum in _d_agree and the
+    exact shingle-overlap pairs in _d_sh_pairs. So no copy can drift in
+    its hash, fold, pair order or threshold."""
+    for token, helpers in (
+        ('alias("bb")', ("_explode_bands",)),
+        ('["band", "bkey"], ["doc_id"', ("_cand_pairs",)),
+        ('_mh_expr("spark"', ("_banded", "_sig_pairs")),
+        ('zip_with("mhs_a"', ("_agree",)),
+        ('F.xxhash64("lang", "source", "shingle")', ("_shingle_overlap",)),
+        ('F.col("jaccard") >= 0.5', ("_jaccard_truth", "_md5_pairs")),
+        ("md5(CAST(doc_id AS STRING))", ("_doc_hash",)),
+        ("F.when(bucket <", ("_hash_split",)),
+        ('F.concat_ws("|", "lang", "source", F.col("n_chars")', ("_exact_key",)),
+        ("_mh_expr('duck'", ("_d_lsh",)),
+        ('_mh_expr("duck"', ("_d_lsh",)),
+        ("} AS band, ", ("_d_band_rows",)),
+        ("SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b", ("_d_cand",)),
+        ("CASE WHEN x.mhs[i]", ("_d_agree",)),
+        ("list_filter(a.sh, x -> list_contains(b.sh, x))", ("_d_sh_pairs",)),
+    ):
+        hits = [set(_hits_outside(token, "operators/dedup.py", h)) for h in helpers]
+        bad = sorted(set.intersection(*hits))
+        assert not bad, f"use dedup.{' / '.join(helpers)}: {token!r} at {bad}"
+
+
 _DRIVER_CAP = 50
 
 

@@ -235,7 +235,6 @@ def test_corpus_banding_never_overflows_default_cap(spark):
         _banded,
         _md5_base,
         _md5_pairs,
-        _sweep_banded,
     )
     from glaciersgee_spark.operators.lsh import bucket_overflow
 
@@ -255,11 +254,48 @@ def test_corpus_banding_never_overflows_default_cap(spark):
     assert len({id(p) for p in pair_sets}) == len(configs)
     assert all(p.storageLevel.useMemory for p in pair_sets)
     assert _md5_pairs(spark, SF_SMOKE, 2, 8, list(_MH_PERMS_HR[:8])) is pair_sets[2]
-    # The 31-mix folded bandings of every q_e_jaccard_sweep config:
-    for tag, bs, n in _SWEEP:
-        banded = _sweep_banded(spark, SF_SMOKE, bs, n)
+    # The 31-mix folded bandings of every q_e_lsh_tuning config:
+    for tag, bs, n, perms in _SWEEP:
+        banded = _banded(base, bs, n, perms, fold=31)
         n_over = bucket_overflow(banded, ["band", "bkey"]).count()
         assert n_over == 0, f"sweep config {tag}: {n_over} buckets over the cap"
+
+
+def test_band_rows_match_oracle_band_builder(spark):
+    """The Spark band rows (_banded) equal the DuckDB oracle's `bands`
+    CTE (_d_lsh) row for row, as a (doc_id, band, bkey) multiset, for
+    the pair queries' default banding and every q_e_lsh_tuning config.
+    The parity rows of q_e_lsh_tuning compare candidate counts only,
+    so a band key that drifted in one engine could hide there."""
+    from collections import Counter
+
+    from glaciersgee_spark.operators.dedup import (
+        _D_HASHED,
+        _MH_PERMS,
+        _MHM,
+        _SWEEP,
+        _banded,
+        _d_lsh,
+        _md5_base,
+    )
+    from tests.parity import make_duck
+
+    base = _md5_base(spark, SF_SMOKE)
+    con = make_duck(SF_SMOKE)
+    configs = [(2, 8, _MH_PERMS, _MHM)]
+    configs += [(bs, n, perms, 31) for _, bs, n, perms in _SWEEP]
+    for bs, n, perms, fold in configs:
+        spark_rows = Counter(
+            tuple(r) for r in _banded(base, bs, n, perms, fold).collect()
+        )
+        duck_rows = Counter(
+            con.execute(
+                f"WITH {_D_HASHED}, {_d_lsh(bs, n, perms, fold)} "
+                "SELECT doc_id, band, bkey FROM bands"
+            ).fetchall()
+        )
+        assert sum(spark_rows.values()) == base.count() * (n // bs) > 0
+        assert spark_rows == duck_rows, f"{bs}x{n} fold {fold}"
 
 
 def test_posting_copairs_exact_counts(spark):
